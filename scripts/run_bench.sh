@@ -4,7 +4,11 @@
 set -e
 cd "$(dirname "$0")/.."
 export SPARK_GRAFT_SF_DIR=${1:-/root/testdata/sf0.1}
-export SPARK_GRAFT_CPUS=${2:-32}
+export SPARK_GRAFT_CPUS=${2:-$(nproc)}
+# Heap: SPARK_DRIVER_MEM (the variable build.sbt's forked JVMs read), else
+# half of MemTotal clamped to 2-8 GiB — the Tier-1 test sizing.
+HEAP=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
 # Min-of-3 by default: at min-of-2 the per-query noise floor on this box
 # (GC/JIT timing on sub-2s queries) exceeds the 1.5x/0.3s regression
 # threshold and flags a different random query most runs.
@@ -27,7 +31,7 @@ fi
 # Capture rc without tripping set -e (a bare failing command would exit
 # the script before the regression gate runs).
 rc=0
-java $ADD_OPENS -Xmx16g \
+java $ADD_OPENS -Xmx"$HEAP" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Bench || rc=$?

@@ -22,6 +22,8 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 JAVA="java $ADD_OPENS -Xmx48g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -cp target/scala-2.13/classes:/opt/spark/jars/*"
+source scripts/require_heap.sh
+require_heap "$JAVA"
 PROBES=${@:-CcProbe LshCapProbe SimhashCapProbe IvfAppendProbe DriftRetrainProbe IncCcProbe CurationStreamProbe}
 declare -A OUT=( [CcProbe]=CC_PROBE.json [LshCapProbe]=LSH_CAP_PROBE.json \
   [SimhashCapProbe]=SIMHASH_CAP_PROBE.json [IvfAppendProbe]=IVF_APPEND_PROBE.json \

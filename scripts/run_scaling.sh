@@ -17,6 +17,8 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 JAVA="java $ADD_OPENS -Xmx24g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -cp target/scala-2.13/classes:/opt/spark/jars/*"
+source scripts/require_heap.sh
+require_heap "$JAVA"
 # Regenerate unless the cached corpus carries the CURRENT generator
 # version AND parameter stamp (see GenData.stamp): a corpus from an
 # older generator, a different mult/source/vocab, or a crash mid-gen

@@ -30,6 +30,8 @@ done
 # candidate sets and the 10,000-file binary ingest need more headroom
 # than the 10x ledger's 24g.
 JAVA="java $ADD_OPENS -Xmx64g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -cp target/scala-2.13/classes:/opt/spark/jars/*"
+source scripts/require_heap.sh
+require_heap "$JAVA"
 GEN_V=$(sed -n 's/.*GeneratorVersion\s*\(:\s*Int\)\?\s*=\s*\([0-9][0-9]*\).*/\2/p' \
   src/main/scala/graft/tools/GenData.scala | head -1)
 if [ -z "$GEN_V" ]; then
@@ -62,7 +64,7 @@ exec $JAVA graft.tools.ScalingLedger "$BASE" "$SF10" 100 SCALING_LEDGER_100X.jso
   dup_cluster_sizes dedup_token_yield bigram_lm_scores \
   tfidf_top_terms binary_file_ingest dedup_near_keep \
   q8_market_share q21_waiting_supplier \
-  dedup_minhash_lsh dedup_substring substring_scrub knn_ivf_p1k knn_ivf_pq_p1k knn_ivf_pq_autoc_p1k knn_ivf_pq_autoc_np9_p1k knn_ivf_pq_autoc_rr120_p1k \
+  dedup_minhash_lsh dedup_substring substring_scrub knn_ivf_p1k \
   knn_ivf_pq_residual_p1k knn_ivf_pq_residual_autoc_p1k kmeans_centroids bpe_token_counts \
   fuzzy_name_match boilerplate_dict_train boilerplate_scrub \
   crawl_curation_pipeline dedup_incremental_candidates \

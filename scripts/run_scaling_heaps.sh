@@ -29,6 +29,8 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 JAVA="java $ADD_OPENS -Xmx48g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -cp target/scala-2.13/classes:/opt/spark/jars/*"
+source scripts/require_heap.sh
+require_heap "$JAVA"
 GEN_V=$(sed -n 's/.*GeneratorVersion\s*\(:\s*Int\)\?\s*=\s*\([0-9][0-9]*\).*/\2/p' \
   src/main/scala/graft/tools/GenData.scala | head -1)
 if [ -z "$GEN_V" ]; then

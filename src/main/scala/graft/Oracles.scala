@@ -2449,213 +2449,24 @@ object Oracles {
        |  FROM fw) WHERE r = 1""".stripMargin
   }
 
-  /** IVF-PQ (SimilarityOps.ivfPqKnn): coarse kmeans chain + one
-    * sub-kmeans chain per subspace; codes = rank-1 sub-assignments;
-    * ADC = per-(probe, candidate) sum of LUT distances folded in
-    * subspace order from a 0.0 seed (Spark's aggregate-over-zip twin);
-    * exact fold-ordered cosine on the `rerank` shortlist only. */
-  def knnIvfPq(probeEvery: Int, k: Int, targetC: Int, iters: Int,
-      nprobe: Int, m: Int, subDim: Int, ks: Int, subIters: Int,
-      rerank: String): String =
-    knnIvfPqFrom(defaultProbesSql(probeEvery), k, targetC, iters, nprobe,
-      m, subDim, ks, subIters, rerank)
-
   /** The gate probes: every `probeEvery`-th corpus vector (what a DuckDB
     * oracle can reproduce from the tables alone). Probe-source SQL must
     * yield `(vec_id, vec DOUBLE[])`. */
-  private def defaultProbesSql(probeEvery: Int): String =
+  private[graft] def defaultProbesSql(probeEvery: Int): String =
     s"SELECT vec_id, vec FROM v WHERE vec_id % $probeEvery = 0"
 
-  /** [[knnIvfPq]] over an EXPLICIT probe source (the `pv` CTE) — the
-    * off-manifold recall contract passes hash-synthesized probes here;
-    * the corpus/training side is byte-identical either way. */
-  def knnIvfPqFrom(probesSql: String, k: Int, targetC: Int, iters: Int,
-      nprobe: Int, m: Int, subDim: Int, ks: Int, subIters: Int,
-      rerank: String): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, 64), i -> $a[i] * $b[i]), (a, b) -> a + b)"
-    def d2(a: String, b: String, dim: Int) =
-      s"list_reduce(list_transform(generate_series(1, $dim), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (a, b) -> a + b)"
-    val subChains = (0 until m).map { s0 =>
-      s"""vs$s0 AS (SELECT vec_id,
-         |  list_slice(vec, ${s0 * subDim + 1}, ${(s0 + 1) * subDim}) AS vec
-         |  FROM v),
-         |${kmeansChain(s"s$s0", subDim, ks, subIters)}""".stripMargin
-    }.mkString(",\n")
-    val codeCtes = (0 until m).map { s0 =>
-      s"""cdw$s0 AS (SELECT v.vec_id, c.cent_id,
-         |    ${d2("v.vec", "c.cent_vec", subDim)} AS d2
-         |  FROM vs$s0 v, c${subIters}s$s0 c),
-         |cd$s0 AS (SELECT vec_id, $s0 AS sub, cent_id AS code FROM (
-         |  SELECT *, rank() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) AS r
-         |  FROM cdw$s0) WHERE r = 1),
-         |lut$s0 AS (SELECT p.probe_id, $s0 AS sub, c.cent_id AS code,
-         |    ${d2("p.vec", "c.cent_vec", subDim)} AS d2c
-         |  FROM (SELECT vec_id AS probe_id,
-         |      list_slice(vec, ${s0 * subDim + 1}, ${(s0 + 1) * subDim}) AS vec
-         |    FROM pv) p, c${subIters}s$s0 c)""".stripMargin
-    }.mkString(",\n")
-    val codesUnion = (0 until m).map(s0 => s"SELECT * FROM cd$s0")
-      .mkString(" UNION ALL ")
-    val lutUnion = (0 until m).map(s0 => s"SELECT * FROM lut$s0")
-      .mkString(" UNION ALL ")
-    s"""WITH ${kmeansCtePrefix(targetC, iters)},
-       |pv AS ($probesSql),
-       |$subChains,
-       |$codeCtes,
-       |codes AS ($codesUnion),
-       |luts AS ($lutUnion),
-       |caw AS (SELECT v.vec_id, c.cent_id,
-       |    ${d2("v.vec", "c.cent_vec", 64)} AS cd2
-       |  FROM v, c$iters c),
-       |ca AS (SELECT vec_id, cent_id FROM (
-       |  SELECT *, rank() OVER (PARTITION BY vec_id ORDER BY cd2, cent_id) AS cr
-       |  FROM caw) WHERE cr = 1),
-       |pw AS (SELECT p.vec_id AS probe_id, c.cent_id,
-       |    ${d2("p.vec", "c.cent_vec", 64)} AS cd2
-       |  FROM pv p, c$iters c),
-       |pb AS (SELECT probe_id, cent_id FROM (
-       |  SELECT *, rank() OVER (PARTITION BY probe_id ORDER BY cd2, cent_id) AS cr
-       |  FROM pw) WHERE cr <= $nprobe),
-       |cand AS (SELECT pb.probe_id, ca.vec_id
-       |  FROM ca JOIN pb ON ca.cent_id = pb.cent_id
-       |  WHERE ca.vec_id <> pb.probe_id),
-       |adc AS (SELECT cp.probe_id, cp.vec_id,
-       |    list_reduce(list_prepend(0.0, list(l.d2c ORDER BY l.sub)),
-       |      (a, b) -> a + b) AS adc
-       |  FROM cand cp
-       |  JOIN codes cd ON cd.vec_id = cp.vec_id
-       |  JOIN luts l ON l.probe_id = cp.probe_id AND l.sub = cd.sub
-       |    AND l.code = cd.code
-       |  GROUP BY cp.probe_id, cp.vec_id),
-       |sl AS (SELECT probe_id, vec_id FROM (
-       |  SELECT *, rank() OVER (PARTITION BY probe_id ORDER BY adc, vec_id) AS ar
-       |  FROM adc) WHERE ar <= ($rerank)),
-       |n AS (SELECT vec_id, vec, sqrt(${dot("vec", "vec")}) AS nrm FROM v),
-       |pn AS (SELECT vec_id, vec, sqrt(${dot("vec", "vec")}) AS nrm FROM pv),
-       |s AS (SELECT sl.probe_id, sl.vec_id,
-       |    ${dot("p.vec", "x.vec")} / (p.nrm * x.nrm) AS sim
-       |  FROM sl JOIN n x ON x.vec_id = sl.vec_id
-       |  JOIN pn p ON p.vec_id = sl.probe_id)
-       |SELECT probe_id, vec_id, round(sim, 9) AS sim, rank FROM (
-       |  SELECT *, rank() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS rank
-       |  FROM s) WHERE rank <= $k""".stripMargin
-  }
-
-  /** Incremental IVF-PQ (SparkEntry `knn_ivf_incremental` /
-    * SimilarityOps.ivfAppend): the quantizer chains TRAIN on the
-    * ORIGINAL corpus `v` only; arrivals (every 20th vector, last
-    * component zeroed, id + 10000000 — the embedding_near_dup planting)
-    * are coarse-assigned and coded with those base-trained artifacts;
-    * search runs over the merged index `va`. Identical CTE machinery to
-    * [[knnIvfPq]] except the assignment/coding/rerank sources read `va`
-    * while every kmeans chain reads `v` — the SQL restatement of
-    * "append without retraining". Probes come from the original corpus. */
-  def knnIvfIncremental(probeEvery: Int, k: Int, targetC: Int, iters: Int,
-      nprobe: Int, m: Int, subDim: Int, ks: Int, subIters: Int,
-      rerank: String): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, 64), i -> $a[i] * $b[i]), (a, b) -> a + b)"
-    def d2(a: String, b: String, dim: Int) =
-      s"list_reduce(list_transform(generate_series(1, $dim), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (a, b) -> a + b)"
-    val subChains = (0 until m).map { s0 =>
-      s"""vs$s0 AS (SELECT vec_id,
-         |  list_slice(vec, ${s0 * subDim + 1}, ${(s0 + 1) * subDim}) AS vec
-         |  FROM v),
-         |vas$s0 AS (SELECT vec_id,
-         |  list_slice(vec, ${s0 * subDim + 1}, ${(s0 + 1) * subDim}) AS vec
-         |  FROM va),
-         |${kmeansChain(s"s$s0", subDim, ks, subIters)}""".stripMargin
-    }.mkString(",\n")
-    val codeCtes = (0 until m).map { s0 =>
-      s"""cdw$s0 AS (SELECT v.vec_id, c.cent_id,
-         |    ${d2("v.vec", "c.cent_vec", subDim)} AS d2
-         |  FROM vas$s0 v, c${subIters}s$s0 c),
-         |cd$s0 AS (SELECT vec_id, $s0 AS sub, cent_id AS code FROM (
-         |  SELECT *, rank() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) AS r
-         |  FROM cdw$s0) WHERE r = 1),
-         |lut$s0 AS (SELECT p.probe_id, $s0 AS sub, c.cent_id AS code,
-         |    ${d2("p.vec", "c.cent_vec", subDim)} AS d2c
-         |  FROM (SELECT vec_id AS probe_id,
-         |      list_slice(vec, ${s0 * subDim + 1}, ${(s0 + 1) * subDim}) AS vec
-         |    FROM v WHERE vec_id % $probeEvery = 0) p, c${subIters}s$s0 c)""".stripMargin
-    }.mkString(",\n")
-    val codesUnion = (0 until m).map(s0 => s"SELECT * FROM cd$s0")
-      .mkString(" UNION ALL ")
-    val lutUnion = (0 until m).map(s0 => s"SELECT * FROM lut$s0")
-      .mkString(" UNION ALL ")
-    s"""WITH ${kmeansCtePrefix(targetC, iters)},
-       |arr AS (SELECT vec_id + 10000000 AS vec_id,
-       |  list_concat(list_slice(vec, 1, 63), [0.0]) AS vec
-       |  FROM v WHERE vec_id % 20 = 0),
-       |va AS (SELECT vec_id, vec FROM v
-       |  UNION ALL SELECT vec_id, vec FROM arr),
-       |$subChains,
-       |$codeCtes,
-       |codes AS ($codesUnion),
-       |luts AS ($lutUnion),
-       |caw AS (SELECT v.vec_id, c.cent_id,
-       |    ${d2("v.vec", "c.cent_vec", 64)} AS cd2
-       |  FROM va v, c$iters c),
-       |ca AS (SELECT vec_id, cent_id FROM (
-       |  SELECT *, rank() OVER (PARTITION BY vec_id ORDER BY cd2, cent_id) AS cr
-       |  FROM caw) WHERE cr = 1),
-       |pw AS (SELECT p.vec_id AS probe_id, c.cent_id,
-       |    ${d2("p.vec", "c.cent_vec", 64)} AS cd2
-       |  FROM (SELECT * FROM v WHERE vec_id % $probeEvery = 0) p, c$iters c),
-       |pb AS (SELECT probe_id, cent_id FROM (
-       |  SELECT *, rank() OVER (PARTITION BY probe_id ORDER BY cd2, cent_id) AS cr
-       |  FROM pw) WHERE cr <= $nprobe),
-       |cand AS (SELECT pb.probe_id, ca.vec_id
-       |  FROM ca JOIN pb ON ca.cent_id = pb.cent_id
-       |  WHERE ca.vec_id <> pb.probe_id),
-       |adc AS (SELECT cp.probe_id, cp.vec_id,
-       |    list_reduce(list_prepend(0.0, list(l.d2c ORDER BY l.sub)),
-       |      (a, b) -> a + b) AS adc
-       |  FROM cand cp
-       |  JOIN codes cd ON cd.vec_id = cp.vec_id
-       |  JOIN luts l ON l.probe_id = cp.probe_id AND l.sub = cd.sub
-       |    AND l.code = cd.code
-       |  GROUP BY cp.probe_id, cp.vec_id),
-       |sl AS (SELECT probe_id, vec_id FROM (
-       |  SELECT *, rank() OVER (PARTITION BY probe_id ORDER BY adc, vec_id) AS ar
-       |  FROM adc) WHERE ar <= ($rerank)),
-       |n AS (SELECT vec_id, vec, sqrt(${dot("vec", "vec")}) AS nrm FROM va),
-       |s AS (SELECT sl.probe_id, sl.vec_id,
-       |    ${dot("p.vec", "x.vec")} / (p.nrm * x.nrm) AS sim
-       |  FROM sl JOIN n x ON x.vec_id = sl.vec_id
-       |  JOIN n p ON p.vec_id = sl.probe_id)
-       |SELECT probe_id, vec_id, round(sim, 9) AS sim, rank FROM (
-       |  SELECT *, rank() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS rank
-       |  FROM s) WHERE rank <= $k""".stripMargin
-  }
-
-  /** Residual IVF-PQ (SimilarityOps.ivfPqResidualKnn): sub-chains train
-    * on `vec − coarse_centroid` residuals (exact IEEE subtractions of
-    * exactly-cast doubles), probe LUTs are per (probe, probed cell),
-    * ADC folds in subspace order, exact cosine on the shortlist. */
-  /** ANN recall contract (SparkEntry `knn_pq_recall`): recall@k of the
-    * IVF-PQ search vs the brute-force truth, as one row of integer
-    * counts — the quantizer's recall is MEASURED in-gate, not trusted.
-    * Composes the two independently-green chains ([[knnBruteForce]],
-    * [[knnIvfPq]]); same pattern as [[dedupMinhashRecall]]. */
-  def knnPqRecall(probeEvery: Int, k: Int, targetC: Int, iters: Int,
-      nprobe: Int, m: Int, subDim: Int, ks: Int, subIters: Int,
-      rerank: String): String =
-    s"""WITH truth AS (
-       |${knnBruteForce(probeEvery, k)}
-       |),
-       |cand AS (
-       |${knnIvfPq(probeEvery, k, targetC, iters, nprobe, m, subDim, ks, subIters, rerank)}
-       |),
-       |hit AS (SELECT t.probe_id FROM truth t
-       |  JOIN cand c USING (probe_id, vec_id))
-       |SELECT (SELECT count(*) FROM truth) AS n_true,
-       |  (SELECT count(*) FROM cand) AS n_pq,
-       |  (SELECT count(*) FROM hit) AS n_hit""".stripMargin
+  /** The corpus `knn_ivf_incremental` searches: `v` plus the planted
+    * arrivals (every 20th vector, last component zeroed, id + 10000000 —
+    * the embedding_near_dup planting). Pass as
+    * [[knnIvfPqResidualFrom]]'s `codedSql`. */
+  val plantedArrivalsCorpusSql: String =
+    """SELECT vec_id, vec FROM v
+      |UNION ALL SELECT vec_id + 10000000 AS vec_id,
+      |  list_concat(list_slice(vec, 1, 63), [0.0]) AS vec
+      |  FROM v WHERE vec_id % 20 = 0""".stripMargin
 
   /** OFF-MANIFOLD recall contract (SparkEntry
-    * `knn_offmanifold_recall`): the [[knnPqRecall]] counts over
+    * `knn_offmanifold_recall`): the [[knnPqResidualRecall]] counts over
     * hash-synthesized probes drawn OUTSIDE the corpus distribution
     * (amplitude `amp` × the corpus envelope, md5-derived so both
     * engines synthesize bit-identical floats — every value has ≤ 22
@@ -2664,28 +2475,6 @@ object Oracles {
     * collapses across decades (r16's finding); this row makes the
     * production configuration's off-manifold behavior gate-visible at
     * BOTH gate scales — its counts move with any ANN default change. */
-  def knnPqRecallOffManifold(nProbes: Int, amp: String, k: Int,
-      targetC: Int, iters: Int, nprobe: Int, m: Int, subDim: Int, ks: Int,
-      subIters: Int, rerank: String): String = {
-    val probes = offManifoldProbesSql(nProbes, amp)
-    s"""WITH truth AS (
-       |${knnBruteForceFrom(probes, k)}
-       |),
-       |cand AS (
-       |${knnIvfPqFrom(probes, k, targetC, iters, nprobe, m, subDim, ks, subIters, rerank)}
-       |),
-       |hit AS (SELECT t.probe_id FROM truth t
-       |  JOIN cand c USING (probe_id, vec_id))
-       |SELECT (SELECT count(*) FROM truth) AS n_true,
-       |  (SELECT count(*) FROM cand) AS n_pq,
-       |  (SELECT count(*) FROM hit) AS n_hit""".stripMargin
-  }
-
-  /** Residual-coder twin of [[knnPqRecallOffManifold]] — the off-manifold
-    * contract over the [[knnIvfPqResidualFrom]] chain. With the r19
-    * default flip (residual coding under auto-C/auto-rerank is the
-    * committed production configuration) this is the SQL the
-    * `knn_offmanifold_recall` gate row checks against. */
   def knnPqResidualRecallOffManifold(nProbes: Int, amp: String, k: Int,
       targetC: Int, iters: Int, nprobe: Int, m: Int, subDim: Int, ks: Int,
       subIters: Int, rerank: String): String = {
@@ -2715,7 +2504,7 @@ object Oracles {
        |      / 1048576.0 - 0.5) * $amp AS FLOAT) AS DOUBLE)) AS vec
        |  FROM (SELECT unnest(range($nProbes)) AS pid)""".stripMargin
 
-  /** Untrained-IVF twin of [[knnPqRecall]]: recall@k of the
+  /** Untrained-IVF twin of [[knnPqResidualRecall]]: recall@k of the
     * sampled-centroid IVF search ([[knnIvf]]) vs brute force. With the
     * scale-aware C = ⌈√N⌉ the probed fraction (nprobe/C) SHRINKS as the
     * corpus grows, so this contract is what shows whether exact re-rank
@@ -2748,9 +2537,12 @@ object Oracles {
        |  (SELECT count(*) FROM cand) AS n_lsh,
        |  (SELECT count(*) FROM hit) AS n_hit""".stripMargin
 
-  /** Residual-PQ twin of [[knnPqRecall]]: same counts over the
-    * [[knnIvfPqResidual]] chain, so the gate pins BOTH quantizers'
-    * recall and the residual-coding gain is a measured delta. */
+  /** ANN recall contract (SparkEntry `knn_pq_residual_recall`):
+    * recall@k of the IVF-PQ search vs the brute-force truth, as one row
+    * of integer counts — the quantizer's recall is MEASURED in-gate, not
+    * trusted. Composes the two independently-green chains
+    * ([[knnBruteForce]], [[knnIvfPqResidual]]); same pattern as
+    * [[dedupMinhashRecall]]. */
   def knnPqResidualRecall(probeEvery: Int, k: Int, targetC: Int, iters: Int,
       nprobe: Int, m: Int, subDim: Int, ks: Int, subIters: Int,
       rerank: String): String =
@@ -2766,34 +2558,44 @@ object Oracles {
        |  (SELECT count(*) FROM cand) AS n_pq,
        |  (SELECT count(*) FROM hit) AS n_hit""".stripMargin
 
+  /** Residual IVF-PQ (SimilarityOps.ivfPqResidualKnn): sub-chains train
+    * on `vec − coarse_centroid` residuals (exact IEEE subtractions of
+    * exactly-cast doubles), probe LUTs are per (probe, probed cell),
+    * ADC folds in subspace order, exact cosine on the shortlist. */
   def knnIvfPqResidual(probeEvery: Int, k: Int, targetC: Int, iters: Int,
       nprobe: Int, m: Int, subDim: Int, ks: Int, subIters: Int,
       rerank: String): String =
     knnIvfPqResidualFrom(defaultProbesSql(probeEvery), k, targetC, iters,
       nprobe, m, subDim, ks, subIters, rerank)
 
-  /** [[knnIvfPqResidual]] over an EXPLICIT probe source (the `pv` CTE) —
-    * the off-manifold recall contract passes hash-synthesized probes
-    * here; the corpus/training side is byte-identical either way (the
-    * [[knnIvfPqFrom]] pattern applied to the residual coder, which the
-    * r19 default flip made the committed production configuration). */
+  /** [[knnIvfPqResidual]] over an EXPLICIT probe source (the `pv` CTE)
+    * and coded corpus (the `va` CTE). The off-manifold recall contract
+    * passes hash-synthesized probes; `knn_ivf_incremental` passes
+    * [[plantedArrivalsCorpusSql]] as `codedSql` — every quantizer chain
+    * still TRAINS on `v` only, while coarse assignment, coding and the
+    * exact re-rank read `va`: the SQL restatement of "append without
+    * retraining" ([[graft.operators.SimilarityOps.ivfAppend]]).
+    * `codedSql` must contain every `v` row, ids unique. */
   def knnIvfPqResidualFrom(probesSql: String, k: Int, targetC: Int,
       iters: Int, nprobe: Int, m: Int, subDim: Int, ks: Int, subIters: Int,
-      rerank: String): String = {
+      rerank: String,
+      codedSql: String = "SELECT vec_id, vec FROM v"): String = {
     def dot(a: String, b: String) =
       s"list_reduce(list_transform(generate_series(1, 64), i -> $a[i] * $b[i]), (a, b) -> a + b)"
     def d2(a: String, b: String, dim: Int) =
       s"list_reduce(list_transform(generate_series(1, $dim), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (a, b) -> a + b)"
     val subChains = (0 until m).map { s0 =>
-      s"""vs$s0 AS (SELECT vec_id,
+      s"""vas$s0 AS (SELECT vec_id,
          |  list_slice(rvec, ${s0 * subDim + 1}, ${(s0 + 1) * subDim}) AS vec
          |  FROM car),
+         |vs$s0 AS (SELECT * FROM vas$s0
+         |  WHERE vec_id IN (SELECT vec_id FROM v)),
          |${kmeansChain(s"s$s0", subDim, ks, subIters)}""".stripMargin
     }.mkString(",\n")
     val codeCtes = (0 until m).map { s0 =>
       s"""cdw$s0 AS (SELECT v.vec_id, c.cent_id,
          |    ${d2("v.vec", "c.cent_vec", subDim)} AS d2
-         |  FROM vs$s0 v, c${subIters}s$s0 c),
+         |  FROM vas$s0 v, c${subIters}s$s0 c),
          |cd$s0 AS (SELECT vec_id, $s0 AS sub, cent_id AS code FROM (
          |  SELECT *, rank() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) AS r
          |  FROM cdw$s0) WHERE r = 1),
@@ -2809,16 +2611,17 @@ object Oracles {
       .mkString(" UNION ALL ")
     s"""WITH ${kmeansCtePrefix(targetC, iters)},
        |pv AS ($probesSql),
+       |va AS ($codedSql),
        |caw AS (SELECT v.vec_id, c.cent_id,
        |    ${d2("v.vec", "c.cent_vec", 64)} AS cd2
-       |  FROM v, c$iters c),
+       |  FROM va v, c$iters c),
        |ca AS (SELECT vec_id, cent_id FROM (
        |  SELECT *, rank() OVER (PARTITION BY vec_id ORDER BY cd2, cent_id) AS cr
        |  FROM caw) WHERE cr = 1),
        |car AS (SELECT ca.vec_id, ca.cent_id,
        |    list_transform(generate_series(1, 64),
        |      i -> v.vec[i] - c.cent_vec[i]) AS rvec
-       |  FROM ca JOIN v ON v.vec_id = ca.vec_id
+       |  FROM ca JOIN va v ON v.vec_id = ca.vec_id
        |  JOIN c$iters c ON c.cent_id = ca.cent_id),
        |pw AS (SELECT p.vec_id AS probe_id, c.cent_id,
        |    ${d2("p.vec", "c.cent_vec", 64)} AS cd2
@@ -2849,7 +2652,7 @@ object Oracles {
        |sl AS (SELECT probe_id, vec_id FROM (
        |  SELECT *, rank() OVER (PARTITION BY probe_id ORDER BY adc, vec_id) AS ar
        |  FROM adc) WHERE ar <= ($rerank)),
-       |n AS (SELECT vec_id, vec, sqrt(${dot("vec", "vec")}) AS nrm FROM v),
+       |n AS (SELECT vec_id, vec, sqrt(${dot("vec", "vec")}) AS nrm FROM va),
        |pn AS (SELECT vec_id, vec, sqrt(${dot("vec", "vec")}) AS nrm FROM pv),
        |s AS (SELECT sl.probe_id, sl.vec_id,
        |    ${dot("p.vec", "x.vec")} / (p.nrm * x.nrm) AS sim

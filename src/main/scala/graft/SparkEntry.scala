@@ -35,7 +35,7 @@ object SparkEntry {
   private val modelCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   // get + putIfAbsent, NOT computeIfAbsent: training one artifact may
-  // itself request another (pqIndex trains against pqBooks), and a
+  // itself request another (pqResIndex trains against pqResBooks), and a
   // reentrant computeIfAbsent on the same map throws "Recursive update"
   // the first time a fresh corpus resolves the nested artifact (hit on
   // the sf1 scaling corpus; the gate corpora masked it by training the
@@ -159,15 +159,6 @@ object SparkEntry {
       SimilarityOps.pqCodebooks(embCorpus(s, dir), PqM, PqSubDim, PqKs,
         PqIters))
 
-  /** IVF-PQ coded index artifact (vec_id, cent_id, codes) — FAISS's add
-    * phase as a table; search never touches the raw vectors until the
-    * exact re-rank. */
-  private[graft] def pqIndex(s: SparkSession, dir: String): DataFrame =
-    model(s, dir,
-        s"ivfpq_index_k${KmeansK}_m${PqM}_ks${PqKs}", "embeddings")(
-      SimilarityOps.ivfPqIndex(embCorpus(s, dir), coarseCentroids(s, dir),
-        pqBooks(s, dir), PqSubDim))
-
   /** Residual PQ sub-codebooks artifact (trained on vec − coarse cell). */
   private[graft] def pqResBooks(s: SparkSession, dir: String): DataFrame =
     model(s, dir,
@@ -184,9 +175,8 @@ object SparkEntry {
         coarseCentroids(s, dir), pqResBooks(s, dir), PqSubDim))
 
   /** Residual PQ sub-codebooks trained against the AUTO-C coarse
-    * quantizer. Unlike raw-vector books (coarse-independent, shared by
-    * the fixed and auto families), residual books are a FUNCTION of the
-    * coarse quantizer — training them against C = ⌈√N⌉ cells is what
+    * quantizer. Residual books are a FUNCTION of the coarse quantizer —
+    * training them against C = ⌈√N⌉ cells is what
     * makes the residual family's committed scale policy measurable
     * (`knn_ivf_pq_residual_autoc_p1k`, r17 verdict ask #4). */
   private[graft] def pqResBooksAuto(s: SparkSession, dir: String): DataFrame =
@@ -218,14 +208,6 @@ object SparkEntry {
           transform(col("cent_vec"), x => x.cast("double")).as("cent_vec"))
       ClusterOps.kmeans(corpus, initial, KmeansIters)
     }
-
-  /** IVF-PQ coded index against the auto-C coarse quantizer (same
-    * raw-vector sub-codebooks — PQ books are coarse-independent). */
-  private[graft] def pqIndexAuto(s: SparkSession, dir: String): DataFrame =
-    model(s, dir,
-        s"ivfpq_index_auto_m${PqM}_ks${PqKs}", "embeddings")(
-      SimilarityOps.ivfPqIndex(embCorpus(s, dir), coarseCentroidsAuto(s, dir),
-        pqBooks(s, dir), PqSubDim))
 
   /** Spam-planted training corpus for the trained quality model: every
     * document (label 1) paired with a junk-suffixed copy at
@@ -3565,27 +3547,8 @@ object SparkEntry {
           round(col("sim"), 9).as("sim"), col("rank"))
     },
 
-    // IVF-PQ (Jégou et al. 2011) — the memory/IO companion of
-    // knn_ivf_trained, SEARCH PHASE ONLY: coarse centroids, sub-codebooks
-    // and the coded index are persisted model-store artifacts; at query
-    // time only the probes are quantized (nprobe buckets + broadcast
-    // ADC LUTs), candidates travel as m small codes — never the 64
-    // floats — and the exact cosine re-rank touches the ADC-best
-    // shortlist only.
-    "knn_ivf_pq" -> { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.select(col("vec_id"), col("embedding").as("vec"))
-      val probes = emb.filter(col("vec_id") % KnnProbeEvery === 0)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      SimilarityOps.ivfPqSearch(probes, corpus, pqIndex(s, dir), KnnK,
-          coarseCentroids(s, dir), pqBooks(s, dir), PqSubDim,
-          nprobe = IvfNprobe, rerank = PqRerank)
-        .select(col("probe_id"), col("vec_id"),
-          round(col("sim"), 9).as("sim"), col("rank"))
-    },
-
-    // The corpus-tracking-C twin of knn_ivf_pq: identical search over
-    // artifacts whose coarse quantizer derives C = ceil(sqrt(N)) from
+    // The corpus-tracking-C twin of knn_ivf_pq_residual: identical search
+    // over artifacts whose coarse quantizer derives C = ceil(sqrt(N)) from
     // the corpus count at train time. With fixed C the per-probe ADC
     // scan grows with N; at C ~ sqrt(N) it grows with sqrt(N) — this
     // entry keeps the scale-honest configuration oracle-checked (and
@@ -3606,19 +3569,6 @@ object SparkEntry {
           nprobe = IvfNprobe, rerank = PqAutoRerank)
         .select(col("probe_id"), col("vec_id"),
           round(col("sim"), 9).as("sim"), col("rank"))
-    },
-
-    // The ANN recall CONTRACT, measured in-gate (the quantizer's recall
-    // is a number the gate pins, not a docstring claim — the MinHash
-    // family got this treatment in dedup_minhash_recall; this is the
-    // embedding-side twin): recall@k of the IVF-PQ search against the
-    // brute-force truth, as one row of integer counts.
-    "knn_pq_recall" -> { (s, dir) =>
-      knnRecallCounts(s, dir, "n_pq") { (probes, corpus) =>
-        SimilarityOps.ivfPqSearch(probes, corpus, pqIndex(s, dir),
-          KnnK, coarseCentroids(s, dir), pqBooks(s, dir), PqSubDim,
-          nprobe = IvfNprobe, rerank = PqRerank)
-      }
     },
 
     // Recall contract for the corpus-tracking-C configuration: nprobe/C
@@ -3699,9 +3649,11 @@ object SparkEntry {
       }
     },
 
-    // Residual twin of knn_pq_recall: same contract over the residual
-    // coder, so the residual-coding gain is a measured in-gate delta,
-    // not a claim.
+    // The ANN recall CONTRACT, measured in-gate (the quantizer's recall
+    // is a number the gate pins, not a docstring claim — the MinHash
+    // family got this treatment in dedup_minhash_recall; this is the
+    // embedding-side twin): recall@k of the fixed-C IVF-PQ search
+    // against the brute-force truth, as one row of integer counts.
     "knn_pq_residual_recall" -> { (s, dir) =>
       knnRecallCounts(s, dir, "n_pq") { (probes, corpus) =>
         SimilarityOps.ivfPqResidualSearch(probes, corpus,
@@ -3710,10 +3662,13 @@ object SparkEntry {
       }
     },
 
-    // RESIDUAL IVF-PQ — the full FAISS IVFPQ, search phase only: codes
-    // quantize vec − coarse_centroid (tighter quantized distribution at
-    // equal code budget), probe LUTs are per probed cell; books + coded
-    // index read from the model store.
+    // IVF-PQ (Jégou et al. 2011) — the full FAISS IVFPQ and the
+    // memory/IO companion of knn_ivf_trained, SEARCH PHASE ONLY: coarse
+    // centroids, residual sub-codebooks and the coded index are
+    // persisted model-store artifacts; codes quantize vec −
+    // coarse_centroid, probe LUTs are per probed cell, candidates travel
+    // as m small codes — never the 64 floats — and the exact cosine
+    // re-rank touches the ADC-best shortlist only.
     "knn_ivf_pq_residual" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id"), col("embedding").as("vec"))
@@ -3728,8 +3683,8 @@ object SparkEntry {
 
     // INCREMENTAL ANN maintenance: a batch of new arrivals (every 20th
     // vector, last component zeroed — the embedding_near_dup planting)
-    // is coded against the EXISTING trained artifacts via
-    // SimilarityOps.ivfAppend — no retraining, no old row touched —
+    // is residual-coded against the EXISTING fixed-C trained artifacts
+    // via SimilarityOps.ivfAppend — no retraining, no old row touched —
     // and search runs over the merged index. At 100 TB this is the only
     // sane ingest path: the quantizer retrains when the corpus
     // fingerprint moves, never per batch. Recall vs a full rebuild is
@@ -3740,12 +3695,12 @@ object SparkEntry {
         .select((col("vec_id") + 10000000L).as("vec_id"),
           concat(slice(col("embedding"), 1, 63), array(lit(0.0f))).as("vec"))
       val merged = embCorpus(s, dir).unionByName(arrivals)
-      val mergedIndex = SimilarityOps.ivfAppend(pqIndex(s, dir), arrivals,
-        coarseCentroids(s, dir), pqBooks(s, dir), PqSubDim)
+      val mergedIndex = SimilarityOps.ivfAppend(pqResIndex(s, dir),
+        arrivals, coarseCentroids(s, dir), pqResBooks(s, dir), PqSubDim)
       val probes = emb.filter(col("vec_id") % KnnProbeEvery === 0)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      SimilarityOps.ivfPqSearch(probes, merged, mergedIndex, KnnK,
-          coarseCentroids(s, dir), pqBooks(s, dir), PqSubDim,
+      SimilarityOps.ivfPqResidualSearch(probes, merged, mergedIndex, KnnK,
+          coarseCentroids(s, dir), pqResBooks(s, dir), PqSubDim,
           nprobe = IvfNprobe, rerank = PqRerank)
         .select(col("probe_id"), col("vec_id"),
           round(col("sim"), 9).as("sim"), col("rank"))
@@ -3873,7 +3828,7 @@ object SparkEntry {
       "simhash_recall", "simhash_recall_window", "simhash_recall_auto",
       "simhash_bucket_ledger",
       "dedup_lsh_bucket_ledger", "fuzzy_block_ledger", "jaccard_df_ledger",
-      "knn_ivf_recall", "knn_lsh_recall", "knn_pq_recall",
+      "knn_ivf_recall", "knn_lsh_recall",
       "knn_pq_autoc_recall", "knn_pq_autoc_recall_np9",
       "knn_pq_residual_recall", "knn_pq_auto_rerank",
       "knn_offmanifold_recall",
@@ -4385,19 +4340,14 @@ object SparkEntry {
     "kmeans_assignments" -> Oracles.kmeansAssignments(KmeansK, KmeansIters),
     "knn_ivf_trained" -> Oracles.knnIvfTrained(
       KnnProbeEvery, KnnK, KmeansK, KmeansIters, IvfNprobe),
-    "knn_ivf_pq" -> Oracles.knnIvfPq(KnnProbeEvery, KnnK, KmeansK,
-      KmeansIters, IvfNprobe, PqM, PqSubDim, PqKs, PqIters,
-      PqRerank.toString),
     "knn_ivf_pq_autoc" -> Oracles.knnIvfPqResidual(KnnProbeEvery, KnnK,
       IvfAutoC, KmeansIters, IvfNprobe, PqM, PqSubDim, PqKs, PqIters,
       Oracles.autoRerankSql),
-    "knn_ivf_incremental" -> Oracles.knnIvfIncremental(KnnProbeEvery, KnnK,
-      KmeansK, KmeansIters, IvfNprobe, PqM, PqSubDim, PqKs, PqIters,
-      PqRerank.toString),
+    "knn_ivf_incremental" -> Oracles.knnIvfPqResidualFrom(
+      Oracles.defaultProbesSql(KnnProbeEvery), KnnK, KmeansK, KmeansIters,
+      IvfNprobe, PqM, PqSubDim, PqKs, PqIters, PqRerank.toString,
+      codedSql = Oracles.plantedArrivalsCorpusSql),
     "knn_ivf_pq_residual" -> Oracles.knnIvfPqResidual(KnnProbeEvery, KnnK,
-      KmeansK, KmeansIters, IvfNprobe, PqM, PqSubDim, PqKs, PqIters,
-      PqRerank.toString),
-    "knn_pq_recall" -> Oracles.knnPqRecall(KnnProbeEvery, KnnK,
       KmeansK, KmeansIters, IvfNprobe, PqM, PqSubDim, PqKs, PqIters,
       PqRerank.toString),
     "knn_pq_autoc_recall" -> Oracles.knnPqResidualRecall(KnnProbeEvery,

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared SparkSession construction and inter-query storage hygiene for
-  * every command-line main (Bench, Verify, Explain, DevTime, the
-  * graft.tools.* measurement tools). One definition so a config or
+  * every command-line main (Bench, Verify, Explain, the graft.tools.*
+  * measurement tools). One definition so a config or
   * measurement-hygiene fix lands everywhere at once — before this the
   * 8 hand-rolled copies had already drifted (missing
   * inferTimestampNTZ, mismatched shuffle partitions). */

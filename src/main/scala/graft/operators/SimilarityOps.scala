@@ -184,10 +184,11 @@ object SimilarityOps {
 
   /** L2 rank-≤n nearest-centroid bucketing against a broadcast (trained)
     * centroid table — the shared coarse-quantization pass of every
-    * trained-quantizer search ([[ivfKnnTrained]], [[ivfPqKnn]],
-    * [[ivfPqResidualKnn]]): codegen [[graft.expressions.L2DistSq]]
-    * kernel, (d2, cent_id) tie-break, rank-1 plans as partial
-    * WindowGroupLimit. Keeps every input column plus `cent_id`. */
+    * trained-quantizer search ([[ivfKnnTrained]],
+    * [[ivfPqResidualSearch]], [[residualCorpus]]): codegen
+    * [[graft.expressions.L2DistSq]] kernel, (d2, cent_id) tie-break,
+    * rank-1 plans as partial WindowGroupLimit. Keeps every input column
+    * plus `cent_id`. */
   private def l2Buckets(cents: DataFrame)(
       df: DataFrame, idc: String, vecc: String, n: Int): DataFrame =
     df.crossJoin(broadcast(cents))
@@ -272,148 +273,28 @@ object SimilarityOps {
         array_sort(collect_list(struct(col("sub"), col("cent_id")))),
         x => x.getField("cent_id")).as("codes"))
 
-  /** The IVF-PQ coded INDEX — FAISS's "add" phase as a table:
-    * `(id, cent_id, codes)` for every corpus vector. This is the
-    * persisted-artifact half of PQ search ([[graft.io.ModelStore]]):
-    * built once per corpus (one broadcast-quantizer pass), stored
-    * columnar, and every later search touches only these m-code rows —
-    * the full float vectors stay at rest until the final re-rank. */
-  def ivfPqIndex(corpus: DataFrame, coarseCentroids: DataFrame,
-      codebooks: DataFrame, subDim: Int,
-      corpusId: String = "vec_id"): DataFrame =
-    l2Buckets(coarseCentroids.select(col("cent_id"), col("cent_vec")))(
-        corpus, corpusId, "vec", 1)
-      .select(col(corpusId), col("cent_id"))
-      .join(pqCodes(corpus, codebooks, subDim, corpusId), corpusId)
-
   /** INCREMENTAL index maintenance — FAISS's add() for continuous
     * ingest: code a batch of NEW vectors against the EXISTING trained
-    * artifacts (coarse centroids + sub-codebooks — model-store reads)
-    * and append to the persisted coded index. Nothing retrains and no
-    * existing row is touched: per batch the corpus-scale work is ONE
-    * broadcast-quantizer pass over the batch (the [[ivfPqIndex]]
-    * projection), the continuous-ingest twin of
+    * artifacts (coarse centroids + residual sub-codebooks — model-store
+    * reads) and append to the persisted coded index. Arrivals are coded
+    * with [[ivfPqResidualIndex]], the coder the index they join was
+    * built with. Nothing retrains and no existing row is touched: per
+    * batch the corpus-scale work is ONE broadcast-quantizer pass over
+    * the batch, the continuous-ingest twin of
     * [[DedupOps.minhashCandidatesAgainst]]. Re-arriving ids keep their
     * existing coded row (replay idempotence — the same anti-join
     * [[DedupOps.incrementalComponents]] seeds with). Retraining happens
-    * only when the corpus fingerprint moves (CONTRACTS §6); recall vs a
-    * full rebuild is a measured spec, not a claim. */
+    * only when the corpus fingerprint moves (CONTRACTS §6); the appended
+    * index equals [[ivfPqResidualIndex]] over the merged corpus (coding
+    * is a per-row projection against frozen quantizers). */
   def ivfAppend(existingIndex: DataFrame, newVectors: DataFrame,
       coarseCentroids: DataFrame, codebooks: DataFrame, subDim: Int,
       corpusId: String = "vec_id"): DataFrame = {
     val fresh = newVectors.select(col(corpusId), col("vec"))
       .join(existingIndex.select(col(corpusId)), Seq(corpusId), "left_anti")
     existingIndex.unionByName(
-      ivfPqIndex(fresh, coarseCentroids, codebooks, subDim, corpusId))
+      ivfPqResidualIndex(fresh, coarseCentroids, codebooks, subDim, corpusId))
   }
-
-  /** IVF-PQ ANN — the FAISS companion of [[ivfKnnTrained]]: coarse
-    * buckets from the trained quantizer, candidate scoring by ASYMMETRIC
-    * DISTANCE (per-probe lookup tables of probe-subvector→code
-    * distances, summed over subspaces against each candidate's codes),
-    * exact cosine re-rank ONLY on the `rerank` ADC-best candidates.
-    *
-    * Scale: the candidate stream carries `(cent_id, id, codes)` — never
-    * the float vectors (codes are m ids vs 64 floats: ~16x less IO);
-    * the probe LUTs are (probes · m · ks) doubles, broadcast; the exact
-    * re-rank joins the corpus by id for probes·rerank rows only, with
-    * the shortlist broadcast so the corpus never shuffles.
-    *
-    * Determinism: ADC folds subspace distances in subspace order from a
-    * 0.0 seed (the oracle folds `list(d2c ORDER BY sub)` identically);
-    * shortlist ties break (adc, id), final ties (sim desc, id).
-    *
-    * This entry point trains nothing and codes nothing: `corpusCoded` is
-    * the prebuilt [[ivfPqIndex]] (read from the model store in
-    * production); only the probe side is quantized at query time. */
-  def ivfPqSearch(
-      probes: DataFrame, corpus: DataFrame, corpusCoded: DataFrame, k: Int,
-      coarseCentroids: DataFrame, codebooks: DataFrame,
-      subDim: Int, nprobe: Int = 3, rerank: Int = 0,
-      probeId: String = "probe_id", corpusId: String = "vec_id"): DataFrame = {
-    val cents = coarseCentroids.select(col("cent_id"), col("cent_vec"))
-    val buckets = l2Buckets(cents) _
-
-    // Probe side: nprobe buckets + the per-subspace distance LUT
-    // (map cent_id -> d2, ordered into an array by subspace).
-    // ONE aggregation builds the whole per-probe LUT array (r21 verdict
-    // item 5): the previous two-level groupBy — (probeId, sub) maps,
-    // then per-probeId collect — planned two Exchanges back to back
-    // (the second re-shuffles the first's output because the hash
-    // partitionings differ). Collect every (sub, code, d2c) triple in
-    // one pass and assemble the sub-ordered map array as a projection;
-    // the HOF assembly is interpreted but runs over probe-count ×
-    // (m·ks) rows — bounded model-scale work, while the removed
-    // Exchange was a per-query fixed stage. Map iteration order is
-    // irrelevant downstream (maps are only read via element_at), and
-    // the sub axis is sorted exactly as the old comparator sorted it.
-    val lut = probes.crossJoin(broadcast(codebooks))
-      .select(col(probeId), col("sub"), col("cent_id"),
-        graft.expressions.GraftFunctions.l2DistSq(
-          slice(col("probe_vec"), col("sub") * subDim + 1, lit(subDim)),
-          col("cent_vec")).as("d2c"))
-      .groupBy(col(probeId))
-      .agg(collect_list(struct(col("sub"), col("cent_id"), col("d2c")))
-        .as("__lst"))
-      .select(col(probeId), expr(
-        """transform(array_sort(array_distinct(transform(__lst, x -> x.sub))),
-          |  s -> map_from_entries(transform(
-          |    filter(__lst, x -> x.sub = s),
-          |    x -> struct(x.cent_id, x.d2c))))"""
-          .stripMargin).as("luts"))
-    val probeBuckets = buckets(
-        probes.select(col(probeId), col("probe_vec")), probeId, "probe_vec",
-        nprobe)
-      .select(col(probeId), col("cent_id"))
-      .join(lut, probeId)
-
-    val adcRanked = corpusCoded.join(broadcast(probeBuckets), Seq("cent_id"))
-      .filter(col(probeId) =!= col(corpusId))
-      .select(col(probeId), col(corpusId),
-        aggregate(
-          zip_with(col("codes"), col("luts"), (c, mp) => element_at(mp, c)),
-          lit(0.0), (acc, x) => acc + x).as("adc"))
-      .withColumn("__ar", rank().over(
-        Window.partitionBy(col(probeId)).orderBy(col("adc"), col(corpusId))))
-    // rerank <= 0 selects the scale-aware depth ([[autoRerankStats]]) —
-    // the committed default: a fixed depth collapses off-manifold recall
-    // as auto-C grows the cell count (the round-16 weak mark). The depth
-    // arrives as a broadcast 1-row scalar (no driver count); the literal
-    // path keeps the WindowGroupLimit partial top-R, the auto path
-    // trades it for a post-window filter — bounded by the candidate set
-    // being only ~nprobe·N/C ≈ nprobe·√N rows per probe to begin with.
-    val shortlist = (if (rerank > 0) adcRanked.filter(col("__ar") <= rerank)
-      else adcRanked.crossJoin(broadcast(autoRerankOf(corpusCoded)))
-        .filter(col("__ar") <= col("__rr")))
-      .select(col(probeId), col(corpusId))
-
-    // Exact re-rank on the shortlist only: fetch the few full vectors by
-    // id (shortlist broadcast — the corpus still never shuffles).
-    val c = corpus.select(col(corpusId), col("vec"),
-      norm(col("vec")).as("__nrm"))
-    val p = probes.select(col(probeId), col("probe_vec"),
-      norm(col("probe_vec")).as("__pnrm"))
-    c.join(broadcast(shortlist), corpusId)
-      .join(broadcast(p), probeId)
-      .select(col(probeId), col(corpusId),
-        (dot(col("probe_vec"), col("vec")) /
-          (col("__pnrm") * col("__nrm"))).as("sim"))
-      .withColumn("rank", rank().over(
-        Window.partitionBy(col(probeId)).orderBy(col("sim").desc, col(corpusId))))
-      .filter(col("rank") <= k)
-  }
-
-  /** Self-contained IVF-PQ (index built inline): [[ivfPqIndex]] +
-    * [[ivfPqSearch]] composed — the spec/baseline form; production reads
-    * the index from the model store instead. */
-  def ivfPqKnn(
-      probes: DataFrame, corpus: DataFrame, k: Int,
-      coarseCentroids: DataFrame, codebooks: DataFrame,
-      subDim: Int, nprobe: Int = 3, rerank: Int = 0,
-      probeId: String = "probe_id", corpusId: String = "vec_id"): DataFrame =
-    ivfPqSearch(probes, corpus,
-      ivfPqIndex(corpus, coarseCentroids, codebooks, subDim, corpusId),
-      k, coarseCentroids, codebooks, subDim, nprobe, rerank, probeId, corpusId)
 
   /** Residual corpus w.r.t. the trained coarse quantizer:
     * `(id, cent_id, vec = raw − cent_vec)` — what residual sub-codebooks
@@ -440,8 +321,13 @@ object SimilarityOps {
         .select(col(corpusId), col("vec")),
       m, subDim, ks, iters, corpusId)
 
-  /** The residual IVF-PQ coded index: `(id, cent_id, codes)` where codes
-    * quantize the residual — FAISS IVFPQ's add phase as a table. */
+  /** The IVF-PQ coded INDEX — FAISS IVFPQ's "add" phase as a table:
+    * `(id, cent_id, codes)` for every corpus vector, where codes quantize
+    * the residual. This is the persisted-artifact half of PQ search
+    * ([[graft.io.ModelStore]]): built once per corpus (one
+    * broadcast-quantizer pass), stored columnar, and every later search
+    * touches only these m-code rows — the full float vectors stay at
+    * rest until the final re-rank. */
   def ivfPqResidualIndex(corpus: DataFrame, coarseCentroids: DataFrame,
       codebooks: DataFrame, subDim: Int,
       corpusId: String = "vec_id"): DataFrame = {
@@ -451,18 +337,30 @@ object SimilarityOps {
         subDim, corpusId), corpusId)
   }
 
-  /** RESIDUAL IVF-PQ — the full FAISS IVFPQ construction: sub-codebooks
+  /** IVF-PQ ANN (Jégou et al. 2011) — the FAISS IVFPQ construction and
+    * the memory/IO companion of [[ivfKnnTrained]]: coarse buckets from
+    * the trained quantizer, candidate scoring by ASYMMETRIC DISTANCE
+    * (per-probe lookup tables of probe-subvector→code distances, summed
+    * over subspaces against each candidate's codes), exact cosine
+    * re-rank ONLY on the `rerank` ADC-best candidates. Sub-codebooks
     * quantize the residual `vec − coarse_centroid` instead of the raw
     * vector, which concentrates the quantized distribution around the
     * origin and buys accuracy at equal code budget; the probe's lookup
     * table is therefore PER COARSE BUCKET (the probe residual differs in
-    * each probed cell). Same scale shape as [[ivfPqKnn]]: candidates
-    * travel as codes, LUTs are (probes·nprobe·m·ks) doubles broadcast,
-    * exact re-rank only on the ADC shortlist.
+    * each probed cell).
     *
-    * Returns `(probe_id, corpus_id, sim, rank)`. Residuals are exact
-    * IEEE subtractions of exactly-cast doubles, so the whole pipeline
-    * stays oracle-hashable.
+    * Scale: the candidate stream carries `(cent_id, id, codes)` — never
+    * the float vectors (codes are m ids vs 64 floats); the LUTs are
+    * (probes·nprobe·m·ks) doubles, broadcast; the exact re-rank joins
+    * the corpus by id for probes·rerank rows only, with the shortlist
+    * broadcast so the corpus never shuffles.
+    *
+    * Determinism: ADC folds subspace distances in subspace order from a
+    * 0.0 seed (the oracle folds `list(d2c ORDER BY sub)` identically);
+    * shortlist ties break (adc, id), final ties (sim desc, id).
+    * Residuals are exact IEEE subtractions of exactly-cast doubles, so
+    * the whole pipeline stays oracle-hashable. Returns
+    * `(probe_id, corpus_id, sim, rank)`.
     *
     * Search-only (FAISS's query phase): `corpusCoded` is the prebuilt
     * [[ivfPqResidualIndex]] and `codebooks` the trained
@@ -479,25 +377,31 @@ object SimilarityOps {
     def residual(vecc: String) =
       zip_with(col(vecc), col("cent_vec"),
         (x, c) => x.cast("double") - c)
-    val books = codebooks
 
     // Probe residual PER PROBED CELL, then the per-(probe, cell) LUT.
-    val probeRes = buckets(
-        probes.select(col(probeId), col("probe_vec")), probeId, "probe_vec",
-        nprobe)
+    // The bucketing window keeps only (probe, cell); the probe vectors
+    // rejoin from a broadcast, so no shuffle carries a vector.
+    val pv = probes.select(col(probeId), col("probe_vec"))
+    val probeRes = buckets(pv, probeId, "probe_vec", nprobe)
+      .select(col(probeId), col("cent_id"))
+      .join(broadcast(pv), probeId)
       .join(broadcast(cents), "cent_id")
       .select(col(probeId), col("cent_id"), residual("probe_vec").as("prvec"))
     val lut = probeRes.crossJoin(broadcast(
-        books.select(col("sub"), col("cent_id").as("code"), col("cent_vec")
+        codebooks.select(col("sub"), col("cent_id").as("code"), col("cent_vec")
           .as("sub_vec"))))
       .select(col(probeId), col("cent_id"), col("sub"), col("code"),
         graft.expressions.GraftFunctions.l2DistSq(
           slice(col("prvec"), col("sub") * subDim + 1, lit(subDim)),
           col("sub_vec")).as("d2c"))
-      // Same single-aggregation LUT assembly as [[ivfPqSearch]] (r21
-      // verdict item 5): one Exchange on (probeId, cent_id) instead of
-      // two, map array assembled as a projection over the bounded
-      // (nprobe·m·ks)-entry collect.
+      // ONE aggregation builds the per-(probe, cell) LUT array (r21
+      // verdict item 5): a two-level groupBy — (probe, cell, sub) maps,
+      // then a per-(probe, cell) collect — plans two Exchanges back to
+      // back, the second re-shuffling the built maps. Collect every
+      // (sub, code, d2c) triple in one pass and assemble the sub-ordered
+      // map array as a projection over the bounded (m·ks)-entry list.
+      // Map iteration order is irrelevant downstream (maps are only read
+      // via element_at).
       .groupBy(col(probeId), col("cent_id"))
       .agg(collect_list(struct(col("sub"), col("code"), col("d2c")))
         .as("__lst"))
@@ -516,12 +420,20 @@ object SimilarityOps {
           lit(0.0), (acc, x) => acc + x).as("adc"))
       .withColumn("__ar", rank().over(
         Window.partitionBy(col(probeId)).orderBy(col("adc"), col(corpusId))))
-    // Same scale-aware depth contract as [[ivfPqSearch]].
+    // rerank <= 0 selects the scale-aware depth ([[autoRerankStats]]) —
+    // the committed default: a fixed depth collapses off-manifold recall
+    // as auto-C grows the cell count (the round-16 weak mark). The depth
+    // arrives as a broadcast 1-row scalar (no driver count); the literal
+    // path keeps the WindowGroupLimit partial top-R, the auto path
+    // trades it for a post-window filter — bounded by the candidate set
+    // being only ~nprobe·N/C ≈ nprobe·√N rows per probe to begin with.
     val shortlist = (if (rerank > 0) adcRanked.filter(col("__ar") <= rerank)
       else adcRanked.crossJoin(broadcast(autoRerankOf(corpusCoded)))
         .filter(col("__ar") <= col("__rr")))
       .select(col(probeId), col(corpusId))
 
+    // Exact re-rank on the shortlist only: fetch the few full vectors by
+    // id (shortlist broadcast — the corpus still never shuffles).
     val c = corpus.select(col(corpusId), col("vec"),
       norm(col("vec")).as("__nrm"))
     val p = probes.select(col(probeId), col("probe_vec"),

@@ -478,52 +478,15 @@ object StreamingLoad {
 
   /** Continuously-maintained IVF-PQ coded index — FAISS's "add" phase
     * as a stream: each micro-batch of new vectors is coarse-bucketed and
-    * PQ-coded against the PERSISTED trained quantizers (coarse centroids
-    * + sub-codebooks, both model-store artifacts — training never reruns
-    * here) and the `(id, cent_id, codes)` rows are appended to the index
-    * table. The raw floats stay in the batch; the store grows by m small
-    * codes per vector — the PQ memory contract, maintained incrementally.
-    * Replay-safe: at-least-once redelivery is anti-joined away against
-    * the stored ids, so the index never holds duplicate codings (the
-    * ccLabelStream guard). Streamed index == batch [[graft.operators
-    * .SimilarityOps.ivfPqIndex]] over all vectors ever seen (coding is a
-    * pure per-row projection against frozen quantizers — batch identity
-    * is exact, the parity spec's contract). */
-  def pqIndexStream(
-      spark: SparkSession,
-      srcDir: String,
-      schema: StructType,
-      warehouse: ParquetWarehouse,
-      indexTable: TableRef,
-      coarseCentroids: DataFrame,
-      codebooks: DataFrame,
-      subDim: Int,
-      idField: String,
-      checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-        import org.apache.spark.sql.functions._
-        val batch = onePerId(batch0, idField)
-        // Replay guard BEFORE the coding projection (the ivfAppend order):
-        // a redelivered batch costs one id anti-join, not a full
-        // re-quantization of rows that are then thrown away.
-        val newRows = (if (warehouse.exists(indexTable))
-            batch.join(warehouse.table(indexTable).select(col(idField)),
-              Seq(idField), "left_anti")
-          else batch).select(col(idField), col("vec"))
-        val fresh = graft.operators.SimilarityOps.ivfPqIndex(
-            newRows, coarseCentroids, codebooks, subDim, idField)
-          .localCheckpoint(true)
-        warehouse.load(LoadMode.Insert, indexTable, fresh, idField)
-        }
-      }
-      .start()
-
-  /** [[pqIndexStream]] under the COMMITTED drift-threshold retrain
+    * PQ-coded against the SERVED trained quantizers (coarse centroids +
+    * residual sub-codebooks, both model-store artifacts) and the
+    * `(id, cent_id, codes, qfp)` rows are appended to the index table;
+    * the store grows by m small codes per vector — the PQ memory
+    * contract, maintained incrementally. Replay-safe: at-least-once
+    * redelivery is anti-joined away against the stored ids, so the
+    * index never holds duplicate codings (the ccLabelStream guard).
+    *
+    * Quantizers follow the COMMITTED drift-threshold retrain
     * policy — the round-16 weak mark's fix wired end-to-end: frozen
     * quantizers are correct per batch but collapse across size decades
     * (measured at 100×: per-probe 2.8 → 61 ms, recall@5 0.338 → 0.013
@@ -540,9 +503,9 @@ object StreamingLoad {
     *      [[graft.io.ModelStore.DriftRetrainFactor]] × the trained
     *      point — auto-C and auto-rerank re-derive with them,
     *   3. codes ONLY the vectors the index is missing (batch
-    *      anti-joined against the index table, the [[pqIndexStream]]
-    *      replay guard — so a crash between the corpus append and the
-    *      index append self-heals on redelivery) — unless
+    *      anti-joined against the index table, the replay guard above
+    *      — so a crash between the corpus append and the index append
+    *      self-heals on redelivery) — unless
     *      this batch CROSSED a decade, in which case the whole index
     *      is recoded under the new quantizers in one TruncateInsert
     *      (corpus-scale work on a log₂-rare event; every index row
@@ -680,7 +643,7 @@ object StreamingLoad {
         // and after a crash between the corpus Insert and the index
         // Insert a replayed batch finds `fresh` empty while the index
         // still lacks the rows; deduping against the index itself
-        // makes that window self-heal (the pqIndexStream contract).
+        // makes that window self-heal.
         val newRows = batch.select(col(idField), col("vec")).join(
           warehouse.table(indexTable).select(col(idField)),
           Seq(idField), "left_anti")

@@ -23,7 +23,8 @@ import graft.operators.SimilarityOps
   *      for a 10% batch (expected ~0.1x; the margin absorbs fixed
   *      overheads), with the build timed COLD and the append WARM-
   *      biased in its favor being impossible (build runs first);
-  *   4. search quality holds: recall@k of [[SimilarityOps.ivfPqSearch]]
+  *   4. search quality holds: recall@k of
+  *      [[SimilarityOps.ivfPqResidualSearch]]
   *      over the appended index vs exact [[SimilarityOps.bruteForceKnn]]
   *      ground truth on the merged corpus, for probes drawn from BOTH
   *      populations (pre-existing vectors and fresh arrivals — an
@@ -88,19 +89,20 @@ object IvfAppendProbe {
 
     // Trained artifacts: the PRODUCTION scale-aware coarse sample
     // (targetC <= 0 -> C = ceil(sqrt(N)), the same in-query derivation
-    // the gate queries run) and per-subspace PQ codebooks — trained
-    // ONCE on the base corpus, the model-store reads every later batch
-    // reuses.
+    // the gate queries run) and per-subspace residual PQ codebooks
+    // trained against it — trained ONCE on the base corpus, the
+    // model-store reads every later batch reuses.
     val cents = SimilarityOps.ivfCentroids(corpus, 0)
       .select(col("cent_id"),
         transform(col("cent_vec"), x => x.cast("double")).as("cent_vec"))
       .localCheckpoint(true)
-    val books = SimilarityOps.pqCodebooks(corpus, m, subDim, ks, iters = 1)
+    val books = SimilarityOps.pqResidualCodebooks(corpus, cents, m, subDim,
+        ks, iters = 1)
       .localCheckpoint(true)
 
     val t0 = System.nanoTime()
     val baseIndex = SimilarityOps
-      .ivfPqIndex(corpus, cents, books, subDim).localCheckpoint(true)
+      .ivfPqResidualIndex(corpus, cents, books, subDim).localCheckpoint(true)
     val nBase = baseIndex.count()
     val buildSecs = (System.nanoTime() - t0) / 1e9
 
@@ -130,7 +132,7 @@ object IvfAppendProbe {
       .localCheckpoint(true)
 
     val t3 = System.nanoTime()
-    val found = SimilarityOps.ivfPqSearch(probes, merged, appended, k,
+    val found = SimilarityOps.ivfPqResidualSearch(probes, merged, appended, k,
         cents, books, subDim, nprobe = 3, rerank = 12 * k)
       .select(col("probe_id"), col("vec_id"))
       .localCheckpoint(true)

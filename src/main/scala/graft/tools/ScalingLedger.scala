@@ -45,18 +45,10 @@ object ScalingLedger {
     // directly; the `% 100` gate fixtures stay oracle-checked but are
     // no longer what the ledger times (their ratios were probe-count
     // arithmetic, not operator behavior)
-    "knn_ivf_p1k", "knn_ivf_pq_p1k", "knn_ivf_pq_autoc_p1k",
-    // round-16: the nprobe=9 cost point promoted into the standing sets
-    // so the "auto-C np9 dominates fixed-C" claim is re-verified WITH
-    // recall at every ledger scale, not just the gate scales
-    "knn_ivf_pq_autoc_np9_p1k",
-    // round-17: the pre-migration fixed-120 depth pinned as a contrast
-    // row (the committed auto default is what autoc_p1k now runs)
-    "knn_ivf_pq_autoc_rr120_p1k",
-    "knn_ivf_pq_residual_p1k",
+    "knn_ivf_p1k", "knn_ivf_pq_residual_p1k",
     // round-18: the residual family at the committed scale policy
     // (auto-C + auto-rerank, books trained against the auto coarse) —
-    // the fixed-C residual row above becomes its contrast
+    // the fixed-C residual row above is its contrast
     "knn_ivf_pq_residual_autoc_p1k",
     "kmeans_centroids", "bpe_token_counts",
     "fuzzy_name_match", "boilerplate_dict_train", "boilerplate_scrub",
@@ -141,61 +133,6 @@ object ScalingLedger {
           SparkEntry.embCorpus(s, dir), SparkEntry.KnnK,
           centroidTarget = SparkEntry.IvfAutoC,
           nprobe = SparkEntry.IvfNprobe)),
-      "knn_ivf_pq_p1k" -> ((s, dir) =>
-        graft.operators.SimilarityOps.ivfPqSearch(syntheticProbes(s),
-          SparkEntry.embCorpus(s, dir), SparkEntry.pqIndex(s, dir),
-          SparkEntry.KnnK, SparkEntry.coarseCentroids(s, dir),
-          SparkEntry.pqBooks(s, dir), SparkEntry.PqSubDim,
-          nprobe = SparkEntry.IvfNprobe, rerank = SparkEntry.PqRerank)),
-      // The best-of-both row: train-once artifacts (run2 never pays the
-      // build) whose coarse C tracks the corpus (⌈√N⌉ at train time) —
-      // per-probe scan ∝ √N, the configuration SCALING.md prescribes
-      // for 100 TB. Gate twin: knn_ivf_pq_autoc (oracle-checked).
-      // Since round 17 this row runs the COMMITTED default (rerank 0 =
-      // scale-aware auto depth), so its recall/cost across decades is
-      // the number a user of the default configuration gets.
-      "knn_ivf_pq_autoc_p1k" -> ((s, dir) =>
-        graft.operators.SimilarityOps.ivfPqSearch(syntheticProbes(s),
-          SparkEntry.embCorpus(s, dir), SparkEntry.pqIndexAuto(s, dir),
-          SparkEntry.KnnK, SparkEntry.coarseCentroidsAuto(s, dir),
-          SparkEntry.pqBooks(s, dir), SparkEntry.PqSubDim,
-          nprobe = SparkEntry.IvfNprobe, rerank = SparkEntry.PqAutoRerank)),
-      // The PRE-round-17 fixed-depth configuration, pinned as the
-      // contrast row: what the default used to collapse to across
-      // decades (0.279 → 0.049 recall@5 at 100× with rerank 120). Kept
-      // so every future regen re-measures the committed default's gain
-      // against the configuration it replaced.
-      "knn_ivf_pq_autoc_rr120_p1k" -> ((s, dir) =>
-        graft.operators.SimilarityOps.ivfPqSearch(syntheticProbes(s),
-          SparkEntry.embCorpus(s, dir), SparkEntry.pqIndexAuto(s, dir),
-          SparkEntry.KnnK, SparkEntry.coarseCentroidsAuto(s, dir),
-          SparkEntry.pqBooks(s, dir), SparkEntry.PqSubDim,
-          nprobe = SparkEntry.IvfNprobe, rerank = SparkEntry.PqRerank)),
-      // The nprobe=9 cost point of the auto-C recall lever (standing
-      // in both decade sets since round 16, with recall fields) — at
-      // the committed auto depth since round 17.
-      "knn_ivf_pq_autoc_np9_p1k" -> ((s, dir) =>
-        graft.operators.SimilarityOps.ivfPqSearch(syntheticProbes(s),
-          SparkEntry.embCorpus(s, dir), SparkEntry.pqIndexAuto(s, dir),
-          SparkEntry.KnnK, SparkEntry.coarseCentroidsAuto(s, dir),
-          SparkEntry.pqBooks(s, dir), SparkEntry.PqSubDim,
-          nprobe = 3 * SparkEntry.IvfNprobe,
-          rerank = SparkEntry.PqAutoRerank)),
-      // The off-manifold RERANK lever (round 16): same auto-C artifacts
-      // and nprobe as knn_ivf_pq_autoc_p1k, exact-rerank depth 5x
-      // (600 vs 120). The 100x regen showed exact-in-cell search holds
-      // recall 0.167 where PQ@rerank-120 reads 0.049 AT THE SAME cells
-      // and nprobe — i.e. the true neighbor IS in a probed cell but ADC
-      // ranks it below 120 for far-from-manifold probes. Rerank cost is
-      // probes x depth exact distances (corpus-size-independent), so
-      // depth — not nprobe (measured tied at np9) — is the off-manifold
-      // recall knob. This twin prices it.
-      "knn_ivf_pq_autoc_rrdeep_p1k" -> ((s, dir) =>
-        graft.operators.SimilarityOps.ivfPqSearch(syntheticProbes(s),
-          SparkEntry.embCorpus(s, dir), SparkEntry.pqIndexAuto(s, dir),
-          SparkEntry.KnnK, SparkEntry.coarseCentroidsAuto(s, dir),
-          SparkEntry.pqBooks(s, dir), SparkEntry.PqSubDim,
-          nprobe = SparkEntry.IvfNprobe, rerank = 5 * SparkEntry.PqRerank)),
       "knn_ivf_pq_residual_p1k" -> ((s, dir) =>
         graft.operators.SimilarityOps.ivfPqResidualSearch(
           syntheticProbes(s), SparkEntry.embCorpus(s, dir),
@@ -203,12 +140,13 @@ object ScalingLedger {
           SparkEntry.coarseCentroids(s, dir), SparkEntry.pqResBooks(s, dir),
           SparkEntry.PqSubDim, nprobe = SparkEntry.IvfNprobe,
           rerank = SparkEntry.PqRerank)),
-      // The residual family at the COMMITTED scale policy (r17 verdict
-      // ask #4): auto-C coarse quantizer, residual books trained
-      // against IT (residual coding is coarse-dependent), auto rerank
-      // depth. The fixed-C/fixed-120 row above stays as the contrast —
-      // whether residual coding's 1x accuracy edge survives the scale
-      // policies is exactly what this pair measures across decades.
+      // The COMMITTED default (r17 verdict ask #4, default since r19):
+      // auto-C coarse quantizer, residual books trained against IT
+      // (residual coding is coarse-dependent), auto rerank depth — the
+      // configuration SCALING.md prescribes for 100 TB: train-once
+      // artifacts whose coarse C tracks the corpus (per-probe scan
+      // ∝ √N). Gate twin: knn_ivf_pq_autoc (oracle-checked). The
+      // fixed-C/fixed-120 row above stays as the contrast.
       "knn_ivf_pq_residual_autoc_p1k" -> ((s, dir) =>
         graft.operators.SimilarityOps.ivfPqResidualSearch(
           syntheticProbes(s), SparkEntry.embCorpus(s, dir),
@@ -285,12 +223,12 @@ object ScalingLedger {
             concat(slice(col("vec"), 1, 63), array(lit(0.0f))).as("vec"))
         val merged = emb.unionByName(arrivals)
         val mergedIndex = graft.operators.SimilarityOps.ivfAppend(
-          SparkEntry.pqIndex(s, dir), arrivals,
-          SparkEntry.coarseCentroids(s, dir), SparkEntry.pqBooks(s, dir),
+          SparkEntry.pqResIndex(s, dir), arrivals,
+          SparkEntry.coarseCentroids(s, dir), SparkEntry.pqResBooks(s, dir),
           SparkEntry.PqSubDim)
-        graft.operators.SimilarityOps.ivfPqSearch(syntheticProbes(s),
+        graft.operators.SimilarityOps.ivfPqResidualSearch(syntheticProbes(s),
           merged, mergedIndex, SparkEntry.KnnK,
-          SparkEntry.coarseCentroids(s, dir), SparkEntry.pqBooks(s, dir),
+          SparkEntry.coarseCentroids(s, dir), SparkEntry.pqResBooks(s, dir),
           SparkEntry.PqSubDim, nprobe = SparkEntry.IvfNprobe,
           rerank = SparkEntry.PqRerank)
       })
@@ -428,7 +366,7 @@ object ScalingLedger {
     // regens used to put the scaled corpus' one-time warm-up (JIT,
     // shuffle machinery, page cache of a 100x parquet tree) on the
     // FIRST timed row — measured 2-20x timing swings on unchanged code
-    // (knn_ivf_pq_autoc_p1k 19.4 ms in a 7-row subset regen vs 2.2 ms
+    // (an autoc PQ row read 19.4 ms in a 7-row subset regen vs 2.2 ms
     // in the same-day full regen; recall columns were regen-stable, so
     // no decision was wrong, but the subset timing columns lied). One
     // discarded execution of the first query at each scale absorbs it
@@ -479,10 +417,9 @@ object ScalingLedger {
     // CONTRACTS rule (r18, from the r17 verdict's ask #8): the
     // committed ANN default's off-manifold floor is a CHECKED bound,
     // not a SCALING.md sentence — any 100x default-fixture regen that
-    // includes the committed-default row must clear recall@5 >= 0.14
-    // on the external synthetic probes (measured 0.145 at the r17
-    // close vs 0.049 for the replaced fixed-120 depth; recall counts
-    // are deterministic, so the floor carries no run-to-run variance).
+    // includes the committed-default row must clear its recall@5 floor
+    // on the external synthetic probes (recall counts are
+    // deterministic, so the floor carries no run-to-run variance).
     if (mult >= 100 && fixture == "default") {
       // §16 floors are DERIVED FRACTIONS of the committed measurement
       // they guard, not free constants (r19 verdict ask #4): 0.9 x the
@@ -493,19 +430,9 @@ object ScalingLedger {
       // band absorbs intentional small re-derivations, never ambient
       // variance.
       // Measured at the r19 residual-flip regen (commit ab190c3,
-      // SCALING_LEDGER_100X.json): raw-autoc contrast 0.1454.
-      val autocMeasured = 0.1454
-      // Same regen: committed default (residual + auto-C/auto-rerank)
-      // 0.1996.
+      // SCALING_LEDGER_100X.json): committed default (residual +
+      // auto-C/auto-rerank) 0.1996.
       val residualAutocMeasured = 0.1996
-      recall.get(("knn_ivf_pq_autoc_p1k", "scaled")).foreach { case (t, h) =>
-        val r = h.toDouble / t
-        require(r >= 0.9 * autocMeasured,
-          f"non-residual autoc off-manifold recall@5 $r%.4f < 0.9 x " +
-            f"measured $autocMeasured (= ${0.9 * autocMeasured}%.4f) at " +
-            "100x (CONTRACTS: auto-rerank scale policy) — the contrast " +
-            "row has regressed, do not commit this ledger")
-      }
       recall.get(("knn_ivf_pq_residual_autoc_p1k", "scaled")).foreach {
         case (t, h) =>
           val r = h.toDouble / t

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression: training one artifact may request another mid-train
-  * (pqIndex's trainer reads pqBooks and coarseCentroids). SparkEntry's
-  * in-JVM memo must therefore be reentrant — the original
+  * (pqResIndex's trainer reads pqResBooks, whose trainer reads
+  * coarseCentroids). SparkEntry's in-JVM memo must therefore be
+  * reentrant — the original
   * computeIfAbsent memo threw "IllegalStateException: Recursive update"
   * the first time a FRESH corpus resolved the nested chain, because on
   * the gate corpora an earlier query in the run order always trained the
@@ -26,8 +27,9 @@ class ModelReentrancySpec extends AnyFunSuite with SparkSuite {
         Files.copy(src, dir.resolve(s"$tbl.parquet"),
           StandardCopyOption.REPLACE_EXISTING)
       }
-      // knn_ivf_pq is the outermost link: index ← (books, centroids).
-      val out = SparkEntry.queries("knn_ivf_pq")(spark, dir.toString)
+      // knn_ivf_pq_residual is the outermost link:
+      // index ← (books ← centroids, centroids).
+      val out = SparkEntry.queries("knn_ivf_pq_residual")(spark, dir.toString)
       assert(out.count() > 0)
     } finally {
       dir.toFile.listFiles().foreach(_.delete())

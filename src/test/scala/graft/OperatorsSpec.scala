@@ -1218,7 +1218,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
       SparkEntry.queries(name)(spark, dir).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._1)
         .map { case (p, a) => p -> a.map(_._2).toSet }
-    val pq = hits("knn_ivf_pq")
+    val pq = hits("knn_ivf_pq_autoc")
     val ivf = hits("knn_ivf_trained")
     assert(pq.keySet == ivf.keySet)
     // PQ prunes with quantized distances, so it cannot beat its own
@@ -1877,16 +1877,17 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     val arrivals = emb.filter(col("vec_id") % 20 === 0)
       .select((col("vec_id") + 10000000L).as("vec_id"),
         concat(slice(col("embedding"), 1, 63), array(lit(0.0f))).as("vec"))
-    def train(c: org.apache.spark.sql.DataFrame) = {
+    def cents(c: org.apache.spark.sql.DataFrame) = {
       val initial = SimilarityOps.ivfCentroids(c, 8)
         .select(col("cent_id"),
           transform(col("cent_vec"), x => x.cast("double")).as("cent_vec"))
-      (ClusterOps.kmeans(c, initial, 2),
-        SimilarityOps.pqCodebooks(c, 4, 16, 8, 1))
+      ClusterOps.kmeans(c, initial, 2).localCheckpoint(true)
     }
-    val (baseCents, baseBooks) = train(corpus)
-    val baseIndex = SimilarityOps.ivfPqIndex(corpus, baseCents, baseBooks, 16)
-      .localCheckpoint(true)
+    val baseCents = cents(corpus)
+    val baseBooks = SimilarityOps.pqResidualCodebooks(corpus, baseCents,
+      4, 16, 8, 1).localCheckpoint(true)
+    val baseIndex = SimilarityOps.ivfPqResidualIndex(corpus, baseCents,
+      baseBooks, 16).localCheckpoint(true)
     val appended = SimilarityOps.ivfAppend(baseIndex, arrivals,
       baseCents, baseBooks, 16).localCheckpoint(true)
     // Every arrival coded exactly once; replaying the same batch is a
@@ -1895,18 +1896,29 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     val replayed = SimilarityOps.ivfAppend(appended, arrivals,
       baseCents, baseBooks, 16)
     assert(replayed.count() == appended.count())
+    // Arrivals are coded the way the index they join was coded: the
+    // appended index equals a one-shot coding of the merged corpus
+    // against the same frozen artifacts.
+    val merged = corpus.unionByName(arrivals)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+        .toSet
+    val oneShot = rows(SimilarityOps.ivfPqResidualIndex(merged, baseCents,
+      baseBooks, 16))
+    val got = rows(appended)
+    assert(got == oneShot,
+      s"append/one-shot drift: ${got.diff(oneShot).take(3)} | " +
+        s"${oneShot.diff(got).take(3)}")
     // Recall of append-without-retrain vs a full rebuild on the merged
     // corpus (both searched identically).
-    val merged = corpus.unionByName(arrivals)
     val probes = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-    val inc = SimilarityOps.ivfPqSearch(probes, merged, appended, 5,
+    val inc = SimilarityOps.ivfPqResidualSearch(probes, merged, appended, 5,
         baseCents, baseBooks, 16, nprobe = 3, rerank = 120)
       .select(col("probe_id"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (fullCents, fullBooks) = train(merged)
-    val full = SimilarityOps.ivfPqKnn(probes, merged, 5,
-        fullCents, fullBooks, 16, nprobe = 3, rerank = 120)
+    val full = SimilarityOps.ivfPqResidualKnn(probes, merged, 5,
+        cents(merged), 4, 16, 8, 1, nprobe = 3, rerank = 120)
       .select(col("probe_id"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = inc.intersect(full).size.toDouble / full.size

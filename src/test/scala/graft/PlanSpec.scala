@@ -118,10 +118,11 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("IVF-PQ search: no shuffle carries float vectors — codes travel, not vectors") {
-    // Train quantizers first and cut their lineage (training is a
-    // separate, persisted artifact in a real pipeline); then assert the
-    // SEARCH plan never shuffles a vector column — candidates move as
-    // (cent_id, id, codes), the whole memory/IO point of PQ.
+    // Train the quantizers and code the index first and cut their
+    // lineage (each is a separate, persisted model-store artifact in a
+    // real pipeline); then assert the SEARCH plan never shuffles a
+    // vector column — candidates move as (cent_id, id, codes), the
+    // whole memory/IO point of PQ.
     val emb = Tables(spark, sfDir, "embeddings")
     val corpus = emb.select(col("vec_id"), col("embedding").as("vec"))
     val probes = emb.filter(col("vec_id") % 100 === 0)
@@ -130,10 +131,12 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       .select(col("cent_id"),
         transform(col("cent_vec"), x => x.cast("double")).as("cent_vec"))
     val coarse = operators.ClusterOps.kmeans(corpus, initial, 1).localCheckpoint()
-    val books = operators.SimilarityOps.pqCodebooks(corpus, 4, 16, 4, 1)
-      .localCheckpoint()
-    val df = operators.SimilarityOps.ivfPqKnn(probes, corpus, 5, coarse,
-      books, 16)
+    val books = operators.SimilarityOps.pqResidualCodebooks(corpus, coarse,
+      4, 16, 4, 1).localCheckpoint()
+    val index = operators.SimilarityOps.ivfPqResidualIndex(corpus, coarse,
+      books, 16).localCheckpoint()
+    val df = operators.SimilarityOps.ivfPqResidualSearch(probes, corpus,
+      index, 5, coarse, books, 16)
     df.collect() // materialize so AQE finalizes every stage
     def shuffles(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[Seq[String]] = {
@@ -459,7 +462,7 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // MapType column. The fused form collects raw (sub, code, d2c)
     // triples in one aggregation and assembles the map array as a
     // projection; no exchange may ship a MapType column.
-    val df = SparkEntry.queries("knn_ivf_pq")(spark, sfDir)
+    val df = SparkEntry.queries("knn_ivf_pq_residual")(spark, sfDir)
     df.collect() // finalize AQE stages
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -543,10 +546,17 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // back, the Window count or the vkey probe fails here, not on a
     // cluster. Output equivalence is pinned separately (the
     // unguarded≡guarded parity spec and the oracle rows).
-    val p = plan("simhash_near_dup")
-    assert(!p.contains("vkey"),
+    val exec = SparkEntry.queries("simhash_near_dup")(spark, sfDir)
+      .queryExecution.executedPlan
+    assert(!exec.toString.contains("vkey"),
       "variant-stage nodes present despite a provably empty vkn")
-    val windowCount = p.linesIterator.count(_.matches(".*\\bWindow\\b.*windowspecdefinition.*"))
+    // Count Window operators on the plan tree (through the adaptive
+    // wrapper and its query stages), not on the rendered plan text.
+    val windowCount =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(exec) {
+          case w: org.apache.spark.sql.execution.window.WindowExec => w
+        }.size
     assert(windowCount == 2,
       s"expected exactly the 2 banding population windows, found $windowCount")
   }

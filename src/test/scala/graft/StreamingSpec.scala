@@ -627,52 +627,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(scrubbed("u1") == "unique one" && scrubbed("u3") == "third thing")
   }
 
-  test("pqIndexStream: streamed coded index == batch ivfPqIndex, replay-safe") {
-    import graft.operators.{ClusterOps, SimilarityOps}
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_pqidx").toString
-    val src = s"$root/src"; Files.createDirectories(Paths.get(src))
-    val wh = new ParquetWarehouse(spark, s"$root/wh")
-    val idx = TableRef("", "pq_index")
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("vec", ArrayType(FloatType))))
-    val dim = 8; val subDim = 4
-    // Dyadic-rational components: exact through JSON text, float parse,
-    // and double widening — parity cannot hinge on repr round-trips.
-    def vec(id: Long): Seq[Float] =
-      (0 until dim).map(d => (((id * 7 + d * 3) % 33) - 16) / 16.0f)
-    def line(id: Long): String =
-      s"""{"vec_id":$id,"vec":[${vec(id).mkString(",")}]}"""
-    val all = (0L until 24L).toSeq
-    val corpus = all.map(i => (i, vec(i))).toDF("vec_id", "vec")
-    // Quantizers trained ONCE on the full corpus and frozen (the model-
-    // store artifacts of the production path).
-    val initial = SimilarityOps.ivfCentroids(corpus, 4)
-      .select(col("cent_id"),
-        transform(col("cent_vec"), x => x.cast("double")).as("cent_vec"))
-    val coarse = ClusterOps.kmeans(corpus, initial, 2).localCheckpoint(true)
-    val books = SimilarityOps.pqCodebooks(corpus, dim / subDim, subDim, 3, 2)
-      .localCheckpoint(true)
-    def run(): Unit = StreamingLoad.pqIndexStream(spark, src, vecSchema, wh,
-      idx, coarse, books, subDim, "vec_id", s"$root/ckpt").awaitTermination()
-    writeFile(src, "a.json", all.take(10).map(line).mkString("\n"))
-    run()
-    assert(wh.table(idx).count() == 10)
-    // Second batch includes REPLAYED ids 8-9: index must not duplicate.
-    writeFile(src, "b.json", all.drop(8).map(line).mkString("\n"))
-    run()
-    val streamed = wh.table(idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
-      .toSet
-    assert(streamed.size == 24, s"index has ${streamed.size} rows, want 24")
-    val batch = SimilarityOps.ivfPqIndex(corpus, coarse, books, subDim)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
-      .toSet
-    assert(streamed == batch,
-      s"streamed/batch drift: ${streamed.diff(batch)} | ${batch.diff(streamed)}")
-  }
-
   test("pqIndexStreamDrifted: serve-stale inside a size decade, retrain across it; recall >= frozen twin") {
     import graft.operators.{ClusterOps, SimilarityOps}
     import spark.implicits._
@@ -742,8 +696,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
     // Recall re-measured: probes from region B (where staleness hurts)
     // against the brute-force truth, drifted-served artifacts vs the
-    // FROZEN twin (the same recipe trained on region A only — what
-    // pqIndexStream with 1x artifacts would still serve).
+    // FROZEN twin (the same recipe trained on region A only — what an
+    // index coded against 1x artifacts would still serve).
     val corpus = wh.table(corpusT).select(col("vec_id"), col("vec"))
       .localCheckpoint(true)
     val probes = (0 until 16).map { j =>
@@ -895,8 +849,10 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val corpus = wh.table(corpusT).select(col("vec_id"), col("vec"))
     val rawBooks = SimilarityOps.pqCodebooks(corpus, m, subDim, 4, 2,
       "vec_id")
-    val rawCoded = SimilarityOps.ivfPqIndex(corpus, cents, rawBooks,
-        subDim, "vec_id")
+    val rawCoded = graft.operators.ClusterOps.kmeansAssign(corpus, cents)
+      .select(col("vec_id"), col("cent_id"))
+      .join(SimilarityOps.pqCodes(corpus, rawBooks, subDim, "vec_id"),
+        "vec_id")
       .withColumn("qfp", lit(coarseFp)).localCheckpoint(true)
     wh.load(graft.core.LoadMode.TruncateInsert, idx, rawCoded, "vec_id")
     assert(wh.table(idx).select("qfp").distinct().collect()
