@@ -35,10 +35,20 @@ for p in ("java.lang java.lang.invoke java.lang.reflect java.io java.net "
     ADD_OPENS += [f"--add-opens=java.base/{p}=ALL-UNNAMED"]
 
 
+def heap():
+    """SPARK_DRIVER_MEM, else half of MemTotal clamped to 2-8 GiB (the
+    Tier-1 test sizing, as in run_bench.sh)."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    return f"{min(8, max(2, kb // 2097152))}g"
+
+
 def spawn(classes, sf, cpus):
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf, SPARK_GRAFT_CPUS=cpus)
     cmd = (["java"] + ADD_OPENS +
-           ["-Xmx16g", "-Dspark.ui.enabled=false",
+           [f"-Xmx{heap()}", "-Dspark.ui.enabled=false",
             "-Dspark.sql.session.timeZone=UTC",
             "-cp", f"{classes}:{SPARK_JARS}", "graft.BenchServe"])
     return subprocess.Popen(cmd, stdin=subprocess.PIPE,
@@ -75,7 +85,7 @@ def main():
     ap.add_argument("ref_classes")
     ap.add_argument("new_classes")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", default="32")
+    ap.add_argument("--cpus", default=str(os.cpu_count()))
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--out", default="BENCH_PAIRED.json")
     ap.add_argument("--only", default="")

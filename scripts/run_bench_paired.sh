@@ -14,7 +14,7 @@ set -e
 cd "$(dirname "$0")/.."
 REF=${1:-HEAD}
 SF=${2:-/root/testdata/sf0.1}
-CPUS=${3:-32}
+CPUS=${3:-$(nproc)}
 ONLY=${4:-}
 
 REFSHA=$(git rev-parse --short "$REF")
@@ -29,6 +29,12 @@ if [ ! -d "$WT/target/scala-2.13/classes" ]; then
   # the reference build (harness-side patch, identical bytes both sides;
   # it only touches SparkEntry.queries + ToolSession, stable since r12).
   cp src/main/scala/graft/BenchServe.scala "$WT/src/main/scala/graft/"
+  # References whose ToolSession predates the zero-argument cpus() read
+  # the core count the same way inline (bench_paired.py always sets it).
+  if ! grep -q 'def cpus()' "$WT/src/main/scala/graft/ToolSession.scala"; then
+    sed -i 's/ToolSession.cpus()/sys.env("SPARK_GRAFT_CPUS")/' \
+      "$WT/src/main/scala/graft/BenchServe.scala"
+  fi
   (cd "$WT" && sbt -batch compile > /dev/null)
 fi
 

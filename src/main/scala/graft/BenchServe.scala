@@ -35,8 +35,7 @@ package graft
 object BenchServe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = ToolSession.local(cpus, logLevel = "WARN")
+    val spark = ToolSession.local(ToolSession.cpus(), logLevel = "WARN")
     val out = new java.io.PrintWriter(
       new java.io.OutputStreamWriter(System.out, "UTF-8"), true)
     def esc(s: String) = s.flatMap {

@@ -10,11 +10,12 @@ import org.apache.spark.sql.SparkSession
   * inferTimestampNTZ, mismatched shuffle partitions). */
 object ToolSession {
 
-  /** `SPARK_GRAFT_CPUS`-tunable parallelism with a per-tool default
-    * ("4" for the driver-invoked mains whose scripts export the env,
-    * "32" for the dev measurement tools). */
-  def cpus(default: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+  /** Parallelism of the measurement tools and BenchServe:
+    * `SPARK_GRAFT_CPUS` when set, otherwise the cores this JVM sees.
+    * (Bench and Verify keep their own "4" default.) */
+  def cpus(): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
 
   /** The standard local session: shuffle partitions sized to the core
     * count (not the 200 default — CONTRACTS: partitions are sized to

@@ -360,6 +360,15 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       finally in.close()
     } catch { case _: java.io.IOException => None }
 
+  /** The `_app_<uuid>` append markers currently present at a version
+    * dir's root — the file-set fingerprint the insert-vs-merge close
+    * rides on (one flat listing; markers never nest into partition
+    * subdirs). Underscore-prefixed, so parquet readers ignore them. */
+  private def appendMarkers(t: TableRef, v: String): Set[String] =
+    try fs.listStatus(new Path(s"${tableDir(t)}/$v"))
+      .map(_.getPath.getName).filter(_.startsWith("_app_")).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+
   /** Write a brand-new version dir (honoring the table's partition
     * layout) and compare-and-swap the pointer to it: the swap commits
     * only if the live version still equals `base` — the version this
@@ -373,15 +382,6 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     * before the swap can still finish against the old file set — the
     * same reader-grace idea snapshot formats use. Disk cost is bounded
     * at one extra generation per table. */
-  /** The `_app_<uuid>` append markers currently present at a version
-    * dir's root — the file-set fingerprint the insert-vs-merge close
-    * rides on (one flat listing; markers never nest into partition
-    * subdirs). Underscore-prefixed, so parquet readers ignore them. */
-  private def appendMarkers(t: TableRef, v: String): Set[String] =
-    try fs.listStatus(new Path(s"${tableDir(t)}/$v"))
-      .map(_.getPath.getName).filter(_.startsWith("_app_")).toSet
-    catch { case _: java.io.FileNotFoundException => Set.empty }
-
   private def commitNewVersion(t: TableRef, df: DataFrame,
       base: Option[String], baseMarkers: Option[Set[String]] = None): Unit = {
     val v = s"v_${System.currentTimeMillis()}_${java.util.UUID.randomUUID().toString.take(8)}"
@@ -577,12 +577,6 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     }
   }
 
-  /** Small-file compaction: rewrite the current version into `nFiles`
-    * part files and swap the pointer. Incremental appends (L1) accumulate
-    * one file set per load job; at warehouse scale the read cost of many
-    * small parquet files dominates — periodic compaction is the standard
-    * remedy. Atomic like every other version swap: readers see the old
-    * file set until the pointer moves. */
   /** All retained version ids, oldest first (the fixed-width millis
     * prefix makes lexicographic order chronological). The write path
     * retains exactly {current, previous}, so this is the time-travel
@@ -642,6 +636,12 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       .parquet(s"${tableDir(t)}/$v"))
   }
 
+  /** Small-file compaction: rewrite the current version into `nFiles`
+    * part files and swap the pointer. Incremental appends (L1) accumulate
+    * one file set per load job; at warehouse scale the read cost of many
+    * small parquet files dominates — periodic compaction is the standard
+    * remedy. Atomic like every other version swap: readers see the old
+    * file set until the pointer moves. */
   def compact(t: TableRef, nFiles: Int): Unit = {
     val (base, m0, df) = pinnedRead(t)
     commitNewVersion(t, df.repartition(nFiles), base, baseMarkers = Some(m0))

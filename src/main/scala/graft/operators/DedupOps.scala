@@ -1242,7 +1242,11 @@ object DedupOps {
     // form spent 4.6 s vs the exact form's 0.9 s on the same sig, and
     // this double execution was the largest share). Rows are
     // vkey-metadata (5 narrow columns), bounded by 39 × over-cap
-    // members.
+    // members. The checkpoint is taken on EVERY guarded path that
+    // reads vkn, escalateBudget = 0 included: there vUnder and
+    // vOverBase are still its two consumers (CONTRACTS §13), and the
+    // price is one eager Spark job at plan construction plus blocks
+    // pinned until the caller's storage scope releases them.
     lazy val vkn = {
       val w = vk.withColumn("__vn", count(lit(1)).over(
         Window.partitionBy(col("c"), col("chunk"), col("c2"), col("vkey"))))
@@ -1269,7 +1273,7 @@ object DedupOps {
     // escalation cut, the per-signature group window passes when no
     // group exceeds maxBucket). Every pruning decision reads the SAME
     // materialized vkn blocks the final query reads (vkn is an eager
-    // localCheckpoint on this path), so there is no
+    // localCheckpoint on every guarded path), so there is no
     // compute-then-recompute window for the facts to drift in; output
     // equivalence is the plain "a filter nothing satisfies produces
     // no rows" argument, re-pinned by the oracle and the parity specs.
@@ -1318,7 +1322,8 @@ object DedupOps {
           escalateBudget.toLong * nSims)._1
       }
     // Leg-pruning facts — meaningful (and evaluated) only on the
-    // guarded escalated path, where vkn is a materialized checkpoint.
+    // guarded escalated path (escalateBudget > 0); with a zero budget
+    // nothing reads them, though vkn is still checkpointed.
     lazy val variantStageEmpty: Boolean =
       escalateBudget > 0 && escalFacts._2
     lazy val windowStageEmpty: Boolean =

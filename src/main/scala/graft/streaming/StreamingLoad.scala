@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -77,7 +78,7 @@ object StreamingLoad {
   private def onePerId(batch: DataFrame, idField: String): DataFrame = {
     val others = batch.columns.filter(_ != idField).map(col).toSeq
     batch.withColumn("__one",
-        row_number().over(org.apache.spark.sql.expressions.Window
+        row_number().over(Window
           .partitionBy(col(idField)).orderBy(struct(others: _*))))
       .filter(col("__one") === 1).drop("__one")
   }
@@ -124,6 +125,165 @@ object StreamingLoad {
     }
   }
 
+  /** The stream every file-fed sink runs: NDJSON files of `schema`
+    * picked up from `srcDir` (at most `maxFilesPerTrigger` per batch when
+    * set), one `body` call per micro-batch inside [[batchStorageScope]],
+    * progress in `checkpointDir`. AvailableNow unless the sink passes its
+    * own trigger. */
+  private def runStream(
+      spark: SparkSession,
+      srcDir: String,
+      schema: StructType,
+      checkpointDir: String,
+      trigger: Trigger = Trigger.AvailableNow(),
+      maxFilesPerTrigger: Option[Int] = None)(
+      body: DataFrame => Unit): StreamingQuery = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+      .json(srcDir)
+      .writeStream
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batchStorageScope(spark)(body(batch))
+      }
+      .start()
+  }
+
+  /** The per-table replay guard of the multi-store sinks (CONTRACTS §8c
+    * leg (a)): the rows of `df` whose id `table` does not hold yet,
+    * materialized BEFORE the insert so the anti-join reads the pre-append
+    * store. At-least-once delivery replays whole batches, and a crash
+    * between two inserts leaves a doc in some stores but not others;
+    * guarding each store against ITS OWN ids makes every insert
+    * individually idempotent, so full and partial replays both heal. A
+    * single guard shared by two stores would instead turn a crash
+    * between them into permanent loss (the replay finds nothing fresh,
+    * so the missing rows are never written). */
+  private def notIn(warehouse: ParquetWarehouse, df: DataFrame,
+      table: TableRef, idField: String): DataFrame =
+    (if (warehouse.exists(table))
+        df.join(warehouse.table(table).select(col(idField)),
+          Seq(idField), "left_anti")
+      else df).localCheckpoint(true)
+
+  /** "No URL": a doc whose canonical key is blank has no key to dedup
+    * on — it always survives the URL stage and contributes nothing to
+    * the key store. Blank includes whitespace-only strings (crawl JSON
+    * encodes missing as "", "\t", or "\n" as often as null; the
+    * canonicalizer passes them through, and one shared blank key would
+    * silently collapse every url-less doc corpus-wide onto the first
+    * arrival — rlike over \s, because trim() strips only ASCII spaces).
+    * Without the split, the keep-lowest window would collapse every
+    * null-key doc of a batch into one survivor while cross-batch nulls
+    * always survive — inconsistent, and either way not URL dedup. */
+  private def blank(c: Column): Column = c.isNull || c.rlike("^\\s*$")
+
+  /** The canonical-URL reject stage: one row per id, its URL
+    * canonicalized into `canonical_url`, and only the docs whose key is
+    * neither held by the PERSISTED `keyTable` nor claimed by a lower-id
+    * arrival of the same batch (keep-lowest: arrivals 2..n of a key are
+    * within-batch rejects even when the key is new). Keyless docs
+    * ([[blank]]) always survive. Materialized: one evaluation feeds the
+    * key-store insert and everything downstream. */
+  private def urlStage(warehouse: ParquetWarehouse, batch: DataFrame,
+      keyTable: TableRef, idField: String, urlField: String): DataFrame = {
+    val all = onePerId(batch, idField).withColumn("canonical_url",
+        graft.operators.CurationOps.canonicalizeUrl(col(urlField)))
+      .localCheckpoint(true)
+    val keyed = all.filter(!blank(col("canonical_url")))
+    val keyless = all.filter(blank(col("canonical_url")))
+    val claimedByStore =
+      if (warehouse.exists(keyTable))
+        keyed.join(warehouse.table(keyTable).select(col("canonical_url")),
+          Seq("canonical_url"), "left_semi").select(col(idField))
+      else keyed.select(col(idField)).limit(0)
+    keyed
+      .withColumn("__rk", row_number().over(
+        Window.partitionBy(col("canonical_url")).orderBy(col(idField))))
+      .filter(col("__rk") === 1).drop("__rk")
+      .join(claimedByStore, Seq(idField), "left_anti")
+      .unionByName(keyless)
+      .localCheckpoint(true)
+  }
+
+  /** MinHash candidate pairs of one batch of `docs`, est-filtered at
+    * `minEst`: `(corpus_id, new_id)` against the PERSISTED signature
+    * store `sigTable` (the corpus is never re-shingled; only its
+    * ~256-byte/doc signatures stay hot) and `(id_a, id_b)` within the
+    * batch. ONE shingling pass per batch: the returned materialized
+    * signature frame feeds both candidate joins and the caller's
+    * signature-store insert (shingle + 32 hash-mins per doc is the
+    * dominant per-batch text cost).
+    *
+    * `verifyExact` re-checks the est-passing pairs against their TRUE
+    * shingle Jaccard (pair-count-sized work): the K = 32 estimator has a
+    * measured false-positive tail at large store x batch products (one
+    * honest doc rejected at est 0.53 / true J 0.07 in 8e10 implicit
+    * tests — SCALING.md). The store side's text comes from the corpus
+    * `table`: the §8c commit order (corpus before sigs) guarantees every
+    * sig row has its corpus row, and broadcastPairs pins the
+    * batch-bounded pair set as the build side so the corpus text lookup
+    * is ONE column-pruned streaming scan — never a per-batch sort-merge
+    * shuffle of the whole corpus (which plain planning picks once size
+    * estimates outgrow the broadcast threshold). */
+  private def nearDupCandidates(warehouse: ParquetWarehouse, docs: DataFrame,
+      table: TableRef, sigTable: TableRef, idField: String, textField: String,
+      minEst: Double, bands: Int, verifyExact: Boolean)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val ops = graft.operators.DedupOps
+    val sigArr = ops.minhashSignatureArr(docs, idField, textField)
+      .repartition(col(idField)).localCheckpoint(true)
+    val vsStore =
+      if (warehouse.exists(sigTable)) {
+        val cand = ops.minhashCandidatesAgainstSig(
+            warehouse.table(sigTable), sigArr, idField, bands)
+          .filter(col("est_jaccard") >= minEst)
+        (if (verifyExact)
+            ops.verifyPairsExact(cand, "corpus_id", warehouse.table(table),
+              "new_id", docs, idField, textField, minEst,
+              broadcastPairs = true)
+          else cand)
+          .select(col("corpus_id"), col("new_id"))
+      } else docs.select(col(idField).as("corpus_id"),
+        col(idField).as("new_id")).limit(0)
+    val withinCand = ops.minhashCandidatesFromSig(sigArr, idField, bands)
+      .filter(col("est_jaccard") >= minEst)
+    val within = (if (verifyExact)
+        ops.verifyPairsExact(withinCand, "id_a", docs, "id_b", docs,
+          idField, textField, minEst)
+      else withinCand).select(col("id_a"), col("id_b"))
+    (sigArr, vsStore, within)
+  }
+
+  /** The near-dup reject stage over [[nearDupCandidates]]: the ids of
+    * `docs` rejected for matching the persisted store, or for matching a
+    * LOWER-id member of the same batch (keep-lowest rule) — but only a
+    * lower-id member that itself SURVIVES the vs-store check: if A is
+    * store-rejected and B ~ A but B is unlike anything stored, dropping
+    * B on A's account would lose B's content from the corpus entirely
+    * (round-5 ADVICE). Within the surviving set the rule stays pairwise
+    * (chains like store-dup ← B ← C still drop C with B) — the same
+    * transitivity caveat semDedup documents. Returns the signature frame
+    * and the rejected ids. */
+  private def nearDupRejects(warehouse: ParquetWarehouse, docs: DataFrame,
+      table: TableRef, sigTable: TableRef, idField: String, textField: String,
+      minEst: Double, bands: Int, verifyExact: Boolean)
+      : (DataFrame, DataFrame) = {
+    val (sigArr, storePairs, withinPairs) = nearDupCandidates(warehouse,
+      docs, table, sigTable, idField, textField, minEst, bands, verifyExact)
+    // Materialized (CONTRACTS §13): feeds BOTH the within-batch anti-join
+    // and the rejected union — under verifyExact the subtree carries the
+    // corpus-text lookup + exact verify, which must run once per batch,
+    // not once per consumer.
+    val vsStore = storePairs.select(col("new_id").as(idField))
+      .localCheckpoint(true)
+    val within = withinPairs
+      .join(vsStore.select(col(idField).as("id_a")), Seq("id_a"), "left_anti")
+      .select(col("id_b").as(idField))
+    (sigArr, vsStore.unionByName(within).distinct())
+  }
+
   /** Stream NDJSON files from `srcDir` into `table` with upsert semantics
     * per micro-batch. Runs until no more files are available, then stops
     * (AvailableNow). */
@@ -135,20 +295,11 @@ object StreamingLoad {
       table: TableRef,
       idField: String,
       checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)).json(srcDir)
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-          warehouse.load(LoadMode.Upsert, table, batch, idField)
-        }
-      }
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    runStream(spark, srcDir, schema, checkpointDir,
+        maxFilesPerTrigger = maxFilesPerTrigger) { batch =>
+      warehouse.load(LoadMode.Upsert, table, batch, idField)
+    }
 
   /** Stream a CDC feed (rows carrying an op column; "D" = tombstone)
     * into `table`: each micro-batch applies deletes and upserts in one
@@ -167,37 +318,39 @@ object StreamingLoad {
       idField: String,
       opCol: String,
       checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-          val target =
-            if (warehouse.exists(table)) warehouse.table(table)
-            else batch.drop(opCol).limit(0) // first batch bootstraps
-          val merged = graft.operators.LoadOps.applyCdc(
-            target, batch, idField, opCol)
-          warehouse.load(LoadMode.TruncateInsert, table, merged, idField)
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch =>
+      val target =
+        if (warehouse.exists(table)) warehouse.table(table)
+        else batch.drop(opCol).limit(0) // first batch bootstraps
+      val merged = graft.operators.LoadOps.applyCdc(
+        target, batch, idField, opCol)
+      warehouse.load(LoadMode.TruncateInsert, table, merged, idField)
+    }
 
   /** Near-duplicate-REJECTING ingest: the online form of the corpus
     * dedup family. Rejection is est-threshold only; at store×batch
     * pair exposures past ~10¹⁰ the estimator's measured false-positive
     * tail matters (CONTRACTS §4) — precision-critical ingest should
     * ride [[curationIngestStream]]'s `verifyExact`, whose commit order
-    * guarantees the corpus-text lookup the verify pass needs. Each micro-batch of arriving documents is MinHash-
-    * signed and LSH-banded against the PERSISTED signature store
+    * guarantees the corpus-text lookup the verify pass needs.
+    *
+    * Each micro-batch of arriving documents is MinHash-signed and
+    * LSH-banded against the PERSISTED signature store
     * ([[graft.operators.DedupOps.minhashCandidatesAgainst]] — the corpus
     * itself is never re-shingled; only its ~256-byte/doc signatures stay
-    * hot), and additionally against the batch's own earlier-id members.
-    * Rejected documents never reach the corpus table; survivors are
-    * appended together WITH their signatures, so later batches — and
-    * later runs — dedup against them too. At 100 TB this is the pattern
-    * that keeps ingest-side dedup O(new-batch), independent of corpus
-    * size. */
+    * hot), and additionally against the batch's own earlier-id members
+    * ([[nearDupRejects]]). Rejected documents never reach the corpus
+    * table; survivors are appended together WITH their signatures, so
+    * later batches — and later runs — dedup against them too. At 100 TB
+    * this is the pattern that keeps ingest-side dedup O(new-batch),
+    * independent of corpus size.
+    *
+    * Replay: a fully-committed replayed batch is already self-healing
+    * (a survivor is a near-dup of its own stored signature and
+    * re-rejects), but a crash BETWEEN the two inserts leaves survivors
+    * in the corpus with no signatures — on replay nothing rejects them
+    * and the corpus insert would duplicate. The per-table guards
+    * ([[notIn]]) make both inserts idempotent. */
   def nearDupRejectStream(
       spark: SparkSession,
       srcDir: String,
@@ -210,75 +363,36 @@ object StreamingLoad {
       minEst: Double,
       checkpointDir: String,
       bands: Int = graft.operators.DedupOps.Bands): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-        import org.apache.spark.sql.functions._
-        val batch = onePerId(batch0, idField)
-        val ops = graft.operators.DedupOps
-        // One shingling pass per batch (see curationIngestStream): the
-        // signature frame feeds both candidate joins and the store
-        // insert.
-        val sigArr = ops.minhashSignatureArr(batch, idField, textField)
-          .repartition(col(idField)).localCheckpoint(true)
-        // Rejected for matching the persisted store…
-        val vsStore =
-          if (warehouse.exists(sigTable))
-            ops.minhashCandidatesAgainstSig(
-                warehouse.table(sigTable), sigArr, idField, bands)
-              .filter(col("est_jaccard") >= minEst)
-              .select(col("new_id").as(idField))
-          else batch.select(col(idField)).limit(0)
-        // …or a LOWER-id member of this same batch (keep-lowest rule) —
-        // but only a lower-id member that itself SURVIVES the vs-store
-        // check: if A is store-rejected and B ~ A but B is unlike
-        // anything stored, dropping B on A's account would lose B's
-        // content from the corpus entirely (round-5 ADVICE). Within the
-        // surviving set the rule stays pairwise (chains like
-        // store-dup ← B ← C still drop C with B) — the same
-        // transitivity caveat semDedup documents.
-        val within = ops.minhashCandidatesFromSig(sigArr, idField, bands)
-          .filter(col("est_jaccard") >= minEst)
-          .join(vsStore.select(col(idField).as("id_a")), Seq("id_a"),
-            "left_anti")
-          .select(col("id_b").as(idField))
-        val survivors = batch.join(
-            vsStore.unionByName(within).distinct(), Seq(idField), "left_anti")
-          .localCheckpoint(true)
-        // Per-table replay guards (at-least-once): a fully-committed
-        // replayed batch is already self-healing (a survivor is a
-        // near-dup of its own stored signature and re-rejects), but a
-        // crash BETWEEN the two inserts leaves survivors in the corpus
-        // with no signatures — on replay nothing rejects them and the
-        // corpus insert would duplicate. Guarding each store against its
-        // own ids makes both inserts individually idempotent.
-        def notIn(t: TableRef) =
-          (if (warehouse.exists(t))
-              survivors.join(warehouse.table(t).select(col(idField)),
-                Seq(idField), "left_anti")
-            else survivors).localCheckpoint(true)
-        warehouse.load(LoadMode.Insert, table, notIn(table), idField)
-        warehouse.load(LoadMode.Insert, sigTable,
-          sigArr.join(notIn(sigTable).select(col(idField)),
-            Seq(idField), "left_semi"), idField)
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch0 =>
+      val batch = onePerId(batch0, idField)
+      val (sigArr, rejected) = nearDupRejects(warehouse, batch, table,
+        sigTable, idField, textField, minEst, bands, verifyExact = false)
+      val survivors = batch.join(rejected, Seq(idField), "left_anti")
+        .localCheckpoint(true)
+      // §8c order: corpus → sigs (the sig store gates).
+      warehouse.load(LoadMode.Insert, table,
+        notIn(warehouse, survivors, table, idField), idField)
+      warehouse.load(LoadMode.Insert, sigTable,
+        sigArr.join(notIn(warehouse, survivors, sigTable, idField)
+          .select(col(idField)), Seq(idField), "left_semi"), idField)
+    }
 
   /** URL-level exact-dedup ingest — the cheapest first-pass filter of a
     * crawl pipeline, run BEFORE any content hashing: each arriving
     * document's URL is canonicalized
     * ([[graft.operators.CurationOps.canonicalizeUrl]]) and rejected if
     * the canonical key is already in the PERSISTED key store, or if a
-    * lower-id arrival in the same batch claims it (keep-lowest rule).
+    * lower-id arrival in the same batch claims it ([[urlStage]]).
     * Survivors append together with their keys, so later batches — and
     * later runs — dedup against them too. At 100 TB this stays
     * O(new-batch): one equi-join per batch against a key table that
     * holds one short string per corpus document (no shingling, no
-    * banding — that's [[nearDupRejectStream]]'s job, downstream). */
+    * banding — that's [[nearDupRejectStream]]'s job, downstream).
+    *
+    * Replay: keyless docs have no key in the store to re-reject them,
+    * and a crash between the two inserts leaves survivors in the corpus
+    * with unstored keys (later arrivals of the same URL would pass); the
+    * per-table guards ([[notIn]]) heal both. */
   def urlKeyRejectStream(
       spark: SparkSession,
       srcDir: String,
@@ -289,77 +403,35 @@ object StreamingLoad {
       idField: String,
       urlField: String,
       checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-        val all = onePerId(batch0, idField).withColumn("canonical_url",
-          graft.operators.CurationOps.canonicalizeUrl(col(urlField)))
-          .localCheckpoint(true)
-        // A doc with no URL has no key to dedup on: it always survives
-        // and contributes nothing to the key store. "No URL" includes
-        // whitespace-only strings (crawl JSON encodes missing as "",
-        // "\t", or "\n" as often as null; the canonicalizer passes them
-        // through, and one shared blank key would silently collapse
-        // every url-less doc corpus-wide onto the first arrival — rlike
-        // over \s, because trim() strips only ASCII spaces). Without
-        // the split, the window would collapse every null-key doc of a
-        // batch into one survivor while cross-batch nulls always
-        // survive — inconsistent, and either way not URL dedup.
-        def blank(c: Column) = c.isNull || c.rlike("^\\s*$")
-        val keyed = all.filter(!blank(col("canonical_url")))
-        val keyless = all.filter(blank(col("canonical_url")))
-        // Claimed by the persisted store…
-        val vsStore =
-          if (warehouse.exists(keyTable))
-            keyed.join(warehouse.table(keyTable).select(col("canonical_url")),
-              Seq("canonical_url"), "left_semi").select(col(idField))
-          else keyed.select(col(idField)).limit(0)
-        // …or by a lower-id member of the same batch: rank within the
-        // batch per canonical key, keep only rank 1 — arrivals 2..n of a
-        // key are within-batch rejects even when the key is new.
-        val withinKeep = keyed
-          .withColumn("__rk", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("canonical_url"))
-              .orderBy(col(idField))))
-        val survivors = withinKeep.filter(col("__rk") === 1).drop("__rk")
-          .join(vsStore, Seq(idField), "left_anti")
-          .unionByName(keyless)
-          .localCheckpoint(true) // one evaluation feeds both inserts
-        // Per-table at-least-once guards: keyless docs have no key in
-        // the store to re-reject them on replay, and a crash between the
-        // two inserts leaves survivors in the corpus with unstored keys
-        // (later arrivals of the same URL would pass). Guarding each
-        // store against its own ids makes both inserts individually
-        // idempotent, so full or partial replays heal.
-        def notIn(t: TableRef) =
-          (if (warehouse.exists(t))
-              survivors.join(warehouse.table(t).select(col(idField)),
-                Seq(idField), "left_anti")
-            else survivors).localCheckpoint(true)
-        warehouse.load(LoadMode.Insert, table,
-          notIn(table).drop("canonical_url"), idField)
-        warehouse.load(LoadMode.Insert, keyTable,
-          notIn(keyTable).filter(!blank(col("canonical_url")))
-            .select(col("canonical_url"), col(idField)), idField)
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch =>
+      val survivors = urlStage(warehouse, batch, keyTable, idField, urlField)
+      // §8c order: corpus → keys (the key store gates).
+      warehouse.load(LoadMode.Insert, table,
+        notIn(warehouse, survivors, table, idField).drop("canonical_url"),
+        idField)
+      warehouse.load(LoadMode.Insert, keyTable,
+        notIn(warehouse, survivors, keyTable, idField)
+          .filter(!blank(col("canonical_url")))
+          .select(col("canonical_url"), col(idField)), idField)
+    }
 
   /** Continuous cluster labeling — the incremental twin of the batch
     * `dedup_cc_*` family: every micro-batch of arriving documents is
     * MinHash-signed, candidate edges are generated against the persisted
-    * signature store AND within the batch, and a PERSISTED component-
-    * label table is updated via [[graft.operators.DedupOps
-    * .incrementalComponents]] — only the frontier (this batch's edges,
-    * lifted to label space) iterates; the corpus-sized label table gets
-    * one broadcast remap per batch. Unlike [[nearDupRejectStream]],
-    * near-duplicates are KEPT and labeled, so downstream curation can
-    * pick per-cluster survivors with full information (quality-weighted
-    * keep, cluster-size stats) at any time without a batch recompute. */
+    * signature store AND within the batch ([[nearDupCandidates]]), and
+    * a PERSISTED component-label table is updated via
+    * [[graft.operators.DedupOps.incrementalComponents]] — only the
+    * frontier (this batch's edges, lifted to label space) iterates; the
+    * corpus-sized label table gets one broadcast remap per batch. Unlike
+    * [[nearDupRejectStream]], near-duplicates are KEPT and labeled, so
+    * downstream curation can pick per-cluster survivors with full
+    * information (quality-weighted keep, cluster-size stats) at any time
+    * without a batch recompute.
+    *
+    * Replay: the append stores are guarded per table ([[notIn]] — a
+    * re-delivered batch must not accumulate duplicate corpus rows or
+    * signatures, which would fan out every future candidate-edge join);
+    * the label table's left_anti seed already has its own guard. */
   def ccLabelStream(
       spark: SparkSession,
       srcDir: String,
@@ -373,65 +445,30 @@ object StreamingLoad {
       minEst: Double,
       checkpointDir: String,
       bands: Int = graft.operators.DedupOps.Bands): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-        import org.apache.spark.sql.functions._
-        val batch = onePerId(batch0, idField)
-        val ops = graft.operators.DedupOps
-        // One shingling pass per batch (see curationIngestStream).
-        val sigArr = ops.minhashSignatureArr(batch, idField, textField)
-          .repartition(col(idField)).localCheckpoint(true)
-        val vsStore =
-          if (warehouse.exists(sigTable))
-            ops.minhashCandidatesAgainstSig(
-                warehouse.table(sigTable), sigArr, idField, bands)
-              .filter(col("est_jaccard") >= minEst)
-              .select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
-          else batch.select(col(idField).as("id_a"), col(idField).as("id_b"))
-            .limit(0)
-        val within = ops.minhashCandidatesFromSig(sigArr, idField, bands)
-          .filter(col("est_jaccard") >= minEst)
-          .select(col("id_a"), col("id_b"))
-        val prev =
-          if (warehouse.exists(labelTable)) warehouse.table(labelTable)
-          else batch.select(col(idField), col(idField).as("component"))
-            .limit(0)
-        // Materialize eagerly: the new labels are DERIVED from the table
-        // they are about to replace (TruncateInsert) — cut the lineage
-        // before the overwrite, or the lazy read races the write.
-        val labels = ops.incrementalComponents(
-            prev, batch.select(col(idField)),
-            vsStore.unionByName(within), idField)
-          .localCheckpoint(true)
-        // At-least-once replay guard for the APPEND stores (the label
-        // table's left_anti seed already has one): a re-delivered batch
-        // must not accumulate duplicate corpus rows / signatures, which
-        // would fan out every future candidate-edge join. Each store is
-        // guarded against ITS OWN ids — a single shared guard would turn
-        // a crash between the two inserts into permanent silent
-        // signature loss (corpus-guarded replay finds nothing "fresh",
-        // so the docs that made it into the corpus never get signatures
-        // and all their future near-dups pass undetected). Per-table
-        // guards make each insert individually idempotent, so a partial
-        // commit heals on replay. Materialized before the insert so the
-        // anti-join reads the PRE-append store.
-        def notIn(t: TableRef) =
-          (if (warehouse.exists(t))
-              batch.join(warehouse.table(t).select(col(idField)),
-                Seq(idField), "left_anti")
-            else batch).localCheckpoint(true)
-        warehouse.load(LoadMode.Insert, table, notIn(table), idField)
-        warehouse.load(LoadMode.Insert, sigTable,
-          sigArr.join(notIn(sigTable).select(col(idField)),
-            Seq(idField), "left_semi"), idField)
-        warehouse.load(LoadMode.TruncateInsert, labelTable, labels, idField)
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch0 =>
+      val batch = onePerId(batch0, idField)
+      val (sigArr, vsStore, within) = nearDupCandidates(warehouse, batch,
+        table, sigTable, idField, textField, minEst, bands,
+        verifyExact = false)
+      val prev =
+        if (warehouse.exists(labelTable)) warehouse.table(labelTable)
+        else batch.select(col(idField), col(idField).as("component"))
+          .limit(0)
+      // Materialize eagerly: the new labels are DERIVED from the table
+      // they are about to replace (TruncateInsert) — cut the lineage
+      // before the overwrite, or the lazy read races the write.
+      val labels = graft.operators.DedupOps.incrementalComponents(
+          prev, batch.select(col(idField)),
+          vsStore.select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
+            .unionByName(within), idField)
+        .localCheckpoint(true)
+      warehouse.load(LoadMode.Insert, table,
+        notIn(warehouse, batch, table, idField), idField)
+      warehouse.load(LoadMode.Insert, sigTable,
+        sigArr.join(notIn(warehouse, batch, sigTable, idField)
+          .select(col(idField)), Seq(idField), "left_semi"), idField)
+      warehouse.load(LoadMode.TruncateInsert, labelTable, labels, idField)
+    }
 
   /** Continuously-maintained KMV distinct-count sketch: each micro-batch
     * is hashed to its bottom-k rows and LOSSLESSLY merged into the
@@ -452,29 +489,21 @@ object StreamingLoad {
       valueField: String,
       k: Int,
       checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-        import org.apache.spark.sql.functions._
-        val ops = graft.operators.SketchOps
-        val newSk = ops.kmvBottomK(batch, Seq(col(groupField)),
-          col(valueField), k)
-        val prev =
-          if (warehouse.exists(sketchTable)) warehouse.table(sketchTable)
-          else newSk.limit(0)
-        // Eager checkpoint: the merged sketch derives from the table it
-        // truncate-replaces.
-        val merged = ops.kmvMergeSketch(prev.unionByName(newSk),
-            Seq(col(groupField)), k)
-          .localCheckpoint(true)
-        warehouse.load(LoadMode.TruncateInsert, sketchTable, merged,
-          groupField)
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch =>
+      val ops = graft.operators.SketchOps
+      val newSk = ops.kmvBottomK(batch, Seq(col(groupField)),
+        col(valueField), k)
+      val prev =
+        if (warehouse.exists(sketchTable)) warehouse.table(sketchTable)
+        else newSk.limit(0)
+      // Eager checkpoint: the merged sketch derives from the table it
+      // truncate-replaces.
+      val merged = ops.kmvMergeSketch(prev.unionByName(newSk),
+          Seq(col(groupField)), k)
+        .localCheckpoint(true)
+      warehouse.load(LoadMode.TruncateInsert, sketchTable, merged,
+        groupField)
+    }
 
   /** Continuously-maintained IVF-PQ coded index — FAISS's "add" phase
     * as a stream: each micro-batch of new vectors is coarse-bucketed and
@@ -540,19 +569,11 @@ object StreamingLoad {
       idField: String,
       checkpointDir: String,
       driftFactor: Double = graft.io.ModelStore.DriftRetrainFactor): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-          pqIndexBatchDrifted(spark, warehouse, corpusTable, indexTable,
-            modelStore, artifactPrefix, m, subDim, ks, kmeansIters, idField,
-            driftFactor)(batch0)
-          ()
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch =>
+      pqIndexBatchDrifted(spark, warehouse, corpusTable, indexTable,
+        modelStore, artifactPrefix, m, subDim, ks, kmeansIters, idField,
+        driftFactor)(batch)
+    }
 
   /** One micro-batch of [[pqIndexStreamDrifted]] — the committed
     * per-batch body, extracted so the 1M-scale probe
@@ -574,18 +595,14 @@ object StreamingLoad {
       kmeansIters: Int,
       idField: String,
       driftFactor: Double)(batch0: DataFrame): Boolean = {
-    import org.apache.spark.sql.functions._
     val ops = graft.operators.SimilarityOps
     val batch = onePerId(batch0, idField)
     // Replay/dup guard against the system of record, then append —
     // the corpus table is committed FIRST (its presence is what the
     // index is rebuilt from; index-first + crash would strand coded
     // rows with no raw vectors behind them, CONTRACTS §8c order).
-    val fresh = (if (warehouse.exists(corpusTable))
-        batch.join(warehouse.table(corpusTable).select(col(idField)),
-          Seq(idField), "left_anti")
-      else batch).select(col(idField), col("vec"))
-      .localCheckpoint(true)
+    val fresh = notIn(warehouse, batch.select(col(idField), col("vec")),
+      corpusTable, idField)
     if (warehouse.exists(corpusTable))
       warehouse.load(LoadMode.Insert, corpusTable, fresh, idField)
     else warehouse.create(corpusTable, fresh)
@@ -701,37 +718,30 @@ object StreamingLoad {
       textField: String,
       width: Int,
       checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-        val batch = onePerId(batch0, idField)
-        val state =
-          if (warehouse.exists(stateTable)) warehouse.table(stateTable)
-          else batch.select(lit("tile").as("kind"),
-            col(idField).cast("string").as("k"), lit(0L).as("df")).limit(0)
-        val fresh = batch.join(
-            state.filter(col("kind") === "doc")
-              .select(col("k").cast(batch.schema(idField).dataType).as(idField)),
-            Seq(idField), "left_anti")
-          .localCheckpoint(true) // derived from the table we overwrite
-        // minDf=1: per-batch counts for EVERY tile of the fresh docs.
-        val counts = graft.operators.TextOps.boilerplateDict(
-            fresh, idField, textField, width, minDf = 1)
-          .select(lit("tile").as("kind"),
-            col("tile_hash").cast("string").as("k"), col("df"))
-        val tiles = state.filter(col("kind") === "tile").unionByName(counts)
-          .groupBy(col("kind"), col("k")).agg(sum(col("df")).as("df"))
-        val docs = state.filter(col("kind") === "doc").unionByName(
-          fresh.select(lit("doc").as("kind"),
-            col(idField).cast("string").as("k"), lit(0L).as("df")))
-        warehouse.load(LoadMode.TruncateInsert, stateTable,
-          tiles.unionByName(docs).localCheckpoint(true), "k")
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch0 =>
+      val batch = onePerId(batch0, idField)
+      val state =
+        if (warehouse.exists(stateTable)) warehouse.table(stateTable)
+        else batch.select(lit("tile").as("kind"),
+          col(idField).cast("string").as("k"), lit(0L).as("df")).limit(0)
+      val fresh = batch.join(
+          state.filter(col("kind") === "doc")
+            .select(col("k").cast(batch.schema(idField).dataType).as(idField)),
+          Seq(idField), "left_anti")
+        .localCheckpoint(true) // derived from the table we overwrite
+      // minDf=1: per-batch counts for EVERY tile of the fresh docs.
+      val counts = graft.operators.TextOps.boilerplateDict(
+          fresh, idField, textField, width, minDf = 1)
+        .select(lit("tile").as("kind"),
+          col("tile_hash").cast("string").as("k"), col("df"))
+      val tiles = state.filter(col("kind") === "tile").unionByName(counts)
+        .groupBy(col("kind"), col("k")).agg(sum(col("df")).as("df"))
+      val docs = state.filter(col("kind") === "doc").unionByName(
+        fresh.select(lit("doc").as("kind"),
+          col(idField).cast("string").as("k"), lit(0L).as("df")))
+      warehouse.load(LoadMode.TruncateInsert, stateTable,
+        tiles.unionByName(docs).localCheckpoint(true), "k")
+    }
 
   /** Quality-gated ingest: each micro-batch of documents is scored by
     * the PERSISTED trained quality model ([[graft.operators
@@ -752,24 +762,16 @@ object StreamingLoad {
       idField: String,
       textField: String,
       checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-        import org.apache.spark.sql.functions._
-        val batch = onePerId(batch0, idField)
-        val ops = graft.operators.QualityModelOps
-        val kept = ops.scores(
-            ops.hashedFeatures(batch, idField, textField), weights, idField)
-          .filter(col("score") >= 0)
-          .select(col(idField))
-        warehouse.load(LoadMode.Upsert, table,
-          batch.join(kept, idField).localCheckpoint(true), idField)
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch0 =>
+      val batch = onePerId(batch0, idField)
+      val ops = graft.operators.QualityModelOps
+      val kept = ops.scores(
+          ops.hashedFeatures(batch, idField, textField), weights, idField)
+        .filter(col("score") >= 0)
+        .select(col(idField))
+      warehouse.load(LoadMode.Upsert, table,
+        batch.join(kept, idField).localCheckpoint(true), idField)
+    }
 
   /** The COMPOSED continuous curation pipeline — the streaming twin of
     * the batch `crawl_curation_pipeline` gate query's filtering stages,
@@ -806,8 +808,9 @@ object StreamingLoad {
     * claims every first-seen canonical URL — including pages that then
     * die at quality, decontamination, or near-dup — so a page judged
     * once is re-rejected at the cheapest stage forever (its later
-    * surface variants never re-scrub or re-shingle). Corpus and signature stores hold only
-    * fully-curated survivors. Per-batch work is O(batch): one key
+    * surface variants never re-scrub or re-shingle). Corpus and
+    * signature stores hold only fully-curated survivors. Per-batch work
+    * is O(batch): one key
     * equi-join, batch-sized scrub/score projections, and the banded
     * candidate join whose corpus side is [[graft.operators.DedupOps
     * .minhashCandidatesAgainst]]'s capped buckets.
@@ -854,135 +857,63 @@ object StreamingLoad {
       contamN: Int = 8,
       maxContamFrac: Double = 0.05,
       verifyExact: Boolean = false): StreamingQuery =
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-        val ops = graft.operators.DedupOps
-        val all = onePerId(batch0, idField).withColumn("canonical_url",
-          graft.operators.CurationOps.canonicalizeUrl(col(urlField)))
-          .localCheckpoint(true)
-        // --- stage 1: canonical-URL reject (see urlKeyRejectStream for
-        // the blank-key rationale: keyless docs are never URL-deduped).
-        def blank(c: Column) = c.isNull || c.rlike("^\\s*$")
-        val keyed = all.filter(!blank(col("canonical_url")))
-        val keyless = all.filter(blank(col("canonical_url")))
-        val claimedByStore =
-          if (warehouse.exists(keyTable))
-            keyed.join(warehouse.table(keyTable).select(col("canonical_url")),
-              Seq("canonical_url"), "left_semi").select(col(idField))
-          else keyed.select(col(idField)).limit(0)
-        val urlSurvivors = keyed
-          .withColumn("__rk", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("canonical_url")).orderBy(col(idField))))
-          .filter(col("__rk") === 1).drop("__rk")
-          .join(claimedByStore, Seq(idField), "left_anti")
-          .unionByName(keyless)
-          .localCheckpoint(true) // feeds the key store AND stages 2-4
-        // --- stage 2+3: scrub against the frozen dict, gate on the
-        // scrubbed text. Only URL survivors pay for text processing.
-        val scrubbed = graft.operators.TextOps.boilerplateScrubText(
-            urlSurvivors.select(col(idField), col(textField)),
-            idField, textField, tileWidth, minDf, Some(boilerDict))
-          .select(col(idField), col("clean_text"))
-        // Zero-content reject rides with the quality gate: a page that
-        // scrubs to nothing must never become a corpus row, but
-        // `qualityScore` rates the empty token list 0.30 (the
-        // diversity term is 1 of 1 distinct) — above any practical
-        // threshold. The batch report queries keep the raw score
-        // semantics (they aggregate, they don't store); a STORE refuses
-        // empty rows explicitly.
-        val gated = scrubbed
-          .filter(!blank(col("clean_text")) &&
-            graft.functions.TextFunctions.qualityScore(
-              col("clean_text")) >= qualityMin)
-        // --- stage 3b: benchmark decontamination (like `boilerDict`,
-        // `evalSet` is a FROZEN driver-sized input — see the probe's
-        // storage-hygiene lesson on materializing such frames).
-        val qualified = (evalSet match {
-          case Some(ev) => gated.join(
-            graft.operators.TextOps.contaminationFraction(gated,
-                // evalSet carries the caller's (idField, textField)
-                // schema like the input docs; align to clean_text.
-                ev.select(col(idField), col(textField).as("clean_text")),
-                idField, "clean_text", contamN)
-              .filter(col("frac") >= maxContamFrac).select(col(idField)),
-            Seq(idField), "left_anti")
-          case None => gated
-        }).localCheckpoint(true) // both sides of the within-batch join
-        // --- stage 4: near-dup reject on clean_text (the
-        // nearDupRejectStream rule: within-batch rejection only by a
-        // lower-id member that itself survives the vs-store check).
-        // ONE shingling pass per batch: the same materialized signature
-        // frame feeds the against-store join, the within-batch join,
-        // and the signature-store insert below — "survivors pay for
-        // text processing once" made literal (shingle + 32 hash-mins
-        // per doc is the dominant per-batch text cost).
-        val sigArr = ops.minhashSignatureArr(qualified, idField,
-            "clean_text").repartition(col(idField)).localCheckpoint(true)
-        // `verifyExact` recomputes the TRUE shingle Jaccard on the
-        // est-passing pairs only (pair-count-sized work) and rejects on
-        // the true value: the K = 32 estimator has a measured false-
-        // positive tail at large store x batch products (one honest doc
-        // rejected at est 0.53 / true J 0.07 in 8e10 implicit tests —
-        // SCALING.md). The store side's text comes from the CORPUS
-        // table: the §8c commit order (corpus before sigs) guarantees
-        // every sig row has its corpus row, and broadcastPairs pins the
-        // batch-bounded pair set as the build side so the corpus text
-        // lookup is ONE column-pruned streaming scan — never a per-batch
-        // sort-merge shuffle of the whole corpus (which plain planning
-        // picks once size estimates outgrow the broadcast threshold).
-        val vsStore =
-          (if (warehouse.exists(sigTable)) {
-            val cand = ops.minhashCandidatesAgainstSig(
-                warehouse.table(sigTable), sigArr, idField, bands)
-              .filter(col("est_jaccard") >= minEst)
-            (if (verifyExact)
-                ops.verifyPairsExact(cand, "corpus_id",
-                  warehouse.table(table), "new_id", qualified,
-                  idField, "clean_text", minEst, broadcastPairs = true)
-              else cand)
-              .select(col("new_id").as(idField))
-          } else qualified.select(col(idField)).limit(0))
-            // Materialized: feeds BOTH the within-batch anti-join and
-            // the survivors union — under verifyExact the subtree
-            // carries the corpus-text lookup + exact verify, which
-            // must run once per batch, not once per consumer.
-            .localCheckpoint(true)
-        val withinCand = ops.minhashCandidatesFromSig(sigArr, idField, bands)
-          .filter(col("est_jaccard") >= minEst)
-        val within = (if (verifyExact)
-            ops.verifyPairsExact(withinCand, "id_a", qualified,
-              "id_b", qualified, idField, "clean_text", minEst)
-          else withinCand)
-          .join(vsStore.select(col(idField).as("id_a")), Seq("id_a"),
-            "left_anti")
-          .select(col("id_b").as(idField))
-        val survivors = urlSurvivors
-          .join(qualified.join(vsStore.unionByName(within).distinct(),
-            Seq(idField), "left_anti"), idField)
-          .localCheckpoint(true)
-        // --- guarded appends (idempotent per table; ORDER matters —
-        // the stage-1-gating key store commits LAST, see scaladoc).
-        def notIn(df: DataFrame, t: TableRef) =
-          (if (warehouse.exists(t))
-              df.join(warehouse.table(t).select(col(idField)),
-                Seq(idField), "left_anti")
-            else df).localCheckpoint(true)
-        warehouse.load(LoadMode.Insert, table,
-          notIn(survivors, table).drop(textField), idField)
-        warehouse.load(LoadMode.Insert, sigTable,
-          sigArr.join(notIn(survivors, sigTable).select(col(idField)),
-            Seq(idField), "left_semi"), idField)
-        warehouse.load(LoadMode.Insert, keyTable,
-          notIn(urlSurvivors, keyTable).filter(!blank(col("canonical_url")))
-            .select(col("canonical_url"), col(idField)), idField)
-        }
-      }
-      .start()
+    runStream(spark, srcDir, schema, checkpointDir) { batch =>
+      // --- stage 1: canonical-URL reject (keyless docs are never
+      // URL-deduped, see `blank`); the survivors feed the key store AND
+      // stages 2-4.
+      val urlSurvivors = urlStage(warehouse, batch, keyTable, idField,
+        urlField)
+      // --- stage 2+3: scrub against the frozen dict, gate on the
+      // scrubbed text. Only URL survivors pay for text processing.
+      val scrubbed = graft.operators.TextOps.boilerplateScrubText(
+          urlSurvivors.select(col(idField), col(textField)),
+          idField, textField, tileWidth, minDf, Some(boilerDict))
+        .select(col(idField), col("clean_text"))
+      // Zero-content reject rides with the quality gate: a page that
+      // scrubs to nothing must never become a corpus row, but
+      // `qualityScore` rates the empty token list 0.30 (the
+      // diversity term is 1 of 1 distinct) — above any practical
+      // threshold. The batch report queries keep the raw score
+      // semantics (they aggregate, they don't store); a STORE refuses
+      // empty rows explicitly.
+      val gated = scrubbed
+        .filter(!blank(col("clean_text")) &&
+          graft.functions.TextFunctions.qualityScore(
+            col("clean_text")) >= qualityMin)
+      // --- stage 3b: benchmark decontamination (like `boilerDict`,
+      // `evalSet` is a FROZEN driver-sized input — see the probe's
+      // storage-hygiene lesson on materializing such frames).
+      val qualified = (evalSet match {
+        case Some(ev) => gated.join(
+          graft.operators.TextOps.contaminationFraction(gated,
+              // evalSet carries the caller's (idField, textField)
+              // schema like the input docs; align to clean_text.
+              ev.select(col(idField), col(textField).as("clean_text")),
+              idField, "clean_text", contamN)
+            .filter(col("frac") >= maxContamFrac).select(col(idField)),
+          Seq(idField), "left_anti")
+        case None => gated
+      }).localCheckpoint(true) // both sides of the within-batch join
+      // --- stage 4: near-dup reject on clean_text (signatures over the
+      // text future comparisons see; `verifyExact` re-checks est-passing
+      // pairs on their true Jaccard, see nearDupCandidates).
+      val (sigArr, rejected) = nearDupRejects(warehouse, qualified, table,
+        sigTable, idField, "clean_text", minEst, bands, verifyExact)
+      val survivors = urlSurvivors
+        .join(qualified.join(rejected, Seq(idField), "left_anti"), idField)
+        .localCheckpoint(true)
+      // --- guarded appends, §8c order: corpus → sigs → keys (the
+      // stage-1-gating key store commits LAST, see scaladoc).
+      warehouse.load(LoadMode.Insert, table,
+        notIn(warehouse, survivors, table, idField).drop(textField), idField)
+      warehouse.load(LoadMode.Insert, sigTable,
+        sigArr.join(notIn(warehouse, survivors, sigTable, idField)
+          .select(col(idField)), Seq(idField), "left_semi"), idField)
+      warehouse.load(LoadMode.Insert, keyTable,
+        notIn(warehouse, urlSurvivors, keyTable, idField)
+          .filter(!blank(col("canonical_url")))
+          .select(col("canonical_url"), col(idField)), idField)
+    }
 
   /** Event-time windowed aggregation with a watermark — the streaming
     * form of [[graft.operators.AnalyticOps.tumblingAgg]] (same expression
@@ -1175,16 +1106,9 @@ object StreamingLoad {
       table: TableRef,
       idField: String,
       checkpointDir: String,
-      intervalMs: Long): StreamingQuery = {
-    spark.readStream.schema(schema).json(srcDir)
-      .writeStream
-      .trigger(Trigger.ProcessingTime(intervalMs))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batchStorageScope(spark) {
-          warehouse.load(LoadMode.Upsert, table, batch, idField)
-        }
-      }
-      .start()
-  }
+      intervalMs: Long): StreamingQuery =
+    runStream(spark, srcDir, schema, checkpointDir,
+        trigger = Trigger.ProcessingTime(intervalMs)) { batch =>
+      warehouse.load(LoadMode.Upsert, table, batch, idField)
+    }
 }

@@ -79,7 +79,7 @@ object CcProbe {
   def main(args: Array[String]): Unit = {
     val jsonOut = args.headOption.getOrElse("CC_PROBE.json")
     val maxChain = if (args.length > 1) args(1).toLong else 1000000L
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
 
     def chain(n: Long): Probe = run(spark, "chain", n,

@@ -90,7 +90,7 @@ object CurationStreamProbe {
     require(batchSize % 5 == 0, "batchSize must be divisible by 5")
     val q = batchSize / 5
     val EvalN = 1000L
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
 
     /** One full probe series (fresh temp state): seed → planted batches

@@ -81,7 +81,7 @@ object DriftRetrainProbe {
     val nProbes = 200
     val regionRows = 250000L
     val clustersPerRegion = 2500L // ~100 members per cluster
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
 
     // vec(id): region = id div regionRows; cluster = hash(id) within the

@@ -29,7 +29,7 @@ object FixtureDiag {
       "usage: FixtureDiag <ledgers|jaccard-df> <dir>...")
     val mode = args.head
     val dirs = args.tail.toSeq
-    val spark = graft.ToolSession.local(graft.ToolSession.cpus("32"))
+    val spark = graft.ToolSession.local(graft.ToolSession.cpus())
     try mode match {
       case "ledgers" =>
         for (dir <- dirs; q <- Seq("simhash_bucket_ledger",

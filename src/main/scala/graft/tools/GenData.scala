@@ -49,7 +49,7 @@ object GenData {
     val heapsBeta = if (args.length > 4) args(4).toDouble else 0.0
     val tables = if (args.length > 5) args(5).split(",").toSet else Set.empty[String]
     val spark =
-      graft.ToolSession.local(graft.ToolSession.cpus("32"), logLevel = "WARN")
+      graft.ToolSession.local(graft.ToolSession.cpus(), logLevel = "WARN")
     try generate(spark, src, out, mult, zipfVocab, heapsBeta, tables)
     finally spark.stop()
   }

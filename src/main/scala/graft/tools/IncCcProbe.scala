@@ -48,7 +48,7 @@ object IncCcProbe {
     val jsonOut = args.headOption.getOrElse("INC_CC_PROBE.json")
     val n = if (args.length > 1) args(1).toLong else 1000000L
     val batch = if (args.length > 2) args(2).toLong else 100000L
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
 
     // Existing: vertices [0, n), chains of 16 — edge (v, v+1) unless v

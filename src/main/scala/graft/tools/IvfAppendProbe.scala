@@ -71,7 +71,7 @@ object IvfAppendProbe {
     // the smallest ks that resolves its own cluster count.
     val ks = 16
     val k = 10
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
 
     // vec(id) = center(id % clusters) + noise(id): signal in [-1, 1],

@@ -34,7 +34,7 @@ object LshCapProbe {
     val jsonOut = args.headOption.getOrElse("LSH_CAP_PROBE.json")
     val k = if (args.length > 1) args(1).toLong else 1000000L
     val honest = if (args.length > 2) args(2).toLong else 100000L
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
 
     // ids [0, k): one byte-identical family; ids [k, k+honest): unique

@@ -32,7 +32,7 @@ object QualitySampleCurve {
       else Seq(1, 4, 16, 64)
     require(mods.headOption.contains(1),
       "first mod must be 1 (the full-batch agreement baseline)")
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
     try {
       val docs = SparkEntry.spamPlantedDocs(spark, dir)

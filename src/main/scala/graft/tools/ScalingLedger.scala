@@ -355,7 +355,7 @@ object ScalingLedger {
     // the JSON is self-describing ("default" = fixed-vocab GenData,
     // "heaps" = diversity-scaled; set by the run scripts).
     val fixture = sys.env.getOrElse("GRAFT_LEDGER_FIXTURE", "default")
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
 
     val missing = names.filterNot(n =>

@@ -41,7 +41,7 @@ object SimVariantDiag {
     val dir = args(0)
     val label = if (args.length > 1) args(1) else dir
     val maxHamming = 8
-    val spark = graft.ToolSession.local(graft.ToolSession.cpus("32"))
+    val spark = graft.ToolSession.local(graft.ToolSession.cpus())
 
     val sig = DedupOps.simhash(
         spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")

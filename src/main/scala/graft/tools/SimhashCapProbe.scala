@@ -42,7 +42,7 @@ object SimhashCapProbe {
     val k = if (args.length > 1) args(1).toLong else 1000000L
     val honest = if (args.length > 2) args(2).toLong else 100000L
     val maxHamming = 3
-    val cpus = graft.ToolSession.cpus("32")
+    val cpus = graft.ToolSession.cpus()
     val spark = graft.ToolSession.local(cpus)
 
     // ids [0, k): one byte-identical family; ids [k, k+honest): unique

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -464,24 +465,91 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // Producer retry: the same doc lands in two files drained by ONE
     // AvailableNow trigger. Same-id rows form no id_a < id_b candidate
     // pair and the stores don't contain the id yet, so without the
-    // deterministic per-id pick both rows would insert.
+    // deterministic per-id pick both rows would insert. Every
+    // content-keyed ingest sink drains the same two files into its own
+    // warehouse. Doc 44 has no URL: the URL stage's keep-lowest window
+    // never sees it, so only the per-id pick keeps its retry out.
+    import spark.implicits._
     val root = Files.createTempDirectory("graft_dupid").toString
+    val src = s"$root/src"; Files.createDirectories(Paths.get(src))
+    val (tbl, sig, keys, lbl) = (TableRef("", "corpus"), TableRef("", "sigs"),
+      TableRef("", "keys"), TableRef("", "labels"))
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("url", StringType),
+      StructField("text", StringType)))
+    writeFile(src, "a.json",
+      """{"doc_id":42,"url":"https://a.com/42","text":"alpha beta gamma delta words here"}
+        |{"doc_id":44,"url":null,"text":"zeta eta theta iota kappa lambda"}""".stripMargin)
+    writeFile(src, "a_retry.json",
+      """{"doc_id":42,"url":"https://a.com/42","text":"alpha beta gamma delta words here"}
+        |{"doc_id":44,"url":null,"text":"zeta eta theta iota kappa lambda"}
+        |{"doc_id":43,"url":"https://a.com/43","text":"совершенно другой текст без общих слов"}""".stripMargin)
+    def drain(name: String)(
+        start: (ParquetWarehouse, String) => StreamingQuery): ParquetWarehouse = {
+      val wh = new ParquetWarehouse(spark, s"$root/wh_$name")
+      start(wh, s"$root/ckpt_$name").awaitTermination()
+      wh
+    }
+    def ids(wh: ParquetWarehouse, t: TableRef) =
+      wh.table(t).select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+    def assertOnePerId(name: String, wh: ParquetWarehouse, ts: TableRef*) =
+      ts.foreach { t =>
+        // The key stores hold keyed docs only.
+        val want = if (t == keys) Seq(42L, 43L) else Seq(42L, 43L, 44L)
+        assert(ids(wh, t) == want, s"$name: ${t.qualified} got ${ids(wh, t)}")
+      }
+
+    val nd = drain("neardup")((wh, ck) => StreamingLoad.nearDupRejectStream(
+      spark, src, docSchema, wh, tbl, sig, "doc_id", "text", minEst = 0.5, ck))
+    assertOnePerId("nearDupRejectStream", nd, tbl, sig)
+    val uk = drain("urlkey")((wh, ck) => StreamingLoad.urlKeyRejectStream(
+      spark, src, docSchema, wh, tbl, keys, "doc_id", "url", ck))
+    assertOnePerId("urlKeyRejectStream", uk, tbl, keys)
+    val cc = drain("cclabel")((wh, ck) => StreamingLoad.ccLabelStream(
+      spark, src, docSchema, wh, tbl, sig, lbl, "doc_id", "text",
+      minEst = 0.5, ck))
+    assertOnePerId("ccLabelStream", cc, tbl, sig, lbl)
+    // An empty frozen dict (minDf 2 over one doc) and a zero quality bar:
+    // both docs reach every store, so each store shows the per-id pick.
+    val dict = graft.operators.TextOps.boilerplateDict(
+      Seq((0L, "unrelated text")).toDF("doc_id", "text"),
+      "doc_id", "text", 4, 2).localCheckpoint(true)
+    val cur = drain("curation")((wh, ck) => StreamingLoad.curationIngestStream(
+      spark, src, docSchema, wh, tbl, keys, sig, dict, "doc_id", "url", "text",
+      qualityMin = 0.0, minEst = 0.5, ck, tileWidth = 4, minDf = 2))
+    assertOnePerId("curationIngestStream", cur, tbl, sig, keys)
+  }
+
+  test("nearDupRejectStream heals a partial commit: corpus row without stored signature") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_ndheal").toString
     val src = s"$root/src"; Files.createDirectories(Paths.get(src))
     val wh = new ParquetWarehouse(spark, s"$root/wh")
     val (tbl, sig) = (TableRef("", "corpus"), TableRef("", "sigs"))
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    writeFile(src, "a.json",
-      """{"doc_id":42,"text":"alpha beta gamma delta words here"}""")
-    writeFile(src, "a_retry.json",
-      """{"doc_id":42,"text":"alpha beta gamma delta words here"}
-        |{"doc_id":43,"text":"совершенно другой текст без общих слов"}""".stripMargin)
-    StreamingLoad.nearDupRejectStream(spark, src, docSchema, wh, tbl, sig,
-      "doc_id", "text", minEst = 0.5, s"$root/ckpt").awaitTermination()
-    val ids = wh.table(tbl).select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(ids.sorted == Seq(42L, 43L), s"got $ids")
-    assert(wh.table(sig).select("doc_id").collect().map(_.getLong(0))
-      .sorted.toSeq == Seq(42L, 43L))
+    val base = "spark filter merge join window batch stream hash sort " +
+      "group order value column row table part key data line agg"
+    def run(): Unit = StreamingLoad.nearDupRejectStream(spark, src, docSchema,
+      wh, tbl, sig, "doc_id", "text", minEst = 0.5, s"$root/ckpt")
+      .awaitTermination()
+    def ids(t: TableRef) =
+      wh.table(t).select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+    // Crash simulation: doc 1 made it into the corpus (committed first)
+    // but its signature row was never stored.
+    wh.create(tbl, Seq((1L, s"$base one")).toDF("doc_id", "text"))
+    writeFile(src, "a.json", s"""{"doc_id":1,"text":"$base one"}""")
+    run()
+    assert(ids(tbl) == Seq(1L), "corpus must not duplicate")
+    assert(ids(sig) == Seq(1L), "signature must be healed on replay")
+    // With the signature healed, a later near-copy is rejected via the
+    // store, and a full replay of doc 1 appends nothing.
+    writeFile(src, "b.json",
+      s"""{"doc_id":7,"text":"$base two"}
+         |{"doc_id":1,"text":"$base one"}""".stripMargin)
+    run()
+    assert(ids(tbl) == Seq(1L), s"near-copy must be rejected: ${ids(tbl)}")
+    assert(ids(sig) == Seq(1L))
   }
 
   test("urlKeyRejectStream heals a partial commit: corpus row without stored key") {
