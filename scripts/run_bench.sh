@@ -31,10 +31,19 @@ fi
 # Capture rc without tripping set -e (a bare failing command would exit
 # the script before the regression gate runs).
 rc=0
+out=$(mktemp)
+trap 'rm -f "$out"' EXIT
 java $ADD_OPENS -Xmx"$HEAP" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Bench || rc=$?
+  graft.Bench > "$out" || rc=$?
+cat "$out"
+# The summary must be the last line of the last 2,000 bytes, and JSON.
+if ! tail -c 2000 "$out" | tail -n 1 | python3 -c \
+    'import json, sys; json.loads(sys.stdin.read())' 2>/dev/null; then
+  echo "run_bench.sh: the last stdout line is not a JSON summary" >&2
+  if [ "$rc" -eq 0 ]; then rc=4; fi
+fi
 # Per-query regression gate (>=1.5x AND >=0.3s abs) -> BENCH_DELTA.json;
 # FAILS the run (nonzero rc) on a non-empty regressions list so a
 # regression can never ship silently; skipped for subset runs.

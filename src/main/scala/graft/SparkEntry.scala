@@ -1078,7 +1078,7 @@ object SparkEntry {
     // window twin above loses pairs at sf0.1 that this row recovers).
     // Heaps-ledger evidence for the flip: recall 0.891 -> 1.000 at
     // both decades at 1.15x the contract wall; the saturated fixture's
-    // admitted work stays <= budget (SimhashCapProbe phase 3).
+    // admitted work stays <= budget (OperatorsSpec's dense-ball spec).
     "simhash_recall_auto" -> { (s, dir) =>
       val sig = DedupOps.simhash(t(s, dir, "documents"), "doc_id", "text")
         .localCheckpoint(true)
@@ -1119,7 +1119,7 @@ object SparkEntry {
     // and the merged label is the min over the old labels — i.e. the
     // true component minimum — so the result provably equals the full
     // rebuild and the oracle is the SAME recursive SQL the batch form
-    // checks against (parity at 1M: graft.tools.IncCcProbe). This puts
+    // checks against (StreamingSpec ccLabelStream parity). This puts
     // the incremental path itself under the driver's oracle gate.
     "dedup_cc_incremental" -> { (s, dir) =>
       val docs = plantedDocs(s, dir)
@@ -3785,7 +3785,7 @@ object SparkEntry {
   val QmSteps = 6
   // Sampled-train path: 1-in-QmSampleMod pair-stable doc sample. 16 is
   // the measured knee of the cold-train sample curve at 1M planted docs
-  // (graft.tools.QualitySampleCurve, QUALITY_SAMPLE_CURVE.json):
+  // (QUALITY_SAMPLE_CURVE.json):
   // full 145.9s / 1-in-4 29.5s @ 99.9942% / 1-in-16 13.6s @ 99.9946% /
   // 1-in-64 12.1s @ 99.9300% keep-agreement vs the full model — 1-in-16
   // matches 1-in-4's agreement at 2.2x less train cost, and 1-in-64

@@ -51,6 +51,7 @@ final class Loader(
 
   private val staging = new StagingWriter(stagingRoot, cfg, jobTime, uuid)
   private val uploads = mutable.Buffer.empty[StagedUpload]
+  private val formats = mutable.Buffer.empty[String]
   private val bodies = mutable.Buffer.empty[DataFrame]
   private var started = false
 
@@ -96,6 +97,7 @@ final class Loader(
           spark.sparkContext.removeSparkListener(bridge)
         }
       uploads += up
+      formats += format
       bodies += df
       val conf = spark.sparkContext.hadoopConfiguration
       val sizes = up.files.map { f =>
@@ -142,12 +144,20 @@ final class Loader(
       val q = CopySqlBuilder.makeQueries(cfg, mode, manifestPath, creds, jobTime, uuid)
       executor.foreach(e => txnRunner.run(e, q.q, q.cleanUp))
 
-      // Native Spark execution of the load semantics (our engine).
-      // `observe` piggybacks row/byte counters on the load job itself —
-      // the reference's per-task progress events (O1) without a second
-      // pass over the data.
+      // Native Spark execution of the load semantics (our engine): load
+      // exactly the files the manifest lists, read back in their staged
+      // format with the first body's schema — the reference's COPY from
+      // a manifest. Each body is evaluated once, at staging; a
+      // non-deterministic body can therefore never load rows that
+      // differ from what was staged. `observe` piggybacks row/byte
+      // counters on the load job itself — the reference's per-task
+      // progress events (O1) without a second pass over the data.
       val observation = new org.apache.spark.sql.Observation(s"load-$uuid")
-      val stagedDf = bodies.map(b => b.select(bodies.head.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*))
+      val schema = bodies.head.schema
+      val stagedDf = uploads.zip(formats).groupMap(_._2)(_._1.files).toSeq
+        .map { case (format, files) =>
+          spark.read.schema(schema).format(format).load(files.flatten.toSeq: _*)
+        }
         .reduce(_ unionByName _)
         .observe(observation,
           org.apache.spark.sql.functions.count(

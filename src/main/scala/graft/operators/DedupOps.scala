@@ -357,7 +357,8 @@ object DedupOps {
     * law across planted chains 2 k → 1 M AND hash-random graphs:
     * rounds ≤ [[HookDelay]] + ⌈log₂ n⌉ + 1 detection round (chains
     * converge in ⌈log₂ n⌉·~0.55 hook rounds; random graphs in ~0.6·);
-    * probe-checked on every shape by graft.tools.CcProbe.
+    * asserted on chain, star and hash-random graphs by OperatorsSpec
+    * (CC_PROBE.json records the 1 M-vertex measurements).
     *
     * Same fixed point as neighbor-only propagation (the spec proves
     * label-identical min-vertex-id outputs — stability under
@@ -519,7 +520,7 @@ object DedupOps {
           s"~2^(maxIter-$HookDelay-1); raise maxIter (measured law: " +
           s"rounds ≤ HookDelay + ceil(log2(n)) + 1 detection round " +
           "on chains, stars, and hash-random graphs — " +
-          "probe-checked by graft.tools.CcProbe)")
+          "asserted by OperatorsSpec)")
     (labels.select(col("v").as(id), col("component")), iter)
   }
 
@@ -858,7 +859,7 @@ object DedupOps {
     * candidate pairs. Measured shingle df on the realistic-vocabulary
     * fixture: max df 6/12 on the gate corpus at sf0.01/sf0.1
     * (`jaccard_df_ledger`), 8/35 on the full documents table
-    * (`graft.tools.FixtureDiag jaccard-df`) — 256 sits ~7× above the
+    * (SCALING.md) — 256 sits ~7× above the
     * largest measured value (provably dormant where the oracle checks
     * byte-equality; the in-gate proof is `jaccard_df_ledger`'s
     * n_over_cap = 0) while bounding any indexed shingle's self-join
@@ -967,8 +968,8 @@ object DedupOps {
     * Identical-simhash groups (hamming 0, true duplicates) expand to
     * intra-group cliques up to this cap and degrade to an id-ordered
     * path beyond it - output-linear, connectivity-preserving, every
-    * path edge hamming 0 (the [[graft.tools.SimhashCapProbe]] 1M-family
-    * bound). */
+    * path edge hamming 0 (OperatorsSpec "SimHash bucket cap: 10k
+    * identical docs…"; SIMHASH_CAP_PROBE.json records the 1M family). */
   val SimMaxBucket = 1024
 
   /** The variant stage's ×4 exact-rescue cap — a MEASURED PER-CALL
@@ -984,7 +985,7 @@ object DedupOps {
     *     at Heaps-100× (287.7 vs 252.0 s scaled_run2; 1.46× at base,
     *     6.84 vs 4.70 s — `simhash_recall_vc4` vs the default-cap
     *     `simhash_recall` in the committed SCALING_LEDGER_HEAPS, and
-    *     SimhashCapProbe's dense-ball phase requires the 1.0).
+    *     OperatorsSpec's dense-ball spec requires the 1.0).
     *   - REJECT case (why it is not the default): the rescue's join
     *     work grows ~16× per admitted bucket, and work-boundedness is
     *     the guard's whole job. On the near-agreement-SATURATED 100×
@@ -999,9 +1000,9 @@ object DedupOps {
     * honest (Heaps-shaped vocabulary growth, bounded near-balls) is
     * the documented cue to pass this lever explicitly; on anything
     * else the default window degrade keeps work linear and
-    * connectivity intact (SimhashCapProbe: the ball stays ONE
-    * component under windows — CC consumers lose little even where
-    * pairwise recall drops). */
+    * connectivity intact (OperatorsSpec's dense-ball spec: the ball
+    * stays ONE component under windows — CC consumers lose little even
+    * where pairwise recall drops). */
   val SimVariantCap = 4 * SimMaxBucket
 
   /** Sorted-window width for the variant stage's final degrade: each
@@ -1044,7 +1045,7 @@ object DedupOps {
     * admitted-work envelope).
     *
     * Why a WORK budget and not per-bucket honesty (the r18 verdict's
-    * hypothesis, MEASURED and refuted by SimVariantDiag, r19): over-cap
+    * hypothesis, MEASURED and refuted in r19, SCALING.md): over-cap
     * variant buckets on BOTH committed fixtures are coherent near-balls
     * — every bucket's mean member-to-centroid Hamming distance is
     * 4.1-7.9 bits on heaps100 AND 4.5-7.8 on sf10, with sampled
@@ -1059,8 +1060,9 @@ object DedupOps {
     * smallest-first admission under a linear-in-n budget keeps the
     * first regime whole and takes only a bounded, highest-yield-first
     * bite of the second. Measured on both regimes before the default
-    * decision: SimhashCapProbe phases 2-3 (ball escalates to recall
-    * 1.0; saturated cloud's admitted work ≤ budget) and the
+    * decision: SIMHASH_CAP_PROBE.json phases 2-3 (ball escalates to
+    * recall 1.0; saturated cloud's admitted work ≤ budget — both now
+    * asserted at box size by OperatorsSpec's dense-ball spec) and the
     * `simhash_recall_auto` Heaps-ledger row (recall 1.000 at both
     * Heaps decades at 1.15× the contract wall, vs 0.891 for the
     * unescalated pipeline at Heaps-100×).
@@ -1081,8 +1083,8 @@ object DedupOps {
     * prefix of the size order, or the budget would be spent on the
     * lower-yield (larger, more-diffuse) buckets first. Returns
     * (cut size, admitted work); cut = `variantCap` means nothing
-    * escalates. Exposed so [[graft.tools.SimhashCapProbe]] asserts the
-    * same arithmetic the candidate pipeline executes. */
+    * escalates. Exposed so the specs assert the same arithmetic the
+    * candidate pipeline executes. */
   def escalationCut(hist: Seq[(Long, Long)], variantCap: Int,
       budget: Long): (Long, Long) = {
     var cum = 0L
@@ -1128,7 +1130,7 @@ object DedupOps {
     *     recall 0.9203 at sf0.1 with both caps forced to 32 and the
     *     budget opted out (the `simhash_recall_window` gate contract
     *     re-measures that floor every round) and 0.5571 on a FULL
-    *     dense 4096-id near-ball (the SimhashCapProbe phase-2 regime
+    *     dense 4096-id near-ball (SIMHASH_CAP_PROBE.json phase 2,
     *     where the true output is the complete clique).
     *   - Identical-simhash groups: intra-group cliques (the true
     *     hamming-0 pairs) up to `maxBucket` members, id-ordered path
@@ -1156,8 +1158,13 @@ object DedupOps {
     * shingle-once pattern (CONTRACTS: compute signatures once, feed
     * every consumer): callers holding several forms over one corpus
     * (e.g. the `simhash_recall` contrast of exact vs capped) pay the
-    * signature aggregation once. `sig` should be materialized
-    * (localCheckpoint) — this pipeline consumes it six times.
+    * signature aggregation once. `sig` MUST be materialized — its
+    * analyzed plan a checkpointed RDD (`localCheckpoint(true)`): the
+    * pipeline consumes it six times, and the escalation facts (max
+    * group size, distinct-signature count) are measured from it in a
+    * separate driver job, so a lazy, non-deterministically recomputed
+    * `sig` could be measured low and silently drop the group-window
+    * leg the final query needed. A lazy `sig` is rejected.
     *
     * `escalateBudget` > 0 — the DEFAULT since r20
     * ([[SimVariantEscalateBudget]]) — enables the budgeted
@@ -1175,6 +1182,14 @@ object DedupOps {
       maxHamming: Int, maxBucket: Int = SimMaxBucket,
       variantCap: Int = SimMaxBucket,
       escalateBudget: Int = SimVariantEscalateBudget): DataFrame = {
+    require(sig.queryExecution.analyzed match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.isCheckpointed
+        case _ => false
+      },
+      "simhashCandidatesFromSig: sig must be materialized " +
+        "(localCheckpoint(true)) — its facts are measured in a separate " +
+        "job and must match what the final query reads")
     // The pigeonhole bound applies only when the variant-rescue stage
     // can actually run: maxBucket = Int.MaxValue means no bucket is
     // ever over-cap, the variant stage is provably empty, and the

@@ -576,10 +576,10 @@ object StreamingLoad {
     }
 
   /** One micro-batch of [[pqIndexStreamDrifted]] — the committed
-    * per-batch body, extracted so the 1M-scale probe
-    * ([[graft.tools.DriftRetrainProbe]]) drives the EXACT code path the
-    * stream runs (parquet-sourced batches instead of the JSON stream
-    * plumbing, which StreamingSpec covers). Returns true iff this batch
+    * per-batch body, extracted so StreamingSpec's crash-heal and
+    * coder-migration specs drive the EXACT code path the stream runs
+    * (DataFrame batches instead of the JSON stream plumbing, which the
+    * stream spec covers). Returns true iff this batch
     * RETRAINED (recoded the whole index under a new quantizer
     * generation). */
   private[graft] def pqIndexBatchDrifted(
@@ -832,9 +832,10 @@ object StreamingLoad {
     * the corpus insert would make the replay URL-reject its own
     * survivors and lose their rows forever.
     *
-    * Probed at 1 M-corpus scale by `graft.tools.CurationStreamProbe`
-    * (planted per-category arrivals, exact reject accounting, flat
-    * per-batch work, replay-appends-zero). */
+    * StreamingSpec checks exact per-store growth, the scrub, replay
+    * appending nothing, zero leaked blocks and a per-batch job count
+    * that does not grow with the stores (CURATION_STREAM_PROBE.json
+    * records the 1 M-corpus run). */
   def curationIngestStream(
       spark: SparkSession,
       srcDir: String,

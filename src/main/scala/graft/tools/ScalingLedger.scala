@@ -369,9 +369,7 @@ object ScalingLedger {
     // (an autoc PQ row read 19.4 ms in a 7-row subset regen vs 2.2 ms
     // in the same-day full regen; recall columns were regen-stable, so
     // no decision was wrong, but the subset timing columns lied). One
-    // discarded execution of the first query at each scale absorbs it
-    // — the SimhashCapProbe warm-up-discard pattern applied to the
-    // ledger tool.
+    // discarded execution of the first query at each scale absorbs it.
     names.headOption.foreach { n =>
       System.err.println(s"warm-up (discarded): $n at both scales")
       resolve(n)(spark, baseDir).count()

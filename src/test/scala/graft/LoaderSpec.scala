@@ -273,6 +273,35 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     assert(rec.progress.count(_ == "deleteObjects") == 1) // ALWAYS cleans on failure
   }
 
+  test("native load reads exactly the staged files; each body is evaluated once") {
+    import org.apache.spark.sql.functions._
+    val (whDir, stg) = (tmp(), tmp())
+    val wh = new ParquetWarehouse(spark, whDir)
+    val t = TableRef("", "staged_only")
+    // A non-deterministic body: every evaluation draws fresh values, so
+    // a load that re-evaluated the body instead of reading the staged
+    // files would land rows the manifest never listed.
+    val calls = spark.sparkContext.longAccumulator("body_udf_calls")
+    val draw = udf { (_: Long) =>
+      calls.add(1)
+      java.util.concurrent.ThreadLocalRandom.current().nextLong()
+    }.asNondeterministic()
+    val body = spark.range(0, 1000)
+      .select(col("id"), draw(col("id")).as("draw"))
+    val loader = mkLoader(LoaderConfig(table = t,
+      cleanup = CleanupPolicy.Never), wh, stg)
+    val up = loader.addBody(body).get
+    assert(loader.insert() == "SUCCESS")
+    assert(calls.sum == 1000L,
+      s"body evaluated ${calls.sum / 1000.0} times, expected once")
+    val staged = spark.read.schema(body.schema).json(up.files: _*)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val loaded = wh.table(t)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(staged.size == 1000)
+    assert(loaded == staged, "the table must hold exactly the staged rows")
+  }
+
   test("requires at least one staged body (X6 assert, :277)") {
     val (whDir, stg) = (tmp(), tmp())
     val loader = mkLoader(LoaderConfig(table = TableRef("", "t")),

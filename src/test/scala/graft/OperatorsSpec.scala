@@ -12,6 +12,21 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The CC round law for n vertices: HookDelay neighbor-only rounds,
+    * then ⌈log₂ n⌉ hook rounds (class count at least halves per round),
+    * plus one convergence-detection round — valid on every topology. */
+  private def ccRoundBound(n: Long): Int =
+    DedupOps.HookDelay +
+      (64 - java.lang.Long.numberOfLeadingZeros(math.max(n - 1, 1))) + 1
+
+  /** `n` honest documents with ids from `from`: unique 12-word texts of
+    * hashed-id words, so no two share a shingle set. */
+  private def honestDocs(from: Long, n: Long) =
+    spark.range(from, from + n).select(col("id").as("doc_id"),
+      concat_ws(" ", (0 until 12).map(i =>
+        concat(lit("w"), pmod(xxhash64(col("id"), lit(i)), lit(1000000L)))): _*)
+        .as("text"))
+
   test("DedupOps.exact is last-write-wins per key") {
     import spark.implicits._
     val df = Seq((1, "a", 10), (1, "b", 20), (2, "c", 5)).toDF("id", "v", "ts")
@@ -206,8 +221,8 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     // pair at cap 2 on sf0.001) — floor 0.9, so a deliberate 10-point
     // regression fails HERE even if code and oracle are changed
     // consistently; the gate rows pin 0.9203 at sf0.1/cap 32
-    // (simhash_recall_window) and SimhashCapProbe floors the dense
-    // near-ball regime at 0.5 (measured 0.557).
+    // (simhash_recall_window) and the dense near-ball spec below floors
+    // the near-ball regime.
     val windowed = pairs(2, vc = 2, eb = 0)
     assert(windowed.subsetOf(exact), "window degrade emitted a false pair")
     assert(windowed.size * 10 >= exact.size * 9,
@@ -224,7 +239,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
   test("budgeted variant-stage auto-escalation: prefix cut arithmetic; " +
       "covering budget reproduces the exact set; zero budget is the old pipeline") {
     // The cut is a pure prefix over ascending size classes — assert the
-    // arithmetic the candidate pipeline and SimhashCapProbe both use.
+    // arithmetic the candidate pipeline and the near-ball spec both use.
     // Classes: 2 buckets of size 3 (work 2·3=6), 1 of 5 (10), 1 of 10 (45).
     val hist = Seq((3L, 2L), (5L, 1L), (10L, 1L))
     assert(DedupOps.escalationCut(hist, 2, 5L) == ((2L, 0L)),
@@ -268,6 +283,128 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
       assert(lo.subsetOf(hi),
         s"budget escalation not monotone: ${lo.size} !⊆ ${hi.size}")
     }
+  }
+
+  test("simhash dense near-ball: lever and budgeted escalation are exact, windows keep it " +
+      "one component; a saturated cloud admits no more work than its budget") {
+    // The two adversarial regimes of the variant stage, planted as
+    // signatures (text cannot plant them without inverting the hash),
+    // with both caps forced to 64 so every guard fires at this size.
+    val cap = 64
+    def shl(v: org.apache.spark.sql.Column, bits: org.apache.spark.sql.Column) =
+      call_function("shiftleft", v, bits.cast("int"))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def cands(sig: org.apache.spark.sql.DataFrame, mb: Int = cap,
+        vc: Int = cap, eb: Int = DedupOps.SimVariantEscalateBudget) =
+      pairs(DedupOps.simhashCandidatesFromSig(sig, "doc_id", maxHamming = 8,
+        maxBucket = mb, variantCap = vc, escalateBudget = eb))
+
+    // Ball: chunks 2-3 pinned to one prefix, <= 4 hash-picked flips in
+    // the low 24 bits, so EVERY ball pair is within hamming 8 and shares
+    // a chunk — the exact output holds the whole clique. Random honest
+    // signatures share the corpus.
+    val nBall = 256L
+    val ball = spark.range(0, nBall).select(col("id").as("doc_id"),
+      lit(0x5a5a5a000000L).bitwiseOR((0 until 4).map(j =>
+          shl(lit(1L), pmod(xxhash64(col("id"), lit(j)), lit(24))))
+        .reduce(_ bitwiseOR _)).as("simhash"))
+    val honest = spark.range(0, 300).select((col("id") + 1000000L).as("doc_id"),
+      pmod(xxhash64(col("id"), lit(99)), lit((1L << 48) - 1)).as("simhash"))
+    val sig = ball.unionByName(honest).localCheckpoint(true)
+    val exact = cands(sig, mb = Int.MaxValue)
+    val inBall = (p: (Long, Long)) => p._2 < nBall
+    assert(exact.count(inBall) == nBall * (nBall - 1) / 2,
+      "ball construction broke: exact set lacks part of the ball clique")
+    // The per-call lever: a variant cap above the ball's distinct count
+    // runs the pigeonhole-exact rescue everywhere — recall exactly 1.0.
+    assert(cands(sig, vc = DedupOps.SimVariantCap, eb = 0) == exact)
+    // Escalation opted out: the window degrade fires. Precision stays
+    // structural, the ball stays ONE component over the window edges,
+    // and recall keeps a floor.
+    val window = cands(sig, eb = 0)
+    assert(window.subsetOf(exact), "window degrade emitted a false pair")
+    assert(window.size < exact.size, "the window regime did not fire")
+    assert(window.size * 2 >= exact.size,
+      s"window recall ${window.size}/${exact.size} below the 0.5 floor")
+    import spark.implicits._
+    val ballComps = DedupOps.connectedComponents(
+      ball.select(col("doc_id")), window.filter(inBall).toSeq.toDF("id_a", "id_b"),
+      "doc_id").agg(countDistinct(col("component"))).head.getLong(0)
+    assert(ballComps == 1L, s"ball fragmented into $ballComps components")
+    // The committed default: the ball's over-cap work fits the linear
+    // budget, so the escalation admits it and recovers the exact set.
+    val auto = cands(sig)
+    assert(auto == exact,
+      s"budgeted escalation lost ${(exact -- auto).size} ball pairs")
+
+    // Saturated cloud: every signature agrees on chunk 0 and is within
+    // one bit on chunk 1, the other 24 bits diffuse — huge variant
+    // buckets, almost no true pairs. A small per-signature budget keeps
+    // it box-sized; the rule bounds work for any budget: the over-cap
+    // work must exceed the budget (else nothing is tested), the
+    // smallest-first cut must admit at most the budget, and the
+    // escalated run only adds pairs over the window run.
+    val perSim = 16
+    val cloud = spark.range(0, 1500).select(col("id").as("doc_id"),
+      lit(0xABCL)
+        .bitwiseOR(shl(lit(0x123L).bitwiseXOR(
+          shl(lit(1L), pmod(xxhash64(col("id"), lit(7)), lit(12)))), lit(12)))
+        .bitwiseOR(shl(pmod(xxhash64(col("id"), lit(8)), lit(1L << 24)), lit(24)))
+        .as("simhash"))
+      .localCheckpoint(true)
+    // The pipeline's over-cap histogram, replayed: distinct signatures
+    // -> over-cap (c, chunk) bands -> 13 variant keys per other chunk.
+    val sims = cloud.select(col("simhash")).distinct()
+    val nSims = sims.count()
+    val chunkOf = (c: org.apache.spark.sql.Column) =>
+      call_function("shiftright", col("simhash"), c.cast("int") * 12)
+        .bitwiseAND(4095L)
+    val flips = array((0L +: (0 until 12).map(b => 1L << b)).map(lit): _*)
+    val hist = sims
+      .select(col("simhash"), explode(sequence(lit(0), lit(3))).as("c"))
+      .withColumn("chunk", chunkOf(col("c")))
+      .withColumn("k", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("c", "chunk")))
+      .filter(col("k") > cap)
+      .select(col("simhash"), col("c"), col("chunk"),
+        explode(sequence(lit(0), lit(3))).as("c2"))
+      .filter(col("c2") =!= col("c"))
+      .select(col("simhash"), col("c"), col("chunk"), col("c2"),
+        explode(flips).as("flip"))
+      .select(col("c"), col("chunk"), col("c2"),
+        chunkOf(col("c2")).bitwiseXOR(col("flip")).as("vkey"))
+      .groupBy("c", "chunk", "c2", "vkey").agg(count(lit(1)).as("vn"))
+      .filter(col("vn") > cap)
+      .groupBy("vn").agg(count(lit(1)).as("nb"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val budget = perSim.toLong * nSims
+    val workAll = hist.map { case (vn, nb) => nb * (vn * (vn - 1) / 2) }.sum
+    val (cut, admitted) = DedupOps.escalationCut(hist, cap, budget)
+    assert(workAll > budget, s"cloud work $workAll <= budget $budget: " +
+      "the fixture no longer saturates")
+    assert(admitted <= budget, s"admitted $admitted > budget $budget")
+    assert(cut < hist.map(_._1).max, "the cut admitted every class")
+    val cloudWin = cands(cloud, eb = 0)
+    val cloudAuto = cands(cloud, eb = perSim)
+    assert(cloudWin.subsetOf(cloudAuto),
+      "escalation must only ADD pairs over the window pipeline")
+  }
+
+  test("simhashCandidatesFromSig rejects a signature frame that is not materialized") {
+    // The escalation facts are measured from `sig` in their own driver
+    // job; a lazy, non-deterministic `sig` could be recomputed
+    // differently for the final query, so only a checkpointed frame
+    // is accepted.
+    val sig = DedupOps.simhash(Tables(spark, sf, "documents")
+      .select(col("doc_id"), col("text")).limit(50), "doc_id", "text")
+    val lazySig = intercept[IllegalArgumentException](
+      DedupOps.simhashCandidatesFromSig(sig, "doc_id", 8))
+    assert(lazySig.getMessage.contains("materialized"))
+    intercept[IllegalArgumentException](
+      DedupOps.simhashCandidatesFromSig(sig.localCheckpoint(false), "doc_id", 8))
+    assert(DedupOps.simhashCandidatesFromSig(sig.localCheckpoint(true),
+      "doc_id", 8).count() >= 0L)
   }
 
   test("connectedComponents collapses transitive chains; keepClusterMin keeps one per cluster") {
@@ -1574,14 +1711,30 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     val est = org.apache.spark.sql.graftshim.GraftStats.sizeInBytes(labels)
     assert(est < BigInt(n) * 1000,
       s"sizeInBytes estimate $est not anchored to measured rows")
+    // The vertex-count law holds on the chain too (measured 13 rounds).
+    assert(rounds <= ccRoundBound(n), s"chain took $rounds rounds")
+    // The star — one hub, n leaves, diameter 2 — converges inside the
+    // hook delay, and half its symmetrized edges share the hub as src
+    // (the hot key CONTRACTS §4 names). Same round law, one component.
+    val (star, starRounds) = DedupOps.connectedComponentsWithRounds(
+      spark.range(0, n + 1).select(col("id").as("doc_id")),
+      spark.range(1, n + 1).select(lit(0L).as("id_a"), col("id").as("id_b")),
+      "doc_id")
+    assert(starRounds <= ccRoundBound(n + 1),
+      s"star took $starRounds rounds, bound ${ccRoundBound(n + 1)}")
+    val starComp = star.agg(
+        countDistinct(col("component")), max(col("component")), count(lit(1)))
+      .head
+    assert(starComp.getLong(0) == 1L && starComp.getLong(1) == 0L &&
+      starComp.getLong(2) == n + 1, s"star must collapse to hub 0: $starComp")
   }
 
   test("connectedComponents: near-critical random graph obeys the vertex-count round bound") {
     // The topology that broke the pointer-jump formulation (measured
     // O(diameter)-like there: 95 rounds at 157k vertices, probe-scale).
     // The hook law is diameter-independent: rounds ≤ HookDelay +
-    // ⌈log₂ n⌉ + 1 on ANY graph — asserted here in-suite at 5k, and by
-    // graft.tools.CcProbe at 1M.
+    // ⌈log₂ n⌉ + 1 on ANY graph — asserted here at 5k (CC_PROBE.json
+    // records the same law measured at 1M).
     val n = 5000L
     val docs = spark.range(0, n).select(col("id").as("doc_id"))
     val edges = spark.range(0, (n * 0.9).toLong).select(
@@ -1669,17 +1822,32 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     val docs = spark.range(0, 10000).select(col("id").as("doc_id"),
       lit("alpha beta gamma delta epsilon zeta eta theta iota kappa")
         .as("text"))
-    val cand = DedupOps.minhashCandidates(docs, "doc_id", "text")
+    // 500 honest unique-text docs share the corpus: they must add no
+    // more than hash-collision noise and stay singletons.
+    val honestN = 500L
+    val mixed = docs.unionByName(honestDocs(10000L, honestN))
+    val cand = DedupOps.minhashCandidates(mixed, "doc_id", "text")
       .localCheckpoint(true)
     val n = cand.count()
     assert(n <= 4L * 10000L, s"candidate stage not capped: $n rows")
     assert(n >= 9999L, s"path edges missing: $n rows")
-    // Connectivity preserved: the path collapses to ONE cluster (pointer
-    // doubling absorbs the 10k-deep path in ~15 rounds).
-    val comp = DedupOps.connectedComponents(
-      docs.select(col("doc_id")), cand.select(col("id_a"), col("id_b")),
+    // Every family edge joins identical signatures (the capped path
+    // walks signature order), so it survives any est threshold.
+    val fam = cand.filter(col("id_b") < 10000L)
+    assert(fam.count() >= 9999L, "family path disconnected")
+    assert(fam.agg(min(col("est_jaccard"))).head.getDouble(0) == 1.0)
+    assert(cand.filter(col("id_b") >= 10000L).count() <= honestN,
+      "honest docs collided beyond hash noise")
+    // Connectivity preserved: the path collapses to ONE cluster within
+    // the vertex-count round law, and every honest doc stays alone.
+    val (comp, rounds) = DedupOps.connectedComponentsWithRounds(
+      mixed.select(col("doc_id")), cand.select(col("id_a"), col("id_b")),
       "doc_id")
-    assert(comp.agg(countDistinct(col("component"))).head.getLong(0) == 1L)
+    assert(rounds <= ccRoundBound(10000L + honestN), s"took $rounds rounds")
+    val sizes = comp.groupBy(col("component")).count()
+      .agg(max(col("count")), count(lit(1))).head
+    assert(sizes.getLong(0) == 10000L, s"family fragmented: $sizes")
+    assert(sizes.getLong(1) == honestN + 1, s"honest docs merged: $sizes")
     // The ledger sees the degeneracy.
     val led = DedupOps.lshBucketLedger(docs, "doc_id", "text").head
     assert(led.getLong(2) > 0L, "ledger must report over-cap buckets")
@@ -1710,17 +1878,34 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     val docs = spark.range(0, 10000).select(col("id").as("doc_id"),
       lit("alpha beta gamma delta epsilon zeta eta theta iota kappa")
         .as("text"))
-    val cand = DedupOps.simhashCandidates(docs, "doc_id", "text",
+    // 500 honest unique-text docs share the corpus: simhash coincidences
+    // between them are genuine near-hash matches, so they may pair up,
+    // but must not merge en masse or touch the family.
+    val honestN = 500L
+    val mixed = docs.unionByName(honestDocs(10000L, honestN))
+    val cand = DedupOps.simhashCandidates(mixed, "doc_id", "text",
         maxHamming = 3)
       .localCheckpoint(true)
     val n = cand.count()
     assert(n <= 4L * 10000L, s"candidate stage not capped: $n rows")
     assert(n >= 9999L, s"path edges missing: $n rows")
-    // Connectivity preserved: the path collapses to ONE cluster.
-    val comp = DedupOps.connectedComponents(
-      docs.select(col("doc_id")), cand.select(col("id_a"), col("id_b")),
+    // The family emits exactly its id-ordered path, every edge an
+    // identical-simhash pair (hamming 0 survives any maxHamming).
+    val fam = cand.filter(col("id_b") < 10000L)
+    assert(fam.count() == 9999L, "family must emit its 9,999-edge path")
+    assert(fam.agg(max(col("hamming"))).head.getInt(0) == 0)
+    assert(cand.filter(col("id_a") < 10000L && col("id_b") >= 10000L)
+      .count() == 0L, "an honest doc paired with the family")
+    // Connectivity preserved: the path collapses to ONE cluster within
+    // the vertex-count round law; honest docs stay (mostly) singleton.
+    val (comp, rounds) = DedupOps.connectedComponentsWithRounds(
+      mixed.select(col("doc_id")), cand.select(col("id_a"), col("id_b")),
       "doc_id")
-    assert(comp.agg(countDistinct(col("component"))).head.getLong(0) == 1L)
+    assert(rounds <= ccRoundBound(10000L + honestN), s"took $rounds rounds")
+    val sizes = comp.groupBy(col("component")).count()
+      .agg(max(col("count")), count(lit(1))).head
+    assert(sizes.getLong(0) == 10000L, s"family fragmented: $sizes")
+    assert(sizes.getLong(1) >= 1 + honestN / 2, s"honest docs merged: $sizes")
     // The ledger sees the degeneracy on the GROUP axis (one 10k-member
     // identical-simhash group; the distinct-sim buckets stay at 1).
     val led = DedupOps.simhashBucketLedger(docs, "doc_id", "text").head

@@ -17,6 +17,21 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Every ShuffleExchange in an executed plan, adaptive stages included. */
+  private def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    (p match {
+      case s: ShuffleExchangeExec => Seq(s.nodeName)
+      case _ => Nil
+    }) ++ kids.flatMap(shuffles)
+  }
+
   test("bigram LM broadcasts the model side, never the exploded corpus") {
     // Regression pin for the round-13 wrong-side broadcast: Catalyst's
     // size estimates built the broadcast from the exploded corpus
@@ -428,8 +443,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // may shuffle the label table; a ShuffleExchange here means a size
     // estimate picked the wrong side and at 100 TB the batch fold
     // would pay a corpus shuffle per micro-batch.
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val prev = spark.range(0, 2000)
       .select(col("id").as("doc_id"), (col("id") - col("id") % 4).as("component"))
       .localCheckpoint(true)
@@ -439,20 +452,88 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     val out = graft.operators.DedupOps.incrementalComponents(
       prev, newV, newE, "doc_id")
     assert(out.count() == 2100)
-    def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _ => p.children
-      }
-      (p match {
-        case s: ShuffleExchangeExec => Seq(s.nodeName)
-        case _ => Nil
-      }) ++ kids.flatMap(shuffles)
-    }
     val found = shuffles(out.queryExecution.executedPlan)
     assert(found.isEmpty,
       s"incremental remap pass shuffled the label table: $found")
+  }
+
+  test("ivfAppend: existing index rows pass through uncoded; only the batch reaches the coder") {
+    // The per-batch work bound of incremental ANN maintenance, as plan
+    // structure instead of a timing ratio: the appended index is the
+    // existing rows, untouched, unioned with the coding of the arrivals
+    // the index lacks. The existing index enters the coding branch only
+    // as the id column of the replay anti-join, so the coder's work is
+    // batch-sized whatever the index size.
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
+      LogicalPlan, Union, Window}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.operators.SimilarityOps
+    def vecs(lo: Long, hi: Long): DataFrame = spark.range(lo, hi).select(
+      col("id").as("vec_id"), array((0 until 8).map(i =>
+        (pmod(xxhash64(col("id"), lit(i)), lit(200L)) - 100L)
+          .cast("float") / 100.0f): _*).as("vec"))
+    val corpus = vecs(0, 400).localCheckpoint(true)
+    val cents = SimilarityOps.ivfCentroids(corpus, 0)
+      .select(col("cent_id"),
+        transform(col("cent_vec"), x => x.cast("double")).as("cent_vec"))
+      .localCheckpoint(true)
+    val books = SimilarityOps.pqResidualCodebooks(corpus, cents, 2, 4, 4, 1)
+      .localCheckpoint(true)
+    val index = SimilarityOps.ivfPqResidualIndex(corpus, cents, books, 4)
+      .localCheckpoint(true)
+    val indexRdd = index.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.id
+      case other => fail(s"index is not materialized: $other")
+    }
+    def indexReads(p: LogicalPlan): Int = p.collectLeaves().count {
+      case r: LogicalRDD => r.rdd.id == indexRdd
+      case _ => false
+    }
+    val out = SimilarityOps.ivfAppend(index, vecs(400, 440), cents, books, 4)
+    assert(out.count() == 440)
+    out.queryExecution.optimizedPlan match {
+      case Union(Seq(kept, coded), _, _) =>
+        assert(indexReads(kept) == 1 && kept.collect {
+          case n @ (_: Join | _: Aggregate | _: Window) => n
+        }.isEmpty, s"existing rows must pass through untouched:\n$kept")
+        val antiReads = coded.collect {
+          case j: Join if j.joinType == LeftAnti && indexReads(j.right) > 0 =>
+            assert(j.right.output.map(_.name) == Seq("vec_id"),
+              s"the replay anti-join reads more than ids: ${j.right.output}")
+            assert(indexReads(j.left) == 0)
+            indexReads(j.right)
+        }.sum
+        assert(antiReads >= 1 && antiReads == indexReads(coded),
+          s"the coding branch reads the index beyond the anti-join:\n$coded")
+      case other => fail(s"expected existing ∪ coded arrivals, got:\n$other")
+    }
+  }
+
+  test("verifyPairsExact with broadcastPairs: the corpus text lookup streams, never shuffles") {
+    // The exact-verify pass of the curation stream must cost
+    // pair-count-sized work per batch: the pair side is the broadcast
+    // build side and the corpus streams through one scan. With the
+    // size-based broadcast switched off, plain planning would
+    // sort-merge — shuffling the whole corpus every batch.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val corpus = spark.range(0, 2000).select(col("id").as("doc_id"),
+        concat_ws(" ", lit("the"), (col("id") % 50).cast("string"),
+          lit("quick brown fox")).as("text"))
+      val batch = spark.range(5000, 5020).select(col("id").as("doc_id"),
+        concat_ws(" ", lit("the"), (col("id") % 50).cast("string"),
+          lit("quick brown fox")).as("text"))
+      val pairs = spark.range(5000, 5020).select(
+        (col("id") % 2000).as("corpus_id"), col("id").as("new_id"))
+      val out = graft.operators.DedupOps.verifyPairsExact(pairs, "corpus_id",
+        corpus, "new_id", batch, "doc_id", "text", 0.5, broadcastPairs = true)
+      assert(out.count() == 20L)
+      val found = shuffles(out.queryExecution.executedPlan)
+      assert(found.isEmpty, s"the verify pass shuffled the corpus: $found")
+    } finally spark.conf.set(key, saved)
   }
 
   test("PQ ADC LUT builds in ONE aggregation: no shuffle carries the intermediate map") {

@@ -30,6 +30,9 @@ class WarehouseRaceSpec extends AnyFunSuite with SparkSuite {
 
   private def tmp() = Files.createTempDirectory("graft-race").toString
 
+  /** Stampede rounds per run of the stale-lock spec. */
+  private val StampedeRounds = 20
+
   /** Identity on `id` that parks the first write job: signals `writing`
     * (the racer is provably past its base-version read and inside its
     * write), then waits for `release`. */
@@ -259,31 +262,39 @@ class WarehouseRaceSpec extends AnyFunSuite with SparkSuite {
     val t = TableRef("", "race6")
     wh.create(t, Seq((1L, "base")).toDF("id", "v"))
     val lock = Paths.get(s"$root/race6/_COMMIT_LOCK")
-    // Plant a crashed writer's stale lock for every waiter to covet.
-    Files.createFile(lock)
-    assert(lock.toFile.setLastModified(
-      System.currentTimeMillis() - 2 * ParquetWarehouse.LockStaleMs))
+    // Three earlier steal designs lost this race about once in six
+    // rounds (delete-based steal, rename-restore steal, a reap ticket
+    // stat'ed separately from the staleness decision), so one round
+    // proves little: every round plants a fresh crashed writer's lock
+    // and stampedes six real threads through it.
+    (1 to StampedeRounds).foreach { round =>
+      // Plant a crashed writer's stale lock for every waiter to covet.
+      Files.createFile(lock)
+      assert(lock.toFile.setLastModified(
+        System.currentTimeMillis() - 2 * ParquetWarehouse.LockStaleMs))
 
-    val active = new java.util.concurrent.atomic.AtomicInteger(0)
-    val maxActive = new java.util.concurrent.atomic.AtomicInteger(0)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    // Generous contention budget (ADVICE r15): 6 waiters at 50 ms
-    // polling with 20 ms holds fit in well under a second on an idle
-    // box, but a loaded CI machine can starve an unlucky thread past
-    // the production 2 s default — the budget is injectable precisely
-    // so this spec asserts the admission invariant, not the timeout.
-    val threads = (1 to 6).map(_ => new Thread(() =>
-      try wh.withCommitLock(t, waitBudgetMs = 20000) {
-        val a = active.incrementAndGet()
-        maxActive.updateAndGet(m => math.max(m, a))
-        Thread.sleep(20)
-        active.decrementAndGet(); ()
-      } catch { case e: Throwable => errs.add(e) }))
-    threads.foreach(_.start()); threads.foreach(_.join())
-    assert(errs.isEmpty, s"contention must resolve, not fail: ${errs.peek()}")
-    assert(maxActive.get() == 1,
-      s"${maxActive.get()} writers were inside the critical section at once")
-    assert(!Files.exists(lock))
+      val active = new java.util.concurrent.atomic.AtomicInteger(0)
+      val maxActive = new java.util.concurrent.atomic.AtomicInteger(0)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      // Generous contention budget (ADVICE r15): 6 waiters at 50 ms
+      // polling with 20 ms holds fit in well under a second on an idle
+      // box, but a loaded CI machine can starve an unlucky thread past
+      // the production 2 s default — the budget is injectable precisely
+      // so this spec asserts the admission invariant, not the timeout.
+      val threads = (1 to 6).map(_ => new Thread(() =>
+        try wh.withCommitLock(t, waitBudgetMs = 20000) {
+          val a = active.incrementAndGet()
+          maxActive.updateAndGet(m => math.max(m, a))
+          Thread.sleep(20)
+          active.decrementAndGet(); ()
+        } catch { case e: Throwable => errs.add(e) }))
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(errs.isEmpty,
+        s"round $round: contention must resolve, not fail: ${errs.peek()}")
+      assert(maxActive.get() == 1, s"round $round: ${maxActive.get()} " +
+        "writers were inside the critical section at once")
+      assert(!Files.exists(lock), s"round $round: lock residue")
+    }
   }
 
   test("commit lock: live contention fails loud, a stale (crashed) lock is stolen") {
