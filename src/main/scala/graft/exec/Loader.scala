@@ -69,12 +69,14 @@ final class Loader(
     * `uploadedFile` completion event carries exact per-file byte counts
     * from the committed files. The bridge sees task-ends of any job that
     * overlaps this write on the same SparkContext — Loader stages bodies
-    * sequentially, so in practice that is this write. */
+    * sequentially, so in practice that is this write. A `json` body
+    * holding a map with non-string keys is rejected before staging. */
   def addBody(df: DataFrame, format: String = "json"): Option[StagedUpload] =
     if (started) {
       debug(s"addBody after start ignored")
       None
     } else {
+      StagingWriter.requireStageable(df.schema, format)
       val idx = uploads.size
       val bridge = new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(
@@ -156,7 +158,9 @@ final class Loader(
       val schema = bodies.head.schema
       val stagedDf = uploads.zip(formats).groupMap(_._2)(_._1.files).toSeq
         .map { case (format, files) =>
-          spark.read.schema(schema).format(format).load(files.flatten.toSeq: _*)
+          spark.read.schema(schema).format(format)
+            .options(StagingWriter.stageOptions(format))
+            .load(files.flatten.toSeq: _*)
         }
         .reduce(_ unionByName _)
         .observe(observation,

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Every function here is a pure projection built from codegen'd Spark SQL
   * functions — no UDFs, no shuffles — so they stay inside whole-stage
   * codegen and scale linearly with the scan. Each has an exactly-equivalent
-  * DuckDB formulation (used by the oracle SQL in [[graft.SparkEntry]]):
+  * DuckDB formulation (used by the gate oracle SQL in [[graft.gate]]):
   * hashes derive from `md5` hex (identical in both engines) and all float
   * arithmetic is written as explicitly-parenthesized double ops so both
   * engines execute the same IEEE sequence.

@@ -129,11 +129,4 @@ object Ingest {
         }
       }
   }
-
-  /** Rows → NDJSON lines (T1/T2: `toJSONLine` / `toNewLineJSON`,
-    * utils.ts:27-39). */
-  def toNdjson(df: DataFrame): Dataset[String] = {
-    import df.sparkSession.implicits._
-    df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*))).as[String]
-  }
 }

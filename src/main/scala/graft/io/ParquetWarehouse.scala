@@ -56,20 +56,35 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     if (t.schema.isEmpty) s"$root/${t.table}" else s"$root/${t.schema}/${t.table}"
 
   private def versionFile(t: TableRef) = new Path(s"${tableDir(t)}/_VERSION")
+  private def nextVersionFile(t: TableRef) = new Path(s"${tableDir(t)}/_VERSION.next")
   private def partitionFile(t: TableRef) = new Path(s"${tableDir(t)}/_PARTITIONING")
 
-  private def currentVersion(t: TableRef): Option[String] = {
-    val vf = versionFile(t)
-    if (!fs.exists(vf)) None
-    else {
-      val in = fs.open(vf)
+  private def readPointer(f: Path): Option[String] =
+    try {
+      val in = fs.open(f)
       try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
       finally in.close()
-    }
-  }
+    } catch { case _: java.io.FileNotFoundException => None }
 
+  /** `_VERSION`, else the version a swap cut after deleting `_VERSION`
+    * left in `_VERSION.next` (written only once its data is complete;
+    * it counts only if it names an existing version dir). `_VERSION` is
+    * read again last, so a swap finishing meanwhile wins. */
+  private def currentVersion(t: TableRef): Option[String] =
+    readPointer(versionFile(t)).orElse {
+      val next = readPointer(nextVersionFile(t))
+        .filter(v => v.startsWith("v_") && fs.exists(new Path(s"${tableDir(t)}/$v")))
+      readPointer(versionFile(t)).orElse(next)
+    }
+
+  /** Write `_VERSION.next`, delete `_VERSION`, rename (under the commit
+    * lock): at every instant `_VERSION` or [[currentVersion]]'s fallback
+    * names a complete version. A swap cut by a crash is rolled forward
+    * first, so the overwrite never leaves the table without a pointer. */
   private def setVersion(t: TableRef, v: String): Unit = {
-    val tmp = new Path(s"${tableDir(t)}/_VERSION.next")
+    val tmp = nextVersionFile(t)
+    if (!fs.exists(versionFile(t)) && currentVersion(t).isDefined)
+      fs.rename(tmp, versionFile(t))
     val out = fs.create(tmp, true)
     try out.write(v.getBytes("UTF-8"))
     finally out.close()
@@ -687,16 +702,16 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
 
   def drop(t: TableRef): Unit = { fs.delete(new Path(tableDir(t)), true); () }
 
-  /** Tables of a schema: child directories holding a _VERSION pointer
-    * (half-created or foreign directories are ignored). Listing-only —
-    * one FS list plus one existence probe per child. */
+  /** Tables of a schema: child directories with a live version pointer
+    * (half-created or foreign directories are ignored). One FS list plus
+    * one pointer read per child. */
   def tables(schema: String): Seq[TableRef] = {
     val dir = new Path(if (schema.isEmpty) root else s"$root/$schema")
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
       .filter(_.isDirectory)
       .map(st => TableRef(schema, st.getPath.getName))
-      .filter(t => fs.exists(versionFile(t)))
+      .filter(exists)
   }
 }
 

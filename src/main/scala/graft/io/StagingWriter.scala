@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
 import graft.core.LoaderConfig
 
@@ -44,7 +45,7 @@ final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid
       format: String = "json",
       gzip: Boolean = false): StagedUpload = {
     val dir = s"$jobDir/prt_$index"
-    val w = df.write.mode("errorifexists")
+    val w = df.write.mode("errorifexists").options(StagingWriter.stageOptions(format))
     val writer = if (gzip && format == "json") w.option("compression", "gzip") else w
     writer.format(format).save(dir)
     StagedUpload(index, dir, listDataFiles(df, dir))
@@ -94,4 +95,29 @@ final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid
     fs(df).delete(new Path(jobDir), true)
 
   def exists(df: DataFrame): Boolean = fs(df).exists(new Path(jobDir))
+}
+
+object StagingWriter {
+
+  /** Staged NDJSON keeps microseconds (Spark's JSON default writes
+    * milliseconds); the offset is written for `timestamp` only. */
+  val JsonTimestampFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS[XXX]"
+
+  /** Options a staged body is written and read back with. */
+  def stageOptions(format: String): Map[String, String] =
+    if (format != "json") Map.empty
+    else Map("timestampFormat" -> JsonTimestampFormat, "timestampNTZFormat" -> JsonTimestampFormat)
+
+  /** JSON object keys are strings: a `json` body holding a map with
+    * non-string keys cannot be staged. */
+  def requireStageable(schema: StructType, format: String): Unit = {
+    def bad(t: DataType): Boolean = t match {
+      case MapType(k, v, _) => k != StringType || bad(v)
+      case ArrayType(e, _) => bad(e)
+      case s: StructType => s.fields.exists(f => bad(f.dataType))
+      case _ => false
+    }
+    require(format != "json" || !bad(schema), "a json-staged body cannot hold a map with " +
+      s"non-string keys (${schema.simpleString}); stage it with format = \"parquet\"")
+  }
 }

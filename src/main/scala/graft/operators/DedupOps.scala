@@ -101,11 +101,6 @@ object DedupOps {
       wordBigrams(col(text)), HashCoeffs.map(_._1).toArray,
       HashCoeffs.map(_._2).toArray, P).as("sig"))
 
-  /** Signature rows `(id, i, mh)` — row view of [[minhashSignatureArr]]. */
-  def minhashSignatures(df: DataFrame, id: String, text: String): DataFrame =
-    minhashSignatureArr(df, id, text)
-      .select(col(id), posexplode(col("sig")).as(Seq("i", "mh")))
-
   /** LSH banding over the signature array: bucket key = xxhash64 of the
     * band's r minhashes joined in order (pure projection + bands-way
     * explode). The 64-bit key keeps the bucket self-join shuffling and
@@ -1069,7 +1064,7 @@ object DedupOps {
     *
     * THE DEFAULT since r20 (the r19 flip protocol: evidence first,
     * then the flip with the gate oracles restated in the same commit —
-    * `Oracles.simhashCandCtes` replays the budgeted cut verbatim, so
+    * `graft.gate.DedupSql.simhashCandCtes` replays the budgeted cut verbatim, so
     * any drift in the admission arithmetic breaks the gate hash).
     * Pass `escalateBudget = 0` to opt OUT (bit-for-bit the pre-r19
     * window pipeline — what `simhash_recall_window` keeps priced). */

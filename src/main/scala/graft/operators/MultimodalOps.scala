@@ -22,12 +22,6 @@ import org.apache.spark.sql.types._
   */
 object MultimodalOps {
 
-  val MetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false)))
-
   /** Attach a binary payload + deterministic metadata struct to each row
     * (here the "media" is the utf-8 bytes of a text column — the plumbing
     * is format-agnostic). Pure projection. */

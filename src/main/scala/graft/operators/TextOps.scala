@@ -31,22 +31,6 @@ object TextOps {
       fingerprint(col(text)).as("fp_md5"),
       minShingleHash(col(text)).as("fp_minshingle"))
 
-  /** Word n-gram shingles of the normalized text as `(id, ngrams)` —
-    * the benchmark-decontamination unit (n≈5-13 in practice). Built by
-    * chaining `zip_with` over n offset slices of the ONE bound token
-    * array (per-element lambdas never re-evaluate the tokenization);
-    * docs shorter than n tokens yield an empty array. */
-  def wordNgrams(docs: DataFrame, id: String, text: String, n: Int): DataFrame = {
-    require(n >= 2, s"n-grams need n >= 2, got $n")
-    val bound = docs.select(col(id), tokens(normalized(col(text))).as("__toks"))
-    val toks = col("__toks")
-    val m = greatest(size(toks) - (n - 1), lit(0))
-    val ngrams = (2 to n).foldLeft(slice(toks, lit(1), m)) { (acc, k) =>
-      zip_with(acc, slice(toks, lit(k), m), (a, b) => concat(a, lit(" "), b))
-    }
-    bound.select(col(id), ngrams.as("ngrams"))
-  }
-
   /** Word n-gram HASHES without materializing the n-gram strings:
     * one codegen'd kernel ([[graft.expressions.NgramHashes]]) hashes
     * each token (xxhash64) and combines every window of n with a
@@ -301,7 +285,7 @@ object TextOps {
     * equivalent to (a, b) lexicographic order because the delimiter
     * sorts below every symbol character. The DuckDB oracle replays the
     * SAME recurrence as an unrolled CTE chain generated from this
-    * constant set ([[graft.Oracles.bpeDictCtes]]), so the two engines
+    * constant set ([[graft.gate.TextSql.bpeDictCtes]]), so the two engines
     * cannot drift.
     *
     * Scale: training state is the DISTINCT-WORD dictionary (vocabulary-

@@ -1071,14 +1071,6 @@ object StreamingLoad {
     stream.withWatermark(ts, watermark)
       .dropDuplicates(keyCols :+ ts)
 
-  /** Variant dropping duplicates regardless of event time within the
-    * watermark horizon (`dropDuplicatesWithinWatermark`): same key seen
-    * at a different timestamp still counts as a duplicate. */
-  def dedupStreamWithinWatermark(stream: DataFrame, ts: String,
-      watermark: String, keyCols: Seq[String]): DataFrame =
-    stream.withWatermark(ts, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
   /** Watermarked stream-stream interval join: right-side rows within
     * `[lts, lts + maxDelaySec]` of a left row with the same key — the
     * streaming twin of the batch interval join

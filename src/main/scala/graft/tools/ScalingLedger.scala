@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
+import graft.gate.{DedupGate, SimilarityGate}
 
 /** Reproducible scaling ledger: measure every query in SCALING.md's table
   * at two scale factors in one command and emit both the markdown table
@@ -130,16 +131,16 @@ object ScalingLedger {
       // search.
       "knn_ivf_p1k" -> ((s, dir) =>
         graft.operators.SimilarityOps.ivfKnn(syntheticProbes(s),
-          SparkEntry.embCorpus(s, dir), SparkEntry.KnnK,
-          centroidTarget = SparkEntry.IvfAutoC,
-          nprobe = SparkEntry.IvfNprobe)),
+          SimilarityGate.embCorpus(s, dir), SimilarityGate.KnnK,
+          centroidTarget = SimilarityGate.IvfAutoC,
+          nprobe = SimilarityGate.IvfNprobe)),
       "knn_ivf_pq_residual_p1k" -> ((s, dir) =>
         graft.operators.SimilarityOps.ivfPqResidualSearch(
-          syntheticProbes(s), SparkEntry.embCorpus(s, dir),
-          SparkEntry.pqResIndex(s, dir), SparkEntry.KnnK,
-          SparkEntry.coarseCentroids(s, dir), SparkEntry.pqResBooks(s, dir),
-          SparkEntry.PqSubDim, nprobe = SparkEntry.IvfNprobe,
-          rerank = SparkEntry.PqRerank)),
+          syntheticProbes(s), SimilarityGate.embCorpus(s, dir),
+          SimilarityGate.pqResIndex(s, dir), SimilarityGate.KnnK,
+          SimilarityGate.coarseCentroids(s, dir), SimilarityGate.pqResBooks(s, dir),
+          SimilarityGate.PqSubDim, nprobe = SimilarityGate.IvfNprobe,
+          rerank = SimilarityGate.PqRerank)),
       // The COMMITTED default (r17 verdict ask #4, default since r19):
       // auto-C coarse quantizer, residual books trained against IT
       // (residual coding is coarse-dependent), auto rerank depth — the
@@ -149,12 +150,12 @@ object ScalingLedger {
       // fixed-C/fixed-120 row above stays as the contrast.
       "knn_ivf_pq_residual_autoc_p1k" -> ((s, dir) =>
         graft.operators.SimilarityOps.ivfPqResidualSearch(
-          syntheticProbes(s), SparkEntry.embCorpus(s, dir),
-          SparkEntry.pqResIndexAuto(s, dir), SparkEntry.KnnK,
-          SparkEntry.coarseCentroidsAuto(s, dir),
-          SparkEntry.pqResBooksAuto(s, dir),
-          SparkEntry.PqSubDim, nprobe = SparkEntry.IvfNprobe,
-          rerank = SparkEntry.PqAutoRerank)),
+          syntheticProbes(s), SimilarityGate.embCorpus(s, dir),
+          SimilarityGate.pqResIndexAuto(s, dir), SimilarityGate.KnnK,
+          SimilarityGate.coarseCentroidsAuto(s, dir),
+          SimilarityGate.pqResBooksAuto(s, dir),
+          SimilarityGate.PqSubDim, nprobe = SimilarityGate.IvfNprobe,
+          rerank = SimilarityGate.PqAutoRerank)),
       // The variant-cap ×4 LEVER twin of the `simhash_recall` gate
       // contract (r17 verdict ask #5: price whether the Heaps-100x
       // 10.9-point simhash loss is purchasable by cap alone). It is —
@@ -178,10 +179,10 @@ object ScalingLedger {
           .localCheckpoint(true)
         def form(cap: Int, vcap: Int) =
           graft.operators.DedupOps.simhashCandidatesFromSig(sig, "doc_id",
-            SparkEntry.SimhashMaxHamming, maxBucket = cap,
+            DedupGate.SimhashMaxHamming, maxBucket = cap,
             variantCap = vcap).localCheckpoint(true)
         val exact = form(Int.MaxValue, Int.MaxValue)
-        val capped = form(SparkEntry.SimhashRecallCap,
+        val capped = form(DedupGate.SimhashRecallCap,
           graft.operators.DedupOps.SimVariantCap)
         val hits = exact.intersect(capped)
         exact.agg(count(lit(1)).as("n_exact"))
@@ -204,10 +205,10 @@ object ScalingLedger {
           .localCheckpoint(true)
         def form(cap: Int) =
           graft.operators.DedupOps.simhashCandidatesFromSig(sig, "doc_id",
-            SparkEntry.SimhashMaxHamming, maxBucket = cap,
+            DedupGate.SimhashMaxHamming, maxBucket = cap,
             escalateBudget = 0).localCheckpoint(true)
         val exact = form(Int.MaxValue)
-        val capped = form(SparkEntry.SimhashRecallCap)
+        val capped = form(DedupGate.SimhashRecallCap)
         val hits = exact.intersect(capped)
         exact.agg(count(lit(1)).as("n_exact"))
           .crossJoin(capped.agg(count(lit(1)).as("n_capped")))
@@ -217,20 +218,20 @@ object ScalingLedger {
         // Same arrival construction as the gate twin (every 20th vector,
         // last component zeroed, appended without retraining); only the
         // probe batch is the fixed external one.
-        val emb = SparkEntry.embCorpus(s, dir)
+        val emb = SimilarityGate.embCorpus(s, dir)
         val arrivals = emb.filter(col("vec_id") % 20 === 0)
           .select((col("vec_id") + 10000000L).as("vec_id"),
             concat(slice(col("vec"), 1, 63), array(lit(0.0f))).as("vec"))
         val merged = emb.unionByName(arrivals)
         val mergedIndex = graft.operators.SimilarityOps.ivfAppend(
-          SparkEntry.pqResIndex(s, dir), arrivals,
-          SparkEntry.coarseCentroids(s, dir), SparkEntry.pqResBooks(s, dir),
-          SparkEntry.PqSubDim)
+          SimilarityGate.pqResIndex(s, dir), arrivals,
+          SimilarityGate.coarseCentroids(s, dir), SimilarityGate.pqResBooks(s, dir),
+          SimilarityGate.PqSubDim)
         graft.operators.SimilarityOps.ivfPqResidualSearch(syntheticProbes(s),
-          merged, mergedIndex, SparkEntry.KnnK,
-          SparkEntry.coarseCentroids(s, dir), SparkEntry.pqResBooks(s, dir),
-          SparkEntry.PqSubDim, nprobe = SparkEntry.IvfNprobe,
-          rerank = SparkEntry.PqRerank)
+          merged, mergedIndex, SimilarityGate.KnnK,
+          SimilarityGate.coarseCentroids(s, dir), SimilarityGate.pqResBooks(s, dir),
+          SimilarityGate.PqSubDim, nprobe = SimilarityGate.IvfNprobe,
+          rerank = SimilarityGate.PqRerank)
       })
 
   /** Probe batch sizes for the per-probe JSON fields — the ANN rows
@@ -306,14 +307,14 @@ object ScalingLedger {
   def annRecall(s: SparkSession, dir: String, name: String): (Long, Long) = {
     val corpus =
       if (name == "knn_ivf_incremental_p1k") {
-        val emb = SparkEntry.embCorpus(s, dir)
+        val emb = SimilarityGate.embCorpus(s, dir)
         val arrivals = emb.filter(col("vec_id") % 20 === 0)
           .select((col("vec_id") + 10000000L).as("vec_id"),
             concat(slice(col("vec"), 1, 63), array(lit(0.0f))).as("vec"))
         emb.unionByName(arrivals)
-      } else SparkEntry.embCorpus(s, dir)
+      } else SimilarityGate.embCorpus(s, dir)
     val truth = graft.operators.SimilarityOps.bruteForceKnn(
-        syntheticProbes(s), corpus, SparkEntry.KnnK)
+        syntheticProbes(s), corpus, SimilarityGate.KnnK)
       .select(col("probe_id"), col("vec_id"))
     val c = LedgerOnlyQueries(name)(s, dir)
       .select(col("probe_id"), col("vec_id"))
@@ -470,7 +471,7 @@ object ScalingLedger {
           recall.get((b.query, "scaled"))) match {
         case (Some((tb, hb)), Some((ts, hs))) =>
           val kTag = if (ProbeCounts.contains(b.query))
-            s""","recall_k":${SparkEntry.KnnK}""" else ""
+            s""","recall_k":${SimilarityGate.KnnK}""" else ""
           f""","recall_base":${hb.toDouble / math.max(tb, 1L)}%.4f,"recall_scaled":${hs.toDouble / math.max(ts, 1L)}%.4f$kTag"""
         case _ => ""
       }

@@ -302,6 +302,41 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     assert(loaded == staged, "the table must hold exactly the staged rows")
   }
 
+  test("NDJSON staging keeps microseconds: timestamp and timestamp_ntz round-trip through insert") {
+    val (whDir, stg) = (tmp(), tmp())
+    val wh = new ParquetWarehouse(spark, whDir)
+    val t = TableRef("", "micros")
+    val body = spark.sql(
+      """SELECT * FROM VALUES
+        |  (1L, TIMESTAMP '2024-03-10 01:02:03.123456', TIMESTAMP_NTZ '2024-03-10 01:02:03.123456'),
+        |  (2L, TIMESTAMP '1969-12-31 23:59:59.999999', TIMESTAMP_NTZ '1969-12-31 23:59:59.999999'),
+        |  (3L, TIMESTAMP '2024-11-03 01:30:00.000001', TIMESTAMP_NTZ '2024-11-03 01:30:00.000001')
+        |  AS b(id, ts, ntz)""".stripMargin)
+    val loader = mkLoader(LoaderConfig(table = t), wh, stg)
+    loader.addBody(body)
+    assert(loader.insert() == "SUCCESS")
+    val loaded = wh.table(t).select("id", "ts", "ntz")
+    assert(loaded.schema.map(_.dataType) == body.schema.map(_.dataType))
+    assert(loaded.collect().toSet == body.collect().toSet,
+      "the loaded table must equal the body to the microsecond")
+  }
+
+  test("a json body with a non-string-keyed map is rejected before staging; parquet stages it") {
+    val (whDir, stg) = (tmp(), tmp())
+    val wh = new ParquetWarehouse(spark, whDir)
+    val t = TableRef("", "int_keyed")
+    val body = spark.sql("SELECT id, map(id, 'a', id + 1, 'b') AS m FROM range(3)")
+    val loader = mkLoader(LoaderConfig(table = t), wh, stg)
+    val e = intercept[IllegalArgumentException](loader.addBody(body))
+    assert(e.getMessage.contains("format = \"parquet\""), e.getMessage)
+    val staged = Files.walk(java.nio.file.Paths.get(stg))
+      .filter(Files.isRegularFile(_)).count()
+    assert(staged == 0, s"$staged files staged for a rejected body")
+    loader.addBody(body, "parquet")
+    assert(loader.insert() == "SUCCESS")
+    assert(wh.table(t).collect().toSet == body.collect().toSet)
+  }
+
   test("requires at least one staged body (X6 assert, :277)") {
     val (whDir, stg) = (tmp(), tmp())
     val loader = mkLoader(LoaderConfig(table = TableRef("", "t")),

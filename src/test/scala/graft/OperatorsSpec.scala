@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
+import graft.gate.{CurationGate, DedupGate, DedupSql, EventGate, SimilarityGate}
 
 /** Behavior specs for the extension operator families (the end-to-end
   * value checks run via the DuckDB oracle; these cover semantics the
@@ -607,7 +608,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(SimilarityOps.bruteForceKnn(probes, corpus, 5))
     val approx = pairs(SimilarityOps.ivfKnn(probes, corpus, 5,
-      centroidTarget = SparkEntry.IvfCentroidTarget, nprobe = SparkEntry.IvfNprobe))
+      centroidTarget = SimilarityGate.IvfCentroidTarget, nprobe = SimilarityGate.IvfNprobe))
     assert(exact.nonEmpty)
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall > 0.5, s"recall $recall")
@@ -622,12 +623,12 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
       df.select("probe_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(SimilarityOps.bruteForceKnn(probes, corpus, 5))
-    val initial = SimilarityOps.ivfCentroids(corpus, SparkEntry.KmeansK)
+    val initial = SimilarityOps.ivfCentroids(corpus, SimilarityGate.KmeansK)
       .select(col("cent_id"),
         transform(col("cent_vec"), x => x.cast("double")).as("cent_vec"))
     val trained = pairs(SimilarityOps.ivfKnnTrained(probes, corpus, 5,
       graft.operators.ClusterOps.kmeans(corpus, initial, 2),
-      nprobe = SparkEntry.IvfNprobe))
+      nprobe = SimilarityGate.IvfNprobe))
     val recall = (exact & trained).size.toDouble / exact.size
     assert(recall > 0.5, s"trained recall $recall")
   }
@@ -726,10 +727,10 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val corpus = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("vec"))
-      val c = SimilarityOps.ivfCentroids(corpus, SparkEntry.IvfCentroidTarget).count()
-      assert(c >= SparkEntry.IvfCentroidTarget / 3 &&
-        c <= SparkEntry.IvfCentroidTarget * 3,
-        s"$dir: $c centroids vs target ${SparkEntry.IvfCentroidTarget}")
+      val c = SimilarityOps.ivfCentroids(corpus, SimilarityGate.IvfCentroidTarget).count()
+      assert(c >= SimilarityGate.IvfCentroidTarget / 3 &&
+        c <= SimilarityGate.IvfCentroidTarget * 3,
+        s"$dir: $c centroids vs target ${SimilarityGate.IvfCentroidTarget}")
     }
   }
 
@@ -744,7 +745,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
           .select(col("vec_id"), col("embedding").as("vec"))
         val n = corpus.count()
         val want = math.max(4L, math.ceil(math.sqrt(n.toDouble)).toLong)
-        val c = SimilarityOps.ivfCentroids(corpus, SparkEntry.IvfAutoC).count()
+        val c = SimilarityOps.ivfCentroids(corpus, SimilarityGate.IvfAutoC).count()
         assert(c >= want / 3 && c <= want * 3,
           s"$dir: $c centroids vs sqrt-target $want (N=$n)")
         c
@@ -882,9 +883,9 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
   test("boilerplateScrub removes the planted footer, keeps unique content") {
     val docs = Tables(spark, sf, "documents")
       .select(col("doc_id"),
-        concat_ws(" ", col("text"), lit(SparkEntry.BoilerFooter)).as("text"))
+        concat_ws(" ", col("text"), lit(CurationGate.BoilerFooter)).as("text"))
     val out = TextOps.boilerplateScrub(docs, "doc_id", "text",
-      SparkEntry.BoilerTileWidth, SparkEntry.BoilerMinDf)
+      CurationGate.BoilerTileWidth, CurationGate.BoilerMinDf)
     // Every doc carries the footer, so every doc must lose at least one
     // tile — but never all of them (the original text is unique).
     val bad = out.filter(col("n_kept") >= col("n_tiles") || col("n_kept") <= 0)
@@ -895,16 +896,16 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
   test("boilerplateScrubText above-cap path degrades to the anti-join with identical values") {
     val docs = Tables(spark, sf, "documents")
       .select(col("doc_id"),
-        concat_ws(" ", col("text"), lit(SparkEntry.BoilerFooter)).as("text"))
+        concat_ws(" ", col("text"), lit(CurationGate.BoilerFooter)).as("text"))
     val dictN = TextOps.boilerplateDict(docs, "doc_id", "text",
-      SparkEntry.BoilerTileWidth, SparkEntry.BoilerMinDf).count()
+      CurationGate.BoilerTileWidth, CurationGate.BoilerMinDf).count()
     assert(dictN > 0, "dictionary empty — fallback test is vacuous")
     val fast = TextOps.boilerplateScrubText(docs, "doc_id", "text",
-      SparkEntry.BoilerTileWidth, SparkEntry.BoilerMinDf)
+      CurationGate.BoilerTileWidth, CurationGate.BoilerMinDf)
     // maxDictTiles = 0 forces the distributed anti-join degradation the
     // broadcast cap would trigger at 16M tiles; values must be identical.
     val slow = TextOps.boilerplateScrubText(docs, "doc_id", "text",
-      SparkEntry.BoilerTileWidth, SparkEntry.BoilerMinDf, maxDictTiles = 0)
+      CurationGate.BoilerTileWidth, CurationGate.BoilerMinDf, maxDictTiles = 0)
     assert(fast.exceptAll(slow).count() == 0 &&
       slow.exceptAll(fast).count() == 0)
   }
@@ -913,7 +914,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     import graft.functions.TextFunctions
     val docs = Tables(spark, sf, "documents").select(col("doc_id"), col("text"))
     val out = TextOps.boilerplateScrub(docs, "doc_id", "text",
-      SparkEntry.BoilerTileWidth, minDf = 1000000)
+      CurationGate.BoilerTileWidth, minDf = 1000000)
     // No tile can reach the threshold: reconstruction must round-trip the
     // normalized text exactly (tiling is lossless).
     val mismatch = out
@@ -1261,12 +1262,12 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
       .select(col("doc_id"), col("text"))
     val planted = docs.unionByName(docs.select(
       (col("doc_id") + 20000000L).as("doc_id"),
-      concat(col("text"), lit(" " + SparkEntry.SpamTokens)).as("text")))
+      concat(col("text"), lit(" " + CurationGate.SpamTokens)).as("text")))
     val labels = planted.select(col("doc_id"),
       when(col("doc_id") >= 20000000L, 0L).otherwise(1L).as("y"))
     val feats = QualityModelOps.hashedFeatures(planted, "doc_id", "text")
     val w = QualityModelOps.train(spark, feats, labels, "doc_id",
-      SparkEntry.QmSteps)
+      CurationGate.QmSteps)
     // Weight table shape: one intercept row + one row per bucket.
     assert(w.count() == QualityModelOps.NumBuckets + 1)
     val scored = QualityModelOps.scores(feats, w, "doc_id")
@@ -1281,7 +1282,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     // The spam lexicon's buckets carry strongly negative weights.
     import graft.functions.TextFunctions.hash60
     val spamBuckets = spark.createDataFrame(
-        SparkEntry.SpamTokens.split(" ").distinct.toSeq.map(Tuple1(_)))
+        CurationGate.SpamTokens.split(" ").distinct.toSeq.map(Tuple1(_)))
       .toDF("g")
       .select(pmod(hash60(col("g")),
         lit(QualityModelOps.NumBuckets.toLong)).as("bucket"))
@@ -1298,23 +1299,23 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
       .select(col("doc_id"), col("text"))
     val planted = docs.unionByName(docs.select(
       (col("doc_id") + 20000000L).as("doc_id"),
-      concat(col("text"), lit(" " + SparkEntry.SpamTokens)).as("text")))
+      concat(col("text"), lit(" " + CurationGate.SpamTokens)).as("text")))
     def labelsOf(d: org.apache.spark.sql.DataFrame) = d.select(col("doc_id"),
       when(col("doc_id") >= 20000000L, 0L).otherwise(1L).as("y"))
     // Pair-stable 1-in-QmSampleMod sample (same predicate as the gate):
     // an original and its spam copy are both in or both out.
     val sampled = planted.filter(hash60(
       (col("doc_id") % 20000000L).cast("string"))
-        % SparkEntry.QmSampleMod === 0)
+        % CurationGate.QmSampleMod === 0)
     val nSampled = sampled.count()
     assert(nSampled > 0 && nSampled < planted.count() / 2,
       s"sample of $nSampled docs isn't a strict minority")
     val feats = QualityModelOps.hashedFeatures(planted, "doc_id", "text")
     val wFull = QualityModelOps.train(spark, feats, labelsOf(planted),
-      "doc_id", SparkEntry.QmSteps)
+      "doc_id", CurationGate.QmSteps)
     val wSmp = QualityModelOps.train(spark,
       QualityModelOps.hashedFeatures(sampled, "doc_id", "text"),
-      labelsOf(sampled), "doc_id", SparkEntry.QmSteps)
+      labelsOf(sampled), "doc_id", CurationGate.QmSteps)
     // Decisions on the FULL corpus: sampled training must agree with
     // full training on >= 90% of documents (measured 99.3% at sf0.01,
     // 1-in-4 sample — the floor leaves room for the tiny sf0.001 docs
@@ -1482,7 +1483,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     // allow 3 sigma. Groups under k distinct values must be EXACT.
     est.foreach { case (k, a) =>
       val e = exact(k)
-      if (e < SparkEntry.KmvK) assert(a == e, s"$k: sub-k group not exact")
+      if (e < EventGate.KmvK) assert(a == e, s"$k: sub-k group not exact")
       else assert(math.abs(a - e).toDouble / e < 0.40,
         s"$k: kmv $a vs exact $e")
     }
@@ -1945,7 +1946,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     // banding the CC family feeds from), distinctPairs = false
     // (band-duplicated pairs) — so the measured degree is what the
     // repartition really sees.
-    val ccBands = DedupOps.K / Oracles.CcR
+    val ccBands = DedupOps.K / DedupSql.CcR
     val cand = DedupOps.minhashCandidates(docs, "doc_id", "text",
       bands = ccBands, distinctPairs = false).localCheckpoint(true)
     val sym = cand.select(col("id_a").as("src"))
@@ -1978,7 +1979,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     // band-collision odds est⁴ ≈ 0.3 % per band × 8 bands × 500
     // candidates ⇒ ~10 expected hits). Search at the CC banding
     // (8 bands of r = 4) and take the lowest-id hit below threshold.
-    val ccBands = DedupOps.K / Oracles.CcR
+    val ccBands = DedupOps.K / DedupSql.CcR
     val corpus = Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     // The base member must be the SAME row the variants exclude —
@@ -1997,7 +1998,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
           concat(lit(half + " "), col("text")).as("text")))
     val lowPair = DedupOps.minhashCandidates(pool, "doc_id", "text",
         bands = ccBands, maxBucket = Int.MaxValue)
-      .filter(col("est_jaccard") < SparkEntry.MinhashMinEst)
+      .filter(col("est_jaccard") < DedupGate.MinhashMinEst)
       .orderBy(col("id_a"), col("id_b")).limit(1)
       .collect()
     assert(lowPair.nonEmpty,
@@ -2027,7 +2028,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     // families, nothing fragmented, nothing merged.
     val comp = DedupOps.connectedComponents(
       docs.select(col("doc_id")),
-      cand.filter(col("est_jaccard") >= SparkEntry.MinhashMinEst)
+      cand.filter(col("est_jaccard") >= DedupGate.MinhashMinEst)
         .select(col("id_a"), col("id_b")),
       "doc_id")
     val sizes = comp.groupBy(col("component")).agg(count(lit(1)).as("n"))
@@ -2511,7 +2512,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     val dir = "/root/testdata/sf0.01"
     def run(parts: Int): Map[String, Long] = {
       import spark.implicits._
-      val k = SparkEntry.KmvK
+      val k = EventGate.KmvK
       Tables(spark, dir, "events").repartition(parts)
         .select(col("event_type"),
           operators.SketchOps.hash60(col("user_id")).as("hkey"))
@@ -2534,7 +2535,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
   test("KMV rollup merge is exactly lossless: partials rollup == one pass") {
     val dir = "/root/testdata/sf0.01"
     val ev = Tables(spark, dir, "events")
-    val k = SparkEntry.KmvK
+    val k = EventGate.KmvK
     val rolled = SparkEntry.queries("kmv_sketch_rollup")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // bottom-k(∪_day bottom-k(day)) == bottom-k(all rows): the merged

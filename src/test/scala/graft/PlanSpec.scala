@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.gate.TextGate
 
 /** Physical-plan assertions: lock in the scale properties the operators
   * were designed around (SURVEY.md §7.4 "100 TB design discipline"). A
@@ -193,7 +194,7 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     import graft.operators.{AnalyticOps, SimilarityOps, TextOps}
     val dir = sfDir
     val bm = TextOps.bm25Scores(Tables(spark, dir, "documents"),
-        "doc_id", "text", SparkEntry.Bm25Terms)
+        "doc_id", "text", TextGate.Bm25Terms)
       .select(col("doc_id"), col("bm25"))
     val lex = AnalyticOps.globalRowNumber(bm,
       Seq(col("bm25").desc, col("doc_id")), "lex_rank")

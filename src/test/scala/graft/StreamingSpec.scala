@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{LoadMode, TableRef}
 import graft.io.ParquetWarehouse
 import graft.streaming.StreamingLoad
+import graft.gate.CurationGate
 
 /** Structured Streaming parity specs (SURVEY.md §7.2 M5): incremental file
   * arrival → AvailableNow → per-batch upsert, and the trigger-boundary
@@ -1150,12 +1151,12 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .select(col("doc_id"), col("text"))
     val planted = docs.unionByName(docs.select(
       (col("doc_id") + 20000000L).as("doc_id"),
-      concat(col("text"), lit(" " + SparkEntry.SpamTokens)).as("text")))
+      concat(col("text"), lit(" " + CurationGate.SpamTokens)).as("text")))
     val labels = planted.select(col("doc_id"),
       when(col("doc_id") >= 20000000L, 0L).otherwise(1L).as("y"))
     val w = QualityModelOps.train(spark,
       QualityModelOps.hashedFeatures(planted, "doc_id", "text"),
-      labels, "doc_id", SparkEntry.QmSteps).localCheckpoint(true)
+      labels, "doc_id", CurationGate.QmSteps).localCheckpoint(true)
     // Stream 2 batches: clean docs + spam-suffixed arrivals.
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val rows = docs.limit(6).collect().map(r => r.getLong(0) -> r.getString(1))
@@ -1165,13 +1166,13 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       rows.take(3).map { case (i, t) => line(i, t) }.mkString("\n"))
     writeFile(src, "b.json",
       rows.drop(3).map { case (i, t) =>
-        line(i + 500, t + " " + SparkEntry.SpamTokens) }.mkString("\n"))
+        line(i + 500, t + " " + CurationGate.SpamTokens) }.mkString("\n"))
     StreamingLoad.qualityGateStream(spark, src, docSchema, wh, tbl, w,
       "doc_id", "text", s"$root/ckpt").awaitTermination()
     val landed = wh.table(tbl).collect().map(_.getLong(0)).toSet
     // Batch ground truth over the same 6 arrivals.
     val arrivals = rows.take(3).map { case (i, t) => (i, t) } ++
-      rows.drop(3).map { case (i, t) => (i + 500, t + " " + SparkEntry.SpamTokens) }
+      rows.drop(3).map { case (i, t) => (i + 500, t + " " + CurationGate.SpamTokens) }
     val batchKept = QualityModelOps.scores(
         QualityModelOps.hashedFeatures(
           arrivals.toSeq.toDF("doc_id", "text"), "doc_id", "text"),
