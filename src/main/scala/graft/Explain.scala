@@ -66,17 +66,20 @@ object Explain {
           // Match on the scan root's TERMINAL name component (modulo a
           // .parquet suffix), not substring containment: a warehouse
           // dir like `preorders_x` must not false-positive on `orders`.
-          // ParquetWarehouse tables scan a VERSION dir
-          // `…/<table>/v_<millis>_<uuid>` — there the table name is the
-          // PARENT component, so a terminal `v_…` resolves one level up
-          // (otherwise a corpus-sized warehouse-table broadcast, e.g.
-          // the curation pipeline's documents table, would be invisible
-          // to this audit — the exact bigram_lm_scores bug class).
+          // ParquetWarehouse tables scan their data files
+          // `…/<table>/[k=v/…]<commit>/<commit>-<i>.parquet` — there the
+          // table name is the first component above the commit dir that
+          // is not a partition (otherwise a corpus-sized warehouse-table
+          // broadcast, e.g. the curation pipeline's documents table,
+          // would be invisible to this audit — the exact
+          // bigram_lm_scores bug class).
           s.relation.location.rootPaths
             .map { p =>
               val n = p.getName.stripSuffix(".parquet")
-              if (n.startsWith("v_") && p.getParent != null) p.getParent.getName
-              else n
+              if (p.getParent == null || !n.startsWith(p.getParent.getName + "-")) n
+              else Iterator.iterate(p.getParent.getParent)(_.getParent)
+                .find(d => d == null || !d.getName.contains('='))
+                .flatMap(Option(_)).fold(n)(_.getName)
             }
             .filter(CorpusTables.contains).distinct
         case other => other.children.flatMap(scansUnbounded)

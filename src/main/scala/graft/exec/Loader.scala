@@ -167,7 +167,7 @@ final class Loader(
           org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("rows_loaded"))
       // X2 end-to-end: a lost concurrent-writer race (retryable
-      // ConcurrentWriteException) re-runs the whole native load against
+      // ConcurrentWriteException) re-commits the written rows against
       // the new current version on the reference's 1 s·3ⁿ schedule —
       // two racing Loaders both land (core.ts:49-53 parity).
       warehouse.loadWithRetry(mode, cfg.table, stagedDf, cfg.idField)

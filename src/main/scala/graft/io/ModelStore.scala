@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{LoadMode, TableRef}
@@ -99,11 +99,11 @@ final class ModelStore(spark: SparkSession, val root: String) {
     *     bytes never cross the growth budget, but every rewritten file
     *     is churn, so the policy retrains once per `driftFactor`
     *     corpus-rewrites of fresh data. The signal is PHYSICAL new
-    *     bytes: in a rewrite-style store (this warehouse's Upsert
-    *     rewrites the version dir) it upper-bounds logical churn —
-    *     the retrain is then amortized against rewrite I/O the
-    *     pipeline already paid — while in file-granular stores
-    *     (append + partition rewrite) it tracks logical turnover.
+    *     bytes: where a store rewrites files (this warehouse's
+    *     compaction and fold) it upper-bounds logical churn — the
+    *     retrain is then amortized against rewrite I/O the pipeline
+    *     already paid — while file-granular writes (this warehouse's
+    *     Insert and Upsert) track logical turnover.
     *
     * Consequences, all intended:
     *
@@ -387,35 +387,36 @@ object ModelStore {
     corpusStat(spark, paths).fp
 
   /** [[fingerprint]] plus total data bytes/files from the SAME listing
-    * pass — the drift-policy input. Listing-only. */
+    * pass — the drift-policy input. Listing-only; a file whose name, or
+    * a directory between it and its path, starts with `_` or `.` (commit
+    * records, checksums) is not data. A warehouse table's directory also
+    * holds files waiting for retention: stat its
+    * [[ParquetWarehouse.liveFiles]] instead. */
   def corpusStat(spark: SparkSession, paths: Seq[String]): CorpusStat = {
     val conf = spark.sessionState.newHadoopConf()
-    val entries = Seq.newBuilder[String]
-    val fileEntries = Seq.newBuilder[(Long, Long)]
-    var bytes = 0L
-    var files = 0L
-    paths.sorted.foreach { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      if (fs.exists(path)) {
-        val it = fs.listFiles(path, true)
-        while (it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName
-          if (!n.startsWith("_") && !n.startsWith(".")) {
-            val e = s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
-            entries += e
-            fileEntries += ((entryKey(e), st.getLen))
-            bytes += st.getLen
-            files += 1
-          }
-        }
-      } else entries += s"$p|absent"
-    }
+    val (present, absent) = paths.map(new Path(_))
+      .partition(p => p.getFileSystem(conf).exists(p))
+    corpusStat(present.flatMap { p =>
+      val fs = p.getFileSystem(conf)
+      val base = fs.makeQualified(p).toUri.getPath
+      val it = fs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filterNot { st =>
+        (st.getPath.toUri.getPath.stripPrefix(base).split('/') :+ st.getPath.getName)
+          .exists(n => n.startsWith("_") || n.startsWith("."))
+      }
+    }, absent.map(p => s"$p|absent"))
+  }
+
+  /** [[corpusStat]] over given files, e.g. a warehouse table's
+    * [[ParquetWarehouse.liveFiles]]; `absent` marks paths that did not
+    * exist. */
+  def corpusStat(files: Seq[FileStatus], absent: Seq[String] = Nil): CorpusStat = {
+    val entries = files.map(st => s"${st.getPath}|${st.getLen}|${st.getModificationTime}")
     CorpusStat(
       org.apache.commons.codec.digest.DigestUtils
-        .md5Hex(entries.result().sorted.mkString("\n")).take(16),
-      bytes, files, fileEntries.result())
+        .md5Hex((entries ++ absent).sorted.mkString("\n")).take(16),
+      files.map(_.getLen).sum, files.size.toLong,
+      entries.zip(files).map { case (e, st) => (entryKey(e), st.getLen) })
   }
 
   /** Stable 63-bit identity key of one file's (path, length, mtime)

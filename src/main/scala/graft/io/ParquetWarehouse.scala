@@ -1,56 +1,61 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.api.java.{UDF1, UDF2}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, MapType, StructType}
 
 import graft.core.{LoadMode, TableRef}
-import graft.operators.LoadOps
 
-/** A parquet-directory warehouse: each table is `<root>/<schema>/<table>`,
-  * giving the engine a native place to EXECUTE load semantics (the reference
+/** A parquet warehouse: each table is `<root>/<schema>/<table>`, giving
+  * the engine a native place to EXECUTE load semantics (the reference
   * delegates this step to Redshift; our engine runs it on Spark —
   * SURVEY.md §3.4).
   *
-  * Merge atomicity without a transactional format (SURVEY.md §7.4): the
-  * merged result is materialized to a fresh versioned directory, then the
-  * live version pointer (a tiny `_VERSION` file) is swapped — readers see
-  * old or new, never a mix.
+  * Versions are manifests over one data directory per table (Delta
+  * Lake's file-action log, Armbrust et al., VLDB 2020). A commit writes
+  * its parquet files into a fresh commit directory, then publishes
+  * version n as a small record `_log/<n>`: the files it adds (bytes,
+  * rows), the key column whose values delete older rows (Upsert), and
+  * the schema when it changes. A record builds on the live version
+  * (Insert, Upsert) or restates every live file (create,
+  * TruncateInsert, compaction, the fold, rollback, and every
+  * [[ParquetWarehouse.MaxChain]]-th commit). Readers take files and
+  * schema from the records — no listing, no footer job — and see an
+  * Insert's files only once its record commits.
   *
-  * Concurrent writers are OPTIMISTIC, the reference's X2 philosophy
-  * (core.ts:49-53 retries on Redshift serialization failure rather than
-  * locking): every pointer swap is a compare-and-swap against the version
-  * the operation's CONTENTS were computed from, taken under a short
-  * create-exclusive `_COMMIT_LOCK` critical section (milliseconds — the
-  * merge/write jobs run outside it). A writer that lost the race gets a
-  * loud [[ParquetWarehouse.ConcurrentWriteException]] — its merge read a
-  * base that is no longer current, so silently swapping would DROP the
-  * winner's rows (lost update) — and [[ParquetWarehouse.loadWithRetry]]
-  * (the committed load path) re-runs the whole load against the new
-  * current version on the reference's backoff schedule, exactly the X2
-  * loop. Version-dir
-  * names are unique (millis + uuid), so the loser's materialized dir is
-  * ordinary garbage for the retention sweep, never a torn table.
+  * Upsert is the reference's `DELETE WHERE id IN (staged); INSERT`
+  * (PAPER.md item 4) applied on read: it writes only the staged rows,
+  * whose keys delete the rows of every OLDER file with that key (a
+  * hash-set predicate on the scan; base duplicates go, later Inserts
+  * stay). The delete state is the upsert file's own key column. The
+  * fold rewrites the table once the rows of delete-carrying files pass
+  * [[ParquetWarehouse.FoldDeletedShare]] of the stored rows.
   *
-  * The insert-vs-merge in-flight window (r15's one documented optimism
-  * gap) is CLOSED by append markers: every file-granular INSERT drops a
-  * tiny `_app_<uuid>` marker at the version-dir root AFTER its parquet
-  * parts land (marker ⇒ data complete), and every pinned-read rewrite
-  * (upsert / compact / zorder) lists the markers BEFORE building its
-  * file-index and re-lists them under the commit lock — a late append
-  * changes the marker set, the CAS fails loudly, and the retry re-reads
-  * the same base WITH the late files. Marker listing is one flat
-  * metadata op (O(appends since last swap)), so the in-lock discipline
-  * (sub-millisecond, no data IO) holds. Every interleaving now either
-  * lands or throws [[ParquetWarehouse.ConcurrentWriteException]]:
-  * append completes before the merge pins → merged in; lands mid-merge
-  * → marker diff fails the merge's CAS; lands after the swap → the
-  * insert's own pointer re-check fails the insert. Never a silent drop
-  * (WarehouseRaceSpec race7 pins all of this with real threads). */
+  * Writers are OPTIMISTIC, the reference's X2 philosophy (core.ts:49-53
+  * retries on Redshift serialization failure rather than locking): the
+  * record write and `_VERSION` pointer swap run in a short
+  * create-exclusive `_COMMIT_LOCK` section (data jobs run outside it),
+  * and only while the live version is still the one the writer started
+  * from. A loser gets a loud [[ParquetWarehouse.ConcurrentWriteException]];
+  * [[loadWithRetry]] re-commits only a record against the new current,
+  * since a load's files do not depend on the version it lands on.
+  * Compaction and the fold read a pinned version and never re-commit.
+  *
+  * Retention is by reference: after version n commits, the commits that
+  * version n-2 referenced and neither n-1 (the reader-grace version) nor
+  * n does are deleted, with the records no retained version needs. A
+  * crashed writer's unreferenced files wait for [[vacuum]]. */
 final class ParquetWarehouse(spark: SparkSession, root: String) {
-  import ParquetWarehouse.ConcurrentWriteException
+  import ParquetWarehouse._
 
-  private def fs: FileSystem =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+  /** One handle per warehouse (each `newHadoopConf` copies the whole Hadoop configuration). */
+  private lazy val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def tableDir(t: TableRef): String =
     if (t.schema.isEmpty) s"$root/${t.table}" else s"$root/${t.schema}/${t.table}"
@@ -58,22 +63,42 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
   private def versionFile(t: TableRef) = new Path(s"${tableDir(t)}/_VERSION")
   private def nextVersionFile(t: TableRef) = new Path(s"${tableDir(t)}/_VERSION.next")
   private def partitionFile(t: TableRef) = new Path(s"${tableDir(t)}/_PARTITIONING")
+  private def recordFile(t: TableRef, v: Long) = new Path(s"${tableDir(t)}/_log/$v")
 
-  private def readPointer(f: Path): Option[String] =
+  private def readText(f: Path): Option[String] =
     try {
       val in = fs.open(f)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
+      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
 
+  /** The java.nio path of a local file (None: a remote filesystem). */
+  private def localPath(f: Path): Option[java.nio.file.Path] =
+    Option(f.toUri).filter(u => u.getScheme == null || u.getScheme == "file")
+      .map(u => java.nio.file.Paths.get(u.getPath))
+
+  /** Local metadata goes through java.nio: Hadoop's local create runs
+    * `chmod` as a child process for the file and again for its checksum,
+    * ~8 ms a file and slower still on a busy machine. */
+  private def writeText(f: Path, s: String): Unit = localPath(f) match {
+    case Some(p) =>
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, s.getBytes("UTF-8"))
+    case None =>
+      val out = fs.create(f, true)
+      try out.write(s.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readPointer(f: Path): Option[Long] =
+    readText(f).flatMap(_.trim.toLongOption)
+
   /** `_VERSION`, else the version a swap cut after deleting `_VERSION`
-    * left in `_VERSION.next` (written only once its data is complete;
-    * it counts only if it names an existing version dir). `_VERSION` is
-    * read again last, so a swap finishing meanwhile wins. */
-  private def currentVersion(t: TableRef): Option[String] =
+    * left in `_VERSION.next` (written only once its record is complete;
+    * it counts only if that record exists). `_VERSION` is read again
+    * last, so a swap finishing meanwhile wins. */
+  private def currentVersion(t: TableRef): Option[Long] =
     readPointer(versionFile(t)).orElse {
-      val next = readPointer(nextVersionFile(t))
-        .filter(v => v.startsWith("v_") && fs.exists(new Path(s"${tableDir(t)}/$v")))
+      val next = readPointer(nextVersionFile(t)).filter(v => fs.exists(recordFile(t, v)))
       readPointer(versionFile(t)).orElse(next)
     }
 
@@ -81,93 +106,154 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     * lock): at every instant `_VERSION` or [[currentVersion]]'s fallback
     * names a complete version. A swap cut by a crash is rolled forward
     * first, so the overwrite never leaves the table without a pointer. */
-  private def setVersion(t: TableRef, v: String): Unit = {
+  private def setVersion(t: TableRef, v: Long): Unit = {
     val tmp = nextVersionFile(t)
     if (!fs.exists(versionFile(t)) && currentVersion(t).isDefined)
       fs.rename(tmp, versionFile(t))
-    val out = fs.create(tmp, true)
-    try out.write(v.getBytes("UTF-8"))
-    finally out.close()
+    writeText(tmp, v.toString)
     fs.delete(versionFile(t), false)
     fs.rename(tmp, versionFile(t)) // atomic pointer swap on HDFS-like FS
   }
 
   def exists(t: TableRef): Boolean = currentVersion(t).isDefined
 
-  /** Modification time of the live version POINTER (not the data files)
-    * as the filesystem reports it, or None when the table has no live
-    * pointer. The pointer is committed last (create-then-swap), so this
-    * is the commit time of the current generation — the signal
-    * [[graft.io.ModelStore.gc]] keys its drop-safety re-check on.
-    * Encapsulated here so a layout change can't silently strand gc on a
-    * hand-derived path. */
-  def versionMtime(t: TableRef): Option[Long] = {
-    val vf = versionFile(t)
-    // exists-then-stat is not atomic: a concurrent drop between the two
-    // calls must read as "pointer gone" (None — the caller's skip
-    // signal), not throw and abort the caller's whole sweep.
-    try {
-      if (fs.exists(vf)) Some(fs.getFileStatus(vf).getModificationTime)
-      else None
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
+  /** Modification time of the live version POINTER as the filesystem
+    * reports it (None: no live pointer). The pointer is committed last,
+    * so this is the current version's commit time — the signal
+    * [[graft.io.ModelStore.gc]] keys its drop-safety re-check on. */
+  def versionMtime(t: TableRef): Option[Long] =
+    // One stat: a pointer dropped concurrently reads as None (the
+    // caller's skip signal) instead of aborting the caller's sweep.
+    try Some(fs.getFileStatus(versionFile(t)).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Partition columns declared at table creation (Hive-style layout —
     * the 100 TB data-skipping lever: a filter on a partition column prunes
     * whole directories before any IO). Persisted next to the version
     * pointer so every later load/compact keeps the layout. */
-  def partitioning(t: TableRef): Seq[String] = {
-    val pf = partitionFile(t)
-    if (!fs.exists(pf)) Seq.empty
-    else {
-      val in = fs.open(pf)
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .trim.split(',').toSeq.filter(_.nonEmpty)
-      finally in.close()
+  def partitioning(t: TableRef): Seq[String] =
+    readText(partitionFile(t)).toSeq.flatMap(_.trim.split(',')).filter(_.nonEmpty)
+
+  /** Record `v` as (the full record it builds on, schema if stated, the
+    * files it adds). Lines: the base version; `S<TAB>schema json` when
+    * the schema is stated; then one line per commit directory
+    * `dir<TAB>seq<TAB>key<TAB>file...`, each file `[k=v/...]i:bytes:rows`
+    * naming `[k=v/...]dir/dir-i.parquet`. */
+  private def record(t: TableRef, v: Long): (Long, Option[StructType], Seq[DataFile]) = {
+    val lines = readText(recordFile(t, v)).getOrElse(throw new java.io.FileNotFoundException(
+      s"${t.qualified}: record of version $v is missing")).split('\n').toSeq
+    val schema = lines.collectFirst { case l if l.startsWith("S\t") =>
+      DataType.fromJson(l.drop(2)).asInstanceOf[StructType] }
+    val files = lines.drop(1).filterNot(_.startsWith("S\t")).flatMap { l =>
+      val Array(dir, seq, key, entries @ _*) = l.split("\t", -1)
+      entries.map { e =>
+        val cut = e.lastIndexOf('/') + 1
+        val Array(i, bytes, rows) = e.drop(cut).split(':')
+        DataFile(s"${e.take(cut)}$dir/$dir-$i.parquet", bytes.toLong, rows.toLong,
+          seq.toLong, key)
+      }
     }
+    (lines.head.toLong, schema, files)
   }
 
-  def table(t: TableRef): DataFrame =
-    // mergeSchema: appended file sets may carry evolved (widened)
-    // schemas — union the footer schemas so new columns surface as
-    // nulls on old files (schema-evolution-on-read; the reference
-    // delegates the same problem to Redshift's `columnMap 'auto'`,
-    // utils.ts:34). Footer-schema merge is metadata-scale work.
-    spark.read.option("mergeSchema", "true")
-      .parquet(s"${tableDir(t)}/${currentVersion(t).getOrElse(
-        throw new IllegalArgumentException(s"no such table: ${t.qualified}"))}")
+  private def encode(base: Long, schema: Option[StructType], files: Seq[DataFile]): String = {
+    val byGroup = files.groupBy(f => (f.commit, f.seq, f.key))
+    val groups = files.map(f => (f.commit, f.seq, f.key)).distinct.map(g => g -> byGroup(g))
+    (base.toString +: schema.map("S\t" + _.json).toSeq :++ groups.map {
+      case ((dir, seq, key), fs) => (Seq(dir, seq.toString, key) ++ fs.map { f =>
+        s"${f.path.stripSuffix(s"$dir/${f.name}")}" +
+          s"${f.name.stripPrefix(s"$dir-").stripSuffix(".parquet")}:${f.bytes}:${f.rows}"
+      }).mkString("\t")
+    }).mkString("", "\n", "\n")
+  }
+
+  /** Version `v` as its base record plus every record since. */
+  private def snapshot(t: TableRef, v: Long): Snapshot = {
+    val last = record(t, v)
+    val recs = (last._1 until v).map(record(t, _)) :+ last
+    Snapshot(v, last._1, recs.flatMap(_._2).last, recs.flatMap(_._3))
+  }
+
+  private def live(t: TableRef): Snapshot = snapshot(t, currentVersion(t).getOrElse(
+    throw new IllegalArgumentException(s"no such table: ${t.qualified}")))
+
+  def table(t: TableRef): DataFrame = read(t, live(t))
+
+  /** The files of `s` under its schema — a column added by a later file
+    * reads as null on older ones (the reference delegates the same
+    * problem to Redshift's `columnMap 'auto'`, utils.ts:34) — with its
+    * deletes applied. */
+  private def read(t: TableRef, s: Snapshot): DataFrame =
+    s.files.filter(_.key.nonEmpty).groupBy(_.key).foldLeft(scan(t, s.files, s.schema)) {
+      case (df, (key, dels)) =>
+        val dead = new java.util.HashMap[AnyRef, java.lang.Long]
+        for ((f, keys) <- deleteKeys(t, dels, s.schema(key)); k <- keys)
+          dead.merge(k, f.seq, (a, b) => math.max(a, b))
+        val seqOf = new java.util.HashMap[String, java.lang.Long]
+        s.files.foreach(f => seqOf.put(f.name, f.seq))
+        df.filter(keepLive(spark.sparkContext.broadcast((dead, seqOf)), col(key)))
+    }
+
+  /** A parquet scan of exactly `files`, built from their recorded sizes:
+    * the file index is served from the record, so neither Spark's
+    * listing (a job past 32 paths) nor a footer pass runs. */
+  private def scan(t: TableRef, files: Seq[DataFile], schema: StructType): DataFrame = {
+    val dir = fs.makeQualified(new Path(tableDir(t)))
+    val leaves = files.map(f =>
+      new FileStatus(f.bytes, false, 1, 128L << 20, 0L, new Path(dir, f.path)))
+    val byPath = leaves.map(l => l.getPath -> Array(l)).toMap
+    val recorded = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = byPath.get(p)
+      def putLeafFiles(p: Path, l: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val parts = partitioning(t)
+    val index = new InMemoryFileIndex(spark, leaves.map(_.getPath),
+      if (parts.isEmpty) Map.empty else Map("basePath" -> dir.toString), Some(schema), recorded)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      StructType(schema.filterNot(f => parts.contains(f.name))), None,
+      new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The delete keys each file in `dels` holds (nulls delete nothing),
+    * from a process-wide cache of immutable files; the uncached ones are
+    * read in one job. */
+  private def deleteKeys(t: TableRef, dels: Seq[DataFile],
+      field: org.apache.spark.sql.types.StructField): Seq[(DataFile, Array[AnyRef])] = {
+    def id(f: DataFile) = s"${tableDir(t)}/${f.path}\u0000${field.name}"
+    val cached = dels.map(f => f -> KeyCache.synchronized(Option(KeyCache.get(id(f)))))
+    val missing = cached.collect { case (f, None) => f }
+    val fresh = if (missing.isEmpty) Map.empty[String, Array[AnyRef]] else {
+      val got = scan(t, missing, StructType(Seq(field)))
+        .select(col(field.name), col("_metadata.file_name")).collect()
+        .filterNot(_.isNullAt(0)).groupMap(_.getString(1))(_.get(0).asInstanceOf[AnyRef])
+      missing.map { f =>
+        val keys = got.getOrElse(f.name, Array.empty[AnyRef])
+        KeyCache.synchronized(KeyCache.put(id(f), keys))
+        f.name -> keys
+      }.toMap
+    }
+    cached.map { case (f, keys) => f -> keys.getOrElse(fresh(f.name)) }
+  }
 
   /** Run `body` holding the table's create-exclusive `_COMMIT_LOCK` —
     * the millisecond critical section that makes check-pointer-then-swap
-    * atomic. Three hardenings over naive create/delete locking:
+    * atomic (CONTRACTS §11). Three hardenings over naive locking:
     *
-    *   - **O_EXCL on local FS**: Hadoop `RawLocalFileSystem.create(…,
-    *     overwrite = false)` is exists-check-then-create, NOT atomic —
-    *     two local writers can both "create" the lock. For `file:`/
-    *     schemeless paths the primitive is `java.nio.Files.createFile`
-    *     (true O_EXCL); HDFS-like filesystems keep `fs.create` (atomic
-    *     at the namenode).
+    *   - **O_EXCL on local FS**: Hadoop's local `create(…, overwrite =
+    *     false)` is check-then-create, so `file:`/schemeless paths use
+    *     `java.nio.Files.createFile`; HDFS-like filesystems keep
+    *     `fs.create` (atomic at the namenode).
     *   - **Ownership token**: each acquisition writes a unique token and
-    *     re-reads it before entering the section — on any filesystem
-    *     whose create-exclusive is still check-then-create, the last
-    *     token written wins the file and ONLY that writer proceeds; the
-    *     other treats its "successful" create as contention. Release
-    *     re-verifies the token and then renames-to-grave before
-    *     deleting, narrowing (not eliminating — see the release-site
-    *     comment) the window in which a writer whose lock was stolen
-    *     mid-hold could take down the thief's live lock.
-    *   - **Reap by per-incarnation ticket, never by touching a
-    *     maybe-live path**: a lock left by a crashed writer (it only
-    *     ever guards a sub-second section) is presumed stale past
-    *     [[ParquetWarehouse.LockStaleMs]], but any stat-then-reap is a
-    *     TOCTOU against a concurrent reap + fresh re-create. The statted
-    *     incarnation is identified by its mtime; an O_EXCL
-    *     `_COMMIT_LOCK.reap.<mtime>` ticket elects exactly one reaper
-    *     for it, and the winner re-stats immediately before deleting —
-    *     a fresh lock's mtime can never equal a >=30s-old corpse's, so
-    *     live locks are structurally un-reapable (two prior designs,
-    *     delete-based and rename-restore-based, each lost this race in
-    *     the stampede spec).
+    *     re-reads it before entering; release re-verifies it and renames
+    *     to a grave before deleting, so a holder whose lock was stolen
+    *     mid-hold does not take down the thief's.
+    *   - **Reap by per-incarnation ticket**: a lock older than
+    *     [[ParquetWarehouse.LockStaleMs]] is a crashed writer's; its
+    *     incarnation (mtime) elects exactly one reaper through an O_EXCL
+    *     `_COMMIT_LOCK.reap.<mtime>` ticket, and the winner re-stats
+    *     right before deleting — a fresh lock's mtime never equals a
+    *     ≥30 s corpse's, so live locks are structurally un-reapable.
     *
     * Younger contention waits briefly, then fails loudly (retryable
     * [[ParquetWarehouse.ConcurrentWriteException]]) rather than wedging. */
@@ -177,16 +263,11 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
 
   /** [[withCommitLock]] handing the body a FENCE: `verifyHeld()` re-reads
     * the lock token and throws a retryable
-    * [[ParquetWarehouse.ConcurrentWriteException]] if this holder's token
-    * is no longer at the lock path. Time-bounded exclusion alone leaves a
-    * residual on multi-node deployments with >LockStaleMs clock skew: a
-    * live hold can be reaped mid-critical-section and a second writer
-    * admitted, after which two `cur == base` CAS checks can both pass
-    * before either pointer write — silently dropping one commit. Calling
-    * the fence immediately before the pointer write shrinks that window
-    * from "rest of the critical section" to the metadata-read-to-rename
-    * gap (microseconds): a reaped holder now aborts retryably instead of
-    * overwriting the usurper's swap. One extra metadata read per commit. */
+    * [[ParquetWarehouse.ConcurrentWriteException]] if it is gone. With
+    * >LockStaleMs clock skew between nodes a live hold can be reaped and
+    * a second writer admitted; calling the fence immediately before the
+    * pointer write shrinks the double-commit window from the rest of the
+    * critical section to the metadata-read-to-rename gap. */
   private[graft] def withCommitLockFenced[A](t: TableRef,
       waitBudgetMs: Long = 2000)(body: (() => Unit) => A): A = {
     val lock = new Path(s"${tableDir(t)}/_COMMIT_LOCK")
@@ -204,11 +285,8 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       }
       else {
         // ONE stat serves both the staleness decision and the reap
-        // ticket's incarnation identity — a second stat inside the reap
-        // branch reintroduces the exact TOCTOU the ticket closes (trace-
-        // caught: the age-stat hit the corpse, a concurrent reap+create
-        // landed, the identity-stat hit the FRESH lock, and the "stale"
-        // incarnation it ticketed was a live writer's lock).
+        // ticket's incarnation identity: a second stat could hit a fresh
+        // lock that a concurrent reap+create put in the corpse's place.
         val statMtime = try Some(fs.getFileStatus(lock).getModificationTime)
         // Lock vanished between create-fail and stat (owner released):
         // no steal, immediate re-try of the create.
@@ -216,42 +294,18 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
         val age = statMtime.fold(0L)(m => System.currentTimeMillis() - m)
         if (age > ParquetWarehouse.LockStaleMs) {
           // Reap by PER-INCARNATION TICKET, never by touching a maybe-
-          // live path. The naive stat-then-reap is a TOCTOU: a second
-          // stealer can reap the corpse and a new writer create a fresh
-          // LIVE lock between this waiter's stat and its reap, which
-          // yanked live locks (a real 1-in-6 two-holders flake in the
-          // stampede spec, twice: delete-based AND rename-restore-based
-          // steals — the restore dance also left the path empty long
-          // enough to admit a third writer). Instead: the statted
-          // incarnation is identified by its mtime; `_COMMIT_LOCK.reap.
-          // <mtime>` is created O_EXCL so exactly ONE reaper per
-          // incarnation exists, and that winner re-stats the lock
-          // IMMEDIATELY before deleting — a fresh lock has a fresh
-          // mtime (a corpse is >= LockStaleMs old by definition, so the
-          // two cannot collide), and no one else can delete the corpse
-          // between the winner's re-check and its delete (deleters are
-          // this ticket's winner, release paths token-guarded to their
-          // own lock, and other incarnations' winners whose re-check
-          // fails). Crashed-winner tickets are themselves reaped by
-          // age; a duplicate winner after that re-checks the same dead
-          // mtime, so a double delete hits only the corpse.
+          // live path (stat-then-delete and rename-restore steals both
+          // yanked live locks in the stampede spec): exactly one ticket
+          // winner per incarnation re-stats and deletes only the corpse;
+          // a crashed winner's ticket is itself reaped by age.
           val mtime = statMtime.get
           var won = false
           if (mtime > 0) {
             trace(s"REAP-TRY mtime=$mtime")
             val ticket = new Path(s"${tableDir(t)}/_COMMIT_LOCK.reap.$mtime")
-            // The ticket election MUST go through the same O_EXCL
-            // primitive as the lock itself (ADVICE r16): raw
-            // `fs.create(…, overwrite = false)` on Hadoop
-            // LocalFileSystem is exists-check-then-create, so two
-            // waiters could both "win" one incarnation's ticket — and
-            // the second winner's re-stat→delete can land after a fresh
-            // live lock appears, reopening the two-holders race the
-            // ticket design closes. tryCreateExclusive uses NIO
-            // Files.createFile (true O_EXCL) on the local scheme and
-            // namenode-atomic create elsewhere; the token re-read is
-            // the same belt-and-braces as the lock acquisition for any
-            // filesystem where even that create races.
+            // The election goes through the lock's own O_EXCL create and
+            // token re-read: Hadoop's local create is check-then-create,
+            // and two winners would reopen the two-holders race.
             won = tryCreateExclusive(ticket, token) &&
               readLockToken(ticket).contains(token)
             if (!won) {
@@ -274,11 +328,8 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
               catch { case _: java.io.IOException => () }
             }
           }
-          // Losing the ticket race (or a 0-mtime stat artifact) must
-          // DEGRADE TO POLLING, not hot-spin filesystem ops for up to
-          // LockStaleMs while a ticket winner finishes (or a crashed
-          // winner's ticket ages out) — and the wait budget must keep
-          // bounding the total wait in this branch too (ADVICE r16).
+          // Losing the ticket race (or a 0-mtime stat artifact) polls
+          // under the same wait budget instead of hot-spinning.
           if (!won) {
             if (waitedMs >= waitBudgetMs)
               throw new ConcurrentWriteException(
@@ -296,19 +347,8 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     }
     // Release by token-check then ATOMIC RENAME to a private grave,
     // post-verifying the grave token before the delete: a bare
-    // check-then-delete is itself a TOCTOU, and the rename claims
-    // whatever sits at the lock path atomically — a yanked thief lock
-    // is renamed back (or, if a fresh lock already replaced it, the
-    // displaced thief's own release token-check fails loudly instead
-    // of deleting the fresh one). With ticketed reaps never touching
-    // sub-30s locks, the only writer that can displace a live lock is
-    // a reaper of a >LockStaleMs hold — the rename+verify narrows even
-    // that to a double failure inside a microsecond window. Exclusion
-    // is time-bounded by LockStaleMs, but the POINTER WRITES are now
-    // token-fenced ([[withCommitLockFenced]]): a reaped holder re-reads
-    // its token immediately before setVersion and aborts retryably, so
-    // the cross-node-skew double-commit residual is the fence-read-to-
-    // rename gap, not the rest of the critical section.
+    // check-then-delete is a TOCTOU, and the rename claims whatever sits
+    // at the lock path atomically — a yanked thief lock is renamed back.
     val verifyHeld: () => Unit = () =>
       if (!readLockToken(lock).contains(token))
         throw new ConcurrentWriteException(
@@ -336,10 +376,8 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
   /** Create the lock file exclusively and stamp it with `token`. Local
     * paths go through java.nio (O_EXCL); remote ones through the
     * filesystem's own create-exclusive. False = already held. */
-  private def tryCreateExclusive(lock: Path, token: String): Boolean = {
-    val uri = lock.toUri
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      val p = java.nio.file.Paths.get(uri.getPath)
+  private def tryCreateExclusive(lock: Path, token: String): Boolean = localPath(lock) match {
+    case Some(p) =>
       try java.nio.file.Files.createFile(p)
       catch { case _: java.io.IOException => return false }
       // The create was O_EXCL, so the file is provably OURS until the
@@ -352,7 +390,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
         catch { case _: java.io.IOException => () }
         false
       }
-    } else {
+    case None =>
       // Remote FS: fs.create(overwrite = false) is atomic at the
       // namenode, so a created-but-unstamped lock is likewise ours to
       // reap on a failed token write.
@@ -365,340 +403,243 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
         catch { case _: java.io.IOException => () }
         false
       }
-    }
   }
 
   private def readLockToken(lock: Path): Option[String] =
+    try readText(lock) catch { case _: java.io.IOException => None }
+
+  /** Write `df` as the files of one new commit directory, renamed
+    * `<dir>-<i>.parquet` so a record names them by index and every data
+    * file name is unique in the table. A partitioned table keeps the
+    * commit directory below its partition directories
+    * (`k=v/<dir>/<dir>-<i>.parquet`), where Spark's partition discovery
+    * expects them. Nothing references the files until [[commit]]
+    * publishes them. */
+  private def writeFiles(t: TableRef, df: DataFrame): Written = {
+    val dir = java.lang.Long.toString(System.currentTimeMillis(), 36).reverse.padTo(8, '0')
+      .reverse + "-" + java.util.UUID.randomUUID().toString.take(6)
+    val out = fs.makeQualified(new Path(tableDir(t), dir))
     try {
-      val in = fs.open(lock)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
-      finally in.close()
-    } catch { case _: java.io.IOException => None }
-
-  /** The `_app_<uuid>` append markers currently present at a version
-    * dir's root — the file-set fingerprint the insert-vs-merge close
-    * rides on (one flat listing; markers never nest into partition
-    * subdirs). Underscore-prefixed, so parquet readers ignore them. */
-  private def appendMarkers(t: TableRef, v: String): Set[String] =
-    try fs.listStatus(new Path(s"${tableDir(t)}/$v"))
-      .map(_.getPath.getName).filter(_.startsWith("_app_")).toSet
-    catch { case _: java.io.FileNotFoundException => Set.empty }
-
-  /** Write a brand-new version dir (honoring the table's partition
-    * layout) and compare-and-swap the pointer to it: the swap commits
-    * only if the live version still equals `base` — the version this
-    * df's contents were computed FROM (None = expected absent). A lost
-    * race throws [[ParquetWarehouse.ConcurrentWriteException]] and
-    * removes the orphaned dir; the caller retries against the new
-    * current (the X2 loop).
-    *
-    * Retention: the immediately-replaced version is KEPT (deleted only
-    * by the commit after next) so readers that resolved the pointer just
-    * before the swap can still finish against the old file set — the
-    * same reader-grace idea snapshot formats use. Disk cost is bounded
-    * at one extra generation per table. */
-  private def commitNewVersion(t: TableRef, df: DataFrame,
-      base: Option[String], baseMarkers: Option[Set[String]] = None): Unit = {
-    val v = s"v_${System.currentTimeMillis()}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val w = df.write.mode("errorifexists")
-    val parts = partitioning(t)
-    // Materialization failures are reclassified as retryable contention
-    // when the pointer moved mid-write: a concurrent winner's retention
-    // sweep may have deleted our in-flight dir out from under the job
-    // (on object stores that surfaces as an arbitrary IO error, not a
-    // ConcurrentWriteException), and re-running the load against the
-    // new current is exactly the X2 answer. A write failure with the
-    // pointer UNMOVED is a genuine storage error and rethrows as-is.
-    try (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-      .parquet(s"${tableDir(t)}/$v")
-    catch { case e: Throwable if !e.isInstanceOf[ConcurrentWriteException] =>
-      try fs.delete(new Path(s"${tableDir(t)}/$v"), true)
-      catch { case _: java.io.IOException => () }
-      if (currentVersion(t) != base)
-        throw new ConcurrentWriteException(
-          s"write of ${t.qualified}/$v failed after a concurrent commit " +
-            s"moved the pointer (likely its retention sweep): ${e.getMessage}" +
-            " — re-run the load against the new current")
-      else throw e
+      val w = df.write.mode("errorifexists")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      val parts = partitioning(t)
+      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(out.toString)
+      def leaves(p: Path): Seq[FileStatus] =
+        fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+      val conf = spark.sessionState.newHadoopConf()
+      val files = leaves(out).filter(_.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.toString).zipWithIndex.map { case (st, i) =>
+          val sub = st.getPath.getParent.toUri.getPath.drop(out.toUri.getPath.length + 1)
+          val path = (if (sub.isEmpty) "" else s"$sub/") + s"$dir/$dir-$i.parquet"
+          val to = new Path(out.getParent, path)
+          if (sub.nonEmpty) fs.mkdirs(to.getParent)
+          fs.rename(st.getPath, to)
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(to, conf))
+          val rows = try reader.getRecordCount finally reader.close()
+          DataFile(path, st.getLen, rows, -1L, "")
+        }
+      if (parts.nonEmpty) fs.delete(out, true)
+      Written(dir, nullable(df.schema).asInstanceOf[StructType], files)
+    } catch { case e: Throwable =>
+      discard(t, Seq(dir))
+      throw e
     }
-    // The locked section is ONLY read-pointer / CAS / write-pointer /
-    // list — sub-millisecond metadata ops, which is what justifies the
-    // 30 s staleness bound. Recursive deletes (the retention sweep and
-    // the loser's orphan dir) can take arbitrarily long on an object
-    // store, so they run OUTSIDE the lock: the sweep list is captured
-    // under the lock (names that existed at swap time, minus the new
-    // current and the reader-grace generation — a later commit always
-    // mints a fresh unique name, so nothing captured can become live),
-    // making the deferred deletes idempotent garbage collection.
-    // Scope: only names sorting STRICTLY BELOW base (the fixed-width
-    // millis prefix makes lexicographic order chronological) — any
-    // writer that read base as its starting pointer stamped its dir
-    // AFTER base's own write began, so those in-flight dirs sort above
-    // base and are never swept (the ADVICE r15 hazard: sweeping them
-    // failed the loser's write with a non-retryable error on object
-    // stores). A writer still materializing from a PRE-base pointer can
-    // sort below base and lose its dir to this sweep — that residual is
-    // what the write-failure-to-ConcurrentWriteException reclassification
-    // above closes (its CAS was doomed anyway; it now retries cleanly).
-    // The just-committed dir `v` is ALSO excluded unconditionally
-    // (ADVICE r16): lexicographic order is chronological only while the
-    // clock is monotone — a backward clock step (or a shared-millisecond
-    // uuid ordering) can make v sort below base, and "set pointer to v,
-    // then sweep v" would destroy the live table. `n != v` makes the
-    // new current structurally un-sweepable regardless of clock skew.
-    // The loser cleans its own orphan in the Left branch; first-commit
-    // case (base None): nothing to sweep.
-    val sweep: Either[String, Seq[String]] = withCommitLockFenced(t) { fence =>
-      val cur = currentVersion(t)
-      if (cur != base) Left(
-        s"lost update on ${t.qualified}: computed from " +
-          s"${base.getOrElse("<absent>")} but live version is " +
-          s"${cur.getOrElse("<absent>")} — a concurrent writer " +
-          "committed first; re-run the load against the new current")
-      // Marker re-check (insert-vs-merge close): a file-granular append
-      // that landed in the pinned base AFTER this rewrite listed its
-      // files would be silently dropped by the swap — the marker set
-      // diff catches it while the pointer is still unmoved.
-      else if (baseMarkers.exists(m0 =>
-          base.exists(b => appendMarkers(t, b) != m0))) Left(
-        s"late append on ${t.qualified}: new files landed in " +
-          s"${base.get} after this rewrite pinned its file set — " +
-          "re-run the load to merge them")
-      else {
+  }
+
+  /** Delete directories under the table, best-effort. */
+  private def discard(t: TableRef, dirs: Iterable[String]): Unit =
+    dirs.foreach(d => try fs.delete(new Path(tableDir(t), d), true)
+      catch { case _: java.io.IOException => () })
+
+  /** Publish `w` as version n = live + 1 under the commit lock, only if
+    * the live version still equals `expect` (None = expected absent): a
+    * full record (`full`, or the first version) replaces every file, any
+    * other adds `w`'s files, their `key` deleting older rows. A lost race
+    * throws `lost` and, past `retries` re-commits against the new live
+    * version, discards `w`. Outside the lock, the commit directories and
+    * records that fell out of retention are deleted. */
+  private def commit(t: TableRef, w: Written, expect0: Option[Long], full: Boolean,
+      key: String, lost: String, retries: Int = 0,
+      sleeper: Long => Unit = Thread.sleep): Snapshot = {
+    var expect = expect0
+    var attempt = 0
+    var done: Option[(Option[Snapshot], Snapshot)] = None
+    while (done.isEmpty) {
+      try done = Some(withCommitLockFenced(t) { fence =>
+        val cur = currentVersion(t)
+        if (cur != expect) throw new ConcurrentWriteException(
+          s"$lost on ${t.qualified}: computed from ${expect.getOrElse("<absent>")} " +
+            s"but live version is ${cur.getOrElse("<absent>")} — a concurrent writer " +
+            "committed first; re-run the load against the new current")
+        val prev = cur.map(snapshot(t, _))
+        val n = cur.fold(0L)(_ + 1)
+        // Files this commit wrote take its version (a rollback restates
+        // files with theirs); the first version deletes nothing.
+        val added = w.files.map(f =>
+          if (f.seq >= 0) f else f.copy(seq = n, key = if (prev.isEmpty) "" else key))
+        val next = prev match {
+          case Some(p) if !full =>
+            Snapshot(n, if (n - p.base < MaxChain) p.base else n, StructType(p.schema ++
+              w.schema.filterNot(f => p.schema.fieldNames.contains(f.name))), p.files ++ added)
+          case _ => Snapshot(n, n, w.schema, added)
+        }
+        writeText(recordFile(t, n),
+          if (next.base == n) encode(n, Some(next.schema), next.files)
+          else encode(next.base, Some(next.schema).filter(_ != prev.get.schema), added))
         // Fence immediately before the pointer write: if this hold was
         // reaped (>LockStaleMs, cross-node skew), abort retryably
-        // instead of racing the usurper's CAS (header note above).
+        // instead of racing the usurper's CAS (withCommitLockFenced).
         fence()
-        setVersion(t, v)
-        Right(fs.listStatus(new Path(tableDir(t)))
-          .filter(_.isDirectory).map(_.getPath.getName)
-          .filter(n => n.startsWith("v_") && n != v &&
-            base.exists(b => n < b))
-          .toSeq)
+        setVersion(t, n)
+        (prev, next)
+      })
+      catch { case e: ConcurrentWriteException =>
+        if (attempt >= retries) {
+          if (w.dir.nonEmpty) discard(t, w.dir +: w.files.map(_.parent))
+          throw e
+        }
+        sleeper(graft.exec.RetryingTxnRunner.backoffMs(attempt))
+        attempt += 1
+        expect = currentVersion(t)
       }
     }
-    sweep match {
-      case Left(msg) =>
-        fs.delete(new Path(s"${tableDir(t)}/$v"), true) // orphan, not a lost table
-        throw new ConcurrentWriteException(msg)
-      case Right(olds) =>
-        olds.foreach(o => fs.delete(new Path(s"${tableDir(t)}/$o"), true))
+    val (prev, next) = done.get
+    // Retention: only a full record drops files, so version n-2's
+    // commits can leave the retained set only when n-1 is full.
+    prev.filter(p => p.base == p.version && p.version > 0).foreach { p =>
+      val old = try Some(snapshot(t, p.version - 1))
+        catch { case _: java.io.FileNotFoundException => None }
+      old.foreach { o =>
+        val dead = o.commits -- p.commits -- next.commits
+        discard(t, o.files.filter(f => dead(f.commit)).map(_.parent).distinct)
+        (o.base until p.version).foreach(v => fs.delete(recordFile(t, v), false))
+      }
     }
+    next
   }
 
   def create(t: TableRef, df: DataFrame, partitionBy: Seq[String] = Seq.empty): Unit = {
     require(!exists(t), s"table exists: ${t.qualified}")
-    if (partitionBy.nonEmpty) {
-      val out = fs.create(partitionFile(t), true)
-      try out.write(partitionBy.mkString(",").getBytes("UTF-8"))
-      finally out.close()
-    }
-    commitNewVersion(t, df, base = None)
+    if (partitionBy.nonEmpty) writeText(partitionFile(t), partitionBy.mkString(","))
+    commit(t, writeFiles(t, df), None, full = true, "", "lost update")
   }
 
-  /** Execute a load natively on Spark (L1/L2/L3 semantics via
-    * [[graft.operators.LoadOps]]). */
+  /** Execute a load natively on Spark: Insert adds the staged files,
+    * TruncateInsert replaces every file with them, Upsert adds them as
+    * one file when they fit and deletes their keys from every older file
+    * (L1/L2/L3 of [[graft.operators.LoadOps]]). One attempt: a lost race
+    * throws [[ParquetWarehouse.ConcurrentWriteException]]. */
   def load(mode: LoadMode, t: TableRef, staged: DataFrame, idField: String = "id"): Unit =
-    mode match {
-      case LoadMode.Insert =>
-        // Append is file-granular: new parquet parts land inside the CURRENT
-        // version dir — no rewrite of existing data (100 TB discipline).
-        currentVersion(t) match {
-          case Some(v) =>
-            val w = staged.write.mode("append")
-            val parts = partitioning(t)
-            (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-              .parquet(s"${tableDir(t)}/$v")
-            // Append marker AFTER the parts land (marker ⇒ data
-            // complete): any concurrent pinned-read rewrite whose CAS
-            // runs after this create sees the marker-set diff and
-            // retries with our files included. Marker creation and the
-            // pointer re-check run UNDER the commit lock (ADVICE r16):
-            // unlocked, the marker could land after a merge's in-lock
-            // marker re-check while this insert's pointer re-check
-            // still read the pre-swap version — both sides report
-            // success and the swap silently drops the appended rows.
-            // Serializing this metadata-only pair (sub-ms) against the
-            // merge's marker-check-and-swap section restores the header
-            // guarantee: marker visible to the merge's in-lock re-check
-            // XOR pointer already moved when we re-check here.
-            withCommitLockFenced(t) { fence =>
-              // Fence before the marker create: the marker-visible-XOR-
-              // pointer-moved guarantee assumes this section excludes
-              // the merge's marker-check-and-swap — a reaped hold
-              // doesn't, so abort retryably instead.
-              fence()
-              fs.create(new Path(s"${tableDir(t)}/$v/_app_" +
-                java.util.UUID.randomUUID().toString.take(12)), false).close()
-              // Post-append race check: if a concurrent writer swapped
-              // the pointer while we appended, our files landed in a
-              // RETIRED generation (invisible, swept by the commit
-              // after next) — fail loudly so the caller re-runs, never
-              // silently "loads" rows no reader will see.
-              val nowCur = currentVersion(t)
-              if (nowCur != Some(v))
-                throw new ConcurrentWriteException(
-                  s"lost append on ${t.qualified}: appended into $v but " +
-                    s"live version is ${nowCur.getOrElse("<absent>")} — a " +
-                    "concurrent writer swapped mid-append; re-run the load")
-            }
-          case None => commitNewVersion(t, staged, base = None)
-        }
-      case LoadMode.TruncateInsert =>
-        commitNewVersion(t, LoadOps.overwrite(staged),
-          base = currentVersion(t))
-      case LoadMode.Upsert =>
-        currentVersion(t) match {
-          case None => commitNewVersion(t, staged, base = None)
-          case base @ Some(v) =>
-            // Merge reads the PINNED base dir, not the live pointer: the
-            // CAS below certifies exactly "merged from what is still
-            // current", so the read and the check must name one version.
-            // Markers are listed BEFORE the read builds its file index:
-            // an append landing in between is INCLUDED in the merge and
-            // merely costs a conservative retry; the reverse order would
-            // let it slip past both the index and the marker check.
-            val m0 = appendMarkers(t, v)
-            val baseDf = spark.read.option("mergeSchema", "true")
-              .parquet(s"${tableDir(t)}/$v")
-            commitNewVersion(t, LoadOps.merge(baseDf, staged, idField),
-              base, baseMarkers = Some(m0))
-        }
-    }
+    loadWithRetry(mode, t, staged, idField, maxRetries = 0)
 
-  /** The reference's X2 conflict loop executed natively, end-to-end: run
-    * [[load]], and when it loses a concurrent-writer race re-run the
-    * WHOLE load against the new current version with the reference's
-    * 1 s·3ⁿ backoff schedule (core.ts:49-53 re-runs the entire
-    * transaction on a Redshift serialization failure; here the
-    * retryable conflict class is [[ParquetWarehouse.ConcurrentWriteException]]).
-    * Each retry re-resolves the live pointer, so an upsert re-merges
-    * against the winner's committed state and an append re-lands its
-    * files in the live generation — both racing writers' rows end up in
-    * the table. `sleeper` is injectable so specs don't wait out the
-    * schedule. */
+  /** The reference's X2 conflict loop executed natively (core.ts:49-53):
+    * [[load]], re-committing its record against the new current version
+    * on the reference's 1 s·3ⁿ backoff schedule after each lost race. The
+    * staged rows are written once; an upsert's deletes then apply to the
+    * winner's files too, so both writers' rows land. `sleeper` is
+    * injectable so specs don't wait out the schedule. */
   def loadWithRetry(mode: LoadMode, t: TableRef, staged: DataFrame,
       idField: String = "id", maxRetries: Int = 4,
       sleeper: Long => Unit = Thread.sleep): Unit = {
-    var retry = 0
-    var done = false
-    while (!done) {
-      try { load(mode, t, staged, idField); done = true }
-      catch { case e: ConcurrentWriteException =>
-        if (retry >= maxRetries) throw e
-        sleeper(graft.exec.RetryingTxnRunner.backoffMs(retry))
-        retry += 1
-      }
-    }
+    val base = currentVersion(t)
+    val upsert = mode == LoadMode.Upsert
+    val fits = upsert && staged.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.filesMaxPartitionBytes
+    val w = writeFiles(t, if (fits) staged.coalesce(1) else staged)
+    val next = commit(t, w, base, full = mode == LoadMode.TruncateInsert,
+      if (upsert) idField else "", if (mode == LoadMode.Insert) "lost append" else "lost update",
+      maxRetries, sleeper)
+    val deleting = next.files.filter(_.key.nonEmpty).map(_.rows).sum
+    // The fold: a version swap like any other, so a lost race only
+    // leaves the deletes to the next upsert's check.
+    if (upsert && deleting > FoldDeletedShare * next.files.map(_.rows).sum)
+      try rewrite(t, next)(identity)
+      catch { case _: ConcurrentWriteException => () }
   }
 
-  /** All retained version ids, oldest first (the fixed-width millis
-    * prefix makes lexicographic order chronological). The write path
-    * retains exactly {current, previous}, so this is the time-travel
-    * horizon: one generation back. */
+  /** Retained version ids, oldest first: the live version and the
+    * reader-grace one before it, while its records are kept — the
+    * time-travel horizon is one version back. */
   def versions(t: TableRef): Seq[String] =
-    fs.listStatus(new Path(tableDir(t)))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("v_")).sorted.toSeq
+    currentVersion(t).toSeq.flatMap(c => Seq(c - 1, c)).filter { v =>
+      v >= 0 && (try fs.exists(recordFile(t, record(t, v)._1))
+        catch { case _: java.io.FileNotFoundException => false })
+    }.map(_.toString)
 
-  /** Time-travel read of a specific retained version (ids from
-    * [[versions]]); the CURRENT pointer is untouched — this is a read,
-    * not a rollback. */
+  /** Time-travel read of a retained version (ids from [[versions]]); the
+    * CURRENT pointer is untouched — this is a read, not a rollback. */
   def tableAt(t: TableRef, version: String): DataFrame = {
     require(versions(t).contains(version),
       s"version $version not retained for ${t.qualified} " +
         s"(have: ${versions(t).mkString(",")})")
-    spark.read.option("mergeSchema", "true")
-      .parquet(s"${tableDir(t)}/$version")
+    read(t, snapshot(t, version.toLong))
   }
 
-  /** Roll the CURRENT pointer back to the previous retained version (the
-    * load-went-bad escape hatch; the bad version stays on disk until the
-    * next commit's retention pass). */
-  def rollback(t: TableRef): Unit = withCommitLockFenced(t) { fence =>
+  /** Roll back to the previous retained version (the load-went-bad
+    * escape hatch): a new version restating its files and schema, so no
+    * data is rewritten and the bad version stays retained for one
+    * commit. */
+  def rollback(t: TableRef): Unit = {
     val cur = currentVersion(t).getOrElse(
       throw new IllegalArgumentException(s"no such table: ${t.qualified}"))
-    val prev = versions(t).filter(_ != cur).lastOption.getOrElse(
-      throw new IllegalStateException(
-        s"no previous version retained for ${t.qualified}"))
-    fence()
-    setVersion(t, prev)
+    val prev = versions(t).map(_.toLong).filter(_ != cur).lastOption.getOrElse(
+      throw new IllegalStateException(s"no previous version retained for ${t.qualified}"))
+    val back = snapshot(t, prev)
+    commit(t, Written("", back.schema, back.files), Some(cur), full = true, "", "lost update")
   }
 
-  /** VACUUM (the `VACUUM ... RETAIN 0` analog): immediately delete every
-    * retained version EXCEPT current, reclaiming the previous
-    * generation's storage at the cost of the rollback/time-travel
-    * horizon. The write path already bounds retention at one generation
-    * ([[commitNewVersion]]); this is the explicit storage-reclaim hook
-    * for tables whose previous version is large and no longer needed. */
+  /** VACUUM (the `VACUUM ... RETAIN 0` analog, run offline like
+    * [[graft.io.ModelStore.gc]]): delete every commit directory the live
+    * version does not reference — the previous version's, and any a
+    * crashed writer left — and every record before the live version's
+    * base. The previous version stays readable only when it references
+    * nothing the live one dropped (the live version builds on it). */
   def vacuum(t: TableRef): Unit = {
-    val cur = currentVersion(t).getOrElse(
-      throw new IllegalArgumentException(s"no such table: ${t.qualified}"))
-    versions(t).filter(_ != cur)
-      .foreach(o => fs.delete(new Path(s"${tableDir(t)}/$o"), true))
+    val s = live(t)
+    def sweep(p: Path): Unit = fs.listStatus(p).filter(_.isDirectory).map(_.getPath).foreach { d =>
+      val n = d.getName
+      if (n.contains('=')) sweep(d)
+      else if (!n.startsWith("_") && !n.startsWith(".") && !s.commits(n)) fs.delete(d, true)
+    }
+    sweep(new Path(tableDir(t)))
+    fs.listStatus(new Path(s"${tableDir(t)}/_log")).map(_.getPath.getName)
+      .filter(_.toLongOption.exists(_ < s.base))
+      .foreach(n => fs.delete(new Path(s"${tableDir(t)}/_log/$n"), false))
   }
 
-  /** Current version + its append-marker set + a read PINNED to it (one
-    * resolution serves the rewrite input, the CAS expectation, and the
-    * late-append check — the compact/zorder twin of the upsert path's
-    * pinned base; markers listed before the file index, same ordering
-    * argument). */
-  private def pinnedRead(t: TableRef): (Option[String], Set[String], DataFrame) = {
-    val v = currentVersion(t).getOrElse(
-      throw new IllegalArgumentException(s"no such table: ${t.qualified}"))
-    val m0 = appendMarkers(t, v)
-    (Some(v), m0, spark.read.option("mergeSchema", "true")
-      .parquet(s"${tableDir(t)}/$v"))
-  }
+  /** Rewrite version `s` through `f` as a full version, committed only
+    * if `s` is still live (the rewrite read its files). Clears deletes. */
+  private def rewrite(t: TableRef, s: Snapshot)(f: DataFrame => DataFrame): Unit =
+    commit(t, writeFiles(t, f(read(t, s))), Some(s.version), full = true, "", "lost update")
 
-  /** Small-file compaction: rewrite the current version into `nFiles`
-    * part files and swap the pointer. Incremental appends (L1) accumulate
-    * one file set per load job; at warehouse scale the read cost of many
-    * small parquet files dominates — periodic compaction is the standard
-    * remedy. Atomic like every other version swap: readers see the old
-    * file set until the pointer moves. */
-  def compact(t: TableRef, nFiles: Int): Unit = {
-    val (base, m0, df) = pinnedRead(t)
-    commitNewVersion(t, df.repartition(nFiles), base, baseMarkers = Some(m0))
-  }
+  /** Small-file compaction: rewrite the live version into `nFiles` part
+    * files. Incremental appends (L1) accumulate one file set per load
+    * job; at warehouse scale the read cost of many small parquet files
+    * dominates — periodic compaction is the standard remedy. */
+  def compact(t: TableRef, nFiles: Int): Unit = rewrite(t, live(t))(_.repartition(nFiles))
 
   /** Z-order compaction (the OPTIMIZE ZORDER BY analog): rewrite the
-    * current version clustered on the Morton interleave of two columns,
-    * so file min/max stats prune range predicates on EITHER dimension
-    * (see [[graft.operators.LayoutOps]]). Same atomic version swap as
-    * [[compact]] — readers never see a half-written layout. */
+    * live version clustered on the Morton interleave of two columns, so
+    * file min/max stats prune range predicates on EITHER dimension (see
+    * [[graft.operators.LayoutOps]]). */
   def compactZorder(t: TableRef, x: String, y: String, nFiles: Int,
-      bits: Int = 16): Unit = {
-    val (base, m0, df) = pinnedRead(t)
-    commitNewVersion(t, graft.operators.LayoutOps.zorder(
-      df, org.apache.spark.sql.functions.col(x),
-      org.apache.spark.sql.functions.col(y), nFiles, bits), base,
-      baseMarkers = Some(m0))
-  }
+      bits: Int = 16): Unit =
+    rewrite(t, live(t))(graft.operators.LayoutOps.zorder(_, col(x), col(y), nFiles, bits))
 
-  /** Path of the LIVE version's data directory (what [[table]] reads),
-    * or None when the table has no live pointer — the listing target
-    * for metadata-scale corpus statistics
-    * ([[graft.io.ModelStore.corpusStat]]): the table ROOT also holds
-    * the reader-grace generation, so statting it would double-count
-    * every byte for the one commit after a rewrite. */
+  /** The directory under which every live data file lies, or None when
+    * the table has no live pointer. It also holds files waiting for
+    * retention; [[liveFiles]] lists exactly the live ones. */
   def currentDataPath(t: TableRef): Option[String] =
-    currentVersion(t).map(v => s"${tableDir(t)}/$v")
+    currentVersion(t).map(_ => tableDir(t))
 
-  /** Data files of the live version (for file-count/size accounting).
-    * Recursive: partitioned tables keep their parquet parts inside
-    * partition subdirectories. */
-  def dataFiles(t: TableRef): Seq[String] = {
-    val v = currentVersion(t).getOrElse(
-      throw new IllegalArgumentException(s"no such table: ${t.qualified}"))
-    val it = fs.listFiles(new Path(s"${tableDir(t)}/$v"), true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val n = it.next().getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) out += n
-    }
-    out.result()
-  }
+  /** Names of the live version's data files (unique within the table). */
+  def dataFiles(t: TableRef): Seq[String] = live(t).files.map(_.name)
+
+  /** Status (path, length, mtime) of each live data file — the input of
+    * metadata-scale corpus statistics ([[graft.io.ModelStore.corpusStat]]). */
+  def liveFiles(t: TableRef): Seq[FileStatus] =
+    live(t).files.map(d => fs.getFileStatus(new Path(s"${tableDir(t)}/${d.path}")))
 
   def drop(t: TableRef): Unit = { fs.delete(new Path(tableDir(t)), true); () }
 
@@ -720,18 +661,76 @@ object ParquetWarehouse {
   private[graft] val LockTrace: Boolean =
     sys.env.get("GRAFT_LOCK_TRACE").contains("1")
 
-
-  /** A version swap (or file-granular append) lost a concurrent-writer
-    * race: the operation's contents were computed from a base that is no
-    * longer the live version, so committing would silently drop the
-    * winner's rows. The resolution is the reference's X2 loop — re-run
-    * the load against the new current version (the retryable-conflict
-    * class, like Redshift's serializable-isolation failure). */
+  /** A version swap lost a concurrent-writer race: the live version is
+    * no longer the one the operation started from. Retryable, like
+    * Redshift's serializable-isolation failure (the X2 loop). */
   final class ConcurrentWriteException(msg: String)
     extends RuntimeException(msg)
 
   /** Age past which a `_COMMIT_LOCK` is presumed crashed and stolen: the
-    * lock only ever guards a sub-second pointer check-and-swap, never a
-    * data write, so 30 s is 2+ orders above any live hold. */
+    * lock only ever guards a sub-second record write and pointer swap,
+    * never a data write, so 30 s is 2+ orders above any live hold. */
   val LockStaleMs: Long = 30000L
+
+  /** Share of stored rows past which the rows of delete-carrying files
+    * trigger the fold: Redshift's VACUUM DELETE reclaims by default until
+    * 95 % of the rows are live. Each such row deletes at most one older
+    * row when keys are unique, so this bounds the deleted share. */
+  val FoldDeletedShare: Double = 0.05
+
+  /** Records a read resolves at most: every MaxChain-th commit restates
+    * the whole file list. */
+  val MaxChain: Int = 16
+
+  /** One data file of a version: its path under the table directory,
+    * bytes, rows, the version that added it, and the key column whose
+    * values delete older rows ("" = none). */
+  private[io] final case class DataFile(path: String, bytes: Long, rows: Long, seq: Long,
+      key: String) {
+    def name: String = path.substring(path.lastIndexOf('/') + 1)
+    /** The commit directory holding the file. */
+    def parent: String = path.substring(0, path.lastIndexOf('/'))
+    def commit: String = name.substring(0, name.lastIndexOf('-'))
+  }
+
+  /** A version: the full record it builds on, its schema and files. */
+  private[io] final case class Snapshot(version: Long, base: Long, schema: StructType,
+      files: Seq[DataFile]) {
+    def commits: Set[String] = files.map(_.commit).toSet
+  }
+
+  /** Files one write produced, not yet referenced by any version. */
+  private final case class Written(dir: String, schema: StructType, files: Seq[DataFile])
+
+  /** Delete keys per immutable data file, least recently used evicted. */
+  private val KeyCache = new java.util.LinkedHashMap[String, Array[AnyRef]](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Array[AnyRef]]): Boolean =
+      size > 256
+  }
+
+  /** Keeps a row unless a file newer than its own holds its key. The
+    * maps (key → newest deleting version, file → version) are broadcast,
+    * so a task reads them once, and a file is looked up only for deleted keys. */
+  private def keepLive(d: Broadcast[(java.util.HashMap[AnyRef, java.lang.Long],
+      java.util.HashMap[String, java.lang.Long])], key: Column): Column = {
+    val dead = udf(new UDF1[AnyRef, java.lang.Boolean] {
+      @transient private lazy val v = d.value._1
+      def call(k: AnyRef): java.lang.Boolean = k != null && v.containsKey(k)
+    }, BooleanType)
+    val older = udf(new UDF2[AnyRef, String, java.lang.Boolean] {
+      @transient private lazy val v = d.value
+      def call(k: AnyRef, f: String): java.lang.Boolean = v._1.get(k) > v._2.get(f)
+    }, BooleanType)
+    !dead(key) || !older(key, col("_metadata.file_name"))
+  }
+
+  /** File sources read every column as nullable; so does the schema a
+    * version records. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 }

@@ -606,9 +606,8 @@ object StreamingLoad {
     if (warehouse.exists(corpusTable))
       warehouse.load(LoadMode.Insert, corpusTable, fresh, idField)
     else warehouse.create(corpusTable, fresh)
-    // Metadata-only size/identity stat of the live corpus dir.
-    val stat = graft.io.ModelStore.corpusStat(spark,
-      warehouse.currentDataPath(corpusTable).toSeq)
+    // Metadata-only size/identity stat of the live corpus files.
+    val stat = graft.io.ModelStore.corpusStat(warehouse.liveFiles(corpusTable))
     val corpus = warehouse.table(corpusTable)
       .select(col(idField), col("vec"))
     val cents = modelStore.getOrTrainDrifted(

@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ModelStore
@@ -51,6 +53,32 @@ class ModelStoreSpec extends AnyFunSuite with SparkSuite {
     // Absent path fingerprints deterministically instead of throwing.
     val fpAbsent = ModelStore.fingerprint(spark, Seq(s"$dir/nope.parquet"))
     assert(fpAbsent.length == 16)
+  }
+
+  test("corpusStat of a warehouse table counts its live files, not those " +
+      "waiting for retention") {
+    import spark.implicits._
+    import graft.core.{LoadMode, TableRef}
+    import graft.io.ParquetWarehouse
+    val root = java.nio.file.Files.createTempDirectory("graft_livestat")
+    val wh = new ParquetWarehouse(spark, root.toString)
+    val t = TableRef("", "corpus")
+    def parquet(): Set[String] = {
+      val st = java.nio.file.Files.walk(root)
+      try st.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally st.close()
+    }
+    wh.create(t, Seq((1L, "a"), (2L, "b")).toDF("id", "s").repartition(2))
+    val old = parquet()
+    wh.load(LoadMode.TruncateInsert, t, Seq((3L, "c")).toDF("id", "s"), "id")
+    val fresh = parquet() -- old
+    assert(old.nonEmpty && old.subsetOf(parquet()),
+      "the replaced files stay on disk for the reader-grace version")
+    val live = ModelStore.corpusStat(wh.liveFiles(t))
+    assert(live == ModelStore.corpusStat(spark, fresh.toSeq.map("file:" + _)))
+    assert(live.files == 1)
+    assert(live.fp != ModelStore.corpusStat(spark, wh.currentDataPath(t).toSeq).fp,
+      "a listing of the table directory also counts the replaced files")
   }
 
   test("gc sweeps artifacts of dead corpus fingerprints, keeps live ones") {

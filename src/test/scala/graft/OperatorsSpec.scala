@@ -1621,6 +1621,92 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     assert(out == Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(9.5))))
   }
 
+  test("warehouse upsert deletes on read: every older row of a staged key goes, " +
+      "staged duplicates all land, a later Insert keeps both rows") {
+    import graft.core._
+    import graft.io.ParquetWarehouse
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_mor").toString
+    val wh = new ParquetWarehouse(spark, root)
+    val tbl = TableRef("", "mor")
+    // 400 keys plus three more copies of key 7: the base holds 4 rows of 7.
+    val base = (0L until 400L).map(i => (i, "old")) ++ Seq.fill(3)((7L, "old"))
+    wh.create(tbl, base.toDF("id", "v").repartition(4))
+    val baseFiles = wh.dataFiles(tbl).toSet
+    def v(id: Long) = wh.table(tbl).filter(col("id") === id).select("v")
+      .collect().map(_.getString(0)).sorted.toSeq
+    // Two staged rows for key 7 (the L3 quirk) and a new key 500, with a
+    // column the base lacks. 3 deleting rows of 406: no fold.
+    wh.load(LoadMode.Upsert, tbl,
+      Seq((7L, "a", 1.5), (7L, "b", 2.5), (500L, "c", 3.5)).toDF("id", "v", "score"), "id")
+    assert(baseFiles.subsetOf(wh.dataFiles(tbl).toSet), "the upsert rewrote base files")
+    assert(wh.dataFiles(tbl).size == baseFiles.size + 1)
+    assert(v(7L) == Seq("a", "b"), "all four older rows of key 7 go, both staged rows land")
+    assert(wh.table(tbl).count() == 403 - 4 + 3)
+    assert(wh.table(tbl).filter(col("id") === 1L).select("score").head().isNullAt(0),
+      "a column only the upsert's file holds reads as null on older rows")
+    // Deletes apply to older files only: an Insert of key 7 keeps all rows.
+    wh.load(LoadMode.Insert, tbl, Seq((7L, "ins", 0.0)).toDF("id", "v", "score"), "id")
+    assert(v(7L) == Seq("a", "b", "ins"))
+    // A second upsert deletes key 7 from every older file, the Insert's too.
+    wh.load(LoadMode.Upsert, tbl, Seq((7L, "z", 0.0)).toDF("id", "v", "score"), "id")
+    assert(v(7L) == Seq("z"))
+    assert(wh.table(tbl).count() == 402 + 1 - 3 + 1)
+    // The previous version still reads its own deletes.
+    assert(wh.tableAt(tbl, wh.versions(tbl).head).filter(col("id") === 7L).count() == 3)
+  }
+
+  test("warehouse upsert writes only its rows: 1,000 rows into a 200k-row, 10-file " +
+      "table add one data file and under 1 KB of metadata; an Insert adds at most 100 B") {
+    import graft.core._
+    import graft.io.ParquetWarehouse
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("graft_upsert_io")
+    val wh = new ParquetWarehouse(spark, root.toString)
+    val tbl = TableRef("", "big")
+    def files(): Map[String, (Long, Long)] = {
+      val st = java.nio.file.Files.walk(root)
+      try st.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => p.toString -> (java.nio.file.Files.size(p),
+          java.nio.file.Files.getLastModifiedTime(p).toMillis)).toMap
+      finally st.close()
+    }
+    /** Data files and the metadata bytes (every other new or rewritten
+      * file, checksums of data files aside) one operation writes. */
+    def written(op: => Unit): (Seq[String], Long) = {
+      val before = files()
+      Thread.sleep(5) // a rewritten file shows a new mtime
+      op
+      val changed = files().filter { case (p, f) => !before.get(p).contains(f) }
+      val data = changed.keys.filter(_.endsWith(".parquet")).toSeq
+      (data, changed.collect { case (p, (n, _)) if !p.endsWith(".parquet") &&
+        !p.endsWith(".parquet.crc") => n }.sum)
+    }
+    wh.create(tbl, spark.range(0, 200000, 1, 10).select(col("id"),
+      (col("id") % 100).as("grp"), (col("id") * 7).as("amount")))
+    val baseFiles = wh.dataFiles(tbl)
+    assert(baseFiles.size == 10)
+    val staged = spark.range(199500, 200500).select(col("id"),
+      (col("id") % 100).as("grp"), lit(-1L).as("amount"))
+    val (data, meta) = written(wh.load(LoadMode.Upsert, tbl, staged, "id"))
+    assert(data.size == 1, s"the upsert wrote $data")
+    assert(meta < 1024, s"the upsert wrote $meta B of metadata")
+    assert(wh.dataFiles(tbl).toSet == baseFiles.toSet + data.head.split('/').last,
+      "an existing data file was rewritten")
+    assert(wh.table(tbl).count() == 200500)
+    assert(wh.table(tbl).filter(col("amount") === -1L).count() == 1000)
+
+    val small = TableRef("", "store")
+    wh.create(small, spark.range(0, 1000, 1, 4).toDF("doc_id"))
+    (1 to 5).foreach(b => wh.load(LoadMode.Insert, small,
+      spark.range(1000 * b, 1000 * b + 50, 1, 2).toDF("doc_id"), "doc_id"))
+    val (inserted, record) = written(wh.load(LoadMode.Insert, small,
+      spark.range(9000, 9050, 1, 2).toDF("doc_id"), "doc_id"))
+    assert(inserted.size == 2)
+    info(s"metadata written: upsert $meta B, insert $record B")
+    assert(record <= 100, s"an Insert wrote $record B of metadata")
+  }
+
   test("warehouse dataFiles recurses into partition subdirectories") {
     import graft.core._
     import graft.io.ParquetWarehouse

@@ -97,9 +97,8 @@ object CrashFs {
   * mutations, then once per crash point k, the k-th mutation and all
   * later ones failing. A fresh warehouse on the same directory must then
   * read exactly the rows from before the operation or exactly the rows
-  * after it — never no table, never a mix. Crash points: every mutation
-  * from the commit lock's creation on (the pointer protocol), plus one
-  * inside the data write. */
+  * after it — never no table, never a mix. Crash points: every mutation,
+  * the data write's included. */
 class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
 
   private val t = TableRef("", "crashy")
@@ -110,6 +109,8 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
 
   private val old = rows(0 until 10, "old")
   private val staged = rows(5 until 15, "new")
+  /** A base the 10 staged rows' deletes stay under the fold share of. */
+  private val many = rows(0 until 400, "old")
 
   private def content(df: DataFrame): Seq[(Long, String)] =
     df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
@@ -123,13 +124,14 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
   }
 
   /** Run `op` through the crash scheme once unarmed and once per crash
-    * point; `setup` builds the starting state with the plain filesystem. */
+    * point; `setup` builds the starting state with the plain filesystem.
+    * Returns the unarmed run's warehouse. */
   private def crashPoints(setup: ParquetWarehouse => Unit)(
-      op: ParquetWarehouse => Unit): Unit = {
+      op: ParquetWarehouse => Unit): ParquetWarehouse = {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set(s"fs.${CrashFs.Scheme}.impl", classOf[CrashFs].getName)
     conf.setBoolean(s"fs.${CrashFs.Scheme}.impl.disable.cache", true)
-    def attempt(k: Int): (Seen, Seen, Seq[String]) = {
+    def attempt(k: Int): (Seen, Seen, Seq[String], String) = {
       val dir = Files.createTempDirectory("graft-crash").toString
       setup(new ParquetWarehouse(spark, dir))
       val before = live(dir)
@@ -140,15 +142,13 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
       try op(new ParquetWarehouse(spark, s"${CrashFs.Scheme}://$dir"))
       catch { case _: Throwable => () }
       finally { CrashFs.disarm(); spark.sparkContext.setLogLevel("WARN") }
-      (before, live(dir), CrashFs.log.asScala.toSeq)
+      (before, live(dir), CrashFs.log.asScala.toSeq, dir)
     }
-    val (before, after, muts) = attempt(Int.MaxValue)
+    val (before, after, muts, done) = attempt(Int.MaxValue)
     assert(before != after, "the operation must change what a reader sees")
-    val firstLock = muts.indexWhere(_.endsWith("/_COMMIT_LOCK"))
-    assert(firstLock >= 0, muts.mkString("\n"))
-    val during = if (firstLock > 0) Seq(1 + firstLock / 2) else Nil
-    for (k <- during ++ ((firstLock + 1) to muts.size)) {
-      val (b, got, _) = attempt(k)
+    assert(muts.exists(_.endsWith("/_COMMIT_LOCK")), muts.mkString("\n"))
+    for (k <- 1 to muts.size) {
+      val (b, got, _, _) = attempt(k)
       assert(b == before)
       assert(got == before || got == after,
         s"crash at mutation $k of ${muts.size} (${muts(k - 1)}): a reader " +
@@ -157,7 +157,11 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
           s"${after.map(_.size).getOrElse("no table")} rows\n" +
           muts.zipWithIndex.map { case (m, i) => s"${i + 1} $m" }.mkString("\n"))
     }
+    new ParquetWarehouse(spark, done)
   }
+
+  /** Commit directory of a data file `<dir>-<i>.parquet`. */
+  private def commitDir(name: String): String = name.substring(0, name.lastIndexOf('-'))
 
   test("crash at any point of create: no table or the whole new table") {
     crashPoints(_ => ())(_.create(t, staged))
@@ -168,7 +172,16 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("crash at any point of an Upsert: the old rows or the merged rows") {
-    crashPoints(_.create(t, old))(_.load(LoadMode.Upsert, t, staged))
+    // 10 deleting rows of 410 stored: the deletes stay on read.
+    val wh = crashPoints(_.create(t, many))(_.load(LoadMode.Upsert, t, staged))
+    assert(wh.dataFiles(t).map(commitDir).distinct.size == 2, wh.dataFiles(t))
+  }
+
+  test("crash at any point of an Upsert whose fold fires: the old rows or the merged rows") {
+    // 10 deleting rows of 20 stored: the fold rewrites the table.
+    val wh = crashPoints(_.create(t, old))(_.load(LoadMode.Upsert, t, staged))
+    assert(wh.dataFiles(t).map(commitDir).distinct.size == 1, wh.dataFiles(t))
+    assert(wh.table(t).count() == 15)
   }
 
   test("crash at any point of a TruncateInsert: the old rows or the staged rows") {
