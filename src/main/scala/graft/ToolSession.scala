@@ -21,7 +21,11 @@ object ToolSession {
     * count (not the 200 default — CONTRACTS: partitions are sized to
     * the scale actually run), UTC pinned so timestamp queries match the
     * DuckDB oracle, NTZ inference off so parquet timestamps read as
-    * TIMESTAMP_LTZ regardless of the fixture writer. */
+    * TIMESTAMP_LTZ regardless of the fixture writer, and `file:` served
+    * by [[graft.io.ForkFreeLocalFs]] for `FileSystem` and `FileContext`
+    * alike. Hadoop caches a `FileSystem` per scheme for the whole JVM,
+    * so the install rides the session conf: the first `file:` handle is
+    * built from it. */
   def local(cpus: String, logLevel: String = "ERROR"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -29,6 +33,7 @@ object ToolSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config(graft.io.ForkFreeLocalFs.SessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

@@ -2,7 +2,11 @@ package graft.exec
 
 import scala.collection.mutable
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 import graft.core._
 import graft.io.{ParquetWarehouse, StagedUpload, StagingWriter}
@@ -63,14 +67,16 @@ final class Loader(
     * Progress granularity (O3): the reference streams byte-level
     * `managedUpload.on('progress')` events per upload (README.md:310-311,
     * RedshiftLoader.ts:147-151). Spark equivalent: a SparkListener
-    * registered for the duration of this body's write job bridges each
+    * registered for the duration of this body's write bridges each
     * task's output metrics into `uploadProgress` events as partitions
     * commit (task-level = one event per written part), and the
     * `uploadedFile` completion event carries exact per-file byte counts
-    * from the committed files. The bridge sees task-ends of any job that
-    * overlaps this write on the same SparkContext — Loader stages bodies
-    * sequentially, so in practice that is this write. A `json` body
-    * holding a map with non-string keys is rejected before staging. */
+    * from the committed files. The write's jobs carry a local property
+    * naming this body, so the bridge reports only their tasks; the write's
+    * SQL execution ends after its last job, and the bridge's queue
+    * delivers that end after every task-end before it, so `addBody`
+    * returns once the bridge has seen them all. A `json` body holding a
+    * map with non-string keys is rejected before staging. */
   def addBody(df: DataFrame, format: String = "json"): Option[StagedUpload] =
     if (started) {
       debug(s"addBody after start ignored")
@@ -78,39 +84,53 @@ final class Loader(
     } else {
       StagingWriter.requireStageable(df.schema, format)
       val idx = uploads.size
-      val bridge = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      val tag = s"$uuid-$idx"
+      val seen = new java.util.concurrent.CountDownLatch(1)
+      val bridge = new SparkListener {
+        // Called on the bus thread only.
+        private var stages = Set.empty[Int]
+        private var execution: Option[String] = None
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (j.properties != null && j.properties.getProperty(Loader.BodyTag) == tag) {
+            stages ++= j.stageIds
+            execution = execution.orElse(Option(
+              j.properties.getProperty(SQLExecution.EXECUTION_ROOT_ID_KEY)))
+          }
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
           val om = if (t.taskMetrics != null) t.taskMetrics.outputMetrics else null
-          if (om != null && (om.bytesWritten > 0 || om.recordsWritten > 0))
+          if (stages(t.stageId) && om != null && (om.bytesWritten > 0 || om.recordsWritten > 0))
             listener.onProgress("uploadProgress", Map(
               "index" -> idx.toString,
               "bytes" -> om.bytesWritten.toString,
               "records" -> om.recordsWritten.toString))
         }
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case end: SparkListenerSQLExecutionEnd
+              if execution.contains(end.executionId.toString) => seen.countDown()
+          case _ => ()
+        }
       }
-      spark.sparkContext.addSparkListener(bridge)
+      val sc = spark.sparkContext
+      sc.addSparkListener(bridge)
       val up =
-        try staging.writeBody(df, idx, format, cfg.copySettings.gzip)
-        finally {
-          // Async bus: drain before deregistering or trailing task-end
-          // events are dropped nondeterministically.
-          org.apache.spark.graftshim.GraftScheduler.drainListenerBus(spark.sparkContext)
-          spark.sparkContext.removeSparkListener(bridge)
+        try {
+          sc.setLocalProperty(Loader.BodyTag, tag)
+          val up = staging.writeBody(df, idx, format, cfg.copySettings.gzip)
+          seen.await(Loader.BridgeWaitS, java.util.concurrent.TimeUnit.SECONDS)
+          up
+        } finally {
+          sc.setLocalProperty(Loader.BodyTag, null)
+          sc.removeSparkListener(bridge)
         }
       uploads += up
       formats += format
       bodies += df
-      val conf = spark.sparkContext.hadoopConfiguration
-      val sizes = up.files.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getName -> p.getFileSystem(conf).getFileStatus(p).getLen
-      }
       listener.onProgress("uploadedFile", Map(
         "index" -> up.index.toString,
         "files" -> up.files.size.toString,
-        "bytes" -> sizes.map(_._2).sum.toString) ++
-        sizes.map { case (name, len) => s"bytes.$name" -> len.toString })
+        "bytes" -> up.bytes.sum.toString) ++
+        up.files.zip(up.bytes).map { case (f, len) =>
+          s"bytes.${new org.apache.hadoop.fs.Path(f).getName}" -> len.toString })
       Some(up)
     }
 
@@ -223,4 +243,12 @@ final class Loader(
       }
     }
   }
+}
+
+object Loader {
+  /** Local property naming the body a staging write belongs to. */
+  private val BodyTag = "graft.loader.body"
+
+  /** Bound on waiting for a body write's events to reach its bridge. */
+  private val BridgeWaitS = 30L
 }

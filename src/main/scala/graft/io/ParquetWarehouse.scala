@@ -77,16 +77,9 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     Option(f.toUri).filter(u => u.getScheme == null || u.getScheme == "file")
       .map(u => java.nio.file.Paths.get(u.getPath))
 
-  /** Local metadata goes through java.nio: Hadoop's local create runs
-    * `chmod` as a child process for the file and again for its checksum,
-    * ~8 ms a file and slower still on a busy machine. */
-  private def writeText(f: Path, s: String): Unit = localPath(f) match {
-    case Some(p) =>
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, s.getBytes("UTF-8"))
-    case None =>
-      val out = fs.create(f, true)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
+  private def writeText(f: Path, s: String): Unit = {
+    val out = fs.create(f, true)
+    try out.write(s.getBytes("UTF-8")) finally out.close()
   }
 
   private def readPointer(f: Path): Option[Long] =

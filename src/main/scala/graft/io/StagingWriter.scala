@@ -6,9 +6,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
 
 import graft.core.LoaderConfig
 
-/** One staged "upload": the files a single body write produced
-  * (the reference's `UploadTask`, RedshiftLoader.ts:13-21). */
-final case class StagedUpload(index: Int, dir: String, files: Seq[String])
+/** One staged "upload": the files a single body write produced and
+  * their lengths in bytes (the reference's `UploadTask`,
+  * RedshiftLoader.ts:13-21). */
+final case class StagedUpload(index: Int, dir: String, files: Seq[String], bytes: Seq[Long])
 
 /** Writes staged bodies to the staging filesystem and emits the
   * Redshift-format manifest — the Spark restatement of the reference's
@@ -32,9 +33,13 @@ final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid
   val jobDir = s"$root/${cfg.resolvedFilePrefix}/${jobTime}_$uuid"
   def manifestPath = s"$jobDir/manifest_$uuid.json"
 
-  private def fs(df: DataFrame): FileSystem =
-    new Path(root).getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
+  /** One handle per writer (each `newHadoopConf` copies the whole Hadoop configuration). */
+  private var handle: FileSystem = _
+  private def fs(df: DataFrame): FileSystem = synchronized {
+    if (handle == null)
+      handle = new Path(root).getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+    handle
+  }
 
   /** Write one body. `format` is the staged wire format — NDJSON (`json`,
     * the reference's native encoding, utils.ts:27-29) or columnar
@@ -48,19 +53,20 @@ final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid
     val w = df.write.mode("errorifexists").options(StagingWriter.stageOptions(format))
     val writer = if (gzip && format == "json") w.option("compression", "gzip") else w
     writer.format(format).save(dir)
-    StagedUpload(index, dir, listDataFiles(df, dir))
+    upload(df, index, dir)
   }
 
-  /** Data files under a written dir (committed parts only — no `_SUCCESS`,
-    * no hidden files), sorted for determinism. */
-  def listDataFiles(df: DataFrame, dir: String): Seq[String] = {
-    val f = fs(df)
-    f.listStatus(new Path(dir))
-      .filter(_.isFile)
-      .map(_.getPath.toString)
-      .filterNot(p => p.split('/').last.startsWith("_") || p.split('/').last.startsWith("."))
+  /** The upload a written dir holds: its data files (committed parts
+    * only — no `_SUCCESS`, no hidden files), sorted for determinism,
+    * with their lengths from the same listing. */
+  private def upload(df: DataFrame, index: Int, dir: String): StagedUpload = {
+    val (files, bytes) = fs(df).listStatus(new Path(dir)).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map(s => s.getPath.toString -> s.getLen)
       .sorted
-      .toSeq
+      .unzip
+    StagedUpload(index, dir, files, bytes)
   }
 
   /** Stage one BINARY body: each row's payload as its own object
@@ -74,7 +80,7 @@ final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid
       index: Int, ext: String): StagedUpload = {
     val dir = s"$jobDir/bin_$index"
     Ingest.writeBinaryFiles(df, idCol, payloadCol, dir, ext)
-    StagedUpload(index, dir, listDataFiles(df, dir))
+    upload(df, index, dir)
   }
 
   /** Emit the manifest listing every staged file, `mandatory:true` each —
@@ -83,8 +89,7 @@ final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid
     * RedshiftLoader.ts:327-335) is deliberately NOT reproduced. */
   def writeManifest(df: DataFrame, uploads: Seq[StagedUpload]): String = {
     val m = Manifest.of(uploads.flatMap(_.files))
-    val f = fs(df)
-    val out = f.create(new Path(manifestPath), false)
+    val out = fs(df).create(new Path(manifestPath), false)
     try out.write(m.toJson.getBytes("UTF-8"))
     finally out.close()
     manifestPath

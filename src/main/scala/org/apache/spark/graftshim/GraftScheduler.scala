@@ -2,11 +2,12 @@ package org.apache.spark.graftshim
 
 import org.apache.spark.SparkContext
 
-/** `private[spark]` scheduler access needed by graft's Loader:
-  * the listener bus is asynchronous, so a caller that registers a
-  * bridging SparkListener for the duration of one write job must drain
-  * the bus before deregistering, or trailing task-end events are lost
-  * nondeterministically. */
+/** `private[spark]` scheduler access: the listener bus is asynchronous,
+  * so a caller that registers a bridging SparkListener for a stretch of
+  * work must drain the bus before reading or deregistering it, or
+  * trailing events are lost nondeterministically. The drain polls every
+  * queue every 10 ms; a caller that knows which event ends its work
+  * (as `Loader.addBody` does) waits for that event instead. */
 object GraftScheduler {
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

@@ -10,16 +10,6 @@ trait SparkSuite { self: AnyFunSuite =>
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The tools' and the benchmark's own session, on 4 cores. */
+  lazy val session: SparkSession = ToolSession.local("4", "WARN")
 }
