@@ -2,11 +2,10 @@ package graft.exec
 
 import scala.collection.mutable
 
+import org.apache.spark.graftshim.GraftScheduler
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 import graft.core._
 import graft.io.{ParquetWarehouse, StagedUpload, StagingWriter}
@@ -72,11 +71,13 @@ final class Loader(
     * commit (task-level = one event per written part), and the
     * `uploadedFile` completion event carries exact per-file byte counts
     * from the committed files. The write's jobs carry a local property
-    * naming this body, so the bridge reports only their tasks; the write's
-    * SQL execution ends after its last job, and the bridge's queue
-    * delivers that end after every task-end before it, so `addBody`
-    * returns once the bridge has seen them all. A `json` body holding a
-    * map with non-string keys is rejected before staging. */
+    * naming this body, so the bridge reports only their tasks. Spark posts
+    * a job's task-ends before its caller returns, so a marker posted after
+    * the write reaches the bridge behind all of them: `addBody` returns
+    * once the bridge has seen it (or, if the bus dropped it, once the bus
+    * is drained). This holds whatever runs the write — a `foreachBatch`
+    * callback inside another SQL execution included. A `json` body
+    * holding a map with non-string keys is rejected before staging. */
   def addBody(df: DataFrame, format: String = "json"): Option[StagedUpload] =
     if (started) {
       debug(s"addBody after start ignored")
@@ -89,13 +90,9 @@ final class Loader(
       val bridge = new SparkListener {
         // Called on the bus thread only.
         private var stages = Set.empty[Int]
-        private var execution: Option[String] = None
         override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (j.properties != null && j.properties.getProperty(Loader.BodyTag) == tag) {
+          if (j.properties != null && j.properties.getProperty(Loader.BodyTag) == tag)
             stages ++= j.stageIds
-            execution = execution.orElse(Option(
-              j.properties.getProperty(SQLExecution.EXECUTION_ROOT_ID_KEY)))
-          }
         override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
           val om = if (t.taskMetrics != null) t.taskMetrics.outputMetrics else null
           if (stages(t.stageId) && om != null && (om.bytesWritten > 0 || om.recordsWritten > 0))
@@ -105,8 +102,7 @@ final class Loader(
               "records" -> om.recordsWritten.toString))
         }
         override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case end: SparkListenerSQLExecutionEnd
-              if execution.contains(end.executionId.toString) => seen.countDown()
+          case GraftScheduler.Marker(`tag`) => seen.countDown()
           case _ => ()
         }
       }
@@ -116,7 +112,9 @@ final class Loader(
         try {
           sc.setLocalProperty(Loader.BodyTag, tag)
           val up = staging.writeBody(df, idx, format, cfg.copySettings.gzip)
-          seen.await(Loader.BridgeWaitS, java.util.concurrent.TimeUnit.SECONDS)
+          GraftScheduler.post(sc, GraftScheduler.Marker(tag))
+          if (!seen.await(Loader.BridgeWaitS, java.util.concurrent.TimeUnit.SECONDS))
+            GraftScheduler.drainListenerBus(sc)
           up
         } finally {
           sc.setLocalProperty(Loader.BodyTag, null)
@@ -249,6 +247,6 @@ object Loader {
   /** Local property naming the body a staging write belongs to. */
   private val BodyTag = "graft.loader.body"
 
-  /** Bound on waiting for a body write's events to reach its bridge. */
+  /** Bound on waiting for a body's marker to reach its bridge. */
   private val BridgeWaitS = 30L
 }

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.api.java.{UDF1, UDF2}
@@ -57,6 +57,11 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
   /** One handle per warehouse (each `newHadoopConf` copies the whole Hadoop configuration). */
   private lazy val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** Metadata (records, `_VERSION`, `_VERSION.next`, `_PARTITIONING`) has
+    * no `.crc` sibling: Hadoop opens and swaps a file and its checksum in
+    * separate steps, so a reader racing a pointer swap could fail the check. */
+  private lazy val meta = fs match { case c: ChecksumFileSystem => c.getRawFileSystem; case f => f }
+
   private def tableDir(t: TableRef): String =
     if (t.schema.isEmpty) s"$root/${t.table}" else s"$root/${t.schema}/${t.table}"
 
@@ -67,7 +72,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
 
   private def readText(f: Path): Option[String] =
     try {
-      val in = fs.open(f)
+      val in = meta.open(f)
       try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
@@ -78,7 +83,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       .map(u => java.nio.file.Paths.get(u.getPath))
 
   private def writeText(f: Path, s: String): Unit = {
-    val out = fs.create(f, true)
+    val out = meta.create(f, true)
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
 
@@ -91,7 +96,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     * last, so a swap finishing meanwhile wins. */
   private def currentVersion(t: TableRef): Option[Long] =
     readPointer(versionFile(t)).orElse {
-      val next = readPointer(nextVersionFile(t)).filter(v => fs.exists(recordFile(t, v)))
+      val next = readPointer(nextVersionFile(t)).filter(v => meta.exists(recordFile(t, v)))
       readPointer(versionFile(t)).orElse(next)
     }
 
@@ -101,11 +106,11 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     * first, so the overwrite never leaves the table without a pointer. */
   private def setVersion(t: TableRef, v: Long): Unit = {
     val tmp = nextVersionFile(t)
-    if (!fs.exists(versionFile(t)) && currentVersion(t).isDefined)
-      fs.rename(tmp, versionFile(t))
+    if (!meta.exists(versionFile(t)) && currentVersion(t).isDefined)
+      meta.rename(tmp, versionFile(t))
     writeText(tmp, v.toString)
-    fs.delete(versionFile(t), false)
-    fs.rename(tmp, versionFile(t)) // atomic pointer swap on HDFS-like FS
+    meta.delete(versionFile(t), false)
+    meta.rename(tmp, versionFile(t)) // atomic pointer swap on HDFS-like FS
   }
 
   def exists(t: TableRef): Boolean = currentVersion(t).isDefined
@@ -117,7 +122,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
   def versionMtime(t: TableRef): Option[Long] =
     // One stat: a pointer dropped concurrently reads as None (the
     // caller's skip signal) instead of aborting the caller's sweep.
-    try Some(fs.getFileStatus(versionFile(t)).getModificationTime)
+    try Some(meta.getFileStatus(versionFile(t)).getModificationTime)
     catch { case _: java.io.FileNotFoundException => None }
 
   /** Partition columns declared at table creation (Hive-style layout —
@@ -506,7 +511,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       old.foreach { o =>
         val dead = o.commits -- p.commits -- next.commits
         discard(t, o.files.filter(f => dead(f.commit)).map(_.parent).distinct)
-        (o.base until p.version).foreach(v => fs.delete(recordFile(t, v), false))
+        (o.base until p.version).foreach(v => meta.delete(recordFile(t, v), false))
       }
     }
     next
@@ -556,7 +561,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     * time-travel horizon is one version back. */
   def versions(t: TableRef): Seq[String] =
     currentVersion(t).toSeq.flatMap(c => Seq(c - 1, c)).filter { v =>
-      v >= 0 && (try fs.exists(recordFile(t, record(t, v)._1))
+      v >= 0 && (try meta.exists(recordFile(t, record(t, v)._1))
         catch { case _: java.io.FileNotFoundException => false })
     }.map(_.toString)
 
@@ -596,9 +601,9 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       else if (!n.startsWith("_") && !n.startsWith(".") && !s.commits(n)) fs.delete(d, true)
     }
     sweep(new Path(tableDir(t)))
-    fs.listStatus(new Path(s"${tableDir(t)}/_log")).map(_.getPath.getName)
+    meta.listStatus(new Path(s"${tableDir(t)}/_log")).map(_.getPath.getName)
       .filter(_.toLongOption.exists(_ < s.base))
-      .foreach(n => fs.delete(new Path(s"${tableDir(t)}/_log/$n"), false))
+      .foreach(n => meta.delete(new Path(s"${tableDir(t)}/_log/$n"), false))
   }
 
   /** Rewrite version `s` through `f` as a full version, committed only

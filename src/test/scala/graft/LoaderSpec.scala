@@ -104,6 +104,37 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     assert(fileEv("bytes").toLong == perFile.map(_._2).sum)
   }
 
+  test("addBody inside foreachBatch (a running SQL execution) reports every part promptly") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    val (whDir, stg, src) = (tmp(), tmp(), tmp())
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, Map[String, String])]
+    val rec = new LoadListener {
+      override def onProgress(task: String, info: Map[String, String]): Unit =
+        events.add(task -> info)
+    }
+    val loader = mkLoader(LoaderConfig(table = TableRef("", "target"),
+      cleanup = CleanupPolicy.Never), new ParquetWarehouse(spark, whDir), stg, rec)
+    Files.write(java.nio.file.Paths.get(src, "a.json"), (body1 + "\n" + body2).getBytes("UTF-8"))
+    val staged = new java.util.concurrent.atomic.AtomicReference[(graft.io.StagedUpload, Long)]
+    spark.readStream.schema(Ingest.ndjsonString(spark, body1).schema).json(src)
+      .writeStream.option("checkpointLocation", s"$stg/_ckpt")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val t0 = System.nanoTime()
+        val up = loader.addBody(batch.repartition(3)).get
+        staged.set(up -> (System.nanoTime() - t0) / 1000000L)
+      }
+      .start().awaitTermination()
+    val (up, ms) = staged.get
+    assert(ms < 10000, s"addBody took $ms ms")
+    import scala.jdk.CollectionConverters._
+    val streamed = events.asScala.toSeq.collect { case ("uploadProgress", m) => m }
+    assert(streamed.size == up.files.size, s"${streamed.size} progress events, ${up.files.size} files")
+    assert(streamed.forall(m => m("index") == "0" && m("bytes").toLong > 0))
+    assert(streamed.map(_("bytes").toLong).sum == up.bytes.sum)
+  }
+
   test("constructor-time bodies stage immediately: 2 bodies + manifest = 3 staged (spec:108-115)") {
     val (whDir, stg) = (tmp(), tmp())
     val wh = new ParquetWarehouse(spark, whDir)

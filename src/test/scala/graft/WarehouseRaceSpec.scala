@@ -320,4 +320,36 @@ class WarehouseRaceSpec extends AnyFunSuite with SparkSuite {
     assert(rows(wh, t) == Set((2L, "x")))
     assert(!Files.exists(lock), "stolen lock must be released after commit")
   }
+
+  test("a reader polling the table while a writer commits many versions never loses it") {
+    import spark.implicits._
+    val root = tmp()
+    val t = TableRef("", "race5")
+    new ParquetWarehouse(spark, root).create(t, Seq((0L, "base")).toDF("id", "v"))
+    val commits = 40
+    val err = new AtomicReference[Throwable]
+    val writer = new Thread(() =>
+      try {
+        val wh = new ParquetWarehouse(spark, root)
+        for (i <- 1 to commits)
+          wh.load(LoadMode.Insert, t, Seq((i.toLong, "w")).toDF("id", "v"), "id")
+      } catch { case e: Throwable => err.set(e) })
+    // A second instance, as another process would read: every pointer
+    // read overlaps some swap's delete and rename.
+    val reader = new ParquetWarehouse(spark, root)
+    var reads = 0
+    writer.start()
+    while (writer.isAlive) {
+      assert(reader.exists(t), s"table lost after $reads reads")
+      // Retention keeps one version of grace: a writer two commits ahead
+      // may take the records a read began from, which is not this race.
+      try reader.table(t)
+      catch { case e: java.io.FileNotFoundException if e.getMessage.contains("is missing") => () }
+      reads += 1
+    }
+    writer.join()
+    assert(err.get() == null, s"writer failed: ${err.get()}")
+    assert(reader.table(t).count() == commits + 1)
+    assert(!Files.exists(Paths.get(s"$root/race5/._VERSION.crc")))
+  }
 }
