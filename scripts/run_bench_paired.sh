@@ -1,10 +1,11 @@
 #!/bin/bash
-# Paired interleaved A/B bench (the r14 #1 verdict ask): build a REFERENCE
-# commit's classes in a throwaway worktree, then run every gate query on
-# the reference build and the current build back-to-back in one wall-clock
-# window (two BenchServe JVMs, one query in flight at a time) so ambient
-# load cancels pairwise. Writes BENCH_PAIRED.json; exits nonzero on any
-# >=1.5x AND >=0.3s paired regression.
+# Paired interleaved A/B bench: build a REFERENCE commit's classes in a
+# throwaway copy of that commit (`git archive`, under $TMPDIR), then run
+# every gate query on the reference build and the current build
+# back-to-back in one wall-clock window (two BenchServe JVMs, one query
+# in flight at a time) so ambient load cancels pairwise. Writes
+# BENCH_PAIRED.json; exits nonzero on any >=1.5x AND >=0.3s paired
+# regression.
 #
 # Usage: scripts/run_bench_paired.sh [refCommit] [sfDir] [cpus] [only,...]
 #   refCommit default: the last round-close commit whose bench archive we
@@ -18,13 +19,13 @@ CPUS=${3:-$(nproc)}
 ONLY=${4:-}
 
 REFSHA=$(git rev-parse --short "$REF")
-WT=/tmp/graft_paired_ref_$REFSHA
+WT=${TMPDIR:-/tmp}/graft_paired_ref_$REFSHA
 
 sbt -batch compile > /dev/null
 
 if [ ! -d "$WT/target/scala-2.13/classes" ]; then
-  git worktree remove -f "$WT" 2>/dev/null || true
-  git worktree add -f "$WT" "$REFSHA"
+  rm -rf "$WT" && mkdir -p "$WT"
+  git archive "$REFSHA" | tar -x -C "$WT"
   # The server main may postdate the reference commit: compile it INTO
   # the reference build (harness-side patch, identical bytes both sides;
   # it only touches SparkEntry.queries + ToolSession, stable since r12).

@@ -13,7 +13,11 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS -Xmx8g \
+# Heap: SPARK_DRIVER_MEM (the variable build.sbt's forked JVMs read), else
+# half of MemTotal clamped to 2-8 GiB — the Tier-1 test sizing.
+HEAP=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
+exec java $ADD_OPENS -Xmx"$HEAP" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT" "${@:3}"

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.ParquetSchema
 
 /** Testdata table access — one parquet per table under the sf dir
   * (/root/repo/TESTDATA.md).
@@ -14,12 +15,17 @@ import org.apache.spark.sql.functions._
   * expects one type, so we canonicalize `ts` to TIMESTAMP_LTZ here — the
   * session timezone is pinned to UTC everywhere, so NTZ→LTZ is wall-clock
   * lossless and matches what DuckDB sees for the naive parquet values.
+  *
+  * The schema comes from one footer read on the driver
+  * ([[graft.io.ParquetSchema]]), so opening a table starts no Spark job;
+  * for `events` it is read after `nanosAsLong` is set, because the footer
+  * conversion honours that setting.
   */
 object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
+      val df = ParquetSchema.read(spark, s"$sfDir/$name.parquet")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -27,5 +33,5 @@ object Tables {
           df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
         case _ => df
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else ParquetSchema.read(spark, s"$sfDir/$name.parquet")
 }

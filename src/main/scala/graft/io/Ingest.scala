@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.json.GraftJsonSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -13,9 +14,8 @@ import org.apache.spark.sql.types.StructType
 object Ingest {
 
   /** NDJSON text (the reference's wire format) → rows. `schema=None` infers,
-    * like Redshift's `JSON 'auto'` column mapping; pass a schema for
-    * production paths. `ignoreCase` maps `columnMap 'auto ignorecase'`
-    * (types.ts:34) to case-insensitive resolution. */
+    * like Redshift's `JSON 'auto'` column mapping (one Spark job over
+    * `lines`); pass a schema for production paths. */
   def ndjson(
       spark: SparkSession,
       lines: Dataset[String],
@@ -24,10 +24,14 @@ object Ingest {
     schema.fold(r)(r.schema).json(lines)
   }
 
-  /** A literal NDJSON string body (the reference's `string` body type). */
+  /** A literal NDJSON string body (the reference's `string` body type).
+    * The body is already on the driver, so its schema is inferred there,
+    * by Spark's own JSON inference ([[GraftJsonSchema]]), and no Spark job
+    * starts: the schema and rows equal `spark.read.json` of the lines. */
   def ndjsonString(spark: SparkSession, body: String): DataFrame = {
     import spark.implicits._
-    ndjson(spark, spark.createDataset(body.split('\n').toIndexedSeq.filter(_.nonEmpty)))
+    val lines = body.split('\n').toIndexedSeq.filter(_.nonEmpty)
+    ndjson(spark, spark.createDataset(lines), Some(GraftJsonSchema.infer(spark, lines)))
   }
 
   /** A local iterator of rows (the reference's AsyncGenerator body,

@@ -237,7 +237,7 @@ object LayoutOps {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graftshim.GraftColumns.{column => toCol, expression}
-    spark.read.parquet(dir)
+    graft.io.ParquetSchema.read(spark, dir)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(toCol(new BloomFilterAggregate(
           expression(col(column).cast("long")),

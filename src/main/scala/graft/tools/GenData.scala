@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.ParquetSchema
 
 /** Deterministic synthetic-data generator for SCALE testing beyond the
   * driver-provided sf0.1 (TESTDATA.md): same schemas, same value
@@ -88,7 +89,7 @@ object GenData {
     def w(df: DataFrame, name: String, parts: Int): Unit = if (want(name)) {
       df.repartition(parts)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"[gendata] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+      println(s"[gendata] $name: ${ParquetSchema.read(spark, s"$out/$name.parquet").count()} rows")
     }
     val nCust = 15000L * mult
     val nSupp = 1000L * mult
@@ -100,9 +101,9 @@ object GenData {
     val nEmb = 2000L * mult
 
     // Fixed-cardinality dims: copy verbatim (region/nation don't scale).
-    if (want("region")) spark.read.parquet(s"$src/region.parquet")
+    if (want("region")) ParquetSchema.read(spark, s"$src/region.parquet")
       .write.mode("overwrite").parquet(s"$out/region.parquet")
-    if (want("nation")) spark.read.parquet(s"$src/nation.parquet")
+    if (want("nation")) ParquetSchema.read(spark, s"$src/nation.parquet")
       .write.mode("overwrite").parquet(s"$out/nation.parquet")
 
     val cust = spark.range(nCust).select(
@@ -225,7 +226,7 @@ object GenData {
           pmod(xxhash64(col("id"), j, lit(35)), lit(1048576L)).cast("double")
             / 1048576.0)).cast("long")).cast("string"))
     val wordAt: Column => Column = if (zipfVocab > 0) zipfWord else {
-      val vocab = spark.read.parquet(s"$src/documents.parquet")
+      val vocab = ParquetSchema.read(spark, s"$src/documents.parquet")
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .distinct().orderBy(col("w"))

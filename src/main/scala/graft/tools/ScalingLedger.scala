@@ -175,7 +175,7 @@ object ScalingLedger {
       // 100x ledger this row's near_dup sibling runs in.
       "simhash_recall_vc4" -> { (s, dir) =>
         val sig = graft.operators.DedupOps.simhash(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+            graft.io.ParquetSchema.read(s, s"$dir/documents.parquet"), "doc_id", "text")
           .localCheckpoint(true)
         def form(cap: Int, vcap: Int) =
           graft.operators.DedupOps.simhashCandidatesFromSig(sig, "doc_id",
@@ -201,7 +201,7 @@ object ScalingLedger {
       // BOTH caps forced so the admission cut fires at gate scale.)
       "simhash_recall_noesc" -> { (s, dir) =>
         val sig = graft.operators.DedupOps.simhash(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+            graft.io.ParquetSchema.read(s, s"$dir/documents.parquet"), "doc_id", "text")
           .localCheckpoint(true)
         def form(cap: Int) =
           graft.operators.DedupOps.simhashCandidatesFromSig(sig, "doc_id",
