@@ -57,6 +57,11 @@ final class Loader(
   private val formats = mutable.Buffer.empty[String]
   private val bodies = mutable.Buffer.empty[DataFrame]
   private var started = false
+  @volatile private var aborted = false
+
+  /** Spark job tag of this load's staging and load jobs. A tag adds to
+    * whatever job group the caller runs in (a `foreachBatch` stream's). */
+  private val jobTag = s"graft-load-$uuid"
 
   private def debug(msg: => String): Unit = if (cfg.debug) println(s"[graft] $msg")
 
@@ -77,7 +82,9 @@ final class Loader(
     * once the bridge has seen it (or, if the bus dropped it, once the bus
     * is drained). This holds whatever runs the write — a `foreachBatch`
     * callback inside another SQL execution included. A `json` body
-    * holding a map with non-string keys is rejected before staging. */
+    * holding a map with non-string keys is rejected before staging. A
+    * body whose write is under way or returns after [[abort]] is
+    * deleted, and `addBody` throws. */
   def addBody(df: DataFrame, format: String = "json"): Option[StagedUpload] =
     if (started) {
       debug(s"addBody after start ignored")
@@ -111,15 +118,20 @@ final class Loader(
       val up =
         try {
           sc.setLocalProperty(Loader.BodyTag, tag)
+          sc.addJobTag(jobTag)
           val up = staging.writeBody(df, idx, format, cfg.copySettings.gzip)
           GraftScheduler.post(sc, GraftScheduler.Marker(tag))
           if (!seen.await(Loader.BridgeWaitS, java.util.concurrent.TimeUnit.SECONDS))
             GraftScheduler.drainListenerBus(sc)
           up
         } finally {
+          sc.removeJobTag(jobTag)
           sc.setLocalProperty(Loader.BodyTag, null)
           sc.removeSparkListener(bridge)
+          if (aborted) staging.deleteAll(df)
         }
+      if (aborted) throw new IllegalStateException(
+        s"load of ${cfg.table.qualified} aborted while body $idx was staging")
       uploads += up
       formats += format
       bodies += df
@@ -139,9 +151,11 @@ final class Loader(
   def truncInsert(): String = start(LoadMode.TruncateInsert)
   def upsert(): String = start(LoadMode.Upsert)
 
-  /** Cancel + immediate staging cleanup (C2/C3). */
+  /** Cancel + immediate staging cleanup (C2/C3): cancels this load's
+    * running jobs, a body still staging included. */
   def abort(): Unit = {
-    spark.sparkContext.cancelJobGroup(s"graft-load-$uuid")
+    aborted = true
+    spark.sparkContext.cancelJobsWithTag(jobTag)
     staging.deleteAll(sampleDf)
     listener.onProgress("aborted", Map.empty)
   }
@@ -153,7 +167,7 @@ final class Loader(
     require(uploads.nonEmpty, "no files added") // X6 assert, :277
     started = true
     try {
-      spark.sparkContext.setJobGroup(s"graft-load-$uuid", s"graft load ${cfg.table}")
+      spark.sparkContext.addJobTag(jobTag)
       // Manifest: atomic multi-file visibility (L5). Failure propagates
       // (quirk C6 intentionally not replicated).
       val manifestPath = staging.writeManifest(sampleDf, uploads.toSeq)
@@ -201,7 +215,7 @@ final class Loader(
         listener.onError(e)
         wrapUp(success = false)
         throw e
-    } finally spark.sparkContext.clearJobGroup()
+    } finally spark.sparkContext.removeJobTag(jobTag)
   }
 
   // Constructor-time bodies (reference parity: `new RedshiftLoader(options)`

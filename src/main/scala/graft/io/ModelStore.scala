@@ -9,7 +9,7 @@ import graft.core.{LoadMode, TableRef}
   * 100 TB pipeline needs: BPE merge dictionaries, k-means coarse
   * quantizers, PQ codebooks and the coded ANN index are TRAINED STATE, not
   * query-time derivations. Each artifact lives as a versioned
-  * [[ParquetWarehouse]] table (atomic pointer swap, one-generation
+  * [[ParquetWarehouse]] table (atomic commit, one-generation
   * time-travel, vacuum), keyed by a metadata fingerprint of the corpus
   * files it was trained on — retrain happens exactly when the corpus
   * actually changed, never because a new session started.
@@ -126,17 +126,14 @@ final class ModelStore(spark: SparkSession, val root: String) {
     *
     * Concurrency: ONE logical writer per (store root, artifact name)
     * remains the contract ([[gc]]/[[ParquetWarehouse.vacuum]]'s
-    * single-maintainer rule; [[getOrTrain]] shares it), but since r19
-    * the meta row's read-modify-writes are additionally serialized
-    * CROSS-PROCESS by a side commit lock (`<name>__meta_rmw`) held
-    * around decide+accumulate and around the post-train publish —
-    * never across the train itself, which at 100 TB outlives
-    * [[ParquetWarehouse.LockStaleMs]] and would be reaped mid-hold.
-    * Two driver processes sharing a root can therefore still train
-    * redundantly (same deterministic artifact — wasted work), but the
-    * cadence baseline can no longer be torn: a serve-path churn
-    * accumulation cannot resurrect over a concurrent retrain's reset,
-    * and a retrain's publish re-reads under the lock before writing.
+    * single-maintainer rule), but each meta read-modify-write is a
+    * compare-and-set ([[ParquetWarehouse.update]]): it commits only while
+    * the meta version it decided on is live, else it decides again. Two
+    * processes sharing a root can still both train (the same
+    * deterministic artifact — wasted work), but a serve-path churn
+    * accumulation cannot resurrect over a concurrent retrain's reset, and
+    * a reset cannot drop churn observed in between. A steady serve writes
+    * nothing.
     *
     * Callers that gc must keep [[servedFingerprint]] in `liveFps` —
     * the served generation can be arbitrarily old by design. */
@@ -145,22 +142,6 @@ final class ModelStore(spark: SparkSession, val root: String) {
       train: => DataFrame): DataFrame = {
     require(driftFactor >= 1.0, s"driftFactor $driftFactor < 1 would retrain on shrink-only")
     val mr = metaRef(name)
-    // Cross-PROCESS serialization of the meta read-modify-write (the
-    // r18 doc'd single-writer residual, now insured): a SIDE commit
-    // lock — not `mr`'s own, which writeMeta's TruncateInsert takes
-    // internally and the file lock is not reentrant — held around the
-    // decide + serve-path accumulator update, and re-taken around the
-    // post-train publish, but NEVER across the train itself: trains
-    // run minutes at 100 TB and a >LockStaleMs (30 s) hold gets
-    // reaped, voiding the exclusion it pretended to buy. Two racing
-    // drivers can therefore still both TRAIN (same deterministic
-    // artifact — wasted work, the contract's documented cost), but
-    // the meta row can no longer be torn: a serve-path churn
-    // accumulation cannot resurrect over a concurrent retrain's
-    // reset, and a reset cannot lose churn a racer's serve observed
-    // in between (it re-reads under the lock before publishing).
-    val rmwRef = TableRef("models", s"${name}__meta_rmw")
-    def lockedRmw[A](body: => A): A = wh.withCommitLock(rmwRef, 30000L)(body)
     ModelStore.keyLock(s"$root/${mr.qualified}").synchronized {
       val liveKeys = stat.fileEntries
       // Fresh-identity bytes vs a baseline listing: live files whose
@@ -172,10 +153,10 @@ final class ModelStore(spark: SparkSession, val root: String) {
           liveKeys.iterator.filterNot(e => m.seenKeys.contains(e._1))
             .map(_._2).sum
         else 0L
-      // Phase 1, under the RMW lock: decide, and commit the serve-path
-      // accumulator update atomically with the read that justified it.
-      val decision: Option[String] = lockedRmw {
-        readMeta(mr) match {
+      // Phase 1: decide; the serve path's accumulator update commits
+      // only over the meta version that justified it.
+      val decision: Option[String] = wh.update(mr) { df =>
+        df.map(readMeta) match {
           // Serve the trained generation while growth AND accumulated
           // churn stay inside the drift budget (and the artifact still
           // exists — a gc'd or dropped artifact forces a fresh train).
@@ -188,25 +169,19 @@ final class ModelStore(spark: SparkSession, val root: String) {
             // Persist the churn accumulator + observed listing iff new
             // identities appeared (or the trigger is arming for the
             // first time) — steady state stays a read-only serve path.
-            if (newBytes > 0 || (m.seenKeys.isEmpty && liveKeys.nonEmpty))
-              writeMeta(mr, m.fp, m.trainedBytes, m.trainedFiles,
-                m.churn + newBytes, liveKeys)
-            Some(m.fp)
-          case _ => None
+            val write = newBytes > 0 || (m.seenKeys.isEmpty && liveKeys.nonEmpty)
+            (Option.when(write)(metaRows(m.fp, m.trainedBytes, m.trainedFiles,
+              m.churn + newBytes, liveKeys)), Some(m.fp))
+          case _ => (None, None)
         }
       }
       val serveFp = decision.getOrElse {
-        // Phase 2: train OUTSIDE the lock (fingerprint-keyed and
-        // idempotent — a racer training the same stat produces the
-        // same artifact), then publish the policy reset under it. A
-        // racer that already published this fingerprint makes the
-        // publish a skip; one that published a DIFFERENT generation is
-        // last-decider-wins, benign and self-correcting (the next
-        // call's drift check re-evaluates against whatever won).
+        // Phase 2: train (fingerprint-keyed and idempotent), then reset
+        // the policy row unless a racer already published this fingerprint.
         getOrTrain(name, stat.fp)(train)
-        lockedRmw {
-          if (!readMeta(mr).exists(_.fp == stat.fp))
-            writeMeta(mr, stat.fp, stat.bytes, stat.files, 0L, liveKeys)
+        wh.update(mr) { df =>
+          (Option.unless(df.map(readMeta).exists(_.fp == stat.fp))(
+            metaRows(stat.fp, stat.bytes, stat.files, 0L, liveKeys)), ())
         }
         stat.fp
       }
@@ -218,41 +193,35 @@ final class ModelStore(spark: SparkSession, val root: String) {
       trainedFiles: Long, churn: Long, seenKeys: Set[Long])
 
   /** Policy row + last observed file-identity keys from the `__meta`
-    * table — ONE table, one atomic TruncateInsert per update, so the
+    * table — ONE table, one atomic commit per update, so the
     * accumulator and its baseline listing can never be torn by a crash.
     * Legacy single-row (fp, bytes, files) metas read as churn 0 / no
     * keys (the r17 growth-only behavior until entries flow). */
-  private def readMeta(mr: TableRef): Option[Meta] =
-    if (!wh.exists(mr)) None
-    else {
-      val df = wh.table(mr)
-      if (!df.columns.contains("kind")) {
-        val r = df.select("fp", "bytes", "files").head()
-        Some(Meta(r.getString(0), r.getLong(1), r.getLong(2), 0L, Set.empty))
-      } else {
-        val p = df.filter(org.apache.spark.sql.functions.col("kind") === "policy")
-          .select("fp", "bytes", "files", "churn").head()
-        val keys = df.filter(org.apache.spark.sql.functions.col("kind") === "fkey")
-          .select("fkey").collect().map(_.getLong(0)).toSet
-        Some(Meta(p.getString(0), p.getLong(1), p.getLong(2), p.getLong(3), keys))
-      }
+  private def readMeta(df: DataFrame): Meta =
+    if (!df.columns.contains("kind")) {
+      val r = df.select("fp", "bytes", "files").head()
+      Meta(r.getString(0), r.getLong(1), r.getLong(2), 0L, Set.empty)
+    } else {
+      val p = df.filter(org.apache.spark.sql.functions.col("kind") === "policy")
+        .select("fp", "bytes", "files", "churn").head()
+      val keys = df.filter(org.apache.spark.sql.functions.col("kind") === "fkey")
+        .select("fkey").collect().map(_.getLong(0)).toSet
+      Meta(p.getString(0), p.getLong(1), p.getLong(2), p.getLong(3), keys)
     }
 
-  private def writeMeta(mr: TableRef, fp: String, bytes: Long, files: Long,
-      churn: Long, seen: Seq[(Long, Long)]): Unit = {
+  private def metaRows(fp: String, bytes: Long, files: Long, churn: Long,
+      seen: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val rows = ("policy", fp, bytes, files, churn, 0L) +:
-      seen.map { case (k, _) => ("fkey", fp, 0L, 0L, 0L, k) }
-    val metaDf = rows.toDF("kind", "fp", "bytes", "files", "churn", "fkey")
-    if (wh.exists(mr)) wh.load(LoadMode.TruncateInsert, mr, metaDf, "fkey")
-    else wh.create(mr, metaDf)
+    (("policy", fp, bytes, files, churn, 0L) +:
+      seen.map { case (k, _) => ("fkey", fp, 0L, 0L, 0L, k) })
+      .toDF("kind", "fp", "bytes", "files", "churn", "fkey")
   }
 
   /** Fingerprint the drift policy currently serves for `name` (None
     * before the first train). Include in [[gc]]'s `liveFps`: the served
     * generation is old by design between retrain points. */
   def servedFingerprint(name: String): Option[String] =
-    readMeta(metaRef(name)).map(_.fp)
+    wh.update(metaRef(name))(df => (None, df.map(readMeta(_).fp)))
 
   /** Retained version ids of an artifact (oldest first). */
   def versions(name: String, corpusFp: String): Seq[String] =
@@ -282,9 +251,9 @@ final class ModelStore(spark: SparkSession, val root: String) {
     * already holds a lazy frame over a table gc is about to drop. The
     * per-key lock plus the in-lock re-checks below close the two
     * in-JVM races the lock alone did not: a trainer that (re)created
-    * the table after our listing (its `_VERSION` pointer mtime
-    * postdates gc start → skip) and a concurrent drop (pointer gone →
-    * skip, nothing to reclaim). */
+    * the table after our listing (its live record's mtime postdates gc
+    * start → skip) and a concurrent drop (no live version → skip,
+    * nothing to reclaim). */
   def gc(liveFps: Set[String],
       skewMarginMs: Long = ModelStore.GcSkewMarginMs): ModelStore.GcReport = {
     val gcStart = System.currentTimeMillis()
@@ -298,10 +267,10 @@ final class ModelStore(spark: SparkSession, val root: String) {
         if (!liveFps.contains(fp)) {
           ModelStore.keyLock(s"$root/${t.qualified}").synchronized {
             // Re-check under the lock: only drop a table whose live
-            // pointer still exists AND predates this gc pass by a clear
-            // margin. getOrTrain commits the pointer last
-            // (create-then-swap), so any concurrently-created generation
-            // has commit time >= gcStart — but the pointer's mtime comes
+            // version still exists AND predates this gc pass by a clear
+            // margin. getOrTrain commits the record last
+            // (after its data), so any concurrently-created generation
+            // has commit time >= gcStart — but the record's mtime comes
             // from the STORE's clock (NameNode, object store) at
             // whatever granularity it keeps (whole seconds on some
             // filesystems), while gcStart is this JVM's clock. The
@@ -338,7 +307,7 @@ object ModelStore {
       skippedConcurrent: Seq[(String, String)])
 
   /** Clock-skew margin for [[ModelStore.gc]]'s drop-safety re-check:
-    * the version pointer's mtime is assigned by the storage system's
+    * the live record's mtime is assigned by the storage system's
     * clock at its granularity; a generation committed within this
     * margin of gc start is treated as concurrent and kept. One minute
     * covers second-granularity filesystems plus realistic NTP drift. */

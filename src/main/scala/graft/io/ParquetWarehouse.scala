@@ -38,37 +38,41 @@ import graft.core.{LoadMode, TableRef}
   * [[ParquetWarehouse.FoldDeletedShare]] of the stored rows.
   *
   * Writers are OPTIMISTIC, the reference's X2 philosophy (core.ts:49-53
-  * retries on Redshift serialization failure rather than locking): the
-  * record write and `_VERSION` pointer swap run in a short
-  * create-exclusive `_COMMIT_LOCK` section (data jobs run outside it),
-  * and only while the live version is still the one the writer started
-  * from. A loser gets a loud [[ParquetWarehouse.ConcurrentWriteException]];
-  * [[loadWithRetry]] re-commits only a record against the new current,
-  * since a load's files do not depend on the version it lands on.
-  * Compaction and the fold read a pinned version and never re-commit.
+  * retries on Redshift serialization failure rather than locking), and
+  * take no lock: version n commits by creating its record exclusively,
+  * only while the live version is still the one the writer started
+  * from (data jobs run before). A loser gets a loud
+  * [[ParquetWarehouse.ConcurrentWriteException]]; [[loadWithRetry]]
+  * re-commits only a record against the new current, since a load's
+  * files do not depend on the version it lands on. Compaction and the
+  * fold read a pinned version and never re-commit. `_VERSION` is only a
+  * hint where readers start looking for the newest record.
   *
   * Retention is by reference: after version n commits, the commits that
   * version n-2 referenced and neither n-1 (the reader-grace version) nor
-  * n does are deleted, with the records no retained version needs. A
-  * crashed writer's unreferenced files wait for [[vacuum]]. */
+  * n does are deleted, and the records no retained version needs are
+  * emptied. A crashed writer's unreferenced files wait for [[vacuum]]. */
 final class ParquetWarehouse(spark: SparkSession, root: String) {
   import ParquetWarehouse._
 
   /** One handle per warehouse (each `newHadoopConf` copies the whole Hadoop configuration). */
   private lazy val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Metadata (records, `_VERSION`, `_VERSION.next`, `_PARTITIONING`) has
-    * no `.crc` sibling: Hadoop opens and swaps a file and its checksum in
-    * separate steps, so a reader racing a pointer swap could fail the check. */
+  /** Metadata (records, `_VERSION`, `_PARTITIONING`) has no `.crc`
+    * sibling: Hadoop opens and replaces a file and its checksum in
+    * separate steps, so a reader racing an overwrite could fail the check. */
   private lazy val meta = fs match { case c: ChecksumFileSystem => c.getRawFileSystem; case f => f }
 
   private def tableDir(t: TableRef): String =
     if (t.schema.isEmpty) s"$root/${t.table}" else s"$root/${t.schema}/${t.table}"
 
-  private def versionFile(t: TableRef) = new Path(s"${tableDir(t)}/_VERSION")
-  private def nextVersionFile(t: TableRef) = new Path(s"${tableDir(t)}/_VERSION.next")
+  private def hintFile(t: TableRef) = new Path(s"${tableDir(t)}/_VERSION")
   private def partitionFile(t: TableRef) = new Path(s"${tableDir(t)}/_PARTITIONING")
-  private def recordFile(t: TableRef, v: Long) = new Path(s"${tableDir(t)}/_log/$v")
+  private def logDir(t: TableRef) = new Path(s"${tableDir(t)}/_log")
+  private def recordFile(t: TableRef, v: Long) = new Path(logDir(t), v.toString)
+  /** A unique name in `_log` that no reader takes for a record. */
+  private def tempFile(t: TableRef, v: Long) =
+    new Path(logDir(t), s".$v.${java.util.UUID.randomUUID().toString.take(8)}")
 
   private def readText(f: Path): Option[String] =
     try {
@@ -87,48 +91,66 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
 
-  private def readPointer(f: Path): Option[Long] =
-    readText(f).flatMap(_.trim.toLongOption)
-
-  /** `_VERSION`, else the version a swap cut after deleting `_VERSION`
-    * left in `_VERSION.next` (written only once its record is complete;
-    * it counts only if that record exists). `_VERSION` is read again
-    * last, so a swap finishing meanwhile wins. */
+  /** The live version: the newest record. `_VERSION` is a hint written
+    * after each commit; a reader starts from it (from the newest name in
+    * `_log` when it is missing, torn, or names no record) and steps
+    * forward while the next record exists. No number is freed while
+    * writers run, so the records above the hint are contiguous. */
   private def currentVersion(t: TableRef): Option[Long] =
-    readPointer(versionFile(t)).orElse {
-      val next = readPointer(nextVersionFile(t)).filter(v => meta.exists(recordFile(t, v)))
-      readPointer(versionFile(t)).orElse(next)
-    }
+    readText(hintFile(t)).flatMap(_.trim.toLongOption).filter(v => meta.exists(recordFile(t, v)))
+      .orElse(try meta.listStatus(logDir(t)).flatMap(_.getPath.getName.toLongOption).maxOption
+        catch { case _: java.io.FileNotFoundException => None })
+      .map(Iterator.iterate(_)(_ + 1).dropWhile(v => meta.exists(recordFile(t, v + 1))).next())
 
-  /** Write `_VERSION.next`, delete `_VERSION`, rename (under the commit
-    * lock): at every instant `_VERSION` or [[currentVersion]]'s fallback
-    * names a complete version. A swap cut by a crash is rolled forward
-    * first, so the overwrite never leaves the table without a pointer. */
-  private def setVersion(t: TableRef, v: Long): Unit = {
-    val tmp = nextVersionFile(t)
-    if (!meta.exists(versionFile(t)) && currentVersion(t).isDefined)
-      meta.rename(tmp, versionFile(t))
-    writeText(tmp, v.toString)
-    meta.delete(versionFile(t), false)
-    meta.rename(tmp, versionFile(t)) // atomic pointer swap on HDFS-like FS
+  /** Publish `text` as record `v` unless a record `v` exists — the
+    * commit: it is written under a temporary name, then linked to `v` on
+    * a local path (`link(2)` fails on an existing name) or renamed to it
+    * elsewhere (HDFS refuses to rename onto an existing name). False:
+    * `v` is taken. */
+  private def publish(t: TableRef, v: Long, text: String): Boolean = {
+    val (tmp, rec) = (tempFile(t, v), recordFile(t, v))
+    writeText(tmp, text)
+    localPath(rec) match {
+      case Some(p) =>
+        try { java.nio.file.Files.createLink(p, localPath(tmp).get); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        finally meta.delete(tmp, false)
+      case None => meta.rename(tmp, rec) || { meta.delete(tmp, false); false }
+    }
+  }
+
+  /** Empty record `v`, keeping its number taken: an empty record is not
+    * retained. On a local path an empty file replaces it by rename, so a
+    * reader that already opened the record still reads all of it. */
+  private def empty(t: TableRef, v: Long): Unit = {
+    val rec = recordFile(t, v)
+    localPath(rec) match {
+      case Some(p) =>
+        val tmp = tempFile(t, v)
+        writeText(tmp, "")
+        java.nio.file.Files.move(localPath(tmp).get, p,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      case None => writeText(rec, "")
+    }
   }
 
   def exists(t: TableRef): Boolean = currentVersion(t).isDefined
 
-  /** Modification time of the live version POINTER as the filesystem
-    * reports it (None: no live pointer). The pointer is committed last,
-    * so this is the current version's commit time — the signal
-    * [[graft.io.ModelStore.gc]] keys its drop-safety re-check on. */
+  /** Modification time of the live version's record as the filesystem
+    * reports it (None: no live version) — the version's commit time, the
+    * signal [[graft.io.ModelStore.gc]] keys its drop-safety re-check on. */
   def versionMtime(t: TableRef): Option[Long] =
-    // One stat: a pointer dropped concurrently reads as None (the
-    // caller's skip signal) instead of aborting the caller's sweep.
-    try Some(meta.getFileStatus(versionFile(t)).getModificationTime)
-    catch { case _: java.io.FileNotFoundException => None }
+    // A table dropped concurrently reads as None (the caller's skip
+    // signal) instead of aborting the caller's sweep.
+    currentVersion(t).flatMap { v =>
+      try Some(meta.getFileStatus(recordFile(t, v)).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
+    }
 
   /** Partition columns declared at table creation (Hive-style layout —
     * the 100 TB data-skipping lever: a filter on a partition column prunes
-    * whole directories before any IO). Persisted next to the version
-    * pointer so every later load/compact keeps the layout. */
+    * whole directories before any IO). Persisted next to the records
+    * so every later load/compact keeps the layout. */
   def partitioning(t: TableRef): Seq[String] =
     readText(partitionFile(t)).toSeq.flatMap(_.trim.split(',')).filter(_.nonEmpty)
 
@@ -138,8 +160,9 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     * `dir<TAB>seq<TAB>key<TAB>file...`, each file `[k=v/...]i:bytes:rows`
     * naming `[k=v/...]dir/dir-i.parquet`. */
   private def record(t: TableRef, v: Long): (Long, Option[StructType], Seq[DataFile]) = {
-    val lines = readText(recordFile(t, v)).getOrElse(throw new java.io.FileNotFoundException(
-      s"${t.qualified}: record of version $v is missing")).split('\n').toSeq
+    val lines = readText(recordFile(t, v)).filter(_.nonEmpty).getOrElse(
+      throw new java.io.FileNotFoundException(s"${t.qualified}: record of version $v is missing"))
+      .split('\n').toSeq
     val schema = lines.collectFirst { case l if l.startsWith("S\t") =>
       DataType.fromJson(l.drop(2)).asInstanceOf[StructType] }
     val files = lines.drop(1).filterNot(_.startsWith("S\t")).flatMap { l =>
@@ -234,178 +257,6 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     cached.map { case (f, keys) => f -> keys.getOrElse(fresh(f.name)) }
   }
 
-  /** Run `body` holding the table's create-exclusive `_COMMIT_LOCK` —
-    * the millisecond critical section that makes check-pointer-then-swap
-    * atomic (CONTRACTS §11). Three hardenings over naive locking:
-    *
-    *   - **O_EXCL on local FS**: Hadoop's local `create(…, overwrite =
-    *     false)` is check-then-create, so `file:`/schemeless paths use
-    *     `java.nio.Files.createFile`; HDFS-like filesystems keep
-    *     `fs.create` (atomic at the namenode).
-    *   - **Ownership token**: each acquisition writes a unique token and
-    *     re-reads it before entering; release re-verifies it and renames
-    *     to a grave before deleting, so a holder whose lock was stolen
-    *     mid-hold does not take down the thief's.
-    *   - **Reap by per-incarnation ticket**: a lock older than
-    *     [[ParquetWarehouse.LockStaleMs]] is a crashed writer's; its
-    *     incarnation (mtime) elects exactly one reaper through an O_EXCL
-    *     `_COMMIT_LOCK.reap.<mtime>` ticket, and the winner re-stats
-    *     right before deleting — a fresh lock's mtime never equals a
-    *     ≥30 s corpse's, so live locks are structurally un-reapable.
-    *
-    * Younger contention waits briefly, then fails loudly (retryable
-    * [[ParquetWarehouse.ConcurrentWriteException]]) rather than wedging. */
-  private[graft] def withCommitLock[A](t: TableRef,
-      waitBudgetMs: Long = 2000)(body: => A): A =
-    withCommitLockFenced(t, waitBudgetMs)(_ => body)
-
-  /** [[withCommitLock]] handing the body a FENCE: `verifyHeld()` re-reads
-    * the lock token and throws a retryable
-    * [[ParquetWarehouse.ConcurrentWriteException]] if it is gone. With
-    * >LockStaleMs clock skew between nodes a live hold can be reaped and
-    * a second writer admitted; calling the fence immediately before the
-    * pointer write shrinks the double-commit window from the rest of the
-    * critical section to the metadata-read-to-rename gap. */
-  private[graft] def withCommitLockFenced[A](t: TableRef,
-      waitBudgetMs: Long = 2000)(body: (() => Unit) => A): A = {
-    val lock = new Path(s"${tableDir(t)}/_COMMIT_LOCK")
-    fs.mkdirs(new Path(tableDir(t)))
-    val token = java.util.UUID.randomUUID().toString
-    def trace(msg: => String): Unit =
-      if (ParquetWarehouse.LockTrace) System.err.println(
-        f"[lock ${System.nanoTime()}%d ${Thread.currentThread().getName}%s ${token.take(6)}%s] $msg")
-    var acquired = false
-    var waitedMs = 0L
-    while (!acquired) {
-      if (tryCreateExclusive(lock, token) && readLockToken(lock).contains(token)) {
-        acquired = true
-        trace("ACQUIRED")
-      }
-      else {
-        // ONE stat serves both the staleness decision and the reap
-        // ticket's incarnation identity: a second stat could hit a fresh
-        // lock that a concurrent reap+create put in the corpse's place.
-        val statMtime = try Some(fs.getFileStatus(lock).getModificationTime)
-        // Lock vanished between create-fail and stat (owner released):
-        // no steal, immediate re-try of the create.
-        catch { case _: java.io.FileNotFoundException => None }
-        val age = statMtime.fold(0L)(m => System.currentTimeMillis() - m)
-        if (age > ParquetWarehouse.LockStaleMs) {
-          // Reap by PER-INCARNATION TICKET, never by touching a maybe-
-          // live path (stat-then-delete and rename-restore steals both
-          // yanked live locks in the stampede spec): exactly one ticket
-          // winner per incarnation re-stats and deletes only the corpse;
-          // a crashed winner's ticket is itself reaped by age.
-          val mtime = statMtime.get
-          var won = false
-          if (mtime > 0) {
-            trace(s"REAP-TRY mtime=$mtime")
-            val ticket = new Path(s"${tableDir(t)}/_COMMIT_LOCK.reap.$mtime")
-            // The election goes through the lock's own O_EXCL create and
-            // token re-read: Hadoop's local create is check-then-create,
-            // and two winners would reopen the two-holders race.
-            won = tryCreateExclusive(ticket, token) &&
-              readLockToken(ticket).contains(token)
-            if (!won) {
-              // Ticket taken: reap a crashed winner's stale ticket so
-              // incarnation `mtime` cannot wedge forever.
-              try {
-                val tAge = System.currentTimeMillis() -
-                  fs.getFileStatus(ticket).getModificationTime
-                if (tAge > ParquetWarehouse.LockStaleMs)
-                  fs.delete(ticket, false)
-              } catch { case _: java.io.IOException => () }
-            }
-            if (won) try {
-              val cur = try Some(fs.getFileStatus(lock).getModificationTime)
-                catch { case _: java.io.FileNotFoundException => None }
-              trace(s"REAP-WON mtime=$mtime cur=$cur -> ${if (cur.contains(mtime)) "DELETE" else "abort"}")
-              if (cur.contains(mtime)) fs.delete(lock, false)
-            } finally {
-              try fs.delete(ticket, false)
-              catch { case _: java.io.IOException => () }
-            }
-          }
-          // Losing the ticket race (or a 0-mtime stat artifact) polls
-          // under the same wait budget instead of hot-spinning.
-          if (!won) {
-            if (waitedMs >= waitBudgetMs)
-              throw new ConcurrentWriteException(
-                s"commit lock on ${t.qualified} stale for ${age} ms but " +
-                  s"its reap is contended after ${waitedMs} ms ($lock) — " +
-                  "another waiter is reaping; retry")
-            Thread.sleep(50); waitedMs += 50
-          }
-        } else if (waitedMs >= waitBudgetMs)
-          throw new ConcurrentWriteException(
-            s"commit lock on ${t.qualified} held for ${waitedMs} ms by a " +
-              s"live writer ($lock) — concurrent load in progress; retry")
-        else { Thread.sleep(50); waitedMs += 50 }
-      }
-    }
-    // Release by token-check then ATOMIC RENAME to a private grave,
-    // post-verifying the grave token before the delete: a bare
-    // check-then-delete is a TOCTOU, and the rename claims whatever sits
-    // at the lock path atomically — a yanked thief lock is renamed back.
-    val verifyHeld: () => Unit = () =>
-      if (!readLockToken(lock).contains(token))
-        throw new ConcurrentWriteException(
-          s"commit-lock fence failed on ${t.qualified}: this holder's " +
-            s"token is no longer at $lock (the hold exceeded " +
-            s"${ParquetWarehouse.LockStaleMs} ms and was reaped, or the " +
-            "lock was externally removed) — aborting before the pointer " +
-            "write; re-run the load")
-    try body(verifyHeld) finally {
-      trace(s"RELEASE token-at-path=${readLockToken(lock).map(_.take(6))}")
-      if (readLockToken(lock).contains(token)) {
-        val grave =
-          new Path(s"${tableDir(t)}/_COMMIT_LOCK.rel.${token.take(8)}")
-        try {
-          if (fs.rename(lock, grave)) {
-            if (readLockToken(grave).contains(token))
-              fs.delete(grave, false)
-            else if (!fs.rename(grave, lock)) fs.delete(grave, false)
-          }
-        } catch { case _: java.io.IOException => () }
-      }
-    }
-  }
-
-  /** Create the lock file exclusively and stamp it with `token`. Local
-    * paths go through java.nio (O_EXCL); remote ones through the
-    * filesystem's own create-exclusive. False = already held. */
-  private def tryCreateExclusive(lock: Path, token: String): Boolean = localPath(lock) match {
-    case Some(p) =>
-      try java.nio.file.Files.createFile(p)
-      catch { case _: java.io.IOException => return false }
-      // The create was O_EXCL, so the file is provably OURS until the
-      // token lands — a failed stamp must not orphan an unowned fresh
-      // lock that stalls every writer until the 30 s stale steal
-      // (ADVICE r15): delete best-effort and report contention.
-      try { java.nio.file.Files.write(p, token.getBytes("UTF-8")); true }
-      catch { case _: java.io.IOException =>
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: java.io.IOException => () }
-        false
-      }
-    case None =>
-      // Remote FS: fs.create(overwrite = false) is atomic at the
-      // namenode, so a created-but-unstamped lock is likewise ours to
-      // reap on a failed token write.
-      val out =
-        try fs.create(lock, false)
-        catch { case _: java.io.IOException => return false }
-      try { try out.write(token.getBytes("UTF-8")) finally out.close(); true }
-      catch { case _: java.io.IOException =>
-        try fs.delete(lock, false)
-        catch { case _: java.io.IOException => () }
-        false
-      }
-  }
-
-  private def readLockToken(lock: Path): Option[String] =
-    try readText(lock) catch { case _: java.io.IOException => None }
-
   /** Write `df` as the files of one new commit directory, renamed
     * `<dir>-<i>.parquet` so a record names them by index and every data
     * file name is unique in the table. A partitioned table keeps the
@@ -424,7 +275,6 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(out.toString)
       def leaves(p: Path): Seq[FileStatus] =
         fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
-      val conf = spark.sessionState.newHadoopConf()
       val files = leaves(out).filter(_.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.toString).zipWithIndex.map { case (st, i) =>
           val sub = st.getPath.getParent.toUri.getPath.drop(out.toUri.getPath.length + 1)
@@ -433,7 +283,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
           if (sub.nonEmpty) fs.mkdirs(to.getParent)
           fs.rename(st.getPath, to)
           val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(to, conf))
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(to, fs.getConf))
           val rows = try reader.getRecordCount finally reader.close()
           DataFile(path, st.getLen, rows, -1L, "")
         }
@@ -450,13 +300,15 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     dirs.foreach(d => try fs.delete(new Path(tableDir(t), d), true)
       catch { case _: java.io.IOException => () })
 
-  /** Publish `w` as version n = live + 1 under the commit lock, only if
-    * the live version still equals `expect` (None = expected absent): a
-    * full record (`full`, or the first version) replaces every file, any
-    * other adds `w`'s files, their `key` deleting older rows. A lost race
-    * throws `lost` and, past `retries` re-commits against the new live
-    * version, discards `w`. Outside the lock, the commit directories and
-    * records that fell out of retention are deleted. */
+  /** Publish `w` as version n = live + 1 by creating record n
+    * exclusively, only if the live version still equals `expect` (None =
+    * expected absent): a full record (`full`, or the first version)
+    * replaces every file, any other adds `w`'s files, their `key`
+    * deleting older rows. A lost race — the live version moved, or
+    * another writer took n first — throws `lost` and, past `retries`
+    * re-commits against the new live version, discards `w`. Then the
+    * commit directories that fell out of retention are deleted and their
+    * records emptied. */
   private def commit(t: TableRef, w: Written, expect0: Option[Long], full: Boolean,
       key: String, lost: String, retries: Int = 0,
       sleeper: Long => Unit = Thread.sleep): Snapshot = {
@@ -464,13 +316,18 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     var attempt = 0
     var done: Option[(Option[Snapshot], Snapshot)] = None
     while (done.isEmpty) {
-      try done = Some(withCommitLockFenced(t) { fence =>
+      try {
         val cur = currentVersion(t)
-        if (cur != expect) throw new ConcurrentWriteException(
+        def conflict(live: Option[Long]) = new ConcurrentWriteException(
           s"$lost on ${t.qualified}: computed from ${expect.getOrElse("<absent>")} " +
-            s"but live version is ${cur.getOrElse("<absent>")} — a concurrent writer " +
+            s"but live version is ${live.getOrElse("<absent>")} — a concurrent writer " +
             "committed first; re-run the load against the new current")
-        val prev = cur.map(snapshot(t, _))
+        if (cur != expect) throw conflict(cur)
+        // Two commits landing meanwhile may empty the records just read.
+        val prev = try cur.map(snapshot(t, _)) catch {
+          case _: java.io.FileNotFoundException if currentVersion(t) != cur =>
+            throw conflict(currentVersion(t))
+        }
         val n = cur.fold(0L)(_ + 1)
         // Files this commit wrote take its version (a rollback restates
         // files with theirs); the first version deletes nothing.
@@ -482,17 +339,13 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
               w.schema.filterNot(f => p.schema.fieldNames.contains(f.name))), p.files ++ added)
           case _ => Snapshot(n, n, w.schema, added)
         }
-        writeText(recordFile(t, n),
-          if (next.base == n) encode(n, Some(next.schema), next.files)
-          else encode(next.base, Some(next.schema).filter(_ != prev.get.schema), added))
-        // Fence immediately before the pointer write: if this hold was
-        // reaped (>LockStaleMs, cross-node skew), abort retryably
-        // instead of racing the usurper's CAS (withCommitLockFenced).
-        fence()
-        setVersion(t, n)
-        (prev, next)
-      })
-      catch { case e: ConcurrentWriteException =>
+        if (!publish(t, n,
+            if (next.base == n) encode(n, Some(next.schema), next.files)
+            else encode(next.base, Some(next.schema).filter(_ != prev.get.schema), added)))
+          throw conflict(Some(n))
+        writeText(hintFile(t), n.toString)
+        done = Some((prev, next))
+      } catch { case e: ConcurrentWriteException =>
         if (attempt >= retries) {
           if (w.dir.nonEmpty) discard(t, w.dir +: w.files.map(_.parent))
           throw e
@@ -504,14 +357,16 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     }
     val (prev, next) = done.get
     // Retention: only a full record drops files, so version n-2's
-    // commits can leave the retained set only when n-1 is full.
+    // commits can leave the retained set only when n-1 is full. Its
+    // records are emptied, not deleted: a writer still working from an
+    // older version must find their numbers taken.
     prev.filter(p => p.base == p.version && p.version > 0).foreach { p =>
       val old = try Some(snapshot(t, p.version - 1))
         catch { case _: java.io.FileNotFoundException => None }
       old.foreach { o =>
         val dead = o.commits -- p.commits -- next.commits
         discard(t, o.files.filter(f => dead(f.commit)).map(_.parent).distinct)
-        (o.base until p.version).foreach(v => meta.delete(recordFile(t, v), false))
+        (o.base until p.version).foreach(empty(t, _))
       }
     }
     next
@@ -549,7 +404,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       if (upsert) idField else "", if (mode == LoadMode.Insert) "lost append" else "lost update",
       maxRetries, sleeper)
     val deleting = next.files.filter(_.key.nonEmpty).map(_.rows).sum
-    // The fold: a version swap like any other, so a lost race only
+    // The fold: a commit like any other, so a lost race only
     // leaves the deletes to the next upsert's check.
     if (upsert && deleting > FoldDeletedShare * next.files.map(_.rows).sum)
       try rewrite(t, next)(identity)
@@ -561,12 +416,12 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     * time-travel horizon is one version back. */
   def versions(t: TableRef): Seq[String] =
     currentVersion(t).toSeq.flatMap(c => Seq(c - 1, c)).filter { v =>
-      v >= 0 && (try meta.exists(recordFile(t, record(t, v)._1))
+      v >= 0 && (try { snapshot(t, v); true }
         catch { case _: java.io.FileNotFoundException => false })
     }.map(_.toString)
 
   /** Time-travel read of a retained version (ids from [[versions]]); the
-    * CURRENT pointer is untouched — this is a read, not a rollback. */
+    * live version is untouched — this is a read, not a rollback. */
   def tableAt(t: TableRef, version: String): DataFrame = {
     require(versions(t).contains(version),
       s"version $version not retained for ${t.qualified} " +
@@ -587,12 +442,26 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     commit(t, Written("", back.schema, back.files), Some(cur), full = true, "", "lost update")
   }
 
+  /** Read-modify-write of a whole table as a compare-and-set: `f` gets
+    * the rows of the live version (None: no table) and returns the rows
+    * to replace them with (None: keep them) and its result. The
+    * replacement commits only if that version is still live; otherwise
+    * `f` runs again on the version that won. */
+  def update[A](t: TableRef)(f: Option[DataFrame] => (Option[DataFrame], A)): A = {
+    val cur = currentVersion(t)
+    val (rows, a) = f(cur.map(v => read(t, snapshot(t, v))))
+    try { rows.foreach(df => commit(t, writeFiles(t, df), cur, full = true, "", "lost update")); a }
+    catch { case _: ConcurrentWriteException => update(t)(f) }
+  }
+
   /** VACUUM (the `VACUUM ... RETAIN 0` analog, run offline like
     * [[graft.io.ModelStore.gc]]): delete every commit directory the live
     * version does not reference — the previous version's, and any a
-    * crashed writer left — and every record before the live version's
-    * base. The previous version stays readable only when it references
-    * nothing the live one dropped (the live version builds on it). */
+    * crashed writer left — every record before the live version's base,
+    * and every temporary record a crashed writer left. The previous
+    * version stays readable only when it references nothing the live one
+    * dropped (the live version builds on it). The only place a record
+    * number is freed: offline, no writer can still target one. */
   def vacuum(t: TableRef): Unit = {
     val s = live(t)
     def sweep(p: Path): Unit = fs.listStatus(p).filter(_.isDirectory).map(_.getPath).foreach { d =>
@@ -601,9 +470,13 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
       else if (!n.startsWith("_") && !n.startsWith(".") && !s.commits(n)) fs.delete(d, true)
     }
     sweep(new Path(tableDir(t)))
-    meta.listStatus(new Path(s"${tableDir(t)}/_log")).map(_.getPath.getName)
-      .filter(_.toLongOption.exists(_ < s.base))
-      .foreach(n => meta.delete(new Path(s"${tableDir(t)}/_log/$n"), false))
+    // The hint first, so it never names a freed record; oldest first, so
+    // a crash leaves the remaining records contiguous.
+    writeText(hintFile(t), s.version.toString)
+    val names = meta.listStatus(logDir(t)).map(_.getPath.getName)
+    (names.flatMap(_.toLongOption).filter(_ < s.base).sorted.map(_.toString) ++
+      names.filter(_.toLongOption.isEmpty))
+      .foreach(n => meta.delete(new Path(logDir(t), n), false))
   }
 
   /** Rewrite version `s` through `f` as a full version, committed only
@@ -626,7 +499,7 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
     rewrite(t, live(t))(graft.operators.LayoutOps.zorder(_, col(x), col(y), nFiles, bits))
 
   /** The directory under which every live data file lies, or None when
-    * the table has no live pointer. It also holds files waiting for
+    * the table has no live version. It also holds files waiting for
     * retention; [[liveFiles]] lists exactly the live ones. */
   def currentDataPath(t: TableRef): Option[String] =
     currentVersion(t).map(_ => tableDir(t))
@@ -641,9 +514,9 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
 
   def drop(t: TableRef): Unit = { fs.delete(new Path(tableDir(t)), true); () }
 
-  /** Tables of a schema: child directories with a live version pointer
+  /** Tables of a schema: child directories with a live version
     * (half-created or foreign directories are ignored). One FS list plus
-    * one pointer read per child. */
+    * one hint read and two stats per child. */
   def tables(schema: String): Seq[TableRef] = {
     val dir = new Path(if (schema.isEmpty) root else s"$root/$schema")
     if (!fs.exists(dir)) Seq.empty
@@ -655,20 +528,11 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
 }
 
 object ParquetWarehouse {
-  /** Dev-only lock tracing (env GRAFT_LOCK_TRACE=1). */
-  private[graft] val LockTrace: Boolean =
-    sys.env.get("GRAFT_LOCK_TRACE").contains("1")
-
-  /** A version swap lost a concurrent-writer race: the live version is
-    * no longer the one the operation started from. Retryable, like
+  /** A commit lost a concurrent-writer race: the live version is no
+    * longer the one the operation started from. Retryable, like
     * Redshift's serializable-isolation failure (the X2 loop). */
   final class ConcurrentWriteException(msg: String)
     extends RuntimeException(msg)
-
-  /** Age past which a `_COMMIT_LOCK` is presumed crashed and stolen: the
-    * lock only ever guards a sub-second record write and pointer swap,
-    * never a data write, so 30 s is 2+ orders above any live hold. */
-  val LockStaleMs: Long = 30000L
 
   /** Share of stored rows past which the rows of delete-carrying files
     * trigger the fold: Redshift's VACUUM DELETE reclaims by default until

@@ -8,6 +8,14 @@ import graft.core._
 import graft.exec._
 import graft.io.{Ingest, Manifest, ParquetWarehouse}
 
+/** Executor-side rendezvous for the abort spec: the parking UDF holds a
+  * staging write mid-task until the test releases it. local[*] executors
+  * share the JVM, so plain static latches work. */
+object LoaderSpec {
+  @volatile var writing: java.util.concurrent.CountDownLatch = _
+  @volatile var release: java.util.concurrent.CountDownLatch = _
+}
+
 /** Loader lifecycle parity tests — mirrors RedshiftLoader.spec.ts
   * (SURVEY.md §5): the 6-row fixture delivered as two NDJSON bodies, upload
   * counts, manifest content, cleanup policies, single-shot latch, and the
@@ -366,6 +374,53 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     loader.addBody(body, "parquet")
     assert(loader.insert() == "SUCCESS")
     assert(wh.table(t).collect().toSet == body.collect().toSet)
+  }
+
+  test("abort cancels a body that is still staging; nothing staged is left (C2/C3)") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.functions._
+    val (whDir, stg) = (tmp(), tmp())
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val rec = new LoadListener {
+      override def onProgress(task: String, info: Map[String, String]): Unit = events.add(task)
+    }
+    val loader = mkLoader(LoaderConfig(table = TableRef("", "target"),
+      cleanup = CleanupPolicy.Never), new ParquetWarehouse(spark, whDir), stg, rec)
+    LoaderSpec.writing = new CountDownLatch(1)
+    LoaderSpec.release = new CountDownLatch(1)
+    val park = udf((x: Long) => {
+      LoaderSpec.writing.countDown()
+      LoaderSpec.release.await()
+      x
+    })
+    val body = Ingest.ndjsonString(spark, body1).withColumn("id", park(col("id")))
+    val failed = new CountDownLatch(1)
+    val aborter = new Thread(() => {
+      LoaderSpec.writing.await() // the body's write is under way
+      loader.abort()
+      // A cancelled write fails at once; an uncancelled one would wait
+      // here forever, so release it after a bound either way.
+      failed.await(30, TimeUnit.SECONDS)
+      LoaderSpec.release.countDown()
+    })
+    aborter.start()
+    // The cancelled job's failures are expected: keep them out of the log.
+    spark.sparkContext.setLogLevel("OFF")
+    val err = try { loader.addBody(body); None } catch { case e: Throwable => Some(e) }
+    failed.countDown()
+    aborter.join()
+    assert(err.isDefined, "addBody must fail once the load is aborted")
+    assert(events.contains("aborted"))
+    // The cancelled tasks end on their own; only then is the job
+    // directory final.
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+    while (sc.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    spark.sparkContext.setLogLevel("WARN")
+    val left = Files.walk(java.nio.file.Paths.get(stg))
+      .filter(Files.isRegularFile(_)).toArray.toSeq
+    assert(left.isEmpty, s"staged files left after abort: $left")
   }
 
   test("requires at least one staged body (X6 assert, :277)") {

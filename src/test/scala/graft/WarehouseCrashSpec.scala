@@ -123,14 +123,18 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
     if (wh.exists(t)) Some(content(wh.table(t))) else None
   }
 
+  private def registerCrashFs(): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.${CrashFs.Scheme}.impl", classOf[CrashFs].getName)
+    conf.setBoolean(s"fs.${CrashFs.Scheme}.impl.disable.cache", true)
+  }
+
   /** Run `op` through the crash scheme once unarmed and once per crash
     * point; `setup` builds the starting state with the plain filesystem.
     * Returns the unarmed run's warehouse. */
   private def crashPoints(setup: ParquetWarehouse => Unit)(
       op: ParquetWarehouse => Unit): ParquetWarehouse = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set(s"fs.${CrashFs.Scheme}.impl", classOf[CrashFs].getName)
-    conf.setBoolean(s"fs.${CrashFs.Scheme}.impl.disable.cache", true)
+    registerCrashFs()
     def attempt(k: Int): (Seen, Seen, Seq[String], String) = {
       val dir = Files.createTempDirectory("graft-crash").toString
       setup(new ParquetWarehouse(spark, dir))
@@ -146,9 +150,12 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
     }
     val (before, after, muts, done) = attempt(Int.MaxValue)
     assert(before != after, "the operation must change what a reader sees")
-    assert(muts.exists(_.endsWith("/_COMMIT_LOCK")), muts.mkString("\n"))
+    // The commit: a temporary record renamed to its number.
+    assert(muts.exists(m => m.startsWith("rename ") && m.contains("/_log/.")),
+      muts.mkString("\n"))
+    val probe = rows(100 until 102, "probe")
     for (k <- 1 to muts.size) {
-      val (b, got, _, _) = attempt(k)
+      val (b, got, _, dir) = attempt(k)
       assert(b == before)
       assert(got == before || got == after,
         s"crash at mutation $k of ${muts.size} (${muts(k - 1)}): a reader " +
@@ -156,6 +163,10 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
           s"expected ${before.map(_.size).getOrElse("no table")} or " +
           s"${after.map(_.size).getOrElse("no table")} rows\n" +
           muts.zipWithIndex.map { case (m, i) => s"${i + 1} $m" }.mkString("\n"))
+      // Nothing the crash left blocks the next writer: one attempt lands.
+      new ParquetWarehouse(spark, dir).load(LoadMode.Insert, t, probe)
+      assert(live(dir) == Some((got.getOrElse(Nil) ++ content(probe)).sorted),
+        s"a load after a crash at mutation $k of ${muts.size} (${muts(k - 1)})")
     }
     new ParquetWarehouse(spark, done)
   }
@@ -193,5 +204,41 @@ class WarehouseCrashSpec extends AnyFunSuite with SparkSuite {
       wh.create(t, old)
       wh.load(LoadMode.TruncateInsert, t, staged)
     }(_.rollback(t))
+  }
+
+  test("crash at any point of a drift retrain: the store serves the old generation " +
+      "or the new one, and its next call lands at once") {
+    import graft.io.ModelStore
+    import ModelStore.CorpusStat
+    val (fpOld, fpNew) = ("00000000000000aa", "00000000000000bb")
+    val statOld = CorpusStat(fpOld, 100L, 1L, Seq(1L -> 100L))
+    // Twice the drift budget: the call retrains and resets the policy row.
+    val statNew = CorpusStat(fpNew, 500L, 2L, Seq(1L -> 100L, 2L -> 400L))
+    def model(tag: String) = rows(0 until 3, tag)
+    registerCrashFs()
+    def attempt(k: Int): (String, Seq[String]) = {
+      val dir = Files.createTempDirectory("graft-crash-model").toString
+      ModelStore(spark, dir).getOrTrainDrifted("m", statOld)(model("old"))
+      spark.sparkContext.setLogLevel("OFF")
+      CrashFs.arm(k)
+      try ModelStore(spark, s"${CrashFs.Scheme}://$dir")
+        .getOrTrainDrifted("m", statNew)(model("new"))
+      catch { case _: Throwable => () }
+      finally { CrashFs.disarm(); spark.sparkContext.setLogLevel("WARN") }
+      (dir, CrashFs.log.asScala.toSeq)
+    }
+    val (done, muts) = attempt(Int.MaxValue)
+    assert(ModelStore(spark, done).servedFingerprint("m").contains(fpNew))
+    assert(muts.exists(_.contains("m__meta/_log/.")), muts.mkString("\n"))
+    for (k <- 1 to muts.size) {
+      val (dir, _) = attempt(k)
+      val store = ModelStore(spark, dir)
+      val served = store.servedFingerprint("m")
+      assert(served.contains(fpOld) || served.contains(fpNew),
+        s"crash at mutation $k of ${muts.size} (${muts(k - 1)}): serves $served")
+      assert(content(store.getOrTrainDrifted("m", statNew)(model("new"))) ==
+        content(model("new")), s"next call after a crash at mutation $k")
+      assert(store.servedFingerprint("m").contains(fpNew))
+    }
   }
 }
