@@ -1,11 +1,19 @@
 package graft.exec
 
+import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit,
+  TimeoutException}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+
 import scala.collection.mutable
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.Failure
 
 import org.apache.spark.graftshim.GraftScheduler
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.core._
 import graft.io.{ParquetWarehouse, StagedUpload, StagingWriter}
@@ -23,17 +31,25 @@ object LoadListener { object Silent extends LoadListener }
 /** One load job — the Spark restatement of the reference's `RedshiftLoader`
   * lifecycle (SURVEY.md §3):
   *
-  *   1. `addBody` stages each body to the staging FS immediately (the
-  *      reference starts its S3 multipart upload at `addFile` time,
-  *      RedshiftLoader.ts:135-193). Single-shot: bodies added after the load
-  *      starts are warned and dropped (`_started` latch, :137-142, X5).
-  *   2. `insert()` / `truncInsert()` / `upsert()` → manifest emission (L5),
-  *      COPY/merge SQL assembly (L6) for external-warehouse deployments, and
-  *      the NATIVE Spark execution of the load semantics against the
-  *      warehouse (our engine's value-add; the reference delegates this to
-  *      Redshift).
+  *   1. `addBody` submits each body's staging write and returns its upload
+  *      handle at once (the reference starts its S3 multipart upload at
+  *      `addFile` time and returns the task, RedshiftLoader.ts:135-193).
+  *      Bodies stage concurrently, one write each, on a daemon pool of at
+  *      most `defaultParallelism` threads owned by the load. Single-shot:
+  *      bodies added after the load starts are warned and dropped
+  *      (`_started` latch, :137-142, X5).
+  *   2. `insert()` / `truncInsert()` / `upsert()` first wait for every
+  *      handle, in body order (the reference's `await
+  *      Promise.all(uploadPromises)`, :281), then emit the manifest (L5),
+  *      assemble the COPY/merge SQL (L6) for external-warehouse deployments,
+  *      and run the NATIVE Spark execution of the load semantics against
+  *      the warehouse (our engine's value-add; the reference delegates this
+  *      to Redshift).
   *   3. Wrap-up: staging cleanup per policy (C1), listener events (O1).
   *      On failure: abort + policy-aware cleanup + `error` event (C2-C4).
+  *
+  * Listener calls are made one at a time, under the load's lock, whichever
+  * thread they come from, so a [[LoadListener]] needs no synchronization.
   */
 final class Loader(
     spark: SparkSession,
@@ -53,20 +69,48 @@ final class Loader(
   val uuid: String = java.util.UUID.randomUUID().toString.take(8)
 
   private val staging = new StagingWriter(stagingRoot, cfg, jobTime, uuid)
-  private val uploads = mutable.Buffer.empty[StagedUpload]
-  private val formats = mutable.Buffer.empty[String]
-  private val bodies = mutable.Buffer.empty[DataFrame]
+  /** Every added body with its format and upload handle, in body order. */
+  private val pending = mutable.Buffer.empty[(DataFrame, String, Future[StagedUpload])]
   private var started = false
   @volatile private var aborted = false
+  /** The first staging failure, in time: the cause `start()` rethrows. */
+  private val failure = new AtomicReference[Throwable]
 
   /** Spark job tag of this load's staging and load jobs. A tag adds to
     * whatever job group the caller runs in (a `foreachBatch` stream's). */
   private val jobTag = s"graft-load-$uuid"
 
+  /** The staging writes' threads: daemons, at most `defaultParallelism`,
+    * idle ones exit after a second; shut down at wrap-up or abort. */
+  private val pool = {
+    val (n, threads) = (spark.sparkContext.defaultParallelism, new AtomicInteger)
+    val p = new ThreadPoolExecutor(n, n, 1L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, s"$jobTag-stage-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
   private def debug(msg: => String): Unit = if (cfg.debug) println(s"[graft] $msg")
 
-  /** Stage one body now (upload-at-add, S4). Returns the staged file set, or
-    * None if the job already started (warn-and-drop, X5).
+  /** One listener call at a time, whichever thread makes it. */
+  private def emit(f: LoadListener => Unit): Unit = synchronized(f(listener))
+
+  /** Validate one body and submit its staging write (upload-at-add, S4).
+    * Returns the body's upload handle at once, or None if the job already
+    * started or was aborted (warn-and-drop, X5). A `json` body holding a
+    * map with non-string keys is rejected here, before anything is
+    * submitted.
+    *
+    * The write runs on the load's pool under the caller's local properties
+    * (`SQLExecution.withThreadLocalCaptured`: a `foreachBatch` execution
+    * id, a tracer's tag, the job group), plus a property naming the body and
+    * the load's job tag. The handle completes once the body's events have
+    * been delivered. A failed write cancels the load's other jobs and fails
+    * its handle; `start()` rethrows it.
     *
     * Progress granularity (O3): the reference streams byte-level
     * `managedUpload.on('progress')` events per upload (README.md:310-311,
@@ -75,76 +119,32 @@ final class Loader(
     * task's output metrics into `uploadProgress` events as partitions
     * commit (task-level = one event per written part), and the
     * `uploadedFile` completion event carries exact per-file byte counts
-    * from the committed files. The write's jobs carry a local property
-    * naming this body, so the bridge reports only their tasks. Spark posts
-    * a job's task-ends before its caller returns, so a marker posted after
-    * the write reaches the bridge behind all of them: `addBody` returns
-    * once the bridge has seen it (or, if the bus dropped it, once the bus
-    * is drained). This holds whatever runs the write — a `foreachBatch`
-    * callback inside another SQL execution included. A `json` body
-    * holding a map with non-string keys is rejected before staging. A
-    * body whose write is under way or returns after [[abort]] is
-    * deleted, and `addBody` throws. */
-  def addBody(df: DataFrame, format: String = "json"): Option[StagedUpload] =
-    if (started) {
-      debug(s"addBody after start ignored")
+    * from the committed files. The bridge reports only the tasks of jobs
+    * carrying this body's property. Spark posts a job's task-ends before
+    * its caller returns, so a marker posted after the write reaches the
+    * bridge behind all of them: the write waits until the bridge has seen
+    * it (or, if the bus dropped it, until the bus is drained). This holds
+    * whatever runs the write — a `foreachBatch` callback inside another
+    * SQL execution included. */
+  def addBody(df: DataFrame, format: String = "json"): Option[Future[StagedUpload]] =
+    if (started || aborted) {
+      debug(s"addBody after start or abort ignored")
       None
     } else {
       StagingWriter.requireStageable(df.schema, format)
-      val idx = uploads.size
-      val tag = s"$uuid-$idx"
-      val seen = new java.util.concurrent.CountDownLatch(1)
-      val bridge = new SparkListener {
-        // Called on the bus thread only.
-        private var stages = Set.empty[Int]
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (j.properties != null && j.properties.getProperty(Loader.BodyTag) == tag)
-            stages ++= j.stageIds
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-          val om = if (t.taskMetrics != null) t.taskMetrics.outputMetrics else null
-          if (stages(t.stageId) && om != null && (om.bytesWritten > 0 || om.recordsWritten > 0))
-            listener.onProgress("uploadProgress", Map(
-              "index" -> idx.toString,
-              "bytes" -> om.bytesWritten.toString,
-              "records" -> om.recordsWritten.toString))
+      pending.synchronized {
+        val idx = pending.size
+        val upload = Promise[StagedUpload]()
+        SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], pool) {
+          try upload.success(stage(df, idx, format))
+          catch { case e: Throwable => upload.failure(e) }
         }
-        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case GraftScheduler.Marker(`tag`) => seen.countDown()
-          case _ => ()
-        }
+        pending += ((df, format, upload.future))
+        Some(upload.future)
       }
-      val sc = spark.sparkContext
-      sc.addSparkListener(bridge)
-      val up =
-        try {
-          sc.setLocalProperty(Loader.BodyTag, tag)
-          sc.addJobTag(jobTag)
-          val up = staging.writeBody(df, idx, format, cfg.copySettings.gzip)
-          GraftScheduler.post(sc, GraftScheduler.Marker(tag))
-          if (!seen.await(Loader.BridgeWaitS, java.util.concurrent.TimeUnit.SECONDS))
-            GraftScheduler.drainListenerBus(sc)
-          up
-        } finally {
-          sc.removeJobTag(jobTag)
-          sc.setLocalProperty(Loader.BodyTag, null)
-          sc.removeSparkListener(bridge)
-          if (aborted) staging.deleteAll(df)
-        }
-      if (aborted) throw new IllegalStateException(
-        s"load of ${cfg.table.qualified} aborted while body $idx was staging")
-      uploads += up
-      formats += format
-      bodies += df
-      listener.onProgress("uploadedFile", Map(
-        "index" -> up.index.toString,
-        "files" -> up.files.size.toString,
-        "bytes" -> up.bytes.sum.toString) ++
-        up.files.zip(up.bytes).map { case (f, len) =>
-          s"bytes.${new org.apache.hadoop.fs.Path(f).getName}" -> len.toString })
-      Some(up)
     }
 
-  def addBodies(dfs: Seq[DataFrame], format: String = "json"): Seq[StagedUpload] =
+  def addBodies(dfs: Seq[DataFrame], format: String = "json"): Seq[Future[StagedUpload]] =
     dfs.flatMap(addBody(_, format))
 
   def insert(): String = start(LoadMode.Insert)
@@ -152,26 +152,118 @@ final class Loader(
   def upsert(): String = start(LoadMode.Upsert)
 
   /** Cancel + immediate staging cleanup (C2/C3): cancels this load's
-    * running jobs, a body still staging included. */
+    * running jobs and drops bodies not yet started, waits (bounded) until
+    * no task of the load runs, then deletes the staging job directory. */
   def abort(): Unit = {
     aborted = true
     spark.sparkContext.cancelJobsWithTag(jobTag)
+    quiesce()
+    pool.shutdown()
     staging.deleteAll(sampleDf)
-    listener.onProgress("aborted", Map.empty)
+    emit(_.onProgress("aborted", Map.empty))
+  }
+
+  /** Body `idx`'s staging write, on a pool thread. */
+  private def stage(df: DataFrame, idx: Int, format: String): StagedUpload = {
+    def abortedWhile(what: String) = new IllegalStateException(
+      s"load of ${cfg.table.qualified} aborted while body $idx was $what")
+    if (aborted) throw abortedWhile("queued")
+    val tag = s"$uuid-$idx"
+    val seen = new CountDownLatch(1)
+    val bridge = new SparkListener {
+      // Called on the bus thread only.
+      private var stages = Set.empty[Int]
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(Loader.BodyTag) == tag)
+          stages ++= j.stageIds
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val om = if (t.taskMetrics != null) t.taskMetrics.outputMetrics else null
+        if (stages(t.stageId) && om != null && (om.bytesWritten > 0 || om.recordsWritten > 0))
+          emit(_.onProgress("uploadProgress", Map(
+            "index" -> idx.toString,
+            "bytes" -> om.bytesWritten.toString,
+            "records" -> om.recordsWritten.toString)))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case GraftScheduler.Marker(`tag`) => seen.countDown()
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(bridge)
+    try {
+      sc.setLocalProperty(Loader.BodyTag, tag)
+      sc.addJobTag(jobTag)
+      val up = staging.writeBody(df, idx, format, cfg.copySettings.gzip)
+      GraftScheduler.post(sc, GraftScheduler.Marker(tag))
+      if (!seen.await(Loader.BridgeWaitS, TimeUnit.SECONDS))
+        GraftScheduler.drainListenerBus(sc)
+      if (aborted) throw abortedWhile("staging")
+      emit(_.onProgress("uploadedFile", Map(
+        "index" -> up.index.toString,
+        "files" -> up.files.size.toString,
+        "bytes" -> up.bytes.sum.toString) ++
+        up.files.zip(up.bytes).map { case (f, len) =>
+          s"bytes.${new org.apache.hadoop.fs.Path(f).getName}" -> len.toString }))
+      up
+    } catch {
+      case e: Throwable =>
+        // Failure fan-out (C4): the first failure cancels its siblings.
+        if (!aborted && failure.compareAndSet(null, e)) sc.cancelJobsWithTag(jobTag)
+        throw e
+    } finally {
+      sc.removeJobTag(jobTag)
+      sc.setLocalProperty(Loader.BodyTag, null)
+      sc.removeSparkListener(bridge)
+    }
+  }
+
+  /** Wait, at most [[Loader.BridgeWaitS]] in all, until every handle has
+    * settled and no task of this load's jobs runs: a cancelled task runs
+    * on until it next checks for the kill, and would recreate its
+    * directories under a job directory deleted before it ends. */
+  private def quiesce(): Unit = {
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(Loader.BridgeWaitS)
+    def left = math.max(0L, deadline - System.nanoTime())
+    pending.synchronized(pending.toList).foreach { case (_, _, h) =>
+      try Await.ready(h, Duration.fromNanos(left)) catch { case _: TimeoutException => () }
+    }
+    val sc = spark.sparkContext
+    // The status store must have seen the jobs' starts before it is asked.
+    try GraftScheduler.drainListenerBus(sc) catch { case _: TimeoutException => () }
+    val st = sc.statusTracker
+    def running = st.getJobIdsForTag(jobTag).exists(j => st.getJobInfo(j).exists(
+      _.stageIds.exists(s => st.getStageInfo(s).exists(_.numActiveTasks > 0))))
+    while (running && left > 0) Thread.sleep(10)
+  }
+
+  /** The `Promise.all` barrier: wait for every handle, and return the
+    * uploads with their formats in body order; if any write failed, wait
+    * for the load's tasks to end and throw the first failure. */
+  private def awaitUploads(): Seq[(StagedUpload, String)] = {
+    val settled = pending.toSeq.map { case (_, format, h) =>
+      (Await.ready(h, Duration.Inf).value.get, format)
+    }
+    settled.collectFirst { case (Failure(e), _) => e }.foreach { e =>
+      quiesce()
+      throw Option(failure.get).getOrElse(e)
+    }
+    settled.map { case (up, format) => (up.get, format) }
   }
 
   private def sampleDf: DataFrame =
-    bodies.headOption.getOrElse(spark.range(0).toDF())
+    pending.synchronized(pending.headOption.map(_._1)).getOrElse(spark.range(0).toDF())
 
   private def start(mode: LoadMode): String = {
-    require(uploads.nonEmpty, "no files added") // X6 assert, :277
+    require(pending.nonEmpty, "no files added") // X6 assert, :277
     started = true
     try {
+      val staged = awaitUploads()
       spark.sparkContext.addJobTag(jobTag)
       // Manifest: atomic multi-file visibility (L5). Failure propagates
       // (quirk C6 intentionally not replicated).
-      val manifestPath = staging.writeManifest(sampleDf, uploads.toSeq)
-      listener.onProgress("uploadedManifest", Map("path" -> manifestPath))
+      val manifestPath = staging.writeManifest(sampleDf, staged.map(_._1))
+      emit(_.onProgress("uploadedManifest", Map("path" -> manifestPath)))
 
       // External-warehouse SQL (the reference's whole job): assembled always,
       // executed only when an executor is configured.
@@ -187,8 +279,8 @@ final class Loader(
       // counters on the load job itself — the reference's per-task
       // progress events (O1) without a second pass over the data.
       val observation = new org.apache.spark.sql.Observation(s"load-$uuid")
-      val schema = bodies.head.schema
-      val stagedDf = uploads.zip(formats).groupMap(_._2)(_._1.files).toSeq
+      val schema = pending.head._1.schema
+      val stagedDf = staged.groupMap(_._2)(_._1.files).toSeq
         .map { case (format, files) =>
           spark.read.schema(schema).format(format)
             .options(StagingWriter.stageOptions(format))
@@ -204,25 +296,29 @@ final class Loader(
       // two racing Loaders both land (core.ts:49-53 parity).
       warehouse.loadWithRetry(mode, cfg.table, stagedDf, cfg.idField)
       observation.getAsJava.forEach((k, v) =>
-        listener.onProgress("loadedMetrics", Map(k -> String.valueOf(v))))
+        emit(_.onProgress("loadedMetrics", Map(k -> String.valueOf(v)))))
 
       wrapUp(success = true)
-      listener.onProgress("done", Map.empty)
-      listener.onDone()
+      emit(_.onProgress("done", Map.empty))
+      emit(_.onDone())
       "SUCCESS"
     } catch {
       case e: Throwable =>
-        listener.onError(e)
+        emit(_.onError(e))
         wrapUp(success = false)
         throw e
-    } finally spark.sparkContext.removeJobTag(jobTag)
+    } finally {
+      spark.sparkContext.removeJobTag(jobTag)
+      pool.shutdown()
+    }
   }
 
   // Constructor-time bodies (reference parity: `new RedshiftLoader(options)`
   // stages `options.body`/`options.bodies` immediately —
-  // RedshiftLoader.ts:122): staged here exactly as explicit addBody calls,
-  // same upload-at-add semantics and events.
-  initialBodies.foreach(addBody(_))
+  // RedshiftLoader.ts:122): submitted exactly as explicit addBody calls,
+  // and staged (events delivered) before the constructor returns; a
+  // failed one is rethrown by `start()`.
+  initialBodies.flatMap(addBody(_)).foreach(Await.ready(_, Duration.Inf))
 
   /** Staging cleanup per policy (C1: ALWAYS / SUCCESS / NEVER), then the
     * optional auto-compaction hook: after a SUCCESSFUL load leaves the
@@ -239,7 +335,7 @@ final class Loader(
     }
     if (doClean) {
       staging.deleteAll(sampleDf)
-      listener.onProgress("deleteObjects", Map("dir" -> staging.jobDir))
+      emit(_.onProgress("deleteObjects", Map("dir" -> staging.jobDir)))
     }
     if (success) cfg.autoCompact.foreach { ac =>
       val before = warehouse.dataFiles(cfg.table).size
@@ -248,10 +344,11 @@ final class Loader(
           case Some((x, y)) => warehouse.compactZorder(cfg.table, x, y, ac.targetFiles)
           case None         => warehouse.compact(cfg.table, ac.targetFiles)
         }
-        listener.onProgress("compacted", Map(
+        val after = warehouse.dataFiles(cfg.table).size
+        emit(_.onProgress("compacted", Map(
           "table" -> cfg.table.qualified,
           "filesBefore" -> before.toString,
-          "filesAfter" -> warehouse.dataFiles(cfg.table).size.toString))
+          "filesAfter" -> after.toString)))
       }
     }
   }
@@ -261,6 +358,7 @@ object Loader {
   /** Local property naming the body a staging write belongs to. */
   private val BodyTag = "graft.loader.body"
 
-  /** Bound on waiting for a body's marker to reach its bridge. */
+  /** Bound on waiting for a body's marker to reach its bridge, and on
+    * waiting for a cancelled load's tasks to end. */
   private val BridgeWaitS = 30L
 }

@@ -1,5 +1,7 @@
 package graft.io
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.json.GraftJsonSchema
 import org.apache.spark.sql.functions._
@@ -27,21 +29,36 @@ object Ingest {
   /** A literal NDJSON string body (the reference's `string` body type).
     * The body is already on the driver, so its schema is inferred there,
     * by Spark's own JSON inference ([[GraftJsonSchema]]), and no Spark job
-    * starts: the schema and rows equal `spark.read.json` of the lines. */
+    * starts: the schema and rows equal `spark.read.json` of the lines.
+    * Partitions follow [[driverParts]] of the body's UTF-8 bytes, so a
+    * body under `spark.sql.files.maxPartitionBytes` stages as one file. */
   def ndjsonString(spark: SparkSession, body: String): DataFrame = {
     import spark.implicits._
     val lines = body.split('\n').toIndexedSeq.filter(_.nonEmpty)
-    ndjson(spark, spark.createDataset(lines), Some(GraftJsonSchema.infer(spark, lines)))
+    val parts = driverParts(spark, body.getBytes(StandardCharsets.UTF_8).length)
+    ndjson(spark, spark.createDataset(lines).coalesce(parts),
+      Some(GraftJsonSchema.infer(spark, lines)))
   }
 
   /** A local iterator of rows (the reference's AsyncGenerator body,
     * utils.ts:41-63). Backpressure is inherent: Spark pulls. Driver-side
-    * iterators are for tests/small feeds; big inputs should be files. */
+    * iterators are for tests/small feeds; big inputs should be files.
+    * Partitions follow [[driverParts]] of the rows' size as Spark's
+    * statistics estimate it. */
   def rows[T <: Product: scala.reflect.runtime.universe.TypeTag](
       spark: SparkSession,
       it: Iterable[T]): DataFrame = {
     implicit val enc = Encoders.product[T]
-    spark.createDataset(it.toSeq).toDF()
+    val ds = spark.createDataset(it.toSeq)
+    ds.toDF().coalesce(driverParts(spark, ds.queryExecution.analyzed.stats.sizeInBytes))
+  }
+
+  /** Partitions of a body held on the driver: one per
+    * `spark.sql.files.maxPartitionBytes` of it (Spark's own file-split
+    * size), at least one, at most `defaultParallelism`. */
+  private def driverParts(spark: SparkSession, bytes: BigInt): Int = {
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    ((bytes + split - 1) / split).max(1).min(spark.sparkContext.defaultParallelism).toInt
   }
 
   /** File-based sources for the COPY formats the reference declares

@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,12 +12,14 @@ import graft.core._
 import graft.exec._
 import graft.io.{Ingest, Manifest, ParquetWarehouse}
 
-/** Executor-side rendezvous for the abort spec: the parking UDF holds a
-  * staging write mid-task until the test releases it. local[*] executors
-  * share the JVM, so plain static latches work. */
+/** Executor-side rendezvous for the specs that park a staging write: the
+  * parking UDF holds a write mid-task until the test releases it.
+  * local[*] executors share the JVM, so plain static latches work. */
 object LoaderSpec {
-  @volatile var writing: java.util.concurrent.CountDownLatch = _
-  @volatile var release: java.util.concurrent.CountDownLatch = _
+  @volatile var writing: CountDownLatch = _
+  @volatile var release: CountDownLatch = _
+
+  final case class Item(id: Long, name: String)
 }
 
 /** Loader lifecycle parity tests — mirrors RedshiftLoader.spec.ts
@@ -34,6 +40,35 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
   private val body2 = (3 to 6).map(i => row(i, 45, "UPSERT")).mkString("\n")
 
   private def tmp() = Files.createTempDirectory("graft-test").toString
+
+  private def await[T](h: Future[T]): T = Await.result(h, 60.seconds)
+
+  /** Fresh latches, and a UDF that parks its first call until released. */
+  private def parking() = {
+    LoaderSpec.writing = new CountDownLatch(1)
+    LoaderSpec.release = new CountDownLatch(1)
+    org.apache.spark.sql.functions.udf((x: Long) => {
+      LoaderSpec.writing.countDown()
+      LoaderSpec.release.await()
+      x
+    })
+  }
+
+  /** A started thread that lets the parked write go once its handle has
+    * settled (a cancelled write fails its handle while its task is still
+    * parked), or after a bound if it never settles or is never returned. */
+  private def releaseWhenSettled(handle: Future[Future[graft.io.StagedUpload]]) = {
+    val t = new Thread(() => {
+      try Await.ready(handle.flatten, 30.seconds)
+      catch { case _: java.util.concurrent.TimeoutException => () }
+      LoaderSpec.release.countDown()
+    })
+    t.start()
+    t
+  }
+
+  private def stagedFiles(stg: String) = Files.walk(java.nio.file.Paths.get(stg))
+    .filter(Files.isRegularFile(_)).toArray.toSeq
 
   private class Recorder extends LoadListener {
     var progress = Vector.empty[String]
@@ -65,7 +100,7 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
       cleanup = CleanupPolicy.Never)
     val loader = mkLoader(cfg, wh, stg, rec)
     val ups = loader.addBodies(Seq(
-      Ingest.ndjsonString(spark, body1), Ingest.ndjsonString(spark, body2)))
+      Ingest.ndjsonString(spark, body1), Ingest.ndjsonString(spark, body2))).map(await)
     assert(ups.size == 2 && ups.forall(_.files.nonEmpty))
     assert(loader.insert() == "SUCCESS")
     assert(rec.progress.count(_ == "uploadedFile") == 2)
@@ -90,7 +125,7 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     val cfg = LoaderConfig(table = TableRef("", "target"),
       cleanup = CleanupPolicy.Never)
     val loader = mkLoader(cfg, wh, stg, rec)
-    val up = loader.addBody(Ingest.ndjsonString(spark, body1)).get
+    val up = await(loader.addBody(Ingest.ndjsonString(spark, body1)).get)
     // Task-level streaming progress (the reference's managedUpload
     // 'progress' analogue): at least one event, with positive bytes and
     // the right body index.
@@ -130,7 +165,7 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val t0 = System.nanoTime()
-        val up = loader.addBody(batch.repartition(3)).get
+        val up = await(loader.addBody(batch.repartition(3)).get)
         staged.set(up -> (System.nanoTime() - t0) / 1000000L)
       }
       .start().awaitTermination()
@@ -329,7 +364,7 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
       .select(col("id"), draw(col("id")).as("draw"))
     val loader = mkLoader(LoaderConfig(table = t,
       cleanup = CleanupPolicy.Never), wh, stg)
-    val up = loader.addBody(body).get
+    val up = await(loader.addBody(body).get)
     assert(loader.insert() == "SUCCESS")
     assert(calls.sum == 1000L,
       s"body evaluated ${calls.sum / 1000.0} times, expected once")
@@ -377,50 +412,156 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("abort cancels a body that is still staging; nothing staged is left (C2/C3)") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
     import org.apache.spark.sql.functions._
     val (whDir, stg) = (tmp(), tmp())
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val rec = new LoadListener {
       override def onProgress(task: String, info: Map[String, String]): Unit = events.add(task)
     }
-    val loader = mkLoader(LoaderConfig(table = TableRef("", "target"),
-      cleanup = CleanupPolicy.Never), new ParquetWarehouse(spark, whDir), stg, rec)
-    LoaderSpec.writing = new CountDownLatch(1)
-    LoaderSpec.release = new CountDownLatch(1)
-    val park = udf((x: Long) => {
-      LoaderSpec.writing.countDown()
-      LoaderSpec.release.await()
-      x
-    })
+    val cfg = LoaderConfig(table = TableRef("", "target"), cleanup = CleanupPolicy.Never)
+    val loader = mkLoader(cfg, new ParquetWarehouse(spark, whDir), stg, rec)
+    val park = parking()
     val body = Ingest.ndjsonString(spark, body1).withColumn("id", park(col("id")))
-    val failed = new CountDownLatch(1)
-    val aborter = new Thread(() => {
-      LoaderSpec.writing.await() // the body's write is under way
-      loader.abort()
-      // A cancelled write fails at once; an uncancelled one would wait
-      // here forever, so release it after a bound either way.
-      failed.await(30, TimeUnit.SECONDS)
-      LoaderSpec.release.countDown()
-    })
-    aborter.start()
     // The cancelled job's failures are expected: keep them out of the log.
     spark.sparkContext.setLogLevel("OFF")
-    val err = try { loader.addBody(body); None } catch { case e: Throwable => Some(e) }
-    failed.countDown()
-    aborter.join()
-    assert(err.isDefined, "addBody must fail once the load is aborted")
-    assert(events.contains("aborted"))
-    // The cancelled tasks end on their own; only then is the job
-    // directory final.
+    val handle = Promise[Future[graft.io.StagedUpload]]()
+    val releaser = releaseWhenSettled(handle.future)
+    val h = loader.addBody(body).get
+    handle.success(h)
+    assert(LoaderSpec.writing.await(30, TimeUnit.SECONDS), "the body's write never started")
+    loader.abort()
+    // Straight after abort returns, with no wait here.
+    val jobDir = java.nio.file.Paths.get(stg, cfg.resolvedFilePrefix,
+      s"${loader.jobTime}_${loader.uuid}")
     val sc = spark.sparkContext
-    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
-    while (sc.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
+    val running = sc.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum
+    val jobDirLeft = Files.exists(jobDir)
+    releaser.join()
+    val err = try { await(h); None } catch { case e: Throwable => Some(e) }
     spark.sparkContext.setLogLevel("WARN")
-    val left = Files.walk(java.nio.file.Paths.get(stg))
-      .filter(Files.isRegularFile(_)).toArray.toSeq
+    assert(!jobDirLeft, s"$jobDir exists after abort returned")
+    assert(running == 0, s"$running tasks still running after abort returned")
+    assert(err.isDefined, "awaiting the handle must fail once the load is aborted")
+    assert(events.contains("aborted"))
+    val left = stagedFiles(stg)
     assert(left.isEmpty, s"staged files left after abort: $left")
+  }
+
+  test("bodies stage concurrently: a later body's handle completes while an earlier one is parked") {
+    import org.apache.spark.sql.functions._
+    val (whDir, stg) = (tmp(), tmp())
+    val t = TableRef("", "overlap")
+    val wh = new ParquetWarehouse(spark, whDir)
+    val loader = mkLoader(LoaderConfig(table = t, cleanup = CleanupPolicy.Never), wh, stg)
+    val park = parking()
+    // Bounded: a serial stager never reaches body 1 until body 0 is let go.
+    val guard = new Thread(() => {
+      LoaderSpec.release.await(30, TimeUnit.SECONDS)
+      LoaderSpec.release.countDown()
+    })
+    guard.start()
+    val h0 = loader.addBody(Ingest.ndjsonString(spark, body1).withColumn("id", park(col("id")))).get
+    assert(LoaderSpec.writing.await(30, TimeUnit.SECONDS), "body 0's write never started")
+    val h1 = loader.addBody(Ingest.ndjsonString(spark, body2)).get
+    val up1 = scala.util.Try(Await.result(h1, 20.seconds))
+    val parked = LoaderSpec.release.getCount == 1
+    LoaderSpec.release.countDown()
+    guard.join()
+    assert(up1.isSuccess && up1.get.files.nonEmpty,
+      s"body 1 did not stage while body 0 was parked: $up1")
+    assert(parked, "body 0 was released before body 1's handle completed")
+    assert(loader.insert() == "SUCCESS")
+    assert(await(h0).files.nonEmpty && wh.table(t).count() == 6)
+  }
+
+  test("a failed staging write cancels its sibling; start() throws after one error event and ALWAYS cleanup (C4)") {
+    import org.apache.spark.sql.functions._
+    val (whDir, stg) = (tmp(), tmp())
+    val rec = new Recorder
+    val loader = mkLoader(LoaderConfig(table = TableRef("", "t"), cleanup = CleanupPolicy.Always),
+      new ParquetWarehouse(spark, whDir), stg, rec)
+    val park = parking()
+    // Fails once the sibling's write is parked, so there is a job to cancel.
+    val boom = udf((x: Long) => {
+      LoaderSpec.writing.await(30, TimeUnit.SECONDS)
+      if (x > 0) throw new IllegalStateException("staging exploded")
+      x
+    })
+    spark.sparkContext.setLogLevel("OFF")
+    val handle = Promise[Future[graft.io.StagedUpload]]()
+    val releaser = releaseWhenSettled(handle.future)
+    val sibling = loader.addBody(
+      Ingest.ndjsonString(spark, body1).withColumn("id", park(col("id")))).get
+    handle.success(sibling)
+    loader.addBody(Ingest.ndjsonString(spark, body2).withColumn("id", boom(col("id"))))
+    val err = try { loader.insert(); None } catch { case e: Throwable => Some(e) }
+    val left = stagedFiles(stg)
+    releaser.join()
+    spark.sparkContext.setLogLevel("WARN")
+    def causes(e: Throwable): Seq[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(err.exists(causes(_).exists(c =>
+      String.valueOf(c.getMessage).contains("staging exploded"))),
+      s"start() must rethrow the failed write: $err")
+    assert(rec.errors == 1 && rec.done == 0, s"${rec.errors} error events, ${rec.done} done")
+    val sib = Await.ready(sibling, 30.seconds).value.get
+    assert(sib.isFailure && causes(sib.failed.get).exists(c =>
+      String.valueOf(c.getMessage).toLowerCase.contains("cancel")),
+      s"the sibling's write was not cancelled: $sib")
+    assert(rec.progress.count(_ == "deleteObjects") == 1)
+    assert(left.isEmpty, s"staged files left after a failed load: $left")
+  }
+
+  test("listener calls are serial: 8 concurrently staged bodies, unsynchronized counters") {
+    val (whDir, stg) = (tmp(), tmp())
+    val counting = new LoadListener {
+      var files, overlaps = 0
+      var bytes = 0L
+      private var inside = false
+      override def onProgress(task: String, info: Map[String, String]): Unit = {
+        if (inside) overlaps += 1
+        inside = true
+        if (task == "uploadedFile") {
+          val (f, b) = (files, bytes)
+          Thread.sleep(2) // widens the window a concurrent call would hit
+          files = f + 1
+          bytes = b + info("bytes").toLong
+        }
+        inside = false
+      }
+    }
+    val loader = mkLoader(LoaderConfig(table = TableRef("", "t"), cleanup = CleanupPolicy.Never),
+      new ParquetWarehouse(spark, whDir), stg, counting)
+    val ups = loader.addBodies((0 until 8).map(k =>
+      Ingest.ndjsonString(spark, (1 to 20).map(i => row(k * 100 + i, 1.5, "x")).mkString("\n"))))
+    assert(loader.insert() == "SUCCESS")
+    val onDisk = ups.map(await).flatMap(_.files).map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
+    }
+    assert(counting.overlaps == 0, s"${counting.overlaps} overlapping listener calls")
+    assert(counting.files == 8, s"${counting.files} uploadedFile events")
+    assert(counting.bytes == onDisk.sum, s"${counting.bytes} B reported, ${onDisk.sum} B staged")
+  }
+
+  test("a body held on the driver stages one file per maxPartitionBytes, at most defaultParallelism") {
+    val (whDir, stg) = (tmp(), tmp())
+    val loader = mkLoader(LoaderConfig(table = TableRef("", "t"), cleanup = CleanupPolicy.Never),
+      new ParquetWarehouse(spark, whDir), stg)
+    val threeLines = (1 to 3).map(i => row(i, 1.5, "x")).mkString("\n")
+    assert(await(loader.addBody(Ingest.ndjsonString(spark, threeLines)).get).files.size == 1)
+    val items = Ingest.rows(spark, (1L to 50L).map(i => LoaderSpec.Item(i, s"n$i")))
+    assert(await(loader.addBody(items).get).files.size == 1)
+    // The first body over 4 KB: 5 splits of 1 KB.
+    val big = Iterator.from(1).map(n => (1 to n).map(i => row(i, 1.5, "x")).mkString("\n"))
+      .dropWhile(_.getBytes("UTF-8").length <= 4096).next()
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    val bigDf = try Ingest.ndjsonString(spark, big)
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val want = math.min(5, spark.sparkContext.defaultParallelism)
+    assert(await(loader.addBody(bigDf).get).files.size == want)
   }
 
   test("requires at least one staged body (X6 assert, :277)") {
