@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Benchmark main. Writes the full per-query map to
   * `SPARK_GRAFT_BENCH_OUT` (default `BENCH_LOCAL.json`; subset runs
   * default to `BENCH_SUBSET.json`) and prints ONE stdout line, last and
@@ -17,7 +19,9 @@ package graft
   * shape pays whole-stage-codegen compilation + JIT (measured 2-3x on
   * sub-second queries; round 4's "scd2_asof_lookup 2.1x regression" was
   * exactly this, on byte-identical code), so one-shot timings compare
-  * noise, not plans.
+  * noise, not plans. The file also carries a `"compiles"` map: per
+  * row, the codegen compiles (Janino) of the repeat it reports. A row
+  * that still compiles on its fastest repeat misses the codegen cache.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -37,14 +41,20 @@ object Bench {
     // query isn't charged for it.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     val failures = scala.collection.mutable.ListBuffer.empty[String]
-    val results: Seq[(String, Double)] =
+    val compilations = CodegenMetrics.METRIC_COMPILATION_TIME
+    // Per row: (min seconds, compiles of that repeat).
+    val measured: Seq[(String, (Double, Long))] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
         val times = (1 to repeats).flatMap { _ =>
+          val c0 = compilations.getCount
           val t0 = System.nanoTime()
           val res =
-            try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+            try {
+              fn(spark, sfDir).count()
+              Some((System.nanoTime() - t0) / 1e9 -> (compilations.getCount - c0))
+            }
             catch { case e: Throwable =>
               if (!failures.contains(name)) {
                 failures += name
@@ -62,8 +72,9 @@ object Bench {
           ToolSession.clearStorage(spark)
           res
         }
-        name -> (if (times.nonEmpty) times.min else 0.0)
+        name -> (if (times.nonEmpty) times.minBy(_._1) else (0.0, 0L))
       }
+    val results = measured.map { case (name, (secs, _)) => name -> secs }
     def fmt(v: Double) = f"$v%.4f"
     val fails = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
@@ -91,8 +102,10 @@ object Bench {
     // n_queries ⇒ refuse) even when BOTH inputs are truncated.
     val contractNames = contractRows.map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
+    val compilesAll = measured.map { case (k, (_, c)) => "\"" + k + "\":" + c }
+      .mkString("{", ",", "}")
     val fileLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","repeats":$repeats,"n_queries":${results.size},$splitFields,"contract_queries":$contractNames,"queries":$qsAll,"failed":$fails,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","repeats":$repeats,"n_queries":${results.size},$splitFields,"contract_queries":$contractNames,"queries":$qsAll,"compiles":$compilesAll,"failed":$fails,"sf":"$sfDir"}"""
     // Subset runs must not overwrite the full-suite map the regression
     // gate diffs against.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",

@@ -17,6 +17,18 @@ object ToolSession {
     sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
 
+  /** Entries of Spark's JVM-wide codegen cache (a static conf, read once
+    * per JVM). The cache is keyed by (class loader, code), and a batch
+    * compiles many of its classes twice: under the driver thread's
+    * loader and under the executor tasks'. Measured from an emptied cache
+    * on the benchmark's 50-document `curationIngestStream` batch: the
+    * batch fills 150 entries, and with its reader query 158 (101 distinct
+    * classes, 2 loaders). Spark's default of 100 cannot hold that, so
+    * every batch evicts what the next one needs. 256, the next power of
+    * two above that working set, holds the batch and the reader query
+    * with room to spare; at 256 a repeated batch compiles nothing. */
+  val CodegenCacheEntries = 256
+
   /** The standard local session: shuffle partitions sized to the core
     * count (not the 200 default — CONTRACTS: partitions are sized to
     * the scale actually run), UTC pinned so timestamp queries match the
@@ -25,7 +37,8 @@ object ToolSession {
     * by [[graft.io.ForkFreeLocalFs]] for `FileSystem` and `FileContext`
     * alike. Hadoop caches a `FileSystem` per scheme for the whole JVM,
     * so the install rides the session conf: the first `file:` handle is
-    * built from it. */
+    * built from it. The codegen cache holds [[CodegenCacheEntries]]
+    * classes, not Spark's default 100. */
   def local(cpus: String, logLevel: String = "ERROR"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -33,6 +46,7 @@ object ToolSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config(graft.io.ForkFreeLocalFs.SessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

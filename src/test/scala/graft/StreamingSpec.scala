@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -201,12 +202,20 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       s"""{"doc_id":22,"url":"https://a.com/f","text":"$bodyE $footer"}""",
       s"""{"doc_id":23,"url":null,"text":"$bodyF $footer"}""")
       .mkString("\n"))
+    // Run 3 is also a NEW query with the same plans as run 2: its body
+    // runs in the caller's session, so every generated class is already
+    // in the codegen cache and the batch compiles nothing.
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiledBefore = compiled.getCount
     val jobs3 = jobsDuring(run())
+    val compiles3 = compiled.getCount - compiledBefore
     assert(wh.table(tbl).select("doc_id").collect().map(_.getLong(0)).toSet
       == Set(1L, 5L, 12L, 13L, 22L, 23L))
     assert(wh.table(keys).count() == 8L)
     assert(jobs3 == jobs2,
       s"per-batch Spark jobs grew with the stores: $jobs2 -> $jobs3")
+    assert(compiles3 == 0,
+      s"a repeated stream batch recompiled $compiles3 generated classes")
 
     // Full replay with a FRESH checkpoint: every doc re-arrives against
     // the populated stores — keyed survivors re-reject at the URL
