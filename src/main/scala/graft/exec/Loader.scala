@@ -1,7 +1,6 @@
 package graft.exec
 
-import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit,
-  TimeoutException}
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.collection.mutable
@@ -10,8 +9,6 @@ import scala.concurrent.duration.Duration
 import scala.util.Failure
 
 import org.apache.spark.graftshim.GraftScheduler
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
-  SparkListenerTaskEnd}
 import org.apache.spark.sql.{classic, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 
@@ -68,8 +65,10 @@ final class Loader(
     .format(java.time.Instant.now()) // reference's luxon jobTime, RedshiftLoader.ts:10-12
   val uuid: String = java.util.UUID.randomUUID().toString.take(8)
 
-  private val staging = new StagingWriter(stagingRoot, cfg, jobTime, uuid)
-  /** Every added body with its format and upload handle, in body order. */
+  private val staging = new StagingWriter(spark, stagingRoot, cfg, jobTime, uuid)
+  /** Every added body with its format and upload handle, in body order.
+    * Its lock also guards the single-shot latch: a body is either in the
+    * snapshot `start()` takes or refused. */
   private val pending = mutable.Buffer.empty[(DataFrame, String, Future[StagedUpload])]
   private var started = false
   @volatile private var aborted = false
@@ -107,32 +106,22 @@ final class Loader(
     *
     * The write runs on the load's pool under the caller's local properties
     * (`SQLExecution.withThreadLocalCaptured`: a `foreachBatch` execution
-    * id, a tracer's tag, the job group), plus a property naming the body and
-    * the load's job tag. The handle completes once the body's events have
-    * been delivered. A failed write cancels the load's other jobs and fails
-    * its handle; `start()` rethrows it.
+    * id, a tracer's tag, the job group), plus the load's job tag. A failed
+    * write cancels the load's other jobs and fails its handle; `start()`
+    * rethrows it.
     *
-    * Progress granularity (O3): the reference streams byte-level
-    * `managedUpload.on('progress')` events per upload (README.md:310-311,
-    * RedshiftLoader.ts:147-151). Spark equivalent: a SparkListener
-    * registered for the duration of this body's write bridges each
-    * task's output metrics into `uploadProgress` events as partitions
-    * commit (task-level = one event per written part), and the
-    * `uploadedFile` completion event carries exact per-file byte counts
-    * from the committed files. The bridge reports only the tasks of jobs
-    * carrying this body's property. Spark posts a job's task-ends before
-    * its caller returns, so a marker posted after the write reaches the
-    * bridge behind all of them: the write waits until the bridge has seen
-    * it (or, if the bus dropped it, until the bus is drained). This holds
-    * whatever runs the write — a `foreachBatch` callback inside another
-    * SQL execution included. */
+    * Progress (O3, the reference's per-upload `progress` events,
+    * RedshiftLoader.ts:147-151): once the write returns, one
+    * `uploadProgress` per staged file and then `uploadedFile`, with the
+    * byte counts of the writer's own listing of the committed files, both
+    * sent before the handle completes. */
   def addBody(df: DataFrame, format: String = "json"): Option[Future[StagedUpload]] =
-    if (started || aborted) {
-      debug(s"addBody after start or abort ignored")
-      None
-    } else {
-      StagingWriter.requireStageable(df.schema, format)
-      pending.synchronized {
+    pending.synchronized {
+      if (started || aborted) {
+        debug(s"addBody after start or abort ignored")
+        None
+      } else {
+        StagingWriter.requireStageable(df.schema, format)
         val idx = pending.size
         val upload = Promise[StagedUpload]()
         SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], pool) {
@@ -155,11 +144,11 @@ final class Loader(
     * running jobs and drops bodies not yet started, waits (bounded) until
     * no task of the load runs, then deletes the staging job directory. */
   def abort(): Unit = {
-    aborted = true
+    pending.synchronized { aborted = true }
     spark.sparkContext.cancelJobsWithTag(jobTag)
     quiesce()
     pool.shutdown()
-    staging.deleteAll(sampleDf)
+    staging.deleteAll()
     emit(_.onProgress("aborted", Map.empty))
   }
 
@@ -168,37 +157,13 @@ final class Loader(
     def abortedWhile(what: String) = new IllegalStateException(
       s"load of ${cfg.table.qualified} aborted while body $idx was $what")
     if (aborted) throw abortedWhile("queued")
-    val tag = s"$uuid-$idx"
-    val seen = new CountDownLatch(1)
-    val bridge = new SparkListener {
-      // Called on the bus thread only.
-      private var stages = Set.empty[Int]
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty(Loader.BodyTag) == tag)
-          stages ++= j.stageIds
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val om = if (t.taskMetrics != null) t.taskMetrics.outputMetrics else null
-        if (stages(t.stageId) && om != null && (om.bytesWritten > 0 || om.recordsWritten > 0))
-          emit(_.onProgress("uploadProgress", Map(
-            "index" -> idx.toString,
-            "bytes" -> om.bytesWritten.toString,
-            "records" -> om.recordsWritten.toString)))
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case GraftScheduler.Marker(`tag`) => seen.countDown()
-        case _ => ()
-      }
-    }
     val sc = spark.sparkContext
-    sc.addSparkListener(bridge)
     try {
-      sc.setLocalProperty(Loader.BodyTag, tag)
       sc.addJobTag(jobTag)
       val up = staging.writeBody(df, idx, format, cfg.copySettings.gzip)
-      GraftScheduler.post(sc, GraftScheduler.Marker(tag))
-      if (!seen.await(Loader.BridgeWaitS, TimeUnit.SECONDS))
-        GraftScheduler.drainListenerBus(sc)
       if (aborted) throw abortedWhile("staging")
+      up.bytes.foreach(len => emit(_.onProgress("uploadProgress", Map(
+        "index" -> idx.toString, "bytes" -> len.toString))))
       emit(_.onProgress("uploadedFile", Map(
         "index" -> up.index.toString,
         "files" -> up.files.size.toString,
@@ -211,19 +176,15 @@ final class Loader(
         // Failure fan-out (C4): the first failure cancels its siblings.
         if (!aborted && failure.compareAndSet(null, e)) sc.cancelJobsWithTag(jobTag)
         throw e
-    } finally {
-      sc.removeJobTag(jobTag)
-      sc.setLocalProperty(Loader.BodyTag, null)
-      sc.removeSparkListener(bridge)
-    }
+    } finally sc.removeJobTag(jobTag)
   }
 
-  /** Wait, at most [[Loader.BridgeWaitS]] in all, until every handle has
+  /** Wait, at most [[Loader.QuiesceWaitS]] in all, until every handle has
     * settled and no task of this load's jobs runs: a cancelled task runs
     * on until it next checks for the kill, and would recreate its
     * directories under a job directory deleted before it ends. */
   private def quiesce(): Unit = {
-    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(Loader.BridgeWaitS)
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(Loader.QuiesceWaitS)
     def left = math.max(0L, deadline - System.nanoTime())
     pending.synchronized(pending.toList).foreach { case (_, _, h) =>
       try Await.ready(h, Duration.fromNanos(left)) catch { case _: TimeoutException => () }
@@ -237,11 +198,12 @@ final class Loader(
     while (running && left > 0) Thread.sleep(10)
   }
 
-  /** The `Promise.all` barrier: wait for every handle, and return the
-    * uploads with their formats in body order; if any write failed, wait
-    * for the load's tasks to end and throw the first failure. */
-  private def awaitUploads(): Seq[(StagedUpload, String)] = {
-    val settled = pending.toSeq.map { case (_, format, h) =>
+  /** The `Promise.all` barrier: wait for every handle of `bodies`, and
+    * return the uploads with their formats in body order; if any write
+    * failed, wait for the load's tasks to end and throw the first failure. */
+  private def awaitUploads(
+      bodies: Seq[(DataFrame, String, Future[StagedUpload])]): Seq[(StagedUpload, String)] = {
+    val settled = bodies.map { case (_, format, h) =>
       (Await.ready(h, Duration.Inf).value.get, format)
     }
     settled.collectFirst { case (Failure(e), _) => e }.foreach { e =>
@@ -251,18 +213,20 @@ final class Loader(
     settled.map { case (up, format) => (up.get, format) }
   }
 
-  private def sampleDf: DataFrame =
-    pending.synchronized(pending.headOption.map(_._1)).getOrElse(spark.range(0).toDF())
-
   private def start(mode: LoadMode): String = {
-    require(pending.nonEmpty, "no files added") // X6 assert, :277
-    started = true
+    // The latch and the snapshot in one step: a body added concurrently is
+    // either in `bodies` (and so in the manifest and the load) or refused.
+    val bodies = pending.synchronized {
+      require(pending.nonEmpty, "no files added") // X6 assert, :277
+      started = true
+      pending.toList
+    }
     try {
-      val staged = awaitUploads()
+      val staged = awaitUploads(bodies)
       spark.sparkContext.addJobTag(jobTag)
       // Manifest: atomic multi-file visibility (L5). Failure propagates
       // (quirk C6 intentionally not replicated).
-      val manifestPath = staging.writeManifest(sampleDf, staged.map(_._1))
+      val manifestPath = staging.writeManifest(staged.map(_._1))
       emit(_.onProgress("uploadedManifest", Map("path" -> manifestPath)))
 
       // External-warehouse SQL (the reference's whole job): assembled always,
@@ -279,7 +243,7 @@ final class Loader(
       // counters on the load job itself — the reference's per-task
       // progress events (O1) without a second pass over the data.
       val observation = new org.apache.spark.sql.Observation(s"load-$uuid")
-      val schema = pending.head._1.schema
+      val schema = bodies.head._1.schema
       val stagedDf = staged.groupMap(_._2)(_._1.files).toSeq
         .map { case (format, files) =>
           spark.read.schema(schema).format(format)
@@ -316,7 +280,7 @@ final class Loader(
   // Constructor-time bodies (reference parity: `new RedshiftLoader(options)`
   // stages `options.body`/`options.bodies` immediately —
   // RedshiftLoader.ts:122): submitted exactly as explicit addBody calls,
-  // and staged (events delivered) before the constructor returns; a
+  // and staged (events sent) before the constructor returns; a
   // failed one is rethrown by `start()`.
   initialBodies.flatMap(addBody(_)).foreach(Await.ready(_, Duration.Inf))
 
@@ -334,7 +298,7 @@ final class Loader(
       case CleanupPolicy.Never     => false
     }
     if (doClean) {
-      staging.deleteAll(sampleDf)
+      staging.deleteAll()
       emit(_.onProgress("deleteObjects", Map("dir" -> staging.jobDir)))
     }
     if (success) cfg.autoCompact.foreach { ac =>
@@ -355,10 +319,6 @@ final class Loader(
 }
 
 object Loader {
-  /** Local property naming the body a staging write belongs to. */
-  private val BodyTag = "graft.loader.body"
-
-  /** Bound on waiting for a body's marker to reach its bridge, and on
-    * waiting for a cancelled load's tasks to end. */
-  private val BridgeWaitS = 30L
+  /** Bound on waiting for a cancelled or failed load's tasks to end. */
+  private val QuiesceWaitS = 30L
 }

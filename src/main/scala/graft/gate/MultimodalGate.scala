@@ -53,7 +53,7 @@ object MultimodalGate {
       // the corpus, uuid to the process — concurrent gates on one
       // machine each stage their own copy, no truncate-vs-lazy-read race
       // across JVMs, no cross-contamination between corpora.
-      val writer = new graft.io.StagingWriter(
+      val writer = new graft.io.StagingWriter(s,
         s"${System.getProperty("java.io.tmpdir")}/graft_stage",
         graft.core.LoaderConfig(filePrefix = "graft/grb1"),
         jobTime = Integer.toHexString(dir.hashCode),

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
 import graft.core.LoaderConfig
@@ -28,18 +28,15 @@ final case class StagedUpload(index: Int, dir: String, files: Seq[String], bytes
   * partitions, not across bodies — SURVEY.md §4 "Parallel partitioned
   * load"). Nothing is ever collected to the driver.
   */
-final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid: String) {
+final class StagingWriter(
+    spark: SparkSession, root: String, cfg: LoaderConfig, jobTime: String, uuid: String) {
 
   val jobDir = s"$root/${cfg.resolvedFilePrefix}/${jobTime}_$uuid"
   def manifestPath = s"$jobDir/manifest_$uuid.json"
 
   /** One handle per writer (each `newHadoopConf` copies the whole Hadoop configuration). */
-  private var handle: FileSystem = _
-  private def fs(df: DataFrame): FileSystem = synchronized {
-    if (handle == null)
-      handle = new Path(root).getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    handle
-  }
+  private lazy val fs: FileSystem =
+    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Write one body. `format` is the staged wire format — NDJSON (`json`,
     * the reference's native encoding, utils.ts:27-29) or columnar
@@ -53,14 +50,14 @@ final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid
     val w = df.write.mode("errorifexists").options(StagingWriter.stageOptions(format))
     val writer = if (gzip && format == "json") w.option("compression", "gzip") else w
     writer.format(format).save(dir)
-    upload(df, index, dir)
+    upload(index, dir)
   }
 
   /** The upload a written dir holds: its data files (committed parts
     * only — no `_SUCCESS`, no hidden files), sorted for determinism,
     * with their lengths from the same listing. */
-  private def upload(df: DataFrame, index: Int, dir: String): StagedUpload = {
-    val (files, bytes) = fs(df).listStatus(new Path(dir)).toSeq
+  private def upload(index: Int, dir: String): StagedUpload = {
+    val (files, bytes) = fs.listStatus(new Path(dir)).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
       .map(s => s.getPath.toString -> s.getLen)
@@ -80,26 +77,23 @@ final class StagingWriter(root: String, cfg: LoaderConfig, jobTime: String, uuid
       index: Int, ext: String): StagedUpload = {
     val dir = s"$jobDir/bin_$index"
     Ingest.writeBinaryFiles(df, idCol, payloadCol, dir, ext)
-    upload(df, index, dir)
+    upload(index, dir)
   }
 
   /** Emit the manifest listing every staged file, `mandatory:true` each —
     * the atomic-visibility contract (L5). Unlike the reference, a manifest
     * write failure propagates: quirk C6 (swallowed failure,
     * RedshiftLoader.ts:327-335) is deliberately NOT reproduced. */
-  def writeManifest(df: DataFrame, uploads: Seq[StagedUpload]): String = {
+  def writeManifest(uploads: Seq[StagedUpload]): String = {
     val m = Manifest.of(uploads.flatMap(_.files))
-    val out = fs(df).create(new Path(manifestPath), false)
+    val out = fs.create(new Path(manifestPath), false)
     try out.write(m.toJson.getBytes("UTF-8"))
     finally out.close()
     manifestPath
   }
 
   /** Delete the whole staging job dir (cleanup policies C1-C5). */
-  def deleteAll(df: DataFrame): Boolean =
-    fs(df).delete(new Path(jobDir), true)
-
-  def exists(df: DataFrame): Boolean = fs(df).exists(new Path(jobDir))
+  def deleteAll(): Boolean = fs.delete(new Path(jobDir), true)
 }
 
 object StagingWriter {

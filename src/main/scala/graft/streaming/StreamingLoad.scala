@@ -302,8 +302,9 @@ object StreamingLoad {
   }
 
   /** Stream NDJSON files from `srcDir` into `table` with upsert semantics
-    * per micro-batch. Runs until no more files are available, then stops
-    * (AvailableNow). */
+    * per micro-batch. By default it runs until no more files are
+    * available, then stops (AvailableNow); a `Trigger.ProcessingTime`
+    * keeps it ingesting on that cadence until stopped. */
   def fileStreamUpsert(
       spark: SparkSession,
       srcDir: String,
@@ -312,9 +313,9 @@ object StreamingLoad {
       table: TableRef,
       idField: String,
       checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
-    runStream(spark, srcDir, schema, checkpointDir,
-        maxFilesPerTrigger = maxFilesPerTrigger) { batch =>
+      maxFilesPerTrigger: Option[Int] = None,
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    runStream(spark, srcDir, schema, checkpointDir, trigger, maxFilesPerTrigger) { batch =>
       warehouse.load(LoadMode.Upsert, table, batch, idField)
     }
 
@@ -1104,20 +1105,4 @@ object StreamingLoad {
         r(rts) <= l(lts) + expr(s"INTERVAL $maxDelaySec SECONDS"))
       .drop(r(key))
   }
-
-  /** Continuous (non-AvailableNow) variant for long-running ingest: same
-    * upsert semantics on a processing-time cadence. */
-  def fileStreamUpsertContinuous(
-      spark: SparkSession,
-      srcDir: String,
-      schema: StructType,
-      warehouse: ParquetWarehouse,
-      table: TableRef,
-      idField: String,
-      checkpointDir: String,
-      intervalMs: Long): StreamingQuery =
-    runStream(spark, srcDir, schema, checkpointDir,
-        trigger = Trigger.ProcessingTime(intervalMs)) { batch =>
-      warehouse.load(LoadMode.Upsert, table, batch, idField)
-    }
 }

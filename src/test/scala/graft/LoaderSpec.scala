@@ -178,6 +178,39 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     assert(streamed.map(_("bytes").toLong).sum == up.bytes.sum)
   }
 
+  test("a slow listener on the shared bus does not delay addBody or its progress events") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+    val (whDir, stg) = (tmp(), tmp())
+    val rec = new Recorder
+    val loader = mkLoader(LoaderConfig(table = TableRef("", "t"), cleanup = CleanupPolicy.Never),
+      new ParquetWarehouse(spark, whDir), stg, rec)
+    // Holds the shared listener queue from its first job end until released
+    // (30 s at most), so nothing queued behind that event is delivered.
+    val hold = new CountDownLatch(1)
+    val slow = new SparkListener {
+      private var first = true
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (first) { first = false; hold.await(30, TimeUnit.SECONDS) }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(slow)
+    try {
+      val up = scala.util.Try(
+        Await.result(loader.addBody(Ingest.ndjsonString(spark, body1)).get, 20.seconds))
+      assert(up.isSuccess, s"addBody did not stage behind a blocked listener: $up")
+      val streamed = rec.infos.collect { case ("uploadProgress", m) => m }
+      assert(streamed.forall(_("index") == "0"))
+      assert(streamed.map(_("bytes").toLong) == up.get.bytes,
+        s"progress $streamed for files of ${up.get.bytes} B")
+      val fileEv = rec.infos.collect { case ("uploadedFile", m) => m }
+      assert(fileEv.size == 1 && fileEv.head("bytes").toLong == up.get.bytes.sum)
+      assert(rec.progress == Vector.fill(streamed.size)("uploadProgress") :+ "uploadedFile")
+    } finally {
+      hold.countDown()
+      sc.removeSparkListener(slow)
+    }
+  }
+
   test("constructor-time bodies stage immediately: 2 bodies + manifest = 3 staged (spec:108-115)") {
     val (whDir, stg) = (tmp(), tmp())
     val wh = new ParquetWarehouse(spark, whDir)
@@ -282,7 +315,7 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val stg = tmp()
-    val writer = new graft.io.StagingWriter(stg,
+    val writer = new graft.io.StagingWriter(spark, stg,
       LoaderConfig(filePrefix = "graft/bin"), "jt", "uu")
     val bin = Seq((1L, Array[Byte](1, 2, 3)), (2L, Array[Byte](4, 5)))
       .toDF("id", "payload")
@@ -292,7 +325,7 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     // A row body and the binary body share the job dir -> one deleteAll
     // (the C1-C5 policies' primitive) reaps both.
     writer.writeBody(Ingest.ndjsonString(spark, body1), 1)
-    assert(writer.deleteAll(bin))
+    assert(writer.deleteAll())
     val left = Files.walk(java.nio.file.Paths.get(stg))
       .filter(p => Files.isRegularFile(p)).count()
     assert(left == 0, s"staging not cleaned: $left files left")
@@ -313,6 +346,41 @@ class LoaderSpec extends AnyFunSuite with SparkSuite {
     loader.insert()
     assert(loader.addBody(Ingest.ndjsonString(spark, body2)).isEmpty)
     assert(wh.table(TableRef("", "t")).count() == 2) // second body never landed
+  }
+
+  test("single-shot latch under a race: every body addBody accepts is in the manifest and the load") {
+    import scala.jdk.CollectionConverters._
+    val stg = tmp()
+    val wh = new ParquetWarehouse(spark, tmp())
+    val body = Ingest.ndjsonString(spark, body1)
+    for (round <- 1 to 20) {
+      val t = TableRef("", s"race_$round")
+      val loader = mkLoader(LoaderConfig(table = t, cleanup = CleanupPolicy.Never), wh, stg)
+      val first = loader.addBody(body).get
+      // insert() starts once the adder is in its loop, so the two overlap;
+      // the adder stops after 32 bodies, so a starved insert() still runs.
+      val adding = new CountDownLatch(1)
+      val accepted = new java.util.concurrent.ConcurrentLinkedQueue[Future[graft.io.StagedUpload]]
+      val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val adder = new Thread(() => {
+        try Iterator.continually(loader.addBody(body)).take(32).takeWhile(_.isDefined)
+          .foreach { h => accepted.add(h.get); adding.countDown() }
+        catch { case e: Throwable => failed.set(e) }
+        finally adding.countDown()
+      })
+      adder.start()
+      adding.await()
+      assert(loader.insert() == "SUCCESS", s"round $round")
+      adder.join(60000)
+      assert(!adder.isAlive && failed.get == null, s"round $round: adder failed: ${failed.get}")
+      val ups = (first +: accepted.asScala.toSeq).map(h => scala.util.Try(await(h)))
+      assert(ups.forall(_.isSuccess), s"round $round: a handle failed: ${ups.filter(_.isFailure)}")
+      val manifest = Manifest.parseUrls(Files.readString(java.nio.file.Paths.get(
+        ups.head.get.dir).getParent.resolve(s"manifest_${loader.uuid}.json"))).toSet
+      val missing = ups.flatMap(_.get.files).filterNot(manifest)
+      assert(missing.isEmpty, s"round $round: accepted bodies missing from the manifest: $missing")
+      assert(wh.table(t).count() == 2L * ups.size, s"round $round: ${ups.size} bodies accepted")
+    }
   }
 
   test("external executor runs the upsert transaction SQL (X6 + L3)") {

@@ -1494,11 +1494,11 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     import graft.io.{ParquetWarehouse, StagingWriter}
     val root = java.nio.file.Files.createTempDirectory("graft_split").toString
     val cfg = LoaderConfig(table = TableRef("", "t"))
-    val sw = new StagingWriter(root, cfg, "20260101_000000", "deadbeef")
+    val sw = new StagingWriter(spark, root, cfg, "20260101_000000", "deadbeef")
     val up = sw.writeBody(
       Tables(spark, sf, "orders").limit(400).repartition(4), 0, "json", gzip = false)
     assert(up.files.size == 4, s"expected 4 part files, got ${up.files}")
-    val manifestPath = sw.writeManifest(Tables(spark, sf, "orders"), Seq(up))
+    val manifestPath = sw.writeManifest(Seq(up))
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(manifestPath)), "UTF-8")
     assert(up.files.forall(f => manifest.contains(f.split('/').last)))

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1339,8 +1339,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val tbl = TableRef("", "cont")
 
     writeFile(src, "a.json", "{\"id\":1,\"name\":\"a\"}")
-    val q = StreamingLoad.fileStreamUpsertContinuous(
-      spark, src, schema, wh, tbl, "id", s"$root/ckpt", intervalMs = 200)
+    val q = StreamingLoad.fileStreamUpsert(
+      spark, src, schema, wh, tbl, "id", s"$root/ckpt", trigger = Trigger.ProcessingTime(200))
     try {
       // Wait for the first batch, then land a second file mid-stream.
       // Budgets are per-phase and generous: under a fully parallel suite
